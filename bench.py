@@ -67,10 +67,7 @@ BENCH_QUERIES = [
     "corpus_decontaminate",
     "vec_topk_cosine",
     "vec_neardup_lsh",
-    "vec_lsh_bucketed",
     "vec_lsh_multiprobe",
-    "vec_ivf_topk",
-    "vec_lsh_multitable",
     "vec_ivf_pq_topk",
     "vec_recall_at_k",
     "events_asof_join",

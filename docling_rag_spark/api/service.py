@@ -81,26 +81,30 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
     # search per branch.
     from pyspark import StorageLevel
     hits = hits.persist(StorageLevel.MEMORY_AND_DISK)
-    hit_keys = hits.select("url", "chunk_id")
-    docs = (wh.read_table(spark, warehouse, "extracted")
-            .select("url", "title")
-            .join(F.broadcast(hit_keys.select("url").distinct()),
-                  "url", "left_semi"))
-    meta = (chunks.select("url", "chunk_id", "text", "headings",
-                          "page_number", "element_type")
-            .join(F.broadcast(hit_keys), ["url", "chunk_id"], "left_semi"))
-    extra = [F.col("text"), F.col("headings")] if include_text else []
-    rows = (hits.join(F.broadcast(docs), "url", "left")
-            .join(F.broadcast(meta), ["url", "chunk_id"], "left")
-            .select("url", "chunk_id", F.round("score", 4).alias("score"),
-                    "title",
-                    F.array_join("headings", " > ").alias("heading_path"),
-                    F.translate(F.substring("text", 1, 300), "\n", " ")
-                     .alias("preview"),
-                    "page_number", "element_type", *extra)
-            .orderBy(F.desc("score"), "url", "chunk_id")
-            .collect())
-    hits.unpersist()
+    try:
+        hit_keys = hits.select("url", "chunk_id")
+        docs = (wh.read_table(spark, warehouse, "extracted")
+                .select("url", "title")
+                .join(F.broadcast(hit_keys.select("url").distinct()),
+                      "url", "left_semi"))
+        meta = (chunks.select("url", "chunk_id", "text", "headings",
+                              "page_number", "element_type")
+                .join(F.broadcast(hit_keys), ["url", "chunk_id"],
+                      "left_semi"))
+        extra = [F.col("text"), F.col("headings")] if include_text else []
+        rows = (hits.join(F.broadcast(docs), "url", "left")
+                .join(F.broadcast(meta), ["url", "chunk_id"], "left")
+                .select("url", "chunk_id",
+                        F.round("score", 4).alias("score"), "title",
+                        F.array_join("headings", " > ")
+                         .alias("heading_path"),
+                        F.translate(F.substring("text", 1, 300), "\n", " ")
+                         .alias("preview"),
+                        "page_number", "element_type", *extra)
+                .orderBy(F.desc("score"), "url", "chunk_id")
+                .collect())
+    finally:
+        hits.unpersist()
     if log:
         log_search(warehouse, query, rows[0]["score"] if rows else None)
     return [r.asDict() for r in rows]

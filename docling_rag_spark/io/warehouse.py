@@ -629,6 +629,12 @@ def drop_table_column(out_dir: str, table: str, col: str) -> None:
                                   | {col}))
 
 
+def read_sf_table(spark, sf_dir: str, name: str):
+    """One ``<sf_dir>/<name>.parquet`` table of a scale-factor dataset —
+    the flat layout every named query reads."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
 def read_table(spark, out_dir: str, table: str):
     """Schema-pinned whole-table read: every committed column is present
     regardless of which bucket era a file was written in (files predating

@@ -87,8 +87,8 @@ def lloyd(X: np.ndarray, k: int, iters: int = PQ_ITERS) -> np.ndarray:
 
 def train_coarse(sample: np.ndarray, k: int) -> list[list[float]]:
     """Coarse (IVF) quantizer: full-dim k-means over the sample. Trained
-    — not md5-random like plans/ann_index.centroid_matrix — because cell
-    locality is what IVF pruning spends: on the synthetic table, random
+    — not md5-random centroids — because cell locality is what IVF
+    pruning spends: on the synthetic table, random
     cells put the exact top-10's members at probe ranks up to 10 of 16
     (recall 0.7 at 8 probes) while trained cells reach recall 0.8 at 4
     probes, i.e. better recall at twice the pruning."""

@@ -1,26 +1,27 @@
 """Materialized ANN index: embeddings physically partitioned by LSH bucket
-and IVF cell.
+and IVF-PQ coarse cell.
 
 The reference's HNSW index (reference storage/db_schema.py:36-37) is a
-*persistent* structure; round-2's LSH/IVF queries recomputed bucket/cell
+*persistent* structure; round-2's LSH queries recomputed the bucket
 from a full scan per query — correct and linear, but a full-table scan per
 search at 100 TB. This module is the missing piece: the embeddings table is
 written ONCE as
 
     <index>/lsh/bucket=<0..255>/part-*.parquet   (sign-LSH, 8 hyperplanes)
-    <index>/ivf/cell=<0..15>/part-*.parquet      (coarse quantizer)
+    <index>/pq/cell=<0..15>/part-*.parquet       (IVF-PQ codes)
+    <index>/pq_books.json                        (trained PQ codebooks)
 
-and a search computes its probe bucket/cell driver-side (the query vector
+and a search computes its probe buckets/cells driver-side (the query vector
 is a parameter, not a table row), then reads ONLY the probe partitions —
 Catalyst partition pruning, visible as ``PartitionFilters`` in the scan and
 as a pruned ``inputFiles()`` set (plan-audited in tests/test_plan_audit.py).
 On Iceberg this is a ``bucket``/identity partition spec over the same
 columns; the layout maps 1:1.
 
-Python-side bucket/cell math mirrors the Spark/DuckDB expressions
-bit-for-bit: left-folded double sums over the same md5-derived plane /
-centroid literals (IEEE doubles, same association order), so the partition
-a query probes is exactly the partition its vector was written to.
+Python-side bucket math mirrors the Spark/DuckDB expressions bit-for-bit:
+left-folded double sums over the same md5-derived plane literals (IEEE
+doubles, same association order), so the partition a query probes is
+exactly the partition its vector was written to.
 """
 
 from __future__ import annotations
@@ -54,14 +55,9 @@ def interpreted_eval(spark):
             conf.set("spark.sql.codegen.wholeStage", prev)
 
 N_PLANES = 8
-IVF_K = 16
-# multi-table LSH: T independent 6-bit tables (64 buckets each). Recall of
-# sign-LSH rises with the number of independent tables (a true neighbor
-# only needs to collide in ONE of them) at the classic cost of T× index
-# storage and T probe partitions per query.
-MT_TABLES = 4
-MT_BITS = 6
-_MT_PLANE_OFFSET = 1000  # disjoint from the single-table plane id space
+# The index tables and their partition columns — the one list the builder,
+# ensure_index's completeness check and the delete cascade all read.
+INDEX_TABLES = {"lsh": ["bucket"], "pq": ["cell"]}
 
 
 def plane_value(j: int, i: int) -> float:
@@ -71,33 +67,11 @@ def plane_value(j: int, i: int) -> float:
     return ((h % 1001) - 500) / 500.0
 
 
-def centroid_value(c: int, i: int) -> float:
-    h = int(hashlib.md5(f"ivf_{c}_{i}".encode()).hexdigest()[:15], 16)
-    return ((h % 1001) - 500) / 500.0
-
-
 def plane_matrix(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
     """Sign-LSH hyperplanes for any embedding dim (the index must match
     the table it covers: a 64-wide matrix zip_with'd against a 256-dim
     vector silently null-pads and degenerates every bucket to 0)."""
     return [[plane_value(j, i) for i in range(dim)] for j in range(n_planes)]
-
-
-def centroid_matrix(dim: int, k: int = IVF_K) -> list[list[float]]:
-    return [[centroid_value(c, i) for i in range(dim)] for c in range(k)]
-
-
-def mt_plane_matrix(dim: int, table: int) -> list[list[float]]:
-    """The 6 hyperplanes of multi-table-LSH table ``table`` (plane ids
-    offset into a disjoint range so no table shares a plane with another
-    table or with the single-table index)."""
-    base = _MT_PLANE_OFFSET + table * MT_BITS
-    return [[plane_value(base + j, i) for i in range(dim)]
-            for j in range(MT_BITS)]
-
-
-def py_mt_bucket(emb, table: int) -> int:
-    return py_bucket(emb, mt_plane_matrix(len(emb), table))
 
 
 def py_dot(a, b) -> float:
@@ -109,19 +83,12 @@ def py_dot(a, b) -> float:
     return acc
 
 
-def py_bucket(emb, planes: list[list[float]] | None = None) -> int:
-    planes = planes if planes is not None else plane_matrix(len(emb))
+def py_bucket(emb) -> int:
     b = 0
-    for j, plane in enumerate(planes):
+    for j, plane in enumerate(plane_matrix(len(emb))):
         if py_dot(plane, emb) > 0:
             b += 1 << j
     return b
-
-
-def py_cell(emb, cents: list[list[float]] | None = None) -> int:
-    cents = cents if cents is not None else centroid_matrix(len(emb))
-    dots = [py_dot(c, emb) for c in cents]
-    return dots.index(max(dots))  # first occurrence = lower-cell tie rule
 
 
 def multiprobe_buckets(bucket: int, n_planes: int = N_PLANES) -> list[int]:
@@ -176,13 +143,14 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
     first = embeddings_df.select(F.size("embedding").alias("d")).first()
     dim = int(first["d"]) if first else 0
     base = embeddings_df.select(*id_cols, "embedding")
-    # The bucket/cell assignment expressions embed (8+16+T*6)×dim literal
-    # plane/centroid constants; at dim≥256 whole-stage codegen spends tens
-    # of seconds COMPILING them per stage while interpreted evaluation of
-    # the same Catalyst expressions is instant and bit-identical. The
-    # build is a one-time job, so trade JIT throughput for zero compile.
+    # The bucket/cell/code assignment expressions embed (8+16+16)×dim
+    # literal plane/centroid constants (LSH planes, PQ coarse cells, PQ
+    # codebooks); at dim≥256 whole-stage codegen spends tens of seconds
+    # COMPILING them per stage while interpreted evaluation of the same
+    # Catalyst expressions is instant and bit-identical. The build is a
+    # one-time job, so trade JIT throughput for zero compile.
     with interpreted_eval(spark):
-        _write_index_tables(spark, base, dim, out_dir)
+        _write_lsh_table(spark, base, dim, out_dir)
         _write_pq_table(spark, base, dim, out_dir, id_cols)
 
 
@@ -229,35 +197,20 @@ def _write_pq_table(spark, base, dim: int, out_dir: str,
     (base.select(*id_cols,
                  argmin_l2_col(F.col("embedding"), coarse).alias("cell"),
                  codes.alias("codes"))
-     .write.partitionBy("cell").mode("overwrite")
+     .write.partitionBy(*INDEX_TABLES["pq"]).mode("overwrite")
      .parquet(os.path.join(out_dir, "pq")))
     with open(sidecar, "w") as f:
         json.dump({"dim": dim, "coarse": coarse, "books": books}, f)
 
 
-def _write_index_tables(spark, base, dim: int, out_dir: str) -> None:
+def _write_lsh_table(spark, base, dim: int, out_dir: str) -> None:
     from pyspark.sql import functions as F
 
-    from docling_rag_spark.queries.vectors import _bucket, _ivf_cell
+    from docling_rag_spark.queries.vectors import _bucket
     (base.withColumn("bucket",
                      _bucket(F.col("embedding"), plane_matrix(dim)))
-     .write.partitionBy("bucket").mode("overwrite")
+     .write.partitionBy(*INDEX_TABLES["lsh"]).mode("overwrite")
      .parquet(os.path.join(out_dir, "lsh")))
-    (base.withColumn("cell",
-                     _ivf_cell(F.col("embedding"), centroid_matrix(dim)))
-     .write.partitionBy("cell").mode("overwrite")
-     .parquet(os.path.join(out_dir, "ivf")))
-    # multi-table LSH: T copies of the data, one per independent table —
-    # the T× storage is the standard recall trade-off; a query probes one
-    # (table, bucket) partition per table. All T buckets are computed in a
-    # SINGLE scan and posexploded into (table, bucket) rows — a per-table
-    # union re-read the data and re-compiled the plane matrices T times.
-    buckets = F.array(*[
-        _bucket(F.col("embedding"), mt_plane_matrix(dim, t))
-        for t in range(MT_TABLES)])
-    (base.select("*", F.posexplode(buckets).alias("table", "bucket"))
-     .write.partitionBy("table", "bucket").mode("overwrite")
-     .parquet(os.path.join(out_dir, "mt")))
 
 
 def ensure_index(spark, sf_dir: str) -> str:
@@ -273,14 +226,13 @@ def ensure_index(spark, sf_dir: str) -> str:
     # would otherwise leave another multi-hundred-MB dead index behind)
     path_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
     state_key = hashlib.md5(
-        f"{st.st_mtime_ns}|{st.st_size}|v4".encode()).hexdigest()[:12]
+        f"{st.st_mtime_ns}|{st.st_size}|v5".encode()).hexdigest()[:12]
     key = f"{path_key}-{state_key}"
     root = os.environ.get("SPARK_GRAFT_ANN_DIR",
                           os.path.join(tempfile.gettempdir(),
                                        "spark_graft_ann"))
     final = os.path.join(root, key)
-    if (all(os.path.isdir(os.path.join(final, t))
-            for t in ("lsh", "ivf", "mt"))
+    if (all(os.path.isdir(os.path.join(final, t)) for t in INDEX_TABLES)
             and os.path.isfile(os.path.join(final, "pq_books.json"))):
         return final
     os.makedirs(root, exist_ok=True)

@@ -43,6 +43,7 @@ from docling_rag_spark.operators.pipeline import (
     extract_documents,
     extracted_table,
 )
+from docling_rag_spark.plans.ann_index import INDEX_TABLES
 
 
 @dataclass
@@ -755,9 +756,7 @@ def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
 
     with wh.commit_lock(os.path.join(out_dir, "_compaction"),
                         timeout=60.0, stale_sec=3600.0):
-        for sub, part_cols in (("lsh", ["bucket"]), ("ivf", ["cell"]),
-                               ("mt", ["table", "bucket"]),
-                               ("pq", ["cell"])):
+        for sub, part_cols in INDEX_TABLES.items():
             table_dir = os.path.join(ann_root, sub)
             wh.recover_swap(table_dir)
             if os.path.isdir(table_dir):

@@ -47,8 +47,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from docling_rag_spark.io.warehouse import read_sf_table as _t
 
 _K_MIN = 4
 _K_DIVISOR = 250   # k scales with corpus: ~250 vectors per cluster
@@ -57,10 +58,6 @@ _DIM = 64
 _SEMDEDUP_MIN_E6 = 300000  # quantized-cosine keep-first threshold
 
 _ASSIGN_SCHEMA = "vec_id bigint, qv array<bigint>, cluster bigint, dist double"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _quantized(spark, sf_dir):

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from docling_rag_spark.io.warehouse import read_sf_table as _t
+
 _H48_MAX = 1 << 48
 _KMV_K = 256
 _SAMPLE_PCT = 10            # uniform sample rate, percent
@@ -43,10 +45,6 @@ _SHARD_TOKENS = 20000       # token budget per training shard
 # window stays driver-trivial. Shard assignment is invariant to the
 # width (prefix sums are partitioning-free), so the oracle is unchanged.
 _RANGE_MIN = 500
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _h48(col):

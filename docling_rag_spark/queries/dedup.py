@@ -50,6 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from docling_rag_spark.io.warehouse import read_sf_table as _t
+
 _P = 2147483647          # Mersenne prime 2^31-1 for the minhash permutations
 # Production LSH shape (VERDICT r3 task 1): 128 permutations in 16 bands of
 # 8 rows. Candidate probability is 1 - (1 - j^8)^16 — the S-curve midpoint
@@ -73,10 +75,6 @@ _BAND_SIZE = 8           # 16 bands × 8 rows
 _SHINGLE_K = 5
 _SIMHASH_BITS = 48       # ≤53 so pow(2, bit) stays exact in doubles
 _WORD_RE = "[a-z0-9]+"
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _tokens(col):

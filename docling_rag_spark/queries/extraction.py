@@ -15,9 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from docling_rag_spark.io.warehouse import read_sf_table as _t
 
 
 def _salt(spark) -> int:

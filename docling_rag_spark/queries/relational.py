@@ -25,12 +25,10 @@ only shuffles are on the agg keys of the fact tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from docling_rag_spark.io.warehouse import read_sf_table as _t
 
 
 # --- A1: count/sum by key ----------------------------------------------------

@@ -35,9 +35,10 @@ exactly like driver rows.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from docling_rag_spark.io.warehouse import read_sf_table as _t
 from docling_rag_spark.queries.vectors import _dot, _dot_sql, _norm, _norm_sql
 
 _BM25_TERMS = ("dup", "vector", "stream")  # df 25 / 382 / 391 of 500 at sf0.01
@@ -45,10 +46,6 @@ _TOPK = 10
 _POOL = 50          # per-system candidate pool feeding the fusion
 _RRF_K = 60         # standard RRF damping constant
 _QUERY_VEC_ID = 0
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # --- BM25 ---------------------------------------------------------------------

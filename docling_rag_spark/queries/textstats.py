@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from docling_rag_spark.io.warehouse import read_sf_table as _t
+
 _WORD_RE = "[a-z0-9]+"
 
 # tiny embedded stopword lists; deterministic heuristic, not a model
@@ -32,10 +34,6 @@ _STOP = {
     "fr": ("le", "la", "les", "et", "de", "un", "une", "est", "que", "pour"),
     "es": ("el", "la", "los", "las", "y", "de", "un", "una", "es", "que"),
 }
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _tokens(col):

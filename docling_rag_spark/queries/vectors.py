@@ -7,11 +7,13 @@
                          TakeOrderedAndProject — no full sort, no shuffle of
                          the data, only top-k per partition then merge.
   vec_neardup_cosine   — embedding-cosine near-duplicate pairs.
-  vec_lsh_bucketed     — the scale path: 8 signed random hyperplanes (md5-
+  vec_lsh_multiprobe   — the scale path: 8 signed random hyperplanes (md5-
                          derived, portable) bucket every vector; search only
-                         scans the query's bucket. At 100 TB the bucket id
-                         is the partition key, so a query touches one
-                         partition instead of all of them.
+                         scans the query's bucket and its 8 hamming-1
+                         neighbours. At 100 TB the bucket id is the
+                         partition key, so a query touches 9 partitions
+                         instead of all of them.
+  vec_ivf_pq_topk      — the memory-bound path: IVF-PQ codes ranked by ADC.
 
 Dot products fold left-to-right with ``F.aggregate`` (deterministic FP
 order, mirrored by DuckDB ``list_reduce``); scores ship as floor-scaled
@@ -22,24 +24,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from docling_rag_spark.plans.ann_index import (
-    IVF_K as _IVF_K,
-    N_PLANES as _NUM_PLANES,
-)
+from docling_rag_spark.io.warehouse import read_sf_table as _t
+from docling_rag_spark.plans.ann_index import N_PLANES as _NUM_PLANES
 
 _TOPK = 10
 # cosine threshold in floor-scaled micro-units; 0.35 sits just under the
 # testdata's top-0.1% pair similarity so the check has non-trivial output
 # (max pairwise cosine in the synthetic embeddings is ~0.51)
 _NEARDUP_MIN_E6 = 350000
-# _NUM_PLANES / _IVF_K are imported from plans.ann_index (single source of
-# truth: the index build, the driver-side probe math and the query-side
-# matrices must never drift apart)
+# _NUM_PLANES is imported from plans.ann_index (single source of truth:
+# the index build, the driver-side probe math and the query-side matrices
+# must never drift apart)
 _QUERY_VEC_ID = 0
-
-
-def _t(spark, sf_dir, name):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _dot(a, b):
@@ -135,7 +131,7 @@ WHERE floor({_dot_sql('a.embedding', 'b.embedding')}
 # engine would compute — test_oracle_parity pins the formula) and inlined as
 # literals; deriving them inside the row expression re-ran 512 md5s per row.
 
-from docling_rag_spark.plans.ann_index import centroid_matrix, plane_matrix
+from docling_rag_spark.plans.ann_index import plane_matrix
 
 _PLANES = plane_matrix(64, _NUM_PLANES)
 
@@ -171,69 +167,14 @@ def _bucket(emb_col, planes_rows: list[list[float]] | None = None):
                        lambda a, x: a + x)
 
 
-def _bucket_sql(e: str, plane_rows: list[list[float]] | None = None) -> str:
+def _bucket_sql(e: str) -> str:
     parts = []
-    for j, row in enumerate(plane_rows if plane_rows is not None
-                            else _PLANES):
+    for j, row in enumerate(_PLANES):
         terms = " + ".join(f"{e}[{i + 1}]::DOUBLE * {v!r}"
                            for i, v in enumerate(row))
         parts.append(f"(CASE WHEN (0.0 + {terms}) > 0 "
                      f"THEN {1 << j} ELSE 0 END)")
     return "(" + " + ".join(parts) + ")::BIGINT"
-
-
-def _probe_scan(spark, sf_dir, table: str, key: str, probes: list[int]):
-    """Partition-pruned scan of the materialized ANN index: only the probe
-    partitions' files are read (PartitionFilters in the plan; inputFiles()
-    shrinks to the probe dirs — plan-audited)."""
-    from docling_rag_spark.plans import ann_index as AI
-    idx = AI.ensure_index(spark, sf_dir)
-    df = spark.read.parquet(f"{idx}/{table}")
-    return df.filter(F.col(key).isin([int(p) for p in probes]))
-
-
-def _scored_topk(emb, q_emb: list[float], key: str, key_type: str):
-    """Exact cosine against the literal query vector within the pruned
-    candidate set. The literal array reproduces the old broadcast-row
-    arithmetic bit-for-bit (same zip_with term order, same left fold)."""
-    qlit = F.array(*[F.lit(v) for v in q_emb])
-    cos = F.floor(_dot(F.col("embedding"), qlit)
-                  / (_norm(F.col("embedding")) * _norm(qlit))
-                  * 1000000.0).cast("bigint")
-    return (emb.filter(F.col("vec_id") != _QUERY_VEC_ID)
-            .select("vec_id", F.col(key).cast(key_type).alias(key),
-                    cos.alias("score_e6"))
-            .orderBy(F.desc("score_e6"), F.asc("vec_id")).limit(_TOPK))
-
-
-def vec_lsh_bucketed(spark, sf_dir):
-    """Single-partition ANN: the query's bucket is computed driver-side
-    (the query vector is a parameter) and the scan reads exactly one of
-    256 bucket partitions of the materialized index."""
-    from docling_rag_spark.plans import ann_index as AI
-    q_emb = AI.query_vector(sf_dir, _QUERY_VEC_ID)
-    q_bucket = AI.py_bucket(q_emb)
-    emb = _probe_scan(spark, sf_dir, "lsh", "bucket", [q_bucket])
-    return _scored_topk(emb, q_emb, "bucket", "bigint")
-
-
-LSH_SQL = f"""
-WITH bucketed AS (
-  SELECT vec_id::BIGINT AS vec_id, embedding,
-         {_bucket_sql('embedding')} AS bucket
-  FROM embeddings
-), q AS (
-  SELECT embedding AS q_emb, bucket AS q_bucket FROM bucketed
-  WHERE vec_id = {_QUERY_VEC_ID}
-)
-SELECT e.vec_id, e.bucket::BIGINT AS bucket,
-       floor({_dot_sql('e.embedding', 'q.q_emb')}
-             / ({_norm_sql('e.embedding')} * {_norm_sql('q.q_emb')})
-             * 1000000.0)::BIGINT AS score_e6
-FROM bucketed e JOIN q ON e.bucket = q.q_bucket
-WHERE e.vec_id != {_QUERY_VEC_ID}
-ORDER BY score_e6 DESC, vec_id ASC LIMIT {_TOPK}
-"""
 
 
 # Per-bucket member cap before the star fallback — the embedding analog of
@@ -339,20 +280,32 @@ WHERE floor({_dot_sql('emb_a', 'emb_b')}
 NEARDUP_LSH_SQL = neardup_lsh_sql()
 
 
-
-
 # --- multi-probe LSH ---------------------------------------------------------
 
 def vec_lsh_multiprobe(spark, sf_dir):
     """Multi-probe LSH top-k: candidates come from the query's bucket AND
     every bucket at hamming distance 1 — the standard recall fix for
     sign-LSH's hard bucket boundaries. The 9-bucket probe set is computed
-    driver-side and the scan reads exactly those 9 of 256 partitions."""
+    driver-side and the scan reads exactly those 9 of 256 partitions of
+    the materialized index (PartitionFilters in the plan; inputFiles()
+    shrinks to the probe dirs — plan-audited). Exact cosine against the
+    literal query vector ranks the candidates; the literal array
+    reproduces broadcast-row arithmetic bit-for-bit (same zip_with term
+    order, same left fold)."""
     from docling_rag_spark.plans import ann_index as AI
     q_emb = AI.query_vector(sf_dir, _QUERY_VEC_ID)
     probes = AI.multiprobe_buckets(AI.py_bucket(q_emb), _NUM_PLANES)
-    emb = _probe_scan(spark, sf_dir, "lsh", "bucket", probes)
-    return _scored_topk(emb, q_emb, "bucket", "bigint")
+    idx = AI.ensure_index(spark, sf_dir)
+    emb = (spark.read.parquet(f"{idx}/lsh")
+           .filter(F.col("bucket").isin([int(p) for p in probes])))
+    qlit = F.array(*[F.lit(v) for v in q_emb])
+    cos = F.floor(_dot(F.col("embedding"), qlit)
+                  / (_norm(F.col("embedding")) * _norm(qlit))
+                  * 1000000.0).cast("bigint")
+    return (emb.filter(F.col("vec_id") != _QUERY_VEC_ID)
+            .select("vec_id", F.col("bucket").cast("bigint").alias("bucket"),
+                    cos.alias("score_e6"))
+            .orderBy(F.desc("score_e6"), F.asc("vec_id")).limit(_TOPK))
 
 
 MULTIPROBE_SQL = f"""
@@ -375,182 +328,34 @@ ORDER BY score_e6 DESC, vec_id ASC LIMIT {_TOPK}
 """
 
 
-# --- IVF coarse quantizer ----------------------------------------------------
-# K deterministic md5-derived centroids (a k-means stand-in: no iterative
-# training in a deterministic two-engine setting); a vector's partition is
-# its max-dot-product centroid. Search scans ONLY the query's cell — at
-# scale the cell id is the partition key, exactly like the LSH bucket.
-# K=8 keeps the K*64-term assignment expression inside reasonable
-# Catalyst/codegen compile time (the cost is per-QUERY compile, amortized
-# over any real input size; a model-trained quantizer on a real cluster
-# would be a pandas_udf matmul instead).
-
-
-_CENTROIDS = centroid_matrix(64, _IVF_K)
-
-
-def _ivf_cell(emb_col, cents_rows: list[list[float]] | None = None):
-    """argmax_c dot(emb, centroid_c), ties to the lower cell id: the
-    centroid matrix is a constant nested-array literal and the K dot
-    products come from transform/zip_with/aggregate — a tiny expression
-    tree (a K*64-term inline sum compiles for ~15 s in codegen; a
-    CASE-chain argmax fold would even double per centroid). Left-fold
-    accumulation matches the SQL mirror's left-assoc sum bit-for-bit;
-    IEEE multiplication is commutative so term order is x*y vs y*x safe."""
-    cents = F.lit([list(map(float, row))
-                   for row in (cents_rows if cents_rows is not None
-                               else _CENTROIDS)])  # single Literal node
-    dots = F.transform(
-        cents,
-        lambda c: F.aggregate(
-            F.zip_with(c, emb_col, lambda x, y: x * y.cast("double")),
-            F.lit(0.0), lambda acc, x: acc + x))
-    return (F.array_position(dots, F.array_max(dots)) - 1).cast("int")
-
-
-def _ivf_cell_sql(e: str) -> str:
-    """list_indexof-of-max mirror of _ivf_cell (first occurrence = same
-    lower-cell tie rule); linear SQL size."""
-    dots = []
-    for row in _CENTROIDS:
-        terms = " + ".join(f"{e}[{i + 1}]::DOUBLE * {v!r}"
-                           for i, v in enumerate(row))
-        dots.append(f"(0.0 + {terms})")
-    lst = "[" + ", ".join(dots) + "]"
-    return f"(list_indexof({lst}, list_max({lst})) - 1)::INT"
-
-
-def vec_ivf_topk(spark, sf_dir):
-    """IVF-style ANN: the query's coarse cell is computed driver-side and
-    the scan reads exactly one of 16 cell partitions of the materialized
-    index; exact cosine within it. The cell histogram (vec_ivf_cells) is
-    the partition-balance evidence."""
-    from docling_rag_spark.plans import ann_index as AI
-    q_emb = AI.query_vector(sf_dir, _QUERY_VEC_ID)
-    q_cell = AI.py_cell(q_emb)
-    emb = _probe_scan(spark, sf_dir, "ivf", "cell", [q_cell])
-    return _scored_topk(emb, q_emb, "cell", "int")
-
-
-IVF_TOPK_SQL = f"""
-WITH cells AS (
-  SELECT vec_id::BIGINT AS vec_id, embedding,
-         {_ivf_cell_sql('embedding')} AS cell
-  FROM embeddings
-), q AS (
-  SELECT embedding AS q_emb, cell AS q_cell FROM cells
-  WHERE vec_id = {_QUERY_VEC_ID}
-)
-SELECT e.vec_id, e.cell::INT AS cell,
-       floor({_dot_sql('e.embedding', 'q.q_emb')}
-             / ({_norm_sql('e.embedding')} * {_norm_sql('q.q_emb')})
-             * 1000000.0)::BIGINT AS score_e6
-FROM cells e JOIN q ON e.cell = q.q_cell
-WHERE e.vec_id != {_QUERY_VEC_ID}
-ORDER BY score_e6 DESC, vec_id ASC LIMIT {_TOPK}
-"""
-
-
-# --- multi-table LSH -----------------------------------------------------------
-
-def _mt_matrices():
-    from docling_rag_spark.plans.ann_index import MT_TABLES, mt_plane_matrix
-    return [mt_plane_matrix(64, t) for t in range(MT_TABLES)]
-
-
-def vec_lsh_multitable(spark, sf_dir):
-    """Multi-table LSH top-k: T=4 independent 6-bit tables; a true
-    neighbor only needs to collide in ONE of them (the classic LSH recall
-    fix — E2LSH-style table replication — vs multiprobe's single-table
-    neighborhood expansion). The query probes exactly one (table, bucket)
-    partition per table of the materialized T×-replicated index: 4 of 256
-    partitions, plan-audited."""
-    from docling_rag_spark.plans import ann_index as AI
-    q_emb = AI.query_vector(sf_dir, _QUERY_VEC_ID)
-    idx = AI.ensure_index(spark, sf_dir)
-    df = spark.read.parquet(f"{idx}/mt")
-    cond = None
-    for t in range(AI.MT_TABLES):
-        c = (F.col("table") == t) & \
-            (F.col("bucket") == AI.py_mt_bucket(q_emb, t))
-        cond = c if cond is None else (cond | c)
-    # a vector colliding in several tables appears once in the candidates
-    emb = (df.filter(cond).select("vec_id", "embedding")
-           .dropDuplicates(["vec_id"]))
-    qlit = F.array(*[F.lit(v) for v in q_emb])
-    cos = F.floor(_dot(F.col("embedding"), qlit)
-                  / (_norm(F.col("embedding")) * _norm(qlit))
-                  * 1000000.0).cast("bigint")
-    return (emb.filter(F.col("vec_id") != _QUERY_VEC_ID)
-            .select(F.col("vec_id").cast("bigint").alias("vec_id"),
-                    cos.alias("score_e6"))
-            .orderBy(F.desc("score_e6"), F.asc("vec_id")).limit(_TOPK))
-
-
-def _multitable_sql() -> str:
-    mats = _mt_matrices()
-    bcols = ",\n         ".join(
-        f"{_bucket_sql('embedding', m)} AS b{t}" for t, m in enumerate(mats))
-    collide = " OR ".join(f"e.b{t} = q.b{t}" for t in range(len(mats)))
-    return f"""
-WITH emb AS (
-  SELECT vec_id::BIGINT AS vec_id, embedding,
-         {bcols}
-  FROM embeddings
-), q AS (
-  SELECT * FROM emb WHERE vec_id = {_QUERY_VEC_ID}
-)
-SELECT e.vec_id,
-       floor({_dot_sql('e.embedding', 'q.embedding')}
-             / ({_norm_sql('e.embedding')} * {_norm_sql('q.embedding')})
-             * 1000000.0)::BIGINT AS score_e6
-FROM emb e CROSS JOIN q
-WHERE e.vec_id != {_QUERY_VEC_ID} AND ({collide})
-ORDER BY score_e6 DESC, e.vec_id ASC LIMIT {_TOPK}
-"""
-
-
-MULTITABLE_SQL = _multitable_sql()
-
-
 # --- ANN recall evidence -------------------------------------------------------
 
 _RECALL_PROBES = (0, 1, 2, 3, 4, 5, 6, 7)
 
 
 def vec_recall_at_k(spark, sf_dir):
-    """Recall@10 of the pruned ANN paths vs exact search, per probe query —
-    the quality metric the reference's HNSW index trades exactness for
-    (reference storage/db_schema.py:36-37). For each of 8 fixed probe
-    vectors: |exact-top10 ∩ multiprobe-top10| and |exact-top10 ∩
-    ivf-top10| as integers 0..10. Offline evaluation job: a deliberate
-    full scan (recall can only be measured against exact results); the
-    serving paths stay partition-pruned."""
+    """Recall@10 of the pruned multiprobe path vs exact search, per probe
+    query — the quality metric the reference's HNSW index trades
+    exactness for (reference storage/db_schema.py:36-37). For each of 8
+    fixed probe vectors: |exact-top10 ∩ multiprobe-top10| as an integer
+    0..10. Offline evaluation job: a deliberate full scan (recall can only
+    be measured against exact results); the serving paths stay
+    partition-pruned."""
     from pyspark.sql import Window
 
-    mats = _mt_matrices()
-    mt_cols = [_bucket(F.col("embedding"), m).alias(f"b{t}")
-               for t, m in enumerate(mats)]
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("bigint").alias("vec_id"), "embedding",
-        _bucket(F.col("embedding")).alias("bucket"),
-        _ivf_cell(F.col("embedding")).alias("cell"), *mt_cols)
+        _bucket(F.col("embedding")).alias("bucket"))
     q = (emb.filter(F.col("vec_id").isin(list(_RECALL_PROBES)))
          .select(F.col("vec_id").alias("query_id"),
                  F.col("embedding").alias("q_emb"),
-                 F.col("bucket").alias("q_bucket"),
-                 F.col("cell").alias("q_cell"),
-                 *[F.col(f"b{t}").alias(f"qb{t}")
-                   for t in range(len(mats))]))
+                 F.col("bucket").alias("q_bucket")))
     cos = F.floor(_dot(F.col("embedding"), F.col("q_emb"))
                   / (_norm(F.col("embedding")) * _norm(F.col("q_emb")))
                   * 1000000.0).cast("bigint")
     scored = (emb.crossJoin(F.broadcast(q))
               .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", "vec_id", "bucket", "cell",
-                      "q_bucket", "q_cell",
-                      *[c for t in range(len(mats))
-                        for c in (f"b{t}", f"qb{t}")],
+              .select("query_id", "vec_id", "bucket", "q_bucket",
                       cos.alias("score_e6")))
     w = Window.partitionBy("query_id").orderBy(F.desc("score_e6"),
                                                F.asc("vec_id"))
@@ -563,52 +368,26 @@ def vec_recall_at_k(spark, sf_dir):
     exact = top10(scored)
     mp = top10(scored.filter(
         F.bit_count(F.col("bucket").bitwiseXOR(F.col("q_bucket"))) <= 1))
-    ivf = top10(scored.filter(F.col("cell") == F.col("q_cell")))
-    collide = None
-    for t in range(len(mats)):
-        c = F.col(f"b{t}") == F.col(f"qb{t}")
-        collide = c if collide is None else (collide | c)
-    mt = top10(scored.filter(collide))
     return (exact
             .join(mp.withColumn("in_mp", F.lit(1)),
                   ["query_id", "vec_id"], "left")
-            .join(ivf.withColumn("in_ivf", F.lit(1)),
-                  ["query_id", "vec_id"], "left")
-            .join(mt.withColumn("in_mt", F.lit(1)),
-                  ["query_id", "vec_id"], "left")
             .groupBy("query_id")
             .agg(F.sum(F.coalesce(F.col("in_mp"), F.lit(0)))
-                  .cast("bigint").alias("recall_multiprobe_at_10"),
-                 F.sum(F.coalesce(F.col("in_ivf"), F.lit(0)))
-                  .cast("bigint").alias("recall_ivf_at_10"),
-                 F.sum(F.coalesce(F.col("in_mt"), F.lit(0)))
-                  .cast("bigint").alias("recall_multitable_at_10")))
+                  .cast("bigint").alias("recall_multiprobe_at_10")))
 
 
 _RECALL_PROBES_SQL = ", ".join(str(p) for p in _RECALL_PROBES)
 
-
-def _recall_sql() -> str:
-    mats = _mt_matrices()
-    bcols = ",\n         ".join(
-        f"{_bucket_sql('embedding', m)} AS b{t}" for t, m in enumerate(mats))
-    qb = ", ".join(f"b{t} AS qb{t}" for t in range(len(mats)))
-    sb = ", ".join(f"e.b{t}, q.qb{t}" for t in range(len(mats)))
-    collide = " OR ".join(f"b{t} = qb{t}" for t in range(len(mats)))
-    return f"""
+RECALL_SQL = f"""
 WITH emb AS (
   SELECT vec_id::BIGINT AS vec_id, embedding,
-         {_bucket_sql('embedding')} AS bucket,
-         {_ivf_cell_sql('embedding')} AS cell,
-         {bcols}
+         {_bucket_sql('embedding')} AS bucket
   FROM embeddings
 ), q AS (
-  SELECT vec_id AS query_id, embedding AS q_emb,
-         bucket AS q_bucket, cell AS q_cell, {qb}
+  SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket
   FROM emb WHERE vec_id IN ({_RECALL_PROBES_SQL})
 ), scored AS (
-  SELECT q.query_id, e.vec_id, e.bucket, e.cell, q.q_bucket, q.q_cell,
-         {sb},
+  SELECT q.query_id, e.vec_id, e.bucket, q.q_bucket,
          floor({_dot_sql('e.embedding', 'q.q_emb')}
                / ({_norm_sql('e.embedding')} * {_norm_sql('q.q_emb')})
                * 1000000.0)::BIGINT AS score_e6
@@ -623,48 +402,13 @@ WITH emb AS (
   WHERE bit_count(xor(bucket, q_bucket)) <= 1
   QUALIFY row_number() OVER (PARTITION BY query_id
                              ORDER BY score_e6 DESC, vec_id ASC) <= {_TOPK}
-), ivf AS (
-  SELECT query_id, vec_id FROM scored
-  WHERE cell = q_cell
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY score_e6 DESC, vec_id ASC) <= {_TOPK}
-), mt AS (
-  SELECT query_id, vec_id FROM scored
-  WHERE {collide}
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY score_e6 DESC, vec_id ASC) <= {_TOPK}
 )
 SELECT e.query_id,
        sum(CASE WHEN m.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS recall_multiprobe_at_10,
-       sum(CASE WHEN i.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS recall_ivf_at_10,
-       sum(CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-         AS recall_multitable_at_10
+         AS recall_multiprobe_at_10
 FROM exact e
 LEFT JOIN mp m USING (query_id, vec_id)
-LEFT JOIN ivf i USING (query_id, vec_id)
-LEFT JOIN mt t USING (query_id, vec_id)
 GROUP BY e.query_id
-"""
-
-
-RECALL_SQL = _recall_sql()
-
-
-def vec_ivf_cells(spark, sf_dir):
-    """Cell-population histogram — the partition-balance evidence for the
-    IVF path (a dominant cell would mean the quantizer fails to prune)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return (emb.select(_ivf_cell(F.col("embedding")).alias("cell"))
-            .groupBy("cell")
-            .agg(F.count("*").cast("bigint").alias("n_vectors")))
-
-
-IVF_CELLS_SQL = f"""
-SELECT {_ivf_cell_sql('embedding')} AS cell,
-       count(*)::BIGINT AS n_vectors
-FROM embeddings GROUP BY 1
 """
 
 
@@ -753,11 +497,7 @@ def vec_ivf_pq_topk(spark, sf_dir):
 QUERIES = {
     "vec_topk_cosine": (vec_topk_cosine, TOPK_SQL),
     "vec_neardup_lsh": (vec_neardup_lsh, NEARDUP_LSH_SQL),
-    "vec_lsh_bucketed": (vec_lsh_bucketed, LSH_SQL),
     "vec_lsh_multiprobe": (vec_lsh_multiprobe, MULTIPROBE_SQL),
-    "vec_ivf_topk": (vec_ivf_topk, IVF_TOPK_SQL),
-    "vec_ivf_cells": (vec_ivf_cells, IVF_CELLS_SQL),
-    "vec_lsh_multitable": (vec_lsh_multitable, MULTITABLE_SQL),
     "vec_recall_at_k": (vec_recall_at_k, RECALL_SQL),
 }
 

@@ -33,12 +33,10 @@ tests/test_oracle_parity.py hash-checks them exactly like driver rows.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from docling_rag_spark.io.warehouse import read_sf_table as _t
 
 
 # --- as-of join ---------------------------------------------------------------

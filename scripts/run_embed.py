@@ -25,9 +25,9 @@ def main() -> int:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--ann-index", action="store_true",
-                    help="also materialize <warehouse>/ann/{lsh,ivf} "
-                         "partitioned by LSH bucket / IVF cell so searches "
-                         "read only their probe partitions")
+                    help="also materialize <warehouse>/ann/{lsh,pq} "
+                         "partitioned by LSH bucket / IVF-PQ cell so "
+                         "searches read only their probe partitions")
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()

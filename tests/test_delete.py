@@ -69,7 +69,7 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from docling_rag_spark.operators.embed import embed_chunks
-    from docling_rag_spark.plans.ann_index import build_ann_index
+    from docling_rag_spark.plans.ann_index import INDEX_TABLES, build_ann_index
     from docling_rag_spark.plans.job import bucket_of
 
     pages = str(tmp_path / "pages.parquet")
@@ -83,15 +83,16 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
      .parquet(os.path.join(out, "embeddings")))
     build_ann_index(spark, spark.read.parquet(os.path.join(out, "embeddings")),
                     os.path.join(out, "ann"), id_cols=("url", "chunk_id"))
+    assert sorted(os.listdir(os.path.join(out, "ann"))) == \
+        sorted([*INDEX_TABLES, "pq_books.json"])
 
     victims = sorted(_chunk_urls(spark, out))[:2]
     report = delete_urls(spark, out, victims, num_buckets=8)
-    assert report["ann_rows_deleted"].get("ann/lsh", 0) > 0
-    # pq (IVF-PQ codes table) must cascade too — a stale codes table would
-    # keep ADC-ranking deleted chunks even after lsh/ivf/mt forget them
-    assert os.path.isdir(os.path.join(out, "ann", "pq"))
-    assert report["ann_rows_deleted"].get("ann/pq", 0) > 0
-    for sub in ("lsh", "ivf", "mt", "pq"):
+    # every index table cascades — a stale one would keep ranking deleted
+    # chunks (pq: ADC-ranking them) even after the others forget them
+    for sub in INDEX_TABLES:
+        assert os.path.isdir(os.path.join(out, "ann", sub)), sub
+        assert report["ann_rows_deleted"].get(f"ann/{sub}", 0) > 0, sub
         idx_urls = {r["url"] for r in
                     spark.read.parquet(os.path.join(out, "ann", sub))
                     .select("url").distinct().collect()}

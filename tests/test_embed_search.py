@@ -202,6 +202,40 @@ def test_ann_serving_path_matches_exact_on_probed_buckets(spark, tmp_path):
         os.rename(os.path.join(wh, "ann_bak"), os.path.join(wh, "ann"))
 
 
+def test_search_unpersists_hits_when_decorate_raises(spark, tmp_path,
+                                                    monkeypatch):
+    """search_warehouse pins its top-k hits for the decorate joins; a
+    failure there must still release them, or every failed request leaks
+    a cached RDD for the life of the serving session."""
+    from docling_rag_spark.api import service
+    from docling_rag_spark.plans.job import run_extraction
+    from docling_rag_spark.sources.pages import write_pages_parquet
+
+    pages = str(tmp_path / "pages.parquet")
+    wh = str(tmp_path / "wh")
+    write_pages_parquet(pages, 20)
+    run_extraction(spark, pages, wh, num_buckets=4)
+
+    DataFrame = type(spark.range(1))  # the concrete (classic) class
+    real_collect = DataFrame.collect
+
+    def failing_collect(self):
+        if "preview" not in self.columns:
+            return real_collect(self)
+        self.count()  # materialize the pinned hits, then fail
+        raise RuntimeError("decorate failed")
+
+    def persistent_rdds():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persistent_rdds()
+    monkeypatch.setattr(DataFrame, "collect", failing_collect)
+    with pytest.raises(RuntimeError, match="decorate failed"):
+        service.search_warehouse(spark, wh, "star schema fact tables",
+                                 log=False, mode="exact")
+    assert persistent_rdds() == before
+
+
 def test_format_search_results_contract():
     """Port of the reference's citation formatting (core/agent.py:56-76):
     empty sentinel, [i] file (p.N, score=X.XX) [h1 > h2] headers with

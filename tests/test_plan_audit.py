@@ -136,18 +136,15 @@ def test_simhash_pairs_no_pair_volume_distinct(spark):
 
 
 def test_ann_index_partition_pruning(spark):
-    """The materialized ANN index must be read partition-pruned: the scan
-    touches <=9 of 256 LSH bucket dirs (multiprobe), exactly 1 for the
-    single-bucket path, and exactly 1 of 16 IVF cell dirs. Checked both
-    physically (inputFiles shrinks to probe dirs) and in the plan
-    (PartitionFilters on the partition key)."""
+    """The materialized ANN index must be read partition-pruned: the
+    multiprobe scan touches <=9 of 256 LSH bucket dirs (IVF-PQ's cell
+    pruning is audited in tests/test_pq.py). Checked both physically
+    (inputFiles shrinks to probe dirs) and in the plan (PartitionFilters
+    on the partition key)."""
     import os
     import re as _re
 
-    cases = (("vec_lsh_bucketed", "bucket", 1, 256),
-             ("vec_lsh_multiprobe", "bucket", 9, 256),
-             ("vec_lsh_multitable", "bucket", 4, 256),
-             ("vec_ivf_topk", "cell", 1, 16))
+    cases = (("vec_lsh_multiprobe", "bucket", 9, 256),)
     for name, key, max_parts, total_parts in cases:
         df = all_queries()[name](spark, SF_DIR)
         qe = df._jdf.queryExecution()

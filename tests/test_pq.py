@@ -87,8 +87,8 @@ def test_pq_recall_floor_vs_exact(spark, spark_rows):
     """recall@10 vs the exact brute-force top-10 on the NEAR-UNIFORM
     testdata (max pairwise cosine ~0.5 — neighbors barely above random
     background, the worst case for any pruned ANN; same caveat as
-    tests/test_vectors_ops.py, where the accepted LSH/IVF paths pin
-    recall 0-4 of 10 on this corpus). Measured 0.8 at 4-of-16-cell
+    tests/test_vectors_ops.py, where the multiprobe LSH path pins
+    recall 0-2 of 10 on this corpus). Measured 0.8 at 4-of-16-cell
     pruning; floor 0.7. The clustered-corpus test below pins the
     structure-present case at ≥0.9."""
     exact = {r.vec_id for r in V.vec_topk_cosine(spark, SF_DIR).collect()}
