@@ -8,21 +8,43 @@ the stdlib HTTP server (api/server.py) — or any other frontend — stays a
 thin JSON shim. No web framework ships in this environment; the HTTP tier
 is deliberately dependency-free.
 
-Driver-side role: these run interactive, seconds-scale queries (top-k
-search is a TakeOrderedAndProject over the bucketed embeddings table;
-status is a lineage-table scan). The heavy batch work stays in plans/job.
+Driver-side role: these run interactive, seconds-scale queries. A search
+is two small Spark steps: a TakeOrderedAndProject over the bucketed
+embeddings table collects the top-k keys, then a point lookup of those
+keys in ``extracted`` and ``chunks`` decorates them on the driver. Status
+is a lineage-table scan. The heavy batch work stays in plans/job.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
+
+
+# the exact path's table as scripts/run_embed.py writes it; declared so a
+# request plans its scan without a footer-inference job
+EMBEDDINGS_SCHEMA = ("url string, chunk_id int, embedding array<float>, "
+                     "bucket int")
+
+
+@contextlib.contextmanager
+def _job_description(spark: SparkSession, text: str):
+    """Tag the Spark jobs run inside the block, so an event log maps a
+    request's stages to the step that ran them."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def search_warehouse(spark: SparkSession, warehouse: str, query: str,
@@ -32,12 +54,26 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
     """§3.2 search lifecycle: embed query -> top-k -> decorate (J1) ->
     heading path (F3) + 300-char preview (F4) -> search log (S8).
 
-    ``mode``: 'exact' scans the full embeddings table
-    (TakeOrderedAndProject); 'ann' requires the materialized
-    <warehouse>/ann/lsh index (run_embed.py --ann-index) and scans only
-    the 9 multiprobe bucket partitions — the reference's HNSW
+    Two Spark steps, three small jobs (four on the ANN path, whose index
+    scan reads a footer first):
+
+    1. top-k: one TakeOrderedAndProject over the candidate rows collects
+       the <= k ``(url, chunk_id, score)`` hits to the driver. A
+       ``url_prefix`` is a ``startswith`` filter on the candidates, pushed
+       into their scan.
+    2. decorate: ``extracted`` and ``chunks`` are read with
+       ``url IN (<hit urls>)``, which prunes their url-sorted row groups,
+       and the looked-up rows are merged onto the hits on the driver,
+       ordered by (score desc, url, chunk_id) with the score rounded to 4
+       places.
+
+    ``mode``: 'exact' scans the full embeddings table; 'ann' requires the
+    materialized <warehouse>/ann/lsh index (run_embed.py --ann-index) and
+    scans only the 9 multiprobe bucket partitions — the reference's HNSW
     approximate-speed trade-off (storage/db_schema.py:36-37), here as
-    Iceberg-style partition pruning; 'auto' uses the index when present."""
+    Iceberg-style partition pruning; 'auto' uses the index when present.
+    A store with no chunks raises ``FileNotFoundError`` (P5); it is only
+    probed when the top-k comes back empty."""
     from docling_rag_spark.operators.embed import embed_chunks, embed_texts
     from docling_rag_spark.operators.search import log_search, search_chunks
     from docling_rag_spark.plans import ann_index as AI
@@ -62,52 +98,63 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         emb = (ann_probe_candidates(spark, warehouse, probes)
                .select("url", "chunk_id", "embedding"))
     elif os.path.isdir(emb_path):
-        emb = spark.read.parquet(emb_path)
+        emb = spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
     else:
         emb = embed_chunks(chunks)
-    allowed = None
     if url_prefix is not None:
-        allowed = (chunks.select("url").distinct()
-                   .filter(F.col("url").startswith(url_prefix)))
-    hits = search_chunks(spark, emb, query, top_k=top_k,
-                         allowed_urls=allowed,
-                         store_is_empty=chunks.isEmpty())
-    # decorate: hits is the small side (<= top_k rows), the registry and
-    # chunk tables are corpus-sized — broadcasting THEM inverts the join
-    # at scale. Prune each dim to the hit keys first (broadcast hash
-    # semi-join: one map-only scan, no shuffle), then the <= k surviving
-    # dim rows are safe to broadcast into the left joins. hits feeds
-    # three consumers, so pin it once (k rows) instead of re-running the
-    # search per branch.
-    from pyspark import StorageLevel
-    hits = hits.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        hit_keys = hits.select("url", "chunk_id")
-        docs = (wh.read_table(spark, warehouse, "extracted")
-                .select("url", "title")
-                .join(F.broadcast(hit_keys.select("url").distinct()),
-                      "url", "left_semi"))
-        meta = (chunks.select("url", "chunk_id", "text", "headings",
-                              "page_number", "element_type")
-                .join(F.broadcast(hit_keys), ["url", "chunk_id"],
-                      "left_semi"))
-        extra = [F.col("text"), F.col("headings")] if include_text else []
-        rows = (hits.join(F.broadcast(docs), "url", "left")
-                .join(F.broadcast(meta), ["url", "chunk_id"], "left")
+        emb = emb.filter(F.col("url").startswith(url_prefix))
+    with _job_description(spark, "search:topk"):
+        hits = (search_chunks(spark, emb, query, top_k=top_k,
+                              store_is_empty=False)
                 .select("url", "chunk_id",
-                        F.round("score", 4).alias("score"), "title",
-                        F.array_join("headings", " > ")
-                         .alias("heading_path"),
-                        F.translate(F.substring("text", 1, 300), "\n", " ")
-                         .alias("preview"),
-                        "page_number", "element_type", *extra)
-                .orderBy(F.desc("score"), "url", "chunk_id")
+                        F.round("score", 4).alias("score"))
                 .collect())
-    finally:
-        hits.unpersist()
+        if not hits and chunks.isEmpty():
+            raise FileNotFoundError("no chunks in storage (reference "
+                                    "db_storage.py:131-133 contract)")
+    with _job_description(spark, "search:decorate"):
+        rows = _decorate(spark, warehouse, chunks, hits, include_text)
     if log:
         log_search(warehouse, query, rows[0]["score"] if rows else None)
-    return [r.asDict() for r in rows]
+    return rows
+
+
+def _decorate(spark: SparkSession, warehouse: str, chunks: DataFrame,
+              hits: list, include_text: bool) -> list[dict]:
+    """Left-join the hits to their document title and chunk metadata by
+    point lookup: one small collect per table, filtered to the hit keys,
+    merged on the driver. Both tables hold one row per key (extraction
+    keeps the latest page per url); a hit with no row keeps null fields."""
+    if not hits:
+        return []
+    urls = sorted({h["url"] for h in hits})
+    titles = {r["url"]: r["title"]
+              for r in (wh.read_table(spark, warehouse, "extracted")
+                        .filter(F.col("url").isin(urls))
+                        .select("url", "title").collect())}
+    extra = ["text", "headings"] if include_text else []
+    fields = ["heading_path", "preview", "page_number", "element_type",
+              *extra]
+    meta = {(r["url"], r["chunk_id"]): r.asDict()
+            for r in (chunks
+                      .filter(F.col("url").isin(urls)
+                              & F.col("chunk_id").isin(
+                                  sorted({h["chunk_id"] for h in hits})))
+                      .select("url", "chunk_id",
+                              F.array_join("headings", " > ")
+                               .alias("heading_path"),
+                              F.translate(F.substring("text", 1, 300),
+                                          "\n", " ").alias("preview"),
+                              "page_number", "element_type", *extra)
+                      .collect())}
+    rows = []
+    for h in hits:
+        m = meta.get((h["url"], h["chunk_id"]), {})
+        rows.append({"url": h["url"], "chunk_id": h["chunk_id"],
+                     "score": h["score"], "title": titles.get(h["url"]),
+                     **{f: m.get(f) for f in fields}})
+    rows.sort(key=lambda r: (-r["score"], r["url"], r["chunk_id"]))
+    return rows
 
 
 def chat_payload(spark: SparkSession, warehouse: str, message: str,

@@ -25,7 +25,7 @@ import datetime as dt
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.operators.embed import embed_texts
@@ -56,6 +56,17 @@ def cosine_score(emb_col, q_col):
         F.zip_with(emb_col, q_col,
                    lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _vector_literal(vec) -> Column:
+    """``vec`` as one ``array<double>`` literal, built in a single call.
+
+    ``F.lit(list)`` and ``F.array(*lits)`` both cost one py4j round trip per
+    component (256 for a query vector). One comma-joined string literal,
+    split and cast, is folded by the optimizer into the same array literal:
+    ``repr`` of a float round-trips exactly through the cast."""
+    return F.split(F.lit(",".join(repr(float(x)) for x in vec)),
+                   ",").cast("array<double>")
 
 
 def search_chunks(spark: SparkSession,
@@ -90,9 +101,7 @@ def search_chunks(spark: SparkSession,
         scored = scored.join(F.broadcast(allowed_urls), "url", "left_semi")
     scored = scored.select(
         "url", "chunk_id",
-        cosine_score(F.col("embedding"), F.array(*[F.lit(float(x))
-                                                   for x in q]))
-        .alias("score"))
+        cosine_score(F.col("embedding"), _vector_literal(q)).alias("score"))
     return scored.orderBy(F.desc("score"), F.asc("url"),
                           F.asc("chunk_id")).limit(top_k)
 

@@ -3,9 +3,10 @@
 
 The reference's ``cli search`` lifecycle (§3.2) end-to-end: embed the query,
 optional source filtering, top-k, decorate results with document titles
-(J1 broadcast join), format heading paths " > " (F3) and 300-char previews
-(F4), log the top score to the searches table (S8). Thin shim over
-``api.service.search_warehouse`` — the same function the HTTP tier serves.
+(J1, a point lookup of the hit urls), format heading paths " > " (F3) and
+300-char previews (F4), log the top score to the searches table (S8). Thin
+shim over ``api.service.search_warehouse`` — the same function the HTTP tier
+serves.
 
 Usage:
     python scripts/run_search.py --warehouse /tmp/wh "star schema queries" \

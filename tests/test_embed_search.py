@@ -10,6 +10,8 @@ scaled to the hashed random-projection embedder).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 
@@ -148,21 +150,18 @@ def test_semantic_quality_end_to_end(spark, chunk_emb):
     assert rows[0]["score"] > 0.3
 
 
-def test_ann_serving_path_matches_exact_on_probed_buckets(spark, tmp_path):
-    """search_warehouse(mode='ann') over the materialized warehouse index:
-    pruned to the 9 multiprobe partitions, exact cosine within them; the
-    top hit must agree with exact search whenever the exact winner lives
-    in a probed bucket (on this tiny corpus it does)."""
-    import os
-
-    from docling_rag_spark.api import service
+@pytest.fixture(scope="module")
+def served_wh(spark, tmp_path_factory):
+    """A 60-page warehouse with a bucketed embeddings table and the ANN
+    index, as scripts/run_embed.py --ann-index leaves it."""
     from docling_rag_spark.plans import ann_index as AI
     from docling_rag_spark.plans.job import bucket_of, run_extraction
     from docling_rag_spark.sources.pages import write_pages_parquet
     from pyspark.sql import functions as F
 
-    pages = str(tmp_path / "pages.parquet")
-    wh = str(tmp_path / "wh")
+    root = tmp_path_factory.mktemp("served")
+    pages = str(root / "pages.parquet")
+    wh = str(root / "wh")
     write_pages_parquet(pages, 60)
     run_extraction(spark, pages, wh, num_buckets=8)
     chunks = spark.read.parquet(os.path.join(wh, "chunks"))
@@ -173,7 +172,18 @@ def test_ann_serving_path_matches_exact_on_probed_buckets(spark, tmp_path):
     emb = spark.read.parquet(os.path.join(wh, "embeddings"))
     AI.build_ann_index(spark, emb, os.path.join(wh, "ann"),
                        id_cols=("url", "chunk_id"))
+    return wh
 
+
+def test_ann_serving_path_matches_exact_on_probed_buckets(spark, served_wh):
+    """search_warehouse(mode='ann') over the materialized warehouse index:
+    pruned to the 9 multiprobe partitions, exact cosine within them; the
+    top hit must agree with exact search whenever the exact winner lives
+    in a probed bucket (on this tiny corpus it does)."""
+    from docling_rag_spark.api import service
+    from docling_rag_spark.plans import ann_index as AI
+
+    wh = served_wh
     q = "star schema fact dimension tables"
     exact = service.search_warehouse(spark, wh, q, top_k=3, log=False,
                                      mode="exact")
@@ -200,6 +210,121 @@ def test_ann_serving_path_matches_exact_on_probed_buckets(spark, tmp_path):
             service.search_warehouse(spark, wh, q, mode="ann", log=False)
     finally:
         os.rename(os.path.join(wh, "ann_bak"), os.path.join(wh, "ann"))
+
+
+def _spark_jobs(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_launches_at_most_four_spark_jobs(spark, served_wh,
+                                                monkeypatch):
+    """A search is one top-k collect plus one point lookup per decorate
+    table (and, on the ANN path, the index scan's footer read) — not a
+    multi-wave broadcast-join plan. Its collects run under the
+    search:topk / search:decorate job descriptions, and the caller's own
+    description is back in place afterwards."""
+    from docling_rag_spark.api import service
+
+    sc = spark.sparkContext
+    for mode in ("exact", "ann"):
+        hits, n = _spark_jobs(spark, lambda: service.search_warehouse(
+            spark, served_wh, "star schema tables", log=False, mode=mode))
+        assert hits, mode
+        assert n <= 4, (mode, n)
+
+    DataFrame = type(spark.range(1))
+    real_collect = DataFrame.collect
+    tags = []
+
+    def tagged_collect(self):
+        tags.append(sc.getLocalProperty("spark.job.description"))
+        return real_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", tagged_collect)
+    sc.setLocalProperty("spark.job.description", "caller")
+    try:
+        service.search_warehouse(spark, served_wh, "star schema tables",
+                                 log=False, mode="exact")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    assert tags == ["search:topk", "search:decorate", "search:decorate"]
+
+
+def test_search_url_prefix_matches_numpy_oracle(spark, served_wh):
+    """url_prefix filters the candidates themselves: exact mode equals a
+    numpy brute-force top-k over the prefix-matching embeddings, ordered
+    by (rounded score desc, url, chunk_id); every ann hit carries the
+    prefix; a prefix that matches nothing returns no hits."""
+    from docling_rag_spark.api import service
+
+    q, k = "star schema fact tables", 5
+    # a host the ANN probe reaches for this query, so both modes have hits
+    first = service.search_warehouse(spark, served_wh, q, mode="ann",
+                                     log=False)[0]["url"]
+    prefix = "https://" + first.split("/")[2] + "/"
+    rows = (spark.read.parquet(os.path.join(served_wh, "embeddings"))
+            .select("url", "chunk_id", "embedding").collect())
+    qv = embed_texts([q])[0].astype(np.float64)
+    score = {(r["url"], r["chunk_id"]):
+             float(np.asarray(r["embedding"], np.float64) @ qv)
+             for r in rows if r["url"].startswith(prefix)}
+    assert 0 < len(score) < len(rows)
+    top = sorted(score, key=lambda h: (-score[h], h[0], h[1]))[:k]
+    want = sorted(top, key=lambda h: (-round(score[h], 4), h[0], h[1]))
+
+    got = service.search_warehouse(spark, served_wh, q, top_k=k,
+                                   url_prefix=prefix, mode="exact",
+                                   log=False)
+    assert [(r["url"], r["chunk_id"]) for r in got] == want
+    for r in got:
+        assert abs(r["score"] - score[(r["url"], r["chunk_id"])]) <= 1e-4
+        assert r["preview"] is not None
+    ann = service.search_warehouse(spark, served_wh, q, top_k=k,
+                                   url_prefix=prefix, mode="ann", log=False)
+    assert ann and all(r["url"].startswith(prefix) for r in ann)
+    for mode in ("exact", "ann"):
+        assert service.search_warehouse(
+            spark, served_wh, q, url_prefix="https://no-such.example/",
+            mode=mode, log=False) == []
+
+
+def test_search_empty_chunks_table_raises(spark, tmp_path):
+    """P5 on a warehouse whose chunks table exists but holds no rows:
+    FileNotFoundError from the service, HTTP 404 from the server."""
+    import urllib.error
+    import urllib.request
+
+    from docling_rag_spark.api import service
+    from docling_rag_spark.api.server import serve_background
+
+    wh = str(tmp_path / "wh")
+    spark.createDataFrame(
+        [], "url string, chunk_id int, text string, context_text string, "
+            "headings array<string>, page_number int, element_type string"
+    ).write.parquet(os.path.join(wh, "chunks"))
+    with pytest.raises(FileNotFoundError):
+        service.search_warehouse(spark, wh, "star schema", log=False)
+    srv, base = serve_background(spark, wh)
+    try:
+        with pytest.raises(urllib.error.HTTPError) as err:
+            urllib.request.urlopen(base + "/search?q=star+schema",
+                                   timeout=120)
+        assert err.value.code == 404
+    finally:
+        srv.shutdown()
+        srv.server_close()
 
 
 def test_search_unpersists_hits_when_decorate_raises(spark, tmp_path,
