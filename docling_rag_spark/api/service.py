@@ -17,7 +17,6 @@ is a lineage-table scan. The heavy batch work stays in plans/job.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import threading
 import time
@@ -26,25 +25,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
+from docling_rag_spark.session import job_description
 
 
 # the exact path's table as scripts/run_embed.py writes it; declared so a
 # request plans its scan without a footer-inference job
 EMBEDDINGS_SCHEMA = ("url string, chunk_id int, embedding array<float>, "
                      "bucket int")
-
-
-@contextlib.contextmanager
-def _job_description(spark: SparkSession, text: str):
-    """Tag the Spark jobs run inside the block, so an event log maps a
-    request's stages to the step that ran them."""
-    sc = spark.sparkContext
-    prev = sc.getLocalProperty("spark.job.description")
-    sc.setLocalProperty("spark.job.description", text)
-    try:
-        yield
-    finally:
-        sc.setLocalProperty("spark.job.description", prev)
 
 
 def search_warehouse(spark: SparkSession, warehouse: str, query: str,
@@ -103,7 +90,7 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         emb = embed_chunks(chunks)
     if url_prefix is not None:
         emb = emb.filter(F.col("url").startswith(url_prefix))
-    with _job_description(spark, "search:topk"):
+    with job_description(spark, "search:topk"):
         hits = (search_chunks(spark, emb, query, top_k=top_k,
                               store_is_empty=False)
                 .select("url", "chunk_id",
@@ -112,7 +99,7 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         if not hits and chunks.isEmpty():
             raise FileNotFoundError("no chunks in storage (reference "
                                     "db_storage.py:131-133 contract)")
-    with _job_description(spark, "search:decorate"):
+    with job_description(spark, "search:decorate"):
         rows = _decorate(spark, warehouse, chunks, hits, include_text)
     if log:
         log_search(warehouse, query, rows[0]["score"] if rows else None)

@@ -41,7 +41,9 @@ MAX_TAGS = 5
 
 # --- Scale mechanics ----------------------------------------------------------
 DEFAULT_NUM_BUCKETS = 64      # url-hash buckets; unit of lineage/resume
-DEFAULT_SALT_PARTITIONS = 32  # salted repartition width before the parse UDF
+# parse-stage width: the extraction job runs exactly this many parse UDF
+# tasks per batch, whole buckets round-robin over them (plans/job.py)
+DEFAULT_SALT_PARTITIONS = 32
 
 # --- Embedding (reference: core/embedder.py, dim frozen per model ------------
 # db_schema.py:33 pins 1024 to deepvk/USER-bge-m3; the self-contained hashed

@@ -1,6 +1,6 @@
 """Deterministic bucket -> shuffle-partition routing (no sampling job).
 
-The extraction job wants each url-hash bucket in its own shuffle partition
+The extraction job wants whole url-hash buckets in its shuffle partitions
 before the parse UDF, so the staged ``partitionBy("bucket")`` write emits one
 file per bucket (plans/job.py). ``repartitionByRange`` delivers that layout
 but pays a SAMPLING JOB — an extra scan of the input per batch whose cost is
@@ -14,10 +14,12 @@ This module gets both properties at once: Spark routes a row to partition
 ``pmod(murmur3(key), n)``, and murmur3 on an int32 is a fixed public
 function — so for every target partition ``p`` we can search a small int
 ``x_p`` (a murmur3 *preimage*) with ``pmod(murmur3(x_p), n) == p``, and
-route bucket ``b`` through the literal lookup ``x[index(b)]``. The search is
-driver-side, O(n log n) expected hash evaluations (~1500 for n=256, sub-ms),
-and the routing column is a JVM ``element_at`` on an array literal — zero
-extra jobs, exactly one bucket per partition.
+route bucket ``b`` through the literal lookup ``x[index(b) mod n]``. The
+search is driver-side, O(n log n) expected hash evaluations (~1500 for
+n=256, sub-ms), and the routing column is a JVM ``element_at`` on an array
+literal — zero extra jobs. Each bucket lands whole in one partition; with
+``n`` partitions for a batch of ``k`` buckets, round-robin puts at most
+``ceil(k/n)`` buckets on any partition (exactly one when ``n == k``).
 
 Parity with Spark is pinned by tests/test_partitioning.py: the Python
 ``murmur3_int32`` below must equal ``F.hash(int32)`` (Spark's
@@ -77,17 +79,21 @@ def partition_preimages(n: int) -> tuple[int, ...]:
 
 
 def bucket_route(bucket_col: Column, batch: list[int],
-                 num_buckets: int) -> Column:
-    """Routing column: ``repartition(len(batch), bucket_route(...))`` puts
-    each bucket of ``batch`` alone in its own shuffle partition.
+                 num_buckets: int, partitions: int | None = None) -> Column:
+    """Routing column: ``repartition(P, bucket_route(..., partitions=P))``
+    puts each bucket of ``batch`` whole in one shuffle partition, bucket
+    ``batch[i]`` in partition ``i mod P`` — at most ``ceil(len(batch)/P)``
+    buckets per partition. ``partitions`` defaults to ``len(batch)``:
+    each bucket alone in its own partition.
 
     ``batch`` lists the active bucket ids (subset of 0..num_buckets-1);
     rows are assumed already filtered to those buckets. Inactive slots in
     the lookup array are routed to partition 0 (unused)."""
-    pre = partition_preimages(len(batch))
+    n = partitions or len(batch)
+    pre = partition_preimages(n)
     lookup = [pre[0]] * num_buckets
     for i, b in enumerate(batch):
-        lookup[b] = pre[i]
+        lookup[b] = pre[i % n]
     return F.element_at(F.lit(lookup), bucket_col + F.lit(1))
 
 

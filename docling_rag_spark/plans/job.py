@@ -5,8 +5,9 @@ Replaces the reference's sequential indexing loop + postgres job queue
 
   scan pages -> assign bucket = pmod(xxhash64(url), N)
              -> anti-join buckets against committed lineage (resume, J3)
-             -> per bucket-batch: salted repartition -> fused parse+chunk
-                mapInPandas -> stage parquet partitioned by bucket
+             -> per bucket-batch: bucket-routed repartition into
+                salt_partitions tasks -> fused parse+chunk mapInPandas
+                -> stage parquet partitioned by bucket
              -> atomic bucket-directory commit + lineage append
 
 Unit of checkpointing = url-hash bucket (not file): a rerun after a crash
@@ -44,6 +45,7 @@ from docling_rag_spark.operators.pipeline import (
     extracted_table,
 )
 from docling_rag_spark.plans.ann_index import INDEX_TABLES
+from docling_rag_spark.session import job_description
 
 
 @dataclass
@@ -188,7 +190,9 @@ def _run_extraction_inner(
     retain_snapshots: bool,
     _fail_after_batches: int | None,
 ) -> ExtractionReport:
-    pages = spark.read.parquet(pages_path)
+    # the footer read that infers the pages schema is a Spark job too
+    with job_description(spark, "extract:parse"):
+        pages = spark.read.parquet(pages_path)
 
     # conflict base: the instant this job read its base state. Using the
     # per-batch start instead would miss a newer snapshot that committed
@@ -233,7 +237,9 @@ def _run_extraction_inner(
                 sub = sub.filter(F.col("bucket").isin(batch))
 
             if mode == "merge":
-                sub, n_unchanged = _changed_pages(spark, sub, out_dir, batch)
+                with job_description(spark, "extract:changes"):
+                    sub, n_unchanged = _changed_pages(spark, sub, out_dir,
+                                                      batch)
                 report.docs_unchanged += n_unchanged
 
             # Bucket-aligned repartition: the url-hash bucket IS the salt (urls
@@ -242,25 +248,30 @@ def _run_extraction_inner(
             # file per bucket with a trivial sort, instead of num_tasks ×
             # num_buckets fragments — the difference between a write that scales
             # with cores and one that collapses under small-file overhead.
-            # When buckets are too coarse for the requested parallelism, add a
-            # salted secondary key: buckets split across tasks (a few files per
-            # bucket) rather than capping parallelism at num_buckets.
-            # bucket_route (not repartitionByRange, not hash-repartition):
-            # murmur3-preimage routing puts exactly one whole bucket in each
-            # shuffle partition with ZERO extra jobs — repartitionByRange
-            # pays a per-batch sampling scan of the input (pure Amdahl tail
-            # in N-vs-4N scaling; measured 1.1-2.0 s/run via event logs),
-            # and hash partitioning on a low-cardinality key leaves ~1/e of
-            # slots empty while stacking 3-4 buckets on others (stragglers
-            # in the expensive parse stage). See functions/partitioning.py.
-            if len(batch) >= 2 * salt_partitions:
+            # The parse stage always runs salt_partitions tasks: every Python
+            # task pays a fixed worker set-up (~0.2 s at local[4], pyspark's
+            # per-task importlib.invalidate_caches() re-reading each cached
+            # zipimporter's archive directory), so one task per bucket would
+            # pay it once per wave. bucket_route puts whole buckets
+            # round-robin into the salt_partitions tasks (at most
+            # ceil(n/salt_partitions) each) with ZERO extra jobs —
+            # repartitionByRange pays a per-batch sampling scan of the input
+            # (pure Amdahl tail in N-vs-4N scaling; measured 1.1-2.0 s/run via
+            # event logs), and hash partitioning on a low-cardinality key
+            # leaves ~1/e of slots empty while stacking 3-4 buckets on others
+            # (stragglers in the expensive parse stage). See
+            # functions/partitioning.py. A batch of fewer buckets than
+            # salt_partitions adds a salted secondary key instead: buckets
+            # split across tasks (a few files per bucket) rather than capping
+            # parallelism at len(batch).
+            if len(batch) >= salt_partitions:
                 from docling_rag_spark.functions.partitioning import bucket_route
                 sub = sub.repartition(
-                    len(batch),
-                    bucket_route(F.col("bucket"), batch, num_buckets))
+                    salt_partitions,
+                    bucket_route(F.col("bucket"), batch, num_buckets,
+                                 partitions=salt_partitions))
             else:
-                sub = sub.repartition(max(len(batch), salt_partitions),
-                                      F.col("bucket"),
+                sub = sub.repartition(salt_partitions, F.col("bucket"),
                                       F.xxhash64("url", F.lit(0x5A17)))
 
             # One UDF pass, materialized to a staged doc-level table; chunks /
@@ -269,12 +280,15 @@ def _run_extraction_inner(
             # of the wide doc rows (text + chunk structs) thrashes GC as
             # parallelism grows, while the staged table reads back pruned (the
             # extracted derivation never touches the chunks column at all).
-            (extract_documents(sub, max_tokens=max_tokens, salt_partitions=None)
-             .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
-             .withColumn("n_chunks", F.size("chunks"))
-             .withColumn("is_error", (F.col("status") == "error").cast("int"))
-             .write.partitionBy("bucket").mode("overwrite")
-             .parquet(os.path.join(staging, "docs")))
+            with job_description(spark, "extract:parse"):
+                (extract_documents(sub, max_tokens=max_tokens,
+                                   salt_partitions=None)
+                 .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
+                 .withColumn("n_chunks", F.size("chunks"))
+                 .withColumn("is_error",
+                             (F.col("status") == "error").cast("int"))
+                 .write.partitionBy("bucket").mode("overwrite")
+                 .parquet(os.path.join(staging, "docs")))
 
             _t1 = _time.time()
             # schema-specified read: an all-empty batch (no urls hash into
@@ -313,16 +327,19 @@ def _run_extraction_inner(
             # parallelism for a fixed fraction of the batch wall-clock.
             from concurrent.futures import ThreadPoolExecutor
 
+            # Each derivation tags its own jobs: it may run on a pool
+            # thread, which does not inherit this thread's description.
             def _stats():
                 # narrow-column scan over (bucket, n_chunks, is_error)
-                return {
-                    row["bucket"]: row
-                    for row in docs.groupBy("bucket").agg(
-                        F.count("*").alias("docs"),
-                        F.sum("n_chunks").alias("chunks"),
-                        F.sum("is_error").alias("failures"),
-                    ).collect()
-                }
+                with job_description(spark, "extract:stats"):
+                    return {
+                        row["bucket"]: row
+                        for row in docs.groupBy("bucket").agg(
+                            F.count("*").alias("docs"),
+                            F.sum("n_chunks").alias("chunks"),
+                            F.sum("is_error").alias("failures"),
+                        ).collect()
+                    }
 
             # merge mode: stats go FIRST (a cheap 3-column scan) so the
             # merged writes below open ONLY buckets that received new
@@ -333,10 +350,12 @@ def _run_extraction_inner(
                 stats = _stats()
                 active = sorted(stats)
                 new_urls = docs.select("url")
-                old_chunks = _committed_bucket_rows(
-                    spark, os.path.join(out_dir, "chunks"), active)
-                old_extracted = _committed_bucket_rows(
-                    spark, os.path.join(out_dir, "extracted"), active)
+                with job_description(spark, "extract:chunks"):
+                    old_chunks = _committed_bucket_rows(
+                        spark, os.path.join(out_dir, "chunks"), active)
+                with job_description(spark, "extract:extracted"):
+                    old_extracted = _committed_bucket_rows(
+                        spark, os.path.join(out_dir, "extracted"), active)
 
             # pass the staged bucket column through instead of re-hashing
             # every output row (an xxhash64+pmod per chunk after explode,
@@ -361,9 +380,10 @@ def _run_extraction_inner(
                 # the whole bucket (the sort SATISFIES the partitionBy
                 # write's required child ordering — it replaces the
                 # bucket-only sort Spark would insert, not adds to it)
-                (new.sortWithinPartitions("bucket", "url", "chunk_id")
-                 .write.partitionBy("bucket").mode("overwrite")
-                 .parquet(os.path.join(staging, "chunks")))
+                with job_description(spark, "extract:chunks"):
+                    (new.sortWithinPartitions("bucket", "url", "chunk_id")
+                     .write.partitionBy("bucket").mode("overwrite")
+                     .parquet(os.path.join(staging, "chunks")))
 
             def _write_extracted():
                 new = extracted_table(docs, extra_cols=("bucket",))
@@ -371,9 +391,10 @@ def _run_extraction_inner(
                     new = (old_extracted.join(new_urls, "url", "left_anti")
                            .unionByName(new, allowMissingColumns=True))
                 staged_schema["extracted"] = new.schema
-                (new.sortWithinPartitions("bucket", "url")
-                 .write.partitionBy("bucket").mode("overwrite")
-                 .parquet(os.path.join(staging, "extracted")))
+                with job_description(spark, "extract:extracted"):
+                    (new.sortWithinPartitions("bucket", "url")
+                     .write.partitionBy("bucket").mode("overwrite")
+                     .parquet(os.path.join(staging, "extracted")))
 
             try:
                 with ThreadPoolExecutor(max_workers=3) as pool:
@@ -382,9 +403,7 @@ def _run_extraction_inner(
                     f_stats = (pool.submit(_stats)
                                if mode != "merge" else None)
                     f_chunks.result()
-                    _t2 = _time.time()
                     f_extracted.result()
-                    _t3 = _time.time()
                     if f_stats is not None:
                         stats = f_stats.result()
             finally:
@@ -440,8 +459,9 @@ def _run_extraction_inner(
                 wh.append_lineage(out_dir, snapshot_id, lineage_rows)
             if debug:
                 _t5 = _time.time()
-                for k, v in (("udf_stage", _t1 - _t0), ("chunks", _t2 - _t1),
-                             ("extracted", _t3 - _t2), ("stats", _t4 - _t3),
+                # one derive phase: the three derivations run concurrently,
+                # so per-derivation completion times would misattribute
+                for k, v in (("udf_stage", _t1 - _t0), ("derive", _t4 - _t1),
                              ("commit", _t5 - _t4)):
                     report.phase_sec[k] = round(
                         report.phase_sec.get(k, 0.0) + v, 2)

@@ -8,6 +8,7 @@ html blobs) are set here so the same job code runs unchanged under
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -29,6 +30,22 @@ def _default_driver_mem() -> str:
     except OSError:
         pass
     return "4g"
+
+
+@contextlib.contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Tag the Spark jobs this thread runs inside the block, so an event
+    log maps stages to the step that ran them. Local properties are per
+    thread: a pool worker must enter its own block (it does not inherit
+    the submitting thread's description). The previous description is
+    restored on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setLocalProperty("spark.job.description", text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def get_spark(app_name: str = "docling-rag-spark",

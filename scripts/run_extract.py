@@ -90,7 +90,7 @@ def main() -> int:
             warm_docs.write.mode("overwrite").parquet(
                 os.path.join(wtmp, "pages"))
             # num_buckets matches the production bucket_route branch
-            # (len(batch) >= 2*salt_partitions) so the warmed plan shape
+            # (len(batch) >= salt_partitions) so the warmed plan shape
             # is the one the timed region runs.
             run_extraction(
                 spark, os.path.join(wtmp, "pages"),
