@@ -43,14 +43,23 @@ driver-side like lineage; expiry is a driver-side metadata delete. Every
 piece maps 1:1 onto the Iceberg snapshot log / ``expire_snapshots`` /
 ``rollback_to_timestamp`` procedures.
 
-Coverage: every bucket-structured table rewrite retains once the
-warehouse has a ``_snapshots`` dir (extraction commits, merge mode,
-deletes, registry upserts, stream folds — via
-``commit_buckets_retained``). NOT retained: streaming ``batch=<id>``
-dirs (a transient pre-fold layout) and the derived ANN index (rebuildable
-from the embeddings table). Known race, shared with plain current-table
-reads: an as-of DataFrame resolved before a concurrent ``expire`` may
-fail mid-scan when the retained files vanish — rerun after expiry.
+It is also the one commit path of every copy-on-write bucket rewrite:
+``commit_rewrite`` validates, pins the bucket spec and table schema,
+installs the staged buckets through ``commit_buckets_retained`` and
+appends lineage, all under the commit lock. Extraction (overwrite and
+merge), deletes, registry upserts and stream folds call it (staged by
+``warehouse.stage_buckets`` or, for extraction, the job's own derived
+writes), so every warehouse policy — retention, spec and schema pinning
+— applies to each of them by construction. Only rebucket (a new
+layout for every bucket) and rollback (copies of retained versions)
+commit on their own.
+
+Every rewrite retains once the warehouse has a ``_snapshots`` dir. NOT
+retained: streaming ``batch=<id>`` dirs (a transient pre-fold layout)
+and the derived ANN index (rebuildable from the embeddings table). Known
+race, shared with plain current-table reads: an as-of DataFrame resolved
+before a concurrent ``expire`` may fail mid-scan when the retained files
+vanish — rerun after expiry.
 """
 
 from __future__ import annotations
@@ -63,8 +72,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from docling_rag_spark.config import DEFAULT_NUM_BUCKETS
+from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.io.warehouse import (append_parquet_atomic,
-                                            read_parquet_dir)
+                                            bucket_dir, commit_buckets,
+                                            commit_lock, now,
+                                            pinned_table_schema,
+                                            read_parquet_dir,
+                                            warehouse_num_buckets)
 
 LOG_ARROW_SCHEMA = pa.schema([
     ("commit_id", pa.string()),
@@ -148,8 +162,6 @@ def recover_intents(out_dir: str) -> int:
 
     Kept rows are finalized as a real log file; a fully-dead intent is
     simply removed. Returns the number of intents reconciled."""
-    from docling_rag_spark.io.warehouse import bucket_dir
-
     n = 0
     for path in _intent_files(out_dir):
         try:
@@ -227,11 +239,10 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
                             buckets: list[int], commit_tag: str,
                             committed_at: float, *, force: bool = False,
                             commit_id: str | None = None) -> str | None:
-    """``warehouse.commit_buckets`` honoring warehouse-level retention.
-
-    Call in place of ``commit_buckets`` (inside the same commit lock) at
-    EVERY bucket-rewrite site, the extraction job included. When retention
-    is off (and ``force`` is False) this is exactly ``commit_buckets``;
+    """``warehouse.commit_buckets`` honoring warehouse-level retention —
+    the one entry point that installs staged buckets (``commit_rewrite``
+    and rebucket call it inside the commit lock). When retention is off
+    (and ``force`` is False) this is exactly ``commit_buckets``;
     when on, the displaced dirs are parked and logged under the commit id
     (returned). ``force`` turns retention on for a warehouse that has
     never retained (the ``--retain-snapshots`` opt-in); once any retained
@@ -241,8 +252,6 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
     the renames and promoted to a committed log file by one atomic rename
     after — see ``recover_intents`` for the crash story.
     """
-    from docling_rag_spark.io.warehouse import bucket_dir, commit_buckets
-
     recover_intents(out_dir)
     table_dir = os.path.join(out_dir, table)
     enabled = force or retention_enabled(out_dir)
@@ -265,6 +274,54 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
     return commit_id
 
 
+def commit_rewrite(out_dir: str, staged: dict, buckets: list[int],
+                   num_buckets: int, snapshot_id: str, *, conflicts,
+                   lineage: dict | None = None,
+                   started_at: float | None = None, force: bool = False,
+                   commit_id: str | None = None) -> list[dict]:
+    """Commit a copy-on-write rewrite of ``buckets`` — the one commit
+    path every bucket writer shares (the Iceberg commit that overwrite,
+    MERGE and DELETE all end in).
+
+    ``staged`` maps each table to ``(staging table dir, staged Spark
+    schema)``. Under the commit lock, in order:
+
+      1. ``conflicts()`` — the writer's optimistic-concurrency validation,
+         returning the buckets whose committed state moved since it read
+         its base; any raise ``CommitConflict`` (completing the stale
+         commit would silently roll them back);
+      2. pin the bucket spec, then per table evolve the pinned schema
+         BEFORE its renames (a reader must never see files the pinned
+         schema cannot describe) and install the staged buckets;
+      3. with ``lineage`` (bucket -> count overrides, absent = zeros), one
+         lineage row per bucket, so a concurrent writer's ``conflicts``
+         check sees this commit.
+
+    Returns the lineage rows appended."""
+    # module-attribute calls: the traced benchmark run wraps these
+    # (perfbench/workloads.py SPANS) to time the commit phase
+    with wh.commit_lock(out_dir):
+        moved = conflicts()
+        if moved:
+            raise wh.CommitConflict(moved, snapshot_id)
+        ts = wh.now()
+        wh.pin_num_buckets(out_dir, num_buckets)
+        for table, (staging_table_dir, schema) in staged.items():
+            wh.pin_table_schema(out_dir, table, schema)
+            commit_buckets_retained(out_dir, staging_table_dir, table,
+                                    buckets, snapshot_id, ts, force=force,
+                                    commit_id=commit_id)
+        if lineage is None:
+            return []
+        rows = [{"input_snapshot_id": snapshot_id, "bucket": b,
+                 "doc_count": 0, "chunk_count": 0, "failure_count": 0,
+                 **lineage.get(b, {}),
+                 "started_at": started_at, "finished_at": ts}
+                for b in buckets]
+        wh.append_lineage(out_dir, snapshot_id, rows)
+        return rows
+
+
 def retire_buckets(out_dir: str, table: str, buckets: list[int],
                    commit_tag: str, committed_at: float, *,
                    commit_id: str | None = None) -> str | None:
@@ -275,8 +332,6 @@ def retire_buckets(out_dir: str, table: str, buckets: list[int],
     pre-retire content stays time-travel-readable. Retention off: the
     crash-safe hidden-rename removal ``commit_buckets`` uses. Returns the
     commit id when anything was logged."""
-    from docling_rag_spark.io.warehouse import bucket_dir
-
     recover_intents(out_dir)
     table_dir = os.path.join(out_dir, table)
     existing = [b for b in buckets
@@ -312,8 +367,6 @@ def resolve_as_of(out_dir: str, table: str, ts: float) -> dict[int, str | None]:
     to their current directory. Raises :class:`SnapshotExpired` when a
     needed retained version was expired.
     """
-    from docling_rag_spark.io.warehouse import bucket_dir, commit_lock
-
     if _intent_files(out_dir):
         # a crashed commit left an unreconciled intent: repair under the
         # lock before resolving, so the log and the dirs agree (an
@@ -368,13 +421,9 @@ def read_table_as_of(spark, out_dir: str, table: str, ts: float,
     re-derived from ``url`` (resolved paths span retained and current
     parents, so partition-dir inference cannot supply it)."""
     from pyspark.sql import functions as F
-
-    from docling_rag_spark.plans.job import bucket_of
-
     from pyspark.sql import types as T
 
-    from docling_rag_spark.io.warehouse import (pinned_table_schema,
-                                                warehouse_num_buckets)
+    from docling_rag_spark.plans.job import bucket_of
 
     # a pure read of history: an explicit modulus is honored verbatim
     # (time travel to before a rebucket legitimately uses the OLD spec —
@@ -407,8 +456,6 @@ def expire_snapshots(out_dir: str, older_than: float) -> dict:
     instant earlier than the oldest surviving commit becomes unavailable.
     Serialized against concurrent commits via the warehouse commit lock.
     """
-    from docling_rag_spark.io.warehouse import commit_lock
-
     if not retention_enabled(out_dir):
         # a no-op expire must not CREATE _snapshots: that would silently
         # flip retention on for every future delete/upsert/fold on a
@@ -442,24 +489,6 @@ def expire_snapshots(out_dir: str, older_than: float) -> dict:
                 "dirs_removed": removed, "log_rows": len(keep)}
 
 
-def _pin_empty_schema(table_dir: str, bucket: int, park: str) -> bool:
-    """A rollback that removes every bucket (rollback-to-genesis) must not
-    leave a file-less table dir — every later read would fail schema
-    inference. Pin the schema with one zero-row parquet (what an Iceberg
-    table keeps in metadata), copied from any displaced file's footer —
-    the same contract ``_delete_bucketed``'s full-wipe path honors."""
-    for root, _dirs, files in os.walk(park):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                schema = pq.read_schema(os.path.join(root, fn))
-                d = os.path.join(table_dir, f"bucket={bucket}")
-                os.makedirs(d, exist_ok=True)
-                pq.write_table(schema.empty_table(),
-                               os.path.join(d, "part-00000-empty.parquet"))
-                return True
-    return False
-
-
 def rollback_table(out_dir: str, table: str, ts: float) -> dict:
     """Restore ``table`` to its as-of-``ts`` state as a NEW retained
     commit (Iceberg ``rollback_to_timestamp``: history moves forward, the
@@ -467,9 +496,6 @@ def rollback_table(out_dir: str, table: str, ts: float) -> dict:
     directory ops under the commit lock; retained versions are COPIED in
     via a staged-rename (they must survive for older as-of reads, and a
     torn copy must never land under the final name)."""
-    from docling_rag_spark.io.warehouse import (append_lineage, bucket_dir,
-                                                commit_lock, now)
-
     table_dir = os.path.join(out_dir, table)
     commit_id = f"rollback-{uuid.uuid4().hex[:12]}"
     with commit_lock(out_dir):
@@ -502,7 +528,7 @@ def rollback_table(out_dir: str, table: str, ts: float) -> dict:
         # only, so without this row a job that read its base before the
         # rollback would silently re-commit the rolled-back-over state
         # (same written-before-data rule as delete_urls).
-        append_lineage(out_dir, commit_id, [{
+        wh.append_lineage(out_dir, commit_id, [{
             "input_snapshot_id": commit_id, "bucket": b, "doc_count": 0,
             "chunk_count": 0, "failure_count": 0,
             "started_at": commit_ts, "finished_at": commit_ts}
@@ -526,7 +552,12 @@ def rollback_table(out_dir: str, table: str, ts: float) -> dict:
                 removed += 1
         if os.path.isdir(table_dir) and not any(
                 e.startswith("bucket=") for e in os.listdir(table_dir)):
-            _pin_empty_schema(table_dir, plan[0][0], park)
+            # rollback-to-genesis: pin the schema of any displaced file
+            schema = next((pq.read_schema(os.path.join(root, fn))
+                           for root, _dirs, files in os.walk(park)
+                           for fn in files if fn.endswith(".parquet")), None)
+            if schema is not None:
+                wh.pin_empty_bucket(table_dir, plan[0][0], schema)
         _finalize_intent(out_dir, intent, commit_id)
         return {"commit_id": commit_id, "buckets_installed": installed,
                 "buckets_removed": removed, "buckets_changed": len(plan)}

@@ -264,6 +264,89 @@ def commit_buckets(staging_table_dir: str, final_table_dir: str,
     return installed
 
 
+def read_buckets(spark, out_dir: str, table: str, buckets: list[int]):
+    """Committed rows of ``buckets`` (with the ``bucket`` partition
+    column), or None when none of their dirs exist yet. Schema-pinned when
+    the warehouse pins one: the selected buckets can span code-version
+    eras, and footer inference over a mixed set silently drops columns the
+    sampled footer lacks."""
+    table_dir = os.path.join(out_dir, table)
+    dirs = [bucket_dir(table_dir, b) for b in buckets]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    if not dirs:
+        return None
+    reader = spark.read.option("basePath", table_dir)
+    pinned = pinned_table_schema(out_dir, table)
+    if pinned is not None:
+        reader = reader.schema(pinned)
+    return reader.parquet(*dirs)
+
+
+def parquet_rows(d: str) -> int:
+    """Rows of every parquet file under ``d``, from footers alone (no
+    Spark job re-executing the plan that wrote them)."""
+    return sum(pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
+               for root, _dirs, files in os.walk(d)
+               for fn in files if fn.endswith(".parquet"))
+
+
+def pin_empty_bucket(table_dir: str, bucket: int, schema: pa.Schema) -> None:
+    """Pin a table's schema with one zero-row parquet file (what an
+    Iceberg table keeps in metadata): a table of only file-less bucket
+    dirs fails schema inference on every later read."""
+    d = bucket_dir(table_dir, bucket)
+    os.makedirs(d, exist_ok=True)
+    pq.write_table(schema.empty_table(),
+                   os.path.join(d, "part-00000-empty.parquet"))
+
+
+def stage_buckets(df, staging_table_dir: str, table: str,
+                  buckets: list[int]) -> int:
+    """Stage the new content of ``buckets`` for ``snapshots.commit_rewrite``
+    and return its row count. ``df`` holds exactly those buckets' rows,
+    ``bucket`` column included.
+
+    One task per bucket (``route_repartition``), sorted by the table's
+    natural key within it, so each bucket lands as one url-sorted file:
+    parquet min/max stats on url stay tight and disjoint, and point
+    lookups and later rewrites prune row groups (the sort satisfies the
+    partitionBy write's required ordering instead of adding a second
+    one). A bucket that lost every row gets an empty dir, so the commit
+    still replaces its old one; when no row survives at all, a zero-row
+    file pins the schema."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from docling_rag_spark.functions.partitioning import route_repartition
+
+    shutil.rmtree(staging_table_dir, ignore_errors=True)
+    (route_repartition(df, buckets)
+     .sortWithinPartitions("bucket", *TABLE_KEYS.get(table, ("url",)))
+     .write.partitionBy("bucket").mode("overwrite")
+     .parquet(staging_table_dir))
+    for b in buckets:
+        os.makedirs(bucket_dir(staging_table_dir, b), exist_ok=True)
+    n = parquet_rows(staging_table_dir)
+    if n == 0 and buckets:
+        pin_empty_bucket(staging_table_dir, buckets[0],
+                         to_arrow_schema(df.drop("bucket").schema))
+    return n
+
+
+def batch_dirs(parent: str, include_newest: bool = True) -> list[str]:
+    """The streaming ``batch=<id>`` dir names under ``parent``, sorted.
+    ``include_newest=False`` leaves out the newest: a crashed stream
+    replays exactly its last uncommitted micro-batch, and reading that dir
+    while the replay overwrites it races (mode=overwrite deletes its files
+    mid-read). Everything strictly older is safe; the newest becomes safe
+    once a newer batch lands or the stream is stopped."""
+    if not os.path.isdir(parent):
+        return []
+    names = sorted(d for d in os.listdir(parent) if d.startswith("batch="))
+    if names and not include_newest:
+        names.remove(max(names, key=lambda d: int(d.split("=", 1)[1])))
+    return names
+
+
 def lineage_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "lineage")
 

@@ -213,7 +213,6 @@ def _run_extraction_inner(
     batches = [todo[i:i + step] for i in range(0, len(todo), step)]
     staging_root = os.path.join(out_dir, "_staging")
 
-    import sys
     import time as _time
     debug = os.environ.get("SPARK_GRAFT_DEBUG") == "1"
 
@@ -351,11 +350,11 @@ def _run_extraction_inner(
                 active = sorted(stats)
                 new_urls = docs.select("url")
                 with job_description(spark, "extract:chunks"):
-                    old_chunks = _committed_bucket_rows(
-                        spark, os.path.join(out_dir, "chunks"), active)
+                    old_chunks = wh.read_buckets(spark, out_dir, "chunks",
+                                                 active)
                 with job_description(spark, "extract:extracted"):
-                    old_extracted = _committed_bucket_rows(
-                        spark, os.path.join(out_dir, "extracted"), active)
+                    old_extracted = wh.read_buckets(spark, out_dir,
+                                                    "extracted", active)
 
             # pass the staged bucket column through instead of re-hashing
             # every output row (an xxhash64+pmod per chunk after explode,
@@ -415,48 +414,25 @@ def _run_extraction_inner(
                                    _prev_mpb)
 
             _t4 = _time.time()
-            # Check-then-commit under the warehouse commit lock (the Iceberg
-            # optimistic-concurrency validation): if a NEWER snapshot committed
-            # any of these buckets while this batch was computing, completing
-            # the commit would silently roll them back — fail instead; a rerun
-            # rebases on current lineage (same-snapshot concurrent commits are
-            # idempotent duplicates and pass through).
-            with wh.commit_lock(out_dir):
-                conflicts = wh.conflicting_buckets(out_dir, snapshot_id, batch,
-                                                   base_ts)
-                if conflicts:
-                    raise wh.CommitConflict(conflicts, snapshot_id)
-                # Retention via the shared helper: retains when the flag
-                # asks for it (force) OR the warehouse already has retained
-                # history — a later run without the flag must not
-                # destructively rewrite buckets with no snapshot-log row,
-                # which would silently corrupt every earlier as-of read.
-                commit_id = f"{snapshot_id}-b{batch_idx}-{run_id}"
-                finished = wh.now()
-                wh.pin_num_buckets(out_dir, num_buckets)
-                for tbl in ("chunks", "extracted"):
-                    # evolve the pinned table schema BEFORE the renames: a
-                    # reader must never see files the pinned schema cannot
-                    # describe (rejects type conflicts here, at commit,
-                    # not in some later reader's plan)
-                    wh.pin_table_schema(out_dir, tbl, staged_schema[tbl])
-                    snap.commit_buckets_retained(
-                        out_dir, os.path.join(staging, tbl), tbl, batch,
-                        snapshot_id, finished, force=retain_snapshots,
-                        commit_id=commit_id)
-                lineage_rows = []
-                for b in batch:
-                    s = stats.get(b)
-                    lineage_rows.append({
-                        "input_snapshot_id": snapshot_id,
-                        "bucket": b,
-                        "doc_count": int(s["docs"]) if s else 0,
-                        "chunk_count": int(s["chunks"] or 0) if s else 0,
-                        "failure_count": int(s["failures"]) if s else 0,
-                        "started_at": started,
-                        "finished_at": finished,
-                    })
-                wh.append_lineage(out_dir, snapshot_id, lineage_rows)
+            # The shared bucket-rewrite commit. Validation: a NEWER
+            # snapshot that committed any of these buckets since base_ts
+            # would be silently rolled back — fail instead; a rerun
+            # rebases on current lineage (same-snapshot concurrent commits
+            # are idempotent duplicates and pass through). A bucket of the
+            # batch with no staged dir (no docs) keeps its committed dir.
+            lineage_rows = snap.commit_rewrite(
+                out_dir,
+                {t: (os.path.join(staging, t), staged_schema[t])
+                 for t in ("chunks", "extracted")},
+                batch, num_buckets, snapshot_id,
+                conflicts=lambda: wh.conflicting_buckets(
+                    out_dir, snapshot_id, batch, base_ts),
+                lineage={b: {"doc_count": int(s["docs"]),
+                             "chunk_count": int(s["chunks"] or 0),
+                             "failure_count": int(s["failures"])}
+                         for b, s in stats.items()},
+                started_at=started, force=retain_snapshots,
+                commit_id=f"{snapshot_id}-b{batch_idx}-{run_id}")
             if debug:
                 _t5 = _time.time()
                 # one derive phase: the three derivations run concurrently,
@@ -533,25 +509,6 @@ def _changed_pages(spark, sub: DataFrame, out_dir: str,
     return sub, n_latest - n_changed
 
 
-def _committed_bucket_rows(spark, table_dir: str,
-                           buckets: list[int]) -> DataFrame | None:
-    """Committed rows of the given buckets (with the ``bucket`` partition
-    column), or None when none of the dirs exist yet (first snapshot).
-    Schema-pinned when the warehouse pins one: the selected buckets can
-    span code-version eras, and footer inference over a mixed set silently
-    drops columns the sampled footer lacks."""
-    dirs = [wh.bucket_dir(table_dir, b) for b in buckets]
-    dirs = [d for d in dirs if os.path.isdir(d)]
-    if not dirs:
-        return None
-    reader = spark.read.option("basePath", table_dir)
-    pinned = wh.pinned_table_schema(os.path.dirname(table_dir),
-                                    os.path.basename(table_dir))
-    if pinned is not None:
-        reader = reader.schema(pinned)
-    return reader.parquet(*dirs)
-
-
 def read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
     return wh.read_table(spark, out_dir, "chunks")
 
@@ -606,11 +563,17 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
 
     try:
         for table in tables:
+            deleted = _delete_bucketed(spark, out_dir, table, urls_df,
+                                       buckets, num_buckets, staging,
+                                       del_snap)
             table_dir = os.path.join(out_dir, table)
-            deleted = _delete_bucketed(spark, out_dir, table_dir, urls_df,
-                                       buckets, staging, table, del_snap)
-            deleted += _delete_batch_dirs(spark, table_dir, urls_df, staging,
-                                          table)
+            # cascade into a streaming-written batch=<id> layout of the
+            # same table: without it, exact-mode search over streaming
+            # embeddings keeps returning deleted documents forever
+            for d in wh.batch_dirs(table_dir):
+                deleted += _drop_urls(spark, os.path.join(table_dir, d),
+                                      table_dir, (), urls_df, staging,
+                                      f"{table}/{d}")
             report["rows_deleted"][table] = deleted
         report["ann_rows_deleted"] = _delete_from_ann(spark, out_dir,
                                                       urls_df, staging)
@@ -621,110 +584,69 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
     return report
 
 
-def _delete_bucketed(spark, out_dir: str, table_dir: str, urls_df,
-                     buckets: list[int], staging: str, table: str,
+def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
+                     buckets: list[int], num_buckets: int, staging: str,
                      del_snap: str) -> int:
     """Bucket-local anti-join rewrite of one bucketed table; returns rows
     deleted (counted from the staged output — no post-commit rescan, which
     a concurrent extraction commit could skew negative)."""
-    dirs = [wh.bucket_dir(table_dir, b) for b in buckets]
-    dirs = [d for d in dirs if os.path.isdir(d)]
-    if not dirs:
-        return 0
     read_ts = wh.now()
     # schema-pinned read: a delete over mixed-era buckets must not strip
     # an added column from the carried-over rows it rewrites
-    reader = spark.read.option("basePath", table_dir)
-    pinned = wh.pinned_table_schema(out_dir, table)
-    if pinned is not None:
-        reader = reader.schema(pinned)
-    sub = reader.parquet(*dirs)
+    sub = wh.read_buckets(spark, out_dir, table, buckets)
+    if sub is None:
+        return 0
     before = sub.count()
     kept = sub.join(F.broadcast(urls_df), "url", "left_anti")
     stage_tbl = os.path.join(staging, table)
-    shutil.rmtree(stage_tbl, ignore_errors=True)
-    sort_cols = ["bucket", "url"] + (["chunk_id"]
-                                     if "chunk_id" in kept.columns else [])
-    from docling_rag_spark.functions.partitioning import route_repartition
-    (route_repartition(kept, buckets)
-     .sortWithinPartitions(*sort_cols)
-     .write.partitionBy("bucket").mode("overwrite").parquet(stage_tbl))
-    # a zero-row partitionBy write leaves only _SUCCESS: no files to infer
-    # a schema from, so probe for parquet parts before reading back
-    import glob
-    has_parts = bool(glob.glob(os.path.join(stage_tbl, "bucket=*",
-                                            "*.parquet")))
-    kept_n = (spark.read.option("basePath", stage_tbl).parquet(stage_tbl)
-              .count() if has_parts else 0)
-    # buckets that became empty still need their old dir replaced
-    for b in buckets:
-        sdir = wh.bucket_dir(stage_tbl, b)
-        if not os.path.isdir(sdir):
-            os.makedirs(sdir, exist_ok=True)
-    if kept_n == 0:
-        # full wipe: a table of only file-less bucket dirs fails schema
-        # inference on every later read — pin the schema with one
-        # zero-row parquet file (what an Iceberg table keeps in metadata)
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        import pyarrow.parquet as _pq
-        empty = to_arrow_schema(kept.drop("bucket").schema).empty_table()
-        _pq.write_table(empty, os.path.join(
-            wh.bucket_dir(stage_tbl, buckets[0]), "part-00000-empty.parquet"))
-    with wh.commit_lock(out_dir):
-        # delete's own check-then-commit: an extraction batch that
-        # committed these buckets AFTER our stale read must not be
-        # overwritten by the pre-extraction staged rewrite (its
-        # lineage would still claim the bucket done -> permanent loss)
-        newer = wh.conflicting_buckets(out_dir, del_snap, buckets, read_ts)
-        if newer:
-            raise wh.CommitConflict(newer, del_snap)
-        # retention-aware: on a retain_snapshots warehouse the delete is a
-        # retained commit like any other — pre-delete as-of reads still
-        # resolve the deleted rows (Iceberg DELETE produces a snapshot)
-        snap.commit_buckets_retained(out_dir, stage_tbl, table, buckets,
-                                     del_snap, wh.now())
+    kept_n = wh.stage_buckets(kept, stage_tbl, table, buckets)
+    # validation: an extraction batch that committed these buckets AFTER
+    # our read must not be overwritten by the pre-extraction rewrite (its
+    # lineage would still claim the bucket done -> permanent loss). On a
+    # retain_snapshots warehouse the delete is a retained commit like any
+    # other (Iceberg DELETE produces a snapshot).
+    snap.commit_rewrite(
+        out_dir, {table: (stage_tbl, kept.schema)}, buckets, num_buckets,
+        del_snap, conflicts=lambda: wh.conflicting_buckets(
+            out_dir, del_snap, buckets, read_ts))
     return before - kept_n
 
 
-def _delete_batch_dirs(spark, table_dir: str, urls_df, staging: str,
-                       table: str) -> int:
-    """Cascade into a streaming-written ``batch=<id>`` layout of the same
-    table (stream_extract_chunks/stream_ingest_dedup/stream_embed_index
-    output): without this, exact-mode search over streaming embeddings
-    keeps returning deleted documents forever. Each snapshotted batch dir
-    is rewritten in place via the recoverable swap."""
-    if not os.path.isdir(table_dir):
+def _drop_urls(spark, target: str, base_path: str, part_cols, urls_df,
+               staging: str, label: str) -> int:
+    """Remove ``urls_df``'s urls from one swap-managed dir (a streaming
+    ``batch=<id>`` dir or an ANN index table): read, anti-join, then swap
+    in the rewrite via the recoverable two-rename protocol — or remove the
+    dir outright when no row survives (a zero-row partitionBy write leaves
+    a file-less dir whose later reads fail schema inference; readers treat
+    a missing dir as empty). ``part_cols`` are the rewrite's partition
+    columns. Returns rows removed; 0 when the dir is absent or has no url
+    column (an index keyed by vec_id, e.g. an oracle-table build)."""
+    wh.recover_swap(target)
+    if not os.path.isdir(target):
         return 0
-    batch_dirs = [d for d in sorted(os.listdir(table_dir))
-                  if d.startswith("batch=")]
-    deleted = 0
-    for i, d in enumerate(batch_dirs):
-        bdir = os.path.join(table_dir, d)
-        wh.recover_swap(bdir)
-        df = spark.read.option("basePath", table_dir).parquet(bdir) \
-            .drop("batch")
-        if "url" not in df.columns:
-            return 0
-        before = df.count()
-        kept = df.join(F.broadcast(urls_df), "url", "left_anti")
-        n_kept = kept.count()
-        if n_kept == before:
-            continue
-        if n_kept == 0:
-            # no rows survive: drop the batch dir (a file-less rewrite
-            # would break schema inference on later whole-table reads)
-            trash = os.path.join(staging, f".gone-{table}-batch-{i}")
-            os.rename(bdir, trash)
-            shutil.rmtree(trash, ignore_errors=True)
-            deleted += before
-            continue
-        tmp = os.path.join(staging, f"{table}-batch-{i}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        kept.write.mode("overwrite").parquet(tmp)
-        wh.swap_dir(tmp, bdir)
-        deleted += before - n_kept
-    return deleted
+    df = spark.read.option("basePath", base_path).parquet(target)
+    if "url" not in df.columns:
+        return 0
+    before = df.count()
+    kept = df.join(F.broadcast(urls_df), "url", "left_anti")
+    n_kept = kept.count()
+    if n_kept == before:
+        return 0
+    name = label.replace("/", "_")
+    if n_kept == 0:
+        trash = os.path.join(staging, f".gone-{name}")
+        os.rename(target, trash)
+        shutil.rmtree(trash, ignore_errors=True)
+        return before
+    tmp = os.path.join(staging, name)
+    shutil.rmtree(tmp, ignore_errors=True)
+    writer = kept.drop("batch").write.mode("overwrite")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    writer.parquet(tmp)
+    wh.swap_dir(tmp, target)
+    return before - n_kept
 
 
 def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
@@ -744,49 +666,16 @@ def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
     delta_root = os.path.join(out_dir, "ann_delta")
     if not (os.path.isdir(ann_root) or os.path.isdir(delta_root)):
         return removed
-
-    def rewrite(table_dir: str, part_cols: list[str], base_path: str,
-                label: str) -> None:
-        df = spark.read.option("basePath", base_path).parquet(table_dir)
-        if "url" not in df.columns:
-            return  # index keyed by vec_id (oracle-table build): no cascade
-        before = df.count()
-        kept = df.join(F.broadcast(urls_df), "url", "left_anti")
-        n_kept = kept.count()
-        if n_kept == before:
-            return  # nothing of these urls here
-        if n_kept == 0:
-            # a partitionBy write of zero rows yields a file-less dir
-            # (only _SUCCESS) whose later read fails schema inference —
-            # remove the index dir outright; readers treat a missing
-            # index as empty / fall back to other tiers
-            trash = os.path.join(staging,
-                                 ".gone-" + label.replace("/", "_"))
-            os.rename(table_dir, trash)
-            shutil.rmtree(trash, ignore_errors=True)
-            removed[label] = before
-            return
-        tmp = os.path.join(staging, "ann-" + label.replace("/", "_"))
-        shutil.rmtree(tmp, ignore_errors=True)
-        (kept.drop(*[c for c in part_cols if c == "batch"])
-         .write.partitionBy(*[c for c in part_cols if c != "batch"])
-         .mode("overwrite").parquet(tmp))
-        wh.swap_dir(tmp, table_dir)
-        removed[label] = before - n_kept
-
     with wh.commit_lock(os.path.join(out_dir, "_compaction"),
                         timeout=60.0, stale_sec=3600.0):
-        for sub, part_cols in INDEX_TABLES.items():
-            table_dir = os.path.join(ann_root, sub)
-            wh.recover_swap(table_dir)
-            if os.path.isdir(table_dir):
-                rewrite(table_dir, part_cols, table_dir, f"ann/{sub}")
-        if os.path.isdir(delta_root):
-            for d in sorted(os.listdir(delta_root)):
-                if not d.startswith("batch="):
-                    continue
-                bdir = os.path.join(delta_root, d)
-                wh.recover_swap(bdir)
-                rewrite(bdir, ["batch", "bucket"], delta_root,
-                        f"ann_delta/{d}")
+        targets = [(os.path.join(ann_root, sub), os.path.join(ann_root, sub),
+                    part_cols, f"ann/{sub}")
+                   for sub, part_cols in INDEX_TABLES.items()]
+        targets += [(os.path.join(delta_root, d), delta_root, ["bucket"],
+                     f"ann_delta/{d}") for d in wh.batch_dirs(delta_root)]
+        for target, base_path, part_cols, label in targets:
+            n = _drop_urls(spark, target, base_path, part_cols, urls_df,
+                           staging, label)
+            if n:
+                removed[label] = n
     return removed

@@ -23,7 +23,6 @@ import os
 import shutil
 import uuid
 
-import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -91,8 +90,7 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
         try:
             for t in present:
                 table_dir = os.path.join(out_dir, t)
-                if any(e.startswith("batch=") for e in
-                       os.listdir(table_dir)):
+                if wh.batch_dirs(table_dir):
                     raise RuntimeError(
                         f"table {t!r} has unfolded streaming batch dirs; "
                         "run fold_stream_chunks before rebucketing")
@@ -118,11 +116,7 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
                 # row count from the staged footers (metadata-only): a
                 # df.count() here would execute the whole read+dedup plan
                 # a second time — doubling a job sized for 10^12 docs
-                stats[t] = sum(
-                    pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-                    for root, _dirs, files in
-                    os.walk(os.path.join(staging_root, t))
-                    for fn in files if fn.endswith(".parquet"))
+                stats[t] = wh.parquet_rows(os.path.join(staging_root, t))
                 # a new-range bucket no row hashed into gets no staged dir
                 # and commit_buckets would SKIP it — its old-modulus dir
                 # would survive holding rows now duplicated elsewhere;

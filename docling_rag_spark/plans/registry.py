@@ -165,59 +165,29 @@ def upsert_registry_table(spark, out_dir: str, updates: DataFrame,
     # OUTSIDE the lock (Spark work must not hold it), so a concurrent
     # upsert to the same bucket could commit between our read and our
     # commit — last-write-wins would silently drop its fields. The bucket
-    # signature taken at read time is re-checked under the lock; a change
+    # signature taken at read time is the commit's validation; a change
     # restarts the merge against the fresh base.
     for _attempt in range(5):
         base_sig = bucket_sig()
-        dirs = [wh.bucket_dir(table_dir, b) for b in buckets]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if dirs:
-            # schema-pinned read: the selected buckets can span code
-            # versions, and footer inference over a mixed set silently
-            # drops whichever columns the sampled footer lacks
-            reader = spark.read.option("basePath", table_dir)
-            pinned = wh.pinned_table_schema(out_dir, "registry")
-            if pinned is not None:
-                reader = reader.schema(pinned)
-            existing = reader.parquet(*dirs).drop("bucket")
-        else:
-            existing = spark.createDataFrame(
-                [], updates.select(*[c for c in updates.columns]).schema)
-        merged = upsert_documents(existing, updates)
+        existing = wh.read_buckets(spark, out_dir, "registry", buckets)
+        existing = (spark.createDataFrame([], updates.schema)
+                    if existing is None else existing.drop("bucket"))
+        merged = upsert_documents(existing, updates).withColumn(
+            "bucket", bucket_of(F.col("url"), num_buckets))
         # unique per-invocation staging dir (same rationale as delete_urls:
         # concurrent writers must never share a staging path)
         staging = os.path.join(out_dir, "_staging",
                                f"registry-{uuid.uuid4().hex[:12]}")
-        shutil.rmtree(staging, ignore_errors=True)
-        from docling_rag_spark.functions.partitioning import (
-            route_repartition,
-        )
-        (route_repartition(
-            merged.withColumn("bucket", bucket_of(F.col("url"), num_buckets)),
-            buckets)
-         .sortWithinPartitions("bucket", "url")
-         .write.partitionBy("bucket").mode("overwrite").parquet(staging))
-        # buckets that vanished entirely still need their old dir replaced
-        for b in buckets:
-            sdir = wh.bucket_dir(staging, b)
-            if not os.path.isdir(sdir):
-                os.makedirs(sdir, exist_ok=True)
         try:
-            with wh.commit_lock(out_dir):
-                if bucket_sig() != base_sig:
-                    continue  # concurrent commit: re-merge on fresh base
-                wh.pin_num_buckets(out_dir, num_buckets)
-                wh.pin_table_schema(
-                    out_dir, "registry",
-                    merged.withColumn(
-                        "bucket",
-                        bucket_of(F.col("url"), num_buckets)).schema)
-                # retention-aware (no-op unless the warehouse retains
-                # snapshots): the upsert becomes a time-travelable commit
-                snap.commit_buckets_retained(out_dir, staging, "registry",
-                                             buckets, "registry-upsert",
-                                             wh.now())
-                return {"buckets_rewritten": buckets}
+            wh.stage_buckets(merged, staging, "registry", buckets)
+            snap.commit_rewrite(
+                out_dir, {"registry": (staging, merged.schema)}, buckets,
+                num_buckets, "registry-upsert",
+                conflicts=lambda: buckets if bucket_sig() != base_sig
+                else [])
+            return {"buckets_rewritten": buckets}
+        except wh.CommitConflict:
+            continue  # concurrent commit: re-merge on the fresh base
         finally:
             shutil.rmtree(staging, ignore_errors=True)
     raise wh.CommitConflict(buckets, "registry-upsert")

@@ -250,21 +250,24 @@ def vec_semdedup_drop(spark, sf_dir,
     return res.unionByName(over)
 
 
-def vec_semdedup_cluster_stats(spark, sf_dir):
+def vec_semdedup_cluster_stats(spark, sf_dir,
+                               cluster_cap: int | None = _SEMDEDUP_CLUSTER_CAP,
+                               pivots: int = _SEMDEDUP_PIVOTS):
     """Cap observability for the SemDeDup clusters (the twin of
     ``dedup_minhash_group_stats``): cluster count, how many exceeded the
     member cap, the largest cluster, and the quadratic pair rows the
     pivot fallback avoided — the number a production run logs to prove
-    the mega-cluster defense engaged."""
+    the mega-cluster defense engaged. ``cluster_cap`` / ``pivots`` are
+    those of the ``vec_semdedup_drop`` run being observed."""
     g = (_final_assignment(spark, sf_dir)
          .groupBy("cluster").agg(F.count("*").cast("bigint").alias("n")))
-    over = F.col("n") > _SEMDEDUP_CLUSTER_CAP
-    p = F.lit(_SEMDEDUP_PIVOTS)
+    over = (F.lit(False) if cluster_cap is None
+            else F.col("n") > cluster_cap)
+    p = F.lit(pivots)
     # over-cap pair rows: each pivot u (rank r_u) pairs with the n - r_u
     # members above it → p·n - p(p+1)/2; full expansion is n(n-1)/2
     saved = (F.expr("n * (n - 1) DIV 2")
-             - (p * F.col("n") - F.expr(
-                 f"{_SEMDEDUP_PIVOTS} * ({_SEMDEDUP_PIVOTS} + 1) DIV 2")))
+             - (p * F.col("n") - F.expr(f"{pivots} * ({pivots} + 1) DIV 2")))
     return g.agg(
         F.count("*").cast("bigint").alias("n_clusters"),
         F.sum(over.cast("bigint")).cast("bigint").alias("n_over_cap"),
@@ -371,20 +374,28 @@ GROUP BY cluster, drop_id
 SEMDEDUP_SQL = semdedup_sql()
 
 
-SEMDEDUP_CLUSTER_STATS_SQL = f"""
+def semdedup_cluster_stats_sql(
+        cluster_cap: int | None = _SEMDEDUP_CLUSTER_CAP,
+        pivots: int = _SEMDEDUP_PIVOTS) -> str:
+    """DuckDB twin of ``vec_semdedup_cluster_stats``."""
+    over = "FALSE" if cluster_cap is None else f"n > {cluster_cap}"
+    return f"""
 WITH {_kmeans_cte()},
 g AS (SELECT cluster, count(*)::BIGINT AS n FROM a2 GROUP BY cluster)
 SELECT count(*)::BIGINT AS n_clusters,
-       sum(CASE WHEN n > {_SEMDEDUP_CLUSTER_CAP} THEN 1 ELSE 0 END)::BIGINT
+       sum(CASE WHEN {over} THEN 1 ELSE 0 END)::BIGINT
          AS n_over_cap,
        max(n)::BIGINT AS max_cluster,
-       sum(CASE WHEN n > {_SEMDEDUP_CLUSTER_CAP}
+       sum(CASE WHEN {over}
                 THEN n * (n - 1) // 2
-                     - ({_SEMDEDUP_PIVOTS} * n
-                        - {_SEMDEDUP_PIVOTS} * ({_SEMDEDUP_PIVOTS} + 1) // 2)
+                     - ({pivots} * n
+                        - {pivots} * ({pivots} + 1) // 2)
                 ELSE 0 END)::BIGINT AS n_pair_rows_saved
 FROM g
 """
+
+
+SEMDEDUP_CLUSTER_STATS_SQL = semdedup_cluster_stats_sql()
 
 
 QUERIES: dict = {}

@@ -30,6 +30,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.config import CHUNK_MAX_TOKENS
+from docling_rag_spark.io.warehouse import (batch_dirs, commit_lock,
+                                            recover_swap, swap_dir)
 from docling_rag_spark.operators.pipeline import chunks_table
 from docling_rag_spark.streaming.ingest import (extracted_docs_stream,
                                                 start_stream)
@@ -88,8 +90,6 @@ def ann_probe_candidates(spark: SparkSession, out_dir: str,
     Full-row dedup across the union: a replayed micro-batch (delta landed,
     checkpoint didn't) can exist both folded into base and as a rewritten
     delta dir."""
-    from docling_rag_spark.io.warehouse import commit_lock, recover_swap
-
     parts = []
     base = os.path.join(out_dir, "ann", "lsh")
     # recovery must not race a live compactor's two-rename swap (both
@@ -105,8 +105,7 @@ def ann_probe_candidates(spark: SparkSession, out_dir: str,
     if os.path.isdir(base):
         parts.append(spark.read.parquet(base))
     delta = _delta_dir(out_dir)
-    if os.path.isdir(delta) and any(d.startswith("batch=")
-                                    for d in os.listdir(delta)):
+    if batch_dirs(delta):
         parts.append(spark.read.option("basePath", delta).parquet(delta)
                      .drop("batch"))
     if not parts:
@@ -127,8 +126,6 @@ def compact_ann_index(spark: SparkSession, out_dir: str,
     left in place by default — it is the only batch a crashed stream can
     replay; pass ``include_newest=True`` only when the stream is known
     stopped (a drained availableNow run)."""
-    from docling_rag_spark.io.warehouse import commit_lock
-
     delta = _delta_dir(out_dir)
     base = os.path.join(out_dir, "ann", "lsh")
     if not os.path.isdir(delta):
@@ -144,24 +141,14 @@ def compact_ann_index(spark: SparkSession, out_dir: str,
 
 def _compact_locked(spark: SparkSession, out_dir: str, delta: str,
                     base: str, include_newest: bool) -> dict:
-    from docling_rag_spark.io.warehouse import recover_swap, swap_dir
-
     # Snapshot the batch list FIRST and compact only those dirs: the stream
     # keeps writing new batch=<id> dirs while the merge runs, and deleting
     # the whole delta tree afterwards would destroy batches the merge never
     # read (their checkpoint entries make them unreplayable — silent loss).
     recover_swap(base)  # a crashed prior swap must not lose the old base
-    batches = [d for d in sorted(os.listdir(delta)) if d.startswith("batch=")]
-    # Exclude the NEWEST batch: a stream that crashed after writing its
-    # delta but before committing the checkpoint offset will REPLAY that
-    # batch (mode=overwrite deletes the files mid-merge — read failure, or
-    # with ignoreMissingFiles silent row loss followed by rmtree of the
-    # replayed dir). Only the last uncommitted batch can replay, so
-    # folding everything strictly older is always safe; the newest folds
-    # once a newer batch lands (or via include_newest on a stopped stream).
-    if batches and not include_newest:
-        newest = max(batches, key=lambda d: int(d.split("=", 1)[1]))
-        batches = [d for d in batches if d != newest]
+    # the newest batch is left out unless include_newest: it may be
+    # replayed mid-merge (warehouse.batch_dirs)
+    batches = batch_dirs(delta, include_newest)
     if not batches:
         return {"compacted_batches": 0}
     snap_dirs = [os.path.join(delta, d) for d in batches]

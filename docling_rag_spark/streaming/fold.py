@@ -42,15 +42,15 @@ def fold_stream_chunks(spark: SparkSession, out_dir: str,
     stream replays exactly its last uncommitted micro-batch, and folding
     that dir while the replay overwrites it races (same rule as
     ``compact_dedup_index``). Runs under the compaction lock; the bucket
-    commit itself takes the warehouse commit lock with
-    optimistic-concurrency validation and appends lineage, so concurrent
+    commit is the shared ``snapshots.commit_rewrite`` (lineage-validated,
+    spec- and schema-pinning, lineage-appending), so concurrent
     extraction jobs see the fold exactly like any newer snapshot commit.
 
     ``num_buckets`` is the table's partition spec, not a tuning knob of
     this job: omitted it resolves from the pinned warehouse spec, explicit
     it is validated against it (``BucketSpecMismatch``).
     """
-    from docling_rag_spark.plans.job import _committed_bucket_rows, bucket_of
+    from docling_rag_spark.plans.job import bucket_of
 
     num_buckets = wh.resolve_num_buckets(out_dir, num_buckets,
                                          DEFAULT_NUM_BUCKETS)
@@ -60,11 +60,7 @@ def fold_stream_chunks(spark: SparkSession, out_dir: str,
 
     with wh.commit_lock(os.path.join(out_dir, "_compaction"),
                         timeout=10.0, stale_sec=3600.0):
-        batches = [d for d in sorted(os.listdir(chunks_dir))
-                   if d.startswith("batch=")]
-        if batches and not include_newest:
-            newest = max(batches, key=lambda d: int(d.split("=", 1)[1]))
-            batches = [d for d in batches if d != newest]
+        batches = wh.batch_dirs(chunks_dir, include_newest)
         if not batches:
             return {"folded_batches": 0, "rows_folded": 0}
         snap_dirs = [os.path.join(chunks_dir, d) for d in batches]
@@ -83,7 +79,7 @@ def fold_stream_chunks(spark: SparkSession, out_dir: str,
                 shutil.rmtree(d, ignore_errors=True)
             return {"folded_batches": len(batches), "rows_folded": 0}
 
-        old = _committed_bucket_rows(spark, chunks_dir, buckets)
+        old = wh.read_buckets(spark, out_dir, "chunks", buckets)
         # allowMissingColumns: the stream and the bucketed base can be one
         # code-version apart; rows missing an added column read as null
         # (the pinned-schema add-column contract) instead of failing
@@ -96,28 +92,13 @@ def fold_stream_chunks(spark: SparkSession, out_dir: str,
         staging = os.path.join(out_dir, "_staging", snap_id)
         read_ts = wh.now()
         try:
-            from docling_rag_spark.functions.partitioning import (
-                route_repartition,
-            )
-            (route_repartition(merged, buckets)
-             .sortWithinPartitions("bucket", "url", "chunk_id")
-             .write.partitionBy("bucket").mode("overwrite").parquet(staging))
-            with wh.commit_lock(out_dir):
-                newer = wh.conflicting_buckets(out_dir, snap_id, buckets,
-                                               read_ts)
-                if newer:
-                    raise wh.CommitConflict(newer, snap_id)
-                ts = wh.now()
-                wh.pin_table_schema(out_dir, "chunks", merged.schema)
-                # retention-aware (no-op unless the warehouse retains
-                # snapshots): the fold is a time-travelable commit
-                snapshots.commit_buckets_retained(out_dir, staging, "chunks",
-                                                  buckets, snap_id, ts)
-                wh.append_lineage(out_dir, snap_id, [{
-                    "input_snapshot_id": snap_id, "bucket": b,
-                    "doc_count": 0, "chunk_count": 0, "failure_count": 0,
-                    "started_at": read_ts, "finished_at": ts,
-                } for b in buckets])
+            wh.stage_buckets(merged, staging, "chunks", buckets)
+            snapshots.commit_rewrite(
+                out_dir, {"chunks": (staging, merged.schema)}, buckets,
+                num_buckets, snap_id,
+                conflicts=lambda: wh.conflicting_buckets(
+                    out_dir, snap_id, buckets, read_ts),
+                lineage={}, started_at=read_ts)
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 

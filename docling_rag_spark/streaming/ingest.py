@@ -109,6 +109,7 @@ def stream_ingest_dedup(spark: SparkSession,
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from docling_rag_spark.io.warehouse import batch_dirs
     from docling_rag_spark.queries.dedup import content_hash_col
 
     chunks_dir = os.path.join(out_dir, "chunks")
@@ -122,15 +123,13 @@ def stream_ingest_dedup(spark: SparkSession,
         keep = (hashed.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn"))
         seen_parts = []
-        if os.path.isdir(index_dir):
-            prior = [os.path.join(index_dir, d)
-                     for d in sorted(os.listdir(index_dir))
-                     if d.startswith("batch=") and d != f"batch={batch_id}"]
-            if prior:
-                seen_parts.append(
-                    docs.sparkSession.read
-                    .option("basePath", index_dir).parquet(*prior)
-                    .select("content_hash"))
+        prior = [os.path.join(index_dir, d) for d in batch_dirs(index_dir)
+                 if d != f"batch={batch_id}"]
+        if prior:
+            seen_parts.append(
+                docs.sparkSession.read
+                .option("basePath", index_dir).parquet(*prior)
+                .select("content_hash"))
         compacted = os.path.join(index_dir, "base")
         if os.path.isdir(compacted):
             seen_parts.append(docs.sparkSession.read.parquet(compacted)
@@ -162,8 +161,8 @@ def compact_dedup_index(spark: SparkSession, out_dir: str,
     import os
     import shutil
 
-    from docling_rag_spark.io.warehouse import (commit_lock, recover_swap,
-                                                swap_dir)
+    from docling_rag_spark.io.warehouse import (batch_dirs, commit_lock,
+                                                recover_swap, swap_dir)
 
     index_dir = os.path.join(out_dir, "dedup_index")
     base = os.path.join(index_dir, "base")
@@ -172,11 +171,7 @@ def compact_dedup_index(spark: SparkSession, out_dir: str,
     with commit_lock(os.path.join(out_dir, "_compaction"),
                      timeout=10.0, stale_sec=3600.0):
         recover_swap(base)
-        batches = [d for d in sorted(os.listdir(index_dir))
-                   if d.startswith("batch=")]
-        if batches and not include_newest:
-            newest = max(batches, key=lambda d: int(d.split("=", 1)[1]))
-            batches = [d for d in batches if d != newest]
+        batches = batch_dirs(index_dir, include_newest)
         if not batches:
             return {"compacted_batches": 0}
         snap_dirs = [os.path.join(index_dir, d) for d in batches]

@@ -1,0 +1,26 @@
+"""One bucket-rewrite path: staged buckets are installed only through
+``snapshots.commit_rewrite`` — extraction (overwrite and merge), delete,
+registry upsert and stream fold all call it — so every warehouse policy
+(retention, spec and schema pinning, lineage validation) reaches every
+writer. Rebucket installs a whole new layout and commits on its own."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "docling_rag_spark"
+ALLOWED = {"io/snapshots.py", "plans/maintenance.py"}
+CALL = re.compile(r"(?<!def )\bcommit_buckets(?:_retained)?\(")
+
+
+def test_only_the_shared_module_installs_buckets():
+    callers = set()
+    for f in PKG.rglob("*.py"):
+        rel = f.relative_to(PKG).as_posix()
+        if CALL.search(f.read_text()):
+            callers.add(rel)
+    assert callers - ALLOWED == set(), (
+        "commit_buckets / commit_buckets_retained called outside "
+        "io/snapshots.commit_rewrite (and rebucket)")
+    assert "io/snapshots.py" in callers

@@ -98,3 +98,28 @@ def test_fold_excludes_newest_by_default(spark, warehouse):
 def test_fold_noop_without_batches(spark, warehouse):
     report = fold_stream_chunks(spark, warehouse, num_buckets=8)
     assert report == {"folded_batches": 0, "rows_folded": 0}
+
+
+def test_fold_pins_bucket_spec_for_next_extraction(spark, tmp_path):
+    """A fold into a warehouse that holds only streamed batch dirs lays
+    out buckets at the resolved default modulus and must pin it: left
+    unpinned, the next plain extraction sees bucketed data with no spec
+    and refuses to run."""
+    from docling_rag_spark.config import DEFAULT_NUM_BUCKETS
+    from docling_rag_spark.io import warehouse as wh
+    from docling_rag_spark.operators.pipeline import (
+        chunks_table,
+        extract_documents,
+    )
+
+    pages = str(tmp_path / "pages.parquet")
+    out = str(tmp_path / "wh")
+    write_pages_parquet(pages, 30)
+    (chunks_table(extract_documents(spark.read.parquet(pages))).limit(20)
+     .write.parquet(os.path.join(out, "chunks", "batch=0")))
+
+    report = fold_stream_chunks(spark, out, include_newest=True)
+    assert report["rows_folded"] == 20 and report["buckets_rewritten"]
+    assert wh.warehouse_num_buckets(out) == DEFAULT_NUM_BUCKETS
+    rep = run_extraction(spark, pages, out, salt_partitions=4)
+    assert rep.buckets_done == DEFAULT_NUM_BUCKETS

@@ -14,7 +14,6 @@ from __future__ import annotations
 import glob
 import os
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -67,3 +66,59 @@ def test_delete_rewrite_stays_sorted(spark, wh_dir):
     victim = df.select("url").orderBy("url").limit(1).collect()[0]["url"]
     delete_urls(spark, wh_dir, [victim])
     assert _assert_url_sorted(os.path.join(wh_dir, "extracted")) == 119
+
+
+def _one_sorted_file_per_bucket(table_dir: str, key: tuple[str, ...]) -> int:
+    dirs = glob.glob(os.path.join(table_dir, "bucket=*"))
+    assert dirs
+    rows = 0
+    for d in dirs:
+        files = glob.glob(os.path.join(d, "*.parquet"))
+        assert len(files) == 1, f"{d}: {len(files)} files"
+        t = pq.read_table(files[0], columns=list(key))
+        keys = list(zip(*(t[c].to_pylist() for c in key)))
+        assert keys == sorted(keys), f"{d} not {key}-sorted"
+        rows += len(keys)
+    return rows
+
+
+@pytest.mark.parametrize("writer", ["extraction", "delete", "registry",
+                                    "fold"])
+def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
+        spark, tmp_path, writer):
+    """Every bucket writer stages through the one rewrite path, so each
+    leaves exactly one (bucket, natural key)-sorted file per bucket."""
+    from pyspark.sql import functions as F
+
+    from docling_rag_spark.io import warehouse as wh
+    from docling_rag_spark.plans.job import delete_urls
+    from docling_rag_spark.plans.registry import upsert_registry_table
+    from docling_rag_spark.streaming.fold import fold_stream_chunks
+
+    p = str(tmp_path / "p.parquet")
+    pq.write_table(pa.Table.from_pandas(generate_pages(60, seed=78),
+                                        schema=PAGES_ARROW_SCHEMA,
+                                        preserve_index=False), p)
+    out = str(tmp_path / "wh")
+    run_extraction(spark, p, out, num_buckets=4, salt_partitions=2)
+    urls = sorted(r["url"] for r in wh.read_table(spark, out, "extracted")
+                  .select("url").collect())
+    table, key = "chunks", ("url", "chunk_id")
+    if writer == "delete":
+        delete_urls(spark, out, urls[::7])
+    elif writer == "registry":
+        table, key = "registry", ("url",)
+        upsert_registry_table(spark, out, spark.createDataFrame(
+            [(u, f"title {i}", None, None, ["t"], "en", 1, None)
+             for i, u in enumerate(urls[::2])],
+            "url string, title string, author string, topic string, "
+            "tags array<string>, lang string, n_chunks bigint, "
+            "added_at timestamp"))
+    elif writer == "fold":
+        chunks = wh.read_table(spark, out, "chunks").drop("bucket")
+        (chunks.filter(F.col("url").isin(urls[::3]))
+         .withColumn("text", F.concat(F.col("text"), F.lit(" (restreamed)")))
+         .write.parquet(os.path.join(out, "chunks", "batch=0")))
+        assert fold_stream_chunks(spark, out, include_newest=True)[
+            "rows_folded"] > 0
+    assert _one_sorted_file_per_bucket(os.path.join(out, table), key) > 0

@@ -24,6 +24,7 @@ from docling_rag_spark.queries.clustering import (
     _SEMDEDUP_CLUSTER_CAP,
     _SEMDEDUP_PIVOTS,
     SEMDEDUP_CLUSTER_STATS_SQL,
+    semdedup_cluster_stats_sql,
     semdedup_sql,
     vec_kmeans_assign,
     vec_semdedup_cluster_stats,
@@ -113,6 +114,31 @@ def test_cluster_stats_fire_and_match_formula(spark, mega_dir):
     want = sum(int(n) * (int(n) - 1) // 2 - (p * int(n) - p * (p + 1) // 2)
                for n in over)
     assert int(s.n_pair_rows_saved) == want > 0
+
+
+def test_cluster_stats_follow_a_non_default_cap(spark, mega_dir):
+    """Stats observe the cap the drop ran with: CAP=100/PIVOTS=8 counts
+    the clusters over 100 members and their savings at 8 pivots (Spark
+    and DuckDB alike); no cap means nothing is over it."""
+    s = vec_semdedup_cluster_stats(spark, mega_dir, cluster_cap=CAP,
+                                   pivots=PIVOTS).toPandas()
+    sizes = vec_kmeans_assign(spark, mega_dir).toPandas() \
+        .groupby("cluster").size()
+    over = sizes[sizes > CAP]
+    assert int(s.n_over_cap.iloc[0]) == len(over) >= 1
+    want = sum(int(n) * (int(n) - 1) // 2
+               - (PIVOTS * int(n) - PIVOTS * (PIVOTS + 1) // 2)
+               for n in over)
+    assert int(s.n_pair_rows_saved.iloc[0]) == want > 0
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{mega_dir}/embeddings.parquet')")
+    assert _canon(s) == _canon(
+        con.execute(semdedup_cluster_stats_sql(CAP, PIVOTS)).df())
+    uncapped = vec_semdedup_cluster_stats(spark, mega_dir,
+                                          cluster_cap=None).toPandas()
+    assert int(uncapped.n_over_cap.iloc[0]) == 0
+    assert int(uncapped.n_pair_rows_saved.iloc[0]) == 0
 
 
 def test_cap_inert_on_testdata(spark):
