@@ -124,12 +124,24 @@ def compare_details(old: dict, new: dict, factor: float = 3.0) -> dict:
     return out
 
 
+def fingerprint(detail: dict) -> dict:
+    """What a best-of record is valid for: the data (per-tier doc counts)
+    and the hardware (CPUs this process may use, RAM). A run on another
+    machine shape starts a new record instead of min-ing its walls
+    against minima taken on a different core count."""
+    fp = {t: (detail.get(t) or {}).get("n_docs")
+          for t in ("base", "sf1", "sf10") if t in detail}
+    fp["nproc"] = len(os.sched_getaffinity(0))
+    fp["mem_bytes"] = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return fp
+
+
 def merge_best(best: dict, fresh: dict, fingerprint: dict) -> dict:
-    """Elementwise per-query minima across runs OF THE SAME DATA (ADVICE
-    r4: the committed headline should not encode one noisy run). The
-    fingerprint (per-tier doc counts) keys validity: regenerated
-    benchdata resets the record instead of min-ing across different
-    corpora."""
+    """Elementwise per-query minima across runs OF THE SAME DATA ON THE
+    SAME HARDWARE (ADVICE r4: the committed headline should not encode one
+    noisy run). The ``fingerprint()`` keys validity: regenerated benchdata
+    or a different machine shape resets the record instead of min-ing
+    across them."""
     if best.get("fingerprint") != fingerprint:
         best = {"fingerprint": fingerprint, "tiers": {}}
     tiers = best["tiers"]
@@ -338,11 +350,10 @@ def main() -> int:
         detail["regressions_vs_committed"] = regressions
         print(f"BENCH REGRESSION >=3x vs committed: {regressions}",
               file=sys.stderr)
-    # best-of record across runs of the same data (ADVICE r4): the
-    # canonical walls are per-query minima, fingerprint-keyed so a
-    # benchdata regeneration resets instead of min-ing across corpora
-    fingerprint = {t: (detail.get(t) or {}).get("n_docs")
-                   for t in ("base", "sf1", "sf10") if t in detail}
+    # best-of record across runs of the same data on the same hardware
+    # (ADVICE r4): the canonical walls are per-query minima,
+    # fingerprint-keyed so a benchdata regeneration or another core count
+    # resets instead of min-ing across them
     best_path = os.path.join(here, "BENCH_BEST.json")
     try:
         with open(best_path) as fh:
@@ -350,7 +361,8 @@ def main() -> int:
     except (OSError, ValueError):
         best = {}
     with open(best_path, "w") as fh:
-        json.dump(merge_best(best, detail, fingerprint), fh, indent=1)
+        json.dump(merge_best(best, detail, fingerprint(detail)), fh,
+                  indent=1)
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1)
     # The round driver records only the LAST ~2000 chars of stdout and

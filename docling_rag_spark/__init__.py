@@ -4,7 +4,46 @@ A from-scratch rebuild of winrar23/docling-rag's parse-and-chunk capabilities
 as batch DataFrame jobs over Common-Crawl-style page tables. See SURVEY.md.
 """
 
+import os
+import sys
+import zipimport
+
 __version__ = "0.1.0"
+
+
+class _FrozenZipImporter(zipimport.zipimporter):
+    """A ``zipimporter`` of an archive that never changes while the
+    process lives: ``invalidate_caches`` keeps the directory it read."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def _freeze_spark_archives() -> None:
+    """Worker hook, run once per Python worker process by the package
+    import that unpickling any of our Python stages triggers (each refers
+    to a package function; tests/test_worker_hook.py pins that).
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``worker_util.setup_spark_files``), and since Python 3.10 every
+    cached ``zipimporter`` then re-reads its archive's directory: ~0.1 s
+    a task for ``pyspark.zip``'s importers. The archives under
+    ``$SPARK_HOME/python/lib`` never change while a worker lives, so
+    their importers stop re-reading. ``--py-files`` archives keep the
+    refresh: picking those up is what the call is for."""
+    files = sys.modules.get("pyspark.core.files")
+    home = os.environ.get("SPARK_HOME")
+    if (files is None or not files.SparkFiles._is_running_on_worker
+            or not home):
+        return
+    lib = os.path.join(home, "python", "lib")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if (type(finder) is zipimport.zipimporter
+                and os.path.dirname(finder.archive) == lib):
+            sys.path_importer_cache[path] = _FrozenZipImporter(path)
+
+
+_freeze_spark_archives()
 
 
 def ship(spark) -> None:

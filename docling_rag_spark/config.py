@@ -42,7 +42,9 @@ MAX_TAGS = 5
 # --- Scale mechanics ----------------------------------------------------------
 DEFAULT_NUM_BUCKETS = 64      # url-hash buckets; unit of lineage/resume
 # parse-stage width: the extraction job runs exactly this many parse UDF
-# tasks per batch, whole buckets round-robin over them (plans/job.py)
+# tasks per batch, whole buckets round-robin over them, and its chunks /
+# extracted / stats derivations read the persisted parse output in the
+# same partitions (plans/job.py)
 DEFAULT_SALT_PARTITIONS = 32
 
 # --- Embedding (reference: core/embedder.py, dim frozen per model ------------

@@ -23,32 +23,35 @@ from pyspark.sql import types as T
 
 from docling_rag_spark.config import CHUNK_MAX_TOKENS, DEFAULT_SALT_PARTITIONS
 
+# Every field is nullable, nested ones included: the warehouse's pinned
+# table schemas (io/warehouse.py) are, as any parquet read makes them, and
+# the extraction job writes its tables straight from these rows.
 CHUNK_STRUCT = T.StructType([
-    T.StructField("chunk_id", T.IntegerType(), False),
-    T.StructField("text", T.StringType(), False),
-    T.StructField("context_text", T.StringType(), False),
-    T.StructField("page_number", T.IntegerType(), False),
-    T.StructField("element_type", T.StringType(), False),
-    T.StructField("headings", T.ArrayType(T.StringType()), False),
+    T.StructField("chunk_id", T.IntegerType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("context_text", T.StringType()),
+    T.StructField("page_number", T.IntegerType()),
+    T.StructField("element_type", T.StringType()),
+    T.StructField("headings", T.ArrayType(T.StringType())),
     T.StructField("span", T.StructType([
-        T.StructField("start", T.LongType(), False),
-        T.StructField("end", T.LongType(), False),
-    ]), False),
-    T.StructField("token_count", T.IntegerType(), False),
+        T.StructField("start", T.LongType()),
+        T.StructField("end", T.LongType()),
+    ])),
+    T.StructField("token_count", T.IntegerType()),
 ])
 
 DOC_SCHEMA = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("warc_ts", T.TimestampType(), True),
-    T.StructField("lang", T.StringType(), True),
-    T.StructField("format", T.StringType(), False),
-    T.StructField("status", T.StringType(), False),
-    T.StructField("encoding", T.StringType(), True),
-    T.StructField("error", T.StringType(), True),
-    T.StructField("title", T.StringType(), True),
-    T.StructField("extracted_text", T.StringType(), False),
-    T.StructField("n_blocks", T.IntegerType(), False),
-    T.StructField("chunks", T.ArrayType(CHUNK_STRUCT), False),
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("lang", T.StringType()),
+    T.StructField("format", T.StringType()),
+    T.StructField("status", T.StringType()),
+    T.StructField("encoding", T.StringType()),
+    T.StructField("error", T.StringType()),
+    T.StructField("title", T.StringType()),
+    T.StructField("extracted_text", T.StringType()),
+    T.StructField("n_blocks", T.IntegerType()),
+    T.StructField("chunks", T.ArrayType(CHUNK_STRUCT)),
 ])
 
 
@@ -145,8 +148,9 @@ def extracted_table(docs: DataFrame,
                     extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Doc-level output: byte-identity comparison target + registry fields.
 
-    Uses a precomputed ``n_chunks`` column when present (staged doc tables
-    carry it so this derivation never scans the wide chunks column)."""
+    Uses a precomputed ``n_chunks`` column when present (the extraction
+    job's persisted doc rows carry it, so this derivation never reads the
+    wide chunks column)."""
     n_chunks = (F.col("n_chunks") if "n_chunks" in docs.columns
                 else F.size("chunks"))
     return docs.select("url", "format", "status", "encoding", "error",

@@ -7,7 +7,9 @@ Replaces the reference's sequential indexing loop + postgres job queue
              -> anti-join buckets against committed lineage (resume, J3)
              -> per bucket-batch: bucket-routed repartition into
                 salt_partitions tasks -> fused parse+chunk mapInPandas
-                -> stage parquet partitioned by bucket
+                -> persist the doc rows (DISK_ONLY) -> derive chunks /
+                extracted / stats from them, staged as parquet
+                partitioned by bucket
              -> atomic bucket-directory commit + lineage append
 
 Unit of checkpointing = url-hash bucket (not file): a rerun after a crash
@@ -29,6 +31,7 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,9 +91,9 @@ def _scan_split_bytes(spark, pages_path: str) -> str | None:
     Spark packs files into ~``spark.sql.files.maxPartitionBytes`` splits at
     plan time; with the session default (32 MB) a bench-scale input (e.g.
     48 MB of 100k pages) scans on TWO map tasks no matter how many cores the
-    cluster has — the scan, its shuffle write, and the staged read-back all
-    inherit the cap, which measured as the scaling-efficiency killer between
-    N and 4N executors (BASELINE.md). Target ~3 splits per core, clamped to
+    cluster has — the scan and its shuffle write both inherit the cap,
+    which measured as the scaling-efficiency killer between N and 4N
+    executors (BASELINE.md). Target ~3 splits per core, clamped to
     [1 MB, 32 MB]: at petabyte scale the clamp returns the session default
     (splits stay row-group-sized), at bench scale every core gets work.
     Returns the previous setting (to restore) or None on opaque inputs.
@@ -103,19 +106,6 @@ def _scan_split_bytes(spark, pages_path: str) -> str | None:
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(tgt))
     return prev
-
-
-def _staged_docs_schema():
-    """DOC_SCHEMA + the staging columns (bucket is the partition key)."""
-    from pyspark.sql import types as T
-
-    from docling_rag_spark.operators.pipeline import DOC_SCHEMA
-    # copy the field list: StructType.add mutates in place, and sharing
-    # DOC_SCHEMA's list would silently widen the UDF's output contract
-    return (T.StructType(list(DOC_SCHEMA.fields))
-            .add("n_chunks", T.IntegerType())
-            .add("is_error", T.IntegerType())
-            .add("bucket", T.IntegerType()))
 
 
 def run_extraction(
@@ -229,6 +219,7 @@ def _run_extraction_inner(
         staging = os.path.join(staging_root,
                                f"{snapshot_id}-{batch_idx}-{run_id}")
         shutil.rmtree(staging, ignore_errors=True)
+        docs = None
 
         try:
             sub = pages.withColumn("bucket", bucket_of(F.col("url"), num_buckets))
@@ -247,11 +238,12 @@ def _run_extraction_inner(
             # file per bucket with a trivial sort, instead of num_tasks ×
             # num_buckets fragments — the difference between a write that scales
             # with cores and one that collapses under small-file overhead.
-            # The parse stage always runs salt_partitions tasks: every Python
-            # task pays a fixed worker set-up (~0.2 s at local[4], pyspark's
-            # per-task importlib.invalidate_caches() re-reading each cached
-            # zipimporter's archive directory), so one task per bucket would
-            # pay it once per wave. bucket_route puts whole buckets
+            # The parse stage always runs salt_partitions tasks: every task
+            # (the parse's and each derivation's) pays a fixed set-up, so
+            # one task per bucket pays it once per wave. Even with the
+            # worker hook (package __init__), 16 buckets as 16 tasks ran a
+            # 600-page job at local[4] in a median 1.85 s against 1.09 s as
+            # 4 tasks (0/16 pairs won). bucket_route puts whole buckets
             # round-robin into the salt_partitions tasks (at most
             # ceil(n/salt_partitions) each) with ZERO extra jobs —
             # repartitionByRange pays a per-batch sampling scan of the input
@@ -273,53 +265,28 @@ def _run_extraction_inner(
                 sub = sub.repartition(salt_partitions, F.col("bucket"),
                                       F.xxhash64("url", F.lit(0x5A17)))
 
-            # One UDF pass, materialized to a staged doc-level table; chunks /
-            # extracted / stats derive from it via column-pruned JVM-only scans.
-            # Staging-to-parquet beats .persist() here: executor-memory caching
-            # of the wide doc rows (text + chunk structs) thrashes GC as
-            # parallelism grows, while the staged table reads back pruned (the
-            # extracted derivation never touches the chunks column at all).
+            # One UDF pass, kept in Spark's block store for the chunks /
+            # extracted / stats derivations. DISK_ONLY keeps the wide doc
+            # rows (text + chunk structs) off the executor heap, where they
+            # thrash GC as parallelism grows. Staging them as parquet costs
+            # a zstd write plus three read-backs (0.6-1.0 s of a 600-page
+            # job at local[4]) and never survived a failed batch either: a
+            # rerun reparses. The derivations run in the parse stage's
+            # partitions, whole buckets each: one file per bucket.
             with job_description(spark, "extract:parse"):
-                (extract_documents(sub, max_tokens=max_tokens,
-                                   salt_partitions=None)
-                 .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
-                 .withColumn("n_chunks", F.size("chunks"))
-                 .withColumn("is_error",
-                             (F.col("status") == "error").cast("int"))
-                 .write.partitionBy("bucket").mode("overwrite")
-                 .parquet(os.path.join(staging, "docs")))
+                docs = (extract_documents(sub, max_tokens=max_tokens,
+                                          salt_partitions=None)
+                        .withColumn("bucket", bucket_of(F.col("url"),
+                                                        num_buckets))
+                        .withColumn("n_chunks", F.size("chunks"))
+                        .withColumn("is_error",
+                                    (F.col("status") == "error").cast("int"))
+                        .persist(StorageLevel.DISK_ONLY))
+                docs.count()
 
             _t1 = _time.time()
-            # schema-specified read: an all-empty batch (no urls hash into
-            # these buckets) writes only _SUCCESS, and an inferred read would
-            # raise UNABLE_TO_INFER_SCHEMA — with the explicit schema the read
-            # is simply empty and the derivations below no-op (no driver-side
-            # filesystem probing; the same read works against object storage)
-            docs_dir = os.path.join(staging, "docs")
-            docs = spark.read.schema(_staged_docs_schema()).parquet(docs_dir)
-
-            # Derivation-scan split sizing: the session's maxPartitionBytes
-            # was adapted to the PAGES input (3 splits/core of html bytes,
-            # _scan_split_bytes) — applied to the larger staged docs table it
-            # yields ~10 splits/core, and the ~0.2 s fixed cost per scan task
-            # (deser + footer + codec init) then grows with the core count:
-            # event logs measured 84-task derivation stages at 8 cores doing
-            # +26 task-seconds over the same stages at 19 tasks on 2 cores —
-            # the second-largest Amdahl term in N-vs-4N scaling. Resize to
-            # ~2.5 splits/core of the STAGED bytes for the derivation reads,
-            # restored after the batch commits.
-            _cores = spark.sparkContext.defaultParallelism
-            _staged_bytes = _input_bytes(docs_dir)
-            _prev_mpb = None
-            if _staged_bytes:
-                _tgt = max(1 << 20, min(128 << 20,
-                                        _staged_bytes * 2 // (5 * _cores) or 1))
-                _prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes",
-                                           None)
-                spark.conf.set("spark.sql.files.maxPartitionBytes", str(_tgt))
-
-            # The three derivations are independent reads of the staged docs
-            # table; run them as CONCURRENT Spark jobs (threads share the
+            # The three derivations are independent reads of the persisted
+            # docs; run them as CONCURRENT Spark jobs (threads share the
             # session; the scheduler interleaves their stages). Sequential
             # execution leaves cores idle during each job's fixed
             # scheduling/commit overhead — measurably worse scaling at high
@@ -356,9 +323,8 @@ def _run_extraction_inner(
                     old_extracted = wh.read_buckets(spark, out_dir,
                                                     "extracted", active)
 
-            # pass the staged bucket column through instead of re-hashing
-            # every output row (an xxhash64+pmod per chunk after explode,
-            # for a value the staged partitioning already fixed)
+            # pass the bucket column through instead of re-hashing every
+            # output row (an xxhash64+pmod per chunk after explode)
             staged_schema = {}
 
             def _write_chunks():
@@ -395,23 +361,15 @@ def _run_extraction_inner(
                      .write.partitionBy("bucket").mode("overwrite")
                      .parquet(os.path.join(staging, "extracted")))
 
-            try:
-                with ThreadPoolExecutor(max_workers=3) as pool:
-                    f_chunks = pool.submit(_write_chunks)
-                    f_extracted = pool.submit(_write_extracted)
-                    f_stats = (pool.submit(_stats)
-                               if mode != "merge" else None)
-                    f_chunks.result()
-                    f_extracted.result()
-                    if f_stats is not None:
-                        stats = f_stats.result()
-            finally:
-                # next batch's PAGES scan must get its own split size back
-                # (and a failed derivation must not leak the staged sizing
-                # into the caller's session)
-                if _prev_mpb is not None:
-                    spark.conf.set("spark.sql.files.maxPartitionBytes",
-                                   _prev_mpb)
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                f_chunks = pool.submit(_write_chunks)
+                f_extracted = pool.submit(_write_extracted)
+                f_stats = (pool.submit(_stats)
+                           if mode != "merge" else None)
+                f_chunks.result()
+                f_extracted.result()
+                if f_stats is not None:
+                    stats = f_stats.result()
 
             _t4 = _time.time()
             # The shared bucket-rewrite commit. Validation: a NEWER
@@ -443,7 +401,10 @@ def _run_extraction_inner(
                         report.phase_sec.get(k, 0.0) + v, 2)
         finally:
             # a failed batch (incl. CommitConflict) must not leak staged
-            # parquet: the rerun recomputes; only committed tables survive
+            # parquet or persisted blocks: the rerun recomputes; only
+            # committed tables survive
+            if docs is not None:
+                docs.unpersist()
             shutil.rmtree(staging, ignore_errors=True)
 
         report.buckets_done += len(batch)

@@ -76,6 +76,13 @@ def _k_for(n: int) -> int:
     return max(_K_MIN, n // _K_DIVISOR)
 
 
+def _qv_matrix(pdf: pd.DataFrame) -> np.ndarray:
+    """A batch's quantized vectors as one float64 matrix. Shared by the
+    Python stages below; as a package function it also makes unpickling
+    them import the package, which runs its worker hook."""
+    return np.array(pdf["qv"].tolist(), dtype=np.float64)
+
+
 def _assign(q, cents):
     """Vectorized argmin assignment: one Arrow batch at a time, distances
     to all k centroids via numpy matmul. ``cents`` is sorted by cluster
@@ -93,7 +100,7 @@ def _assign(q, cents):
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.array(pdf["qv"].tolist(), dtype=np.float64)
+            X = _qv_matrix(pdf)
             d = ((X * X).sum(axis=1)[:, None]
                  - 2.0 * (X @ M.T) + m2[None, :])
             np.maximum(d, 0.0, out=d)
@@ -189,7 +196,7 @@ def vec_semdedup_drop(spark, sf_dir,
     def per_cluster(pdf):
         pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
-        X = np.array(pdf["qv"].tolist(), dtype=np.float64)
+        X = _qv_matrix(pdf)
         nrm = np.sqrt((X * X).sum(axis=1))
         nrm[nrm == 0.0] = 1.0  # zero vectors match nothing
         C = (X / nrm[:, None]) @ (X / nrm[:, None]).T

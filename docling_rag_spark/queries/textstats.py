@@ -486,6 +486,26 @@ _LM_HEAD_E6 = -700_000      # avg logprob per trigram above this => head
 _LM_MIDDLE_E6 = -850_000    # above this => middle, else tail
 
 
+def _trigram_keys(texts: list[str]):
+    """Trigram keys of ``texts`` (each >= 3 characters) over the batch's
+    concatenated UTF-32 code buffer: three 21-bit code points packed into
+    one int64. Returns ``(lens, starts, vi, k3)``: each text's length and
+    buffer offset, the buffer positions that start a trigram (all but the
+    last 2 of each text), and their keys."""
+    import numpy as np
+
+    lens = np.array([len(t) for t in texts], dtype=np.int64)
+    codes = np.frombuffer("".join(texts).encode("utf-32-le"),
+                          dtype="<u4").astype(np.int64)
+    starts = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=starts[1:])
+    doc_of = np.repeat(np.arange(len(lens)), lens)
+    pos_in = np.arange(int(lens.sum())) - starts[doc_of]
+    vi = np.nonzero(pos_in <= lens[doc_of] - 3)[0]
+    k3 = (codes[vi] << 42) | (codes[vi + 1] << 21) | codes[vi + 2]
+    return lens, starts, vi, k3
+
+
 def _lm_tables(spark, sf_dir):
     """(tri->lp dict, bi->lp-of-unseen-tri dict, default lp) as exact
     floor-scaled BIGINTs. Log-probs are computed JVM-SIDE with the exact
@@ -510,16 +530,7 @@ def _lm_tables(spark, sf_dir):
                      if len(t) >= 3]
             if not texts:
                 continue
-            lens = np.array([len(t) for t in texts], dtype=np.int64)
-            codes = np.frombuffer("".join(texts).encode("utf-32-le"),
-                                  dtype="<u4").astype(np.int64)
-            starts = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            doc_of = np.repeat(np.arange(len(lens)), lens)
-            pos_in = np.arange(int(lens.sum())) - starts[doc_of]
-            vi = np.nonzero(pos_in <= lens[doc_of] - 3)[0]
-            k3 = ((codes[vi] << 42) | (codes[vi + 1] << 21)
-                  | codes[vi + 2])
+            _lens, _starts, _vi, k3 = _trigram_keys(texts)
             u, c = np.unique(k3, return_counts=True)
             yield pd.DataFrame({"k": u, "c": c})
 
@@ -587,19 +598,7 @@ def text_lm_score(spark, sf_dir):
                 continue
             texts = [t for t, k in zip(texts, keep) if k]
             ids = pdf["doc_id"].to_numpy()[keep]
-            lens = lens[keep]
-            codes = np.frombuffer("".join(texts).encode("utf-32-le"),
-                                  dtype="<u4").astype(np.int64)
-            starts = np.zeros(len(lens), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            total = int(lens.sum())
-            # trigram start positions: all but the last 2 of each doc
-            doc_of = np.repeat(np.arange(len(lens)), lens)
-            pos_in = np.arange(total) - starts[doc_of]
-            valid = pos_in <= lens[doc_of] - 3
-            vi = np.nonzero(valid)[0]
-            k3 = ((codes[vi] << 42) | (codes[vi + 1] << 21)
-                  | codes[vi + 2])
+            lens, starts, vi, k3 = _trigram_keys(texts)
             p = np.searchsorted(tri_keys, k3)
             p_c = np.minimum(p, len(tri_keys) - 1)
             hit = (len(tri_keys) > 0) & (tri_keys[p_c] == k3)
@@ -609,7 +608,7 @@ def text_lm_score(spark, sf_dir):
             hit2 = (len(bi_keys) > 0) & (bi_keys[q_c] == k2)
             lp = np.where(hit, tri_lps[p_c],
                           np.where(hit2, bi_lps[q_c], lp0))
-            lp_full = np.zeros(total, dtype=np.int64)
+            lp_full = np.zeros(int(lens.sum()), dtype=np.int64)
             lp_full[vi] = lp
             sums = np.add.reduceat(lp_full, starts)
             n_tri = lens - 2

@@ -51,6 +51,21 @@ def test_merge_best_resets_on_new_data_fingerprint():
     assert best["tiers"]["base"]["q1"] == 3.0  # NOT min across corpora
 
 
+def test_merge_best_resets_on_other_nproc(monkeypatch):
+    detail = {"base": _tier({"q1": 0.5}, n_docs=5000)}
+    fp32 = bench.fingerprint(detail)
+    best = bench.merge_best({}, detail, fp32)
+    monkeypatch.setattr(bench.os, "sched_getaffinity",
+                        lambda _pid: set(range(fp32["nproc"] + 4)))
+    fp = bench.fingerprint(detail)
+    assert fp["nproc"] == fp32["nproc"] + 4 and fp["base"] == 5000
+    assert fp["mem_bytes"] == fp32["mem_bytes"] > 0
+    # the same data on another core count: a fresh record, not a minimum
+    best = bench.merge_best(best, {"base": _tier({"q1": 3.0})}, fp)
+    assert best["tiers"]["base"]["q1"] == 3.0
+    assert best["fingerprint"] == fp
+
+
 def test_committed_detail_parses_and_has_all_tiers():
     with open(os.path.join(REPO, "BENCH_DETAIL.json")) as fh:
         d = json.load(fh)

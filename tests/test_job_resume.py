@@ -84,3 +84,37 @@ def test_staging_cleaned(spark, pages_path, tmp_path):
     out = str(tmp_path / "wh")
     run_extraction(spark, pages_path, out, num_buckets=N_BUCKETS, salt_partitions=4)
     assert not os.path.exists(os.path.join(out, "_staging"))
+
+
+def _persisted_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_no_persisted_blocks_leak(spark, pages_path, tmp_path):
+    """The parse output lives in Spark's block store only for its batch:
+    a finished job, a failed batch and a CommitConflict all leave the
+    session holding no persisted data of the job."""
+    before = _persisted_ids(spark)
+
+    run_extraction(spark, pages_path, str(tmp_path / "ok"),
+                   num_buckets=N_BUCKETS, salt_partitions=4)
+    assert _persisted_ids(spark) == before
+
+    with pytest.raises(RuntimeError, match="injected"):
+        run_extraction(spark, pages_path, str(tmp_path / "crash"),
+                       num_buckets=N_BUCKETS, buckets_per_batch=3,
+                       salt_partitions=4, _fail_after_batches=1)
+    assert _persisted_ids(spark) == before
+
+    # a newer snapshot committed every bucket after this run's base state
+    out = str(tmp_path / "ok")
+    future = wh.now() + 10_000
+    wh.append_lineage(out, "snap-new", [
+        {"input_snapshot_id": "snap-new", "bucket": b, "doc_count": 0,
+         "chunk_count": 0, "failure_count": 0,
+         "started_at": future, "finished_at": future}
+        for b in range(N_BUCKETS)])
+    with pytest.raises(wh.CommitConflict):
+        run_extraction(spark, pages_path, out, snapshot_id="snap-old",
+                       num_buckets=N_BUCKETS, salt_partitions=4)
+    assert _persisted_ids(spark) == before

@@ -252,3 +252,42 @@ def test_unpinned_warehouse_falls_back(spark, tmp_path):
     df = read_extracted(spark, out)
     assert df.count() == pinned_count
     assert "extracted_text" in df.columns
+
+
+def _non_nullable(dtype, path: str = "") -> list[str]:
+    """Paths of every non-nullable field (or array element) in ``dtype``."""
+    from pyspark.sql import types as T
+
+    if isinstance(dtype, T.StructType):
+        out = []
+        for f in dtype.fields:
+            p = f"{path}.{f.name}" if path else f.name
+            out += ([] if f.nullable else [p]) + _non_nullable(f.dataType, p)
+        return out
+    if isinstance(dtype, T.ArrayType):
+        return (([] if dtype.containsNull else [f"{path}[]"])
+                + _non_nullable(dtype.elementType, f"{path}[]"))
+    return []
+
+
+def test_pinned_schemas_are_all_nullable(spark, tmp_path):
+    """The extraction job writes its tables from rows it never read back
+    from parquet, so nothing widens them on the way: the pinned chunks and
+    extracted schemas must still be nullable at every level (nested
+    ``span`` included). A rewrite that reads the tables back, as
+    ``delete_urls`` does, would otherwise pin a different ``span`` type
+    and fail with SchemaEvolutionError."""
+    from docling_rag_spark.plans.job import delete_urls
+
+    pages, out = str(tmp_path / "pages.parquet"), str(tmp_path / "wh")
+    _write(generate_pages(24), pages)
+    run_extraction(spark, pages, out, num_buckets=N_BUCKETS,
+                   salt_partitions=4)
+    for table in ("chunks", "extracted"):
+        pinned = wh.pinned_table_schema(out, table)
+        assert pinned is not None and _non_nullable(pinned) == [], table
+    assert "span" in wh.pinned_table_schema(out, "chunks").names
+
+    victim = read_extracted(spark, out).select("url").first()["url"]
+    report = delete_urls(spark, out, [victim])
+    assert report["rows_deleted"]["extracted"] == 1
