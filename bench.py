@@ -67,9 +67,7 @@ BENCH_QUERIES = [
     "corpus_decontaminate",
     "vec_topk_cosine",
     "vec_neardup_lsh",
-    "vec_lsh_multiprobe",
     "vec_ivf_pq_topk",
-    "vec_recall_at_k",
     "events_asof_join",
     "url_canonical_cap",
     "corpus_span_dedup",

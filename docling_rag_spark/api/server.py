@@ -5,8 +5,8 @@ Endpoint surface mirrors the reference's FastAPI app (api/app.py:198-333):
   GET    /health                          liveness
   GET    /search?q=..&k=..&url_prefix=..&mode=auto|exact|ann
                                           top-k retrieval (§3.2; mode=ann
-                                          scans only the 9 multiprobe
-                                          partitions of <wh>/ann/lsh)
+                                          scans only 4 of the 16 IVF-PQ
+                                          cells of <wh>/ann)
   GET    /documents?limit=..&url_prefix=  catalog listing
   GET    /status                          lineage/job rollup per snapshot
   GET    /jobs            + /jobs/<id>    async extraction job states

@@ -9,8 +9,8 @@ thin JSON shim. No web framework ships in this environment; the HTTP tier
 is deliberately dependency-free.
 
 Driver-side role: these run interactive, seconds-scale queries. A search
-is two small Spark steps: a TakeOrderedAndProject over the bucketed
-embeddings table collects the top-k keys, then a point lookup of those
+is two small Spark steps: a TakeOrderedAndProject over the embeddings
+table or the ANN index collects the top-k keys, then a point lookup of those
 keys in ``extracted`` and ``chunks`` decorates them on the driver. Status
 is a lineage-table scan. The heavy batch work stays in plans/job.
 """
@@ -41,8 +41,7 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
     """§3.2 search lifecycle: embed query -> top-k -> decorate (J1) ->
     heading path (F3) + 300-char preview (F4) -> search log (S8).
 
-    Two Spark steps, three small jobs (four on the ANN path, whose index
-    scan reads a footer first):
+    Two Spark steps, three small jobs:
 
     1. top-k: one TakeOrderedAndProject over the candidate rows collects
        the <= k ``(url, chunk_id, score)`` hits to the driver. A
@@ -55,10 +54,13 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
        places.
 
     ``mode``: 'exact' scans the full embeddings table; 'ann' requires the
-    materialized <warehouse>/ann/lsh index (run_embed.py --ann-index) and
-    scans only the 9 multiprobe bucket partitions — the reference's HNSW
+    materialized <warehouse>/ann index (run_embed.py --ann-index, or a
+    stream_embed_index run) and scans only 4 of its 16 IVF-PQ cells, plus
+    the same cells of the streaming ``ann_delta`` batches; the ADC-ranked
+    candidates are reranked by exact cosine — the reference's HNSW
     approximate-speed trade-off (storage/db_schema.py:36-37), here as
-    Iceberg-style partition pruning; 'auto' uses the index when present.
+    Iceberg-style partition pruning; 'auto' uses the index when it holds
+    rows (``ann/pq`` or a delta batch), exact search otherwise.
     A store with no chunks raises ``FileNotFoundError`` (P5); it is only
     probed when the top-k comes back empty."""
     from docling_rag_spark.operators.embed import embed_chunks, embed_texts
@@ -69,32 +71,26 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         raise ValueError(f"invalid mode {mode!r}; use auto|exact|ann")
     chunks = wh.read_table(spark, warehouse, "chunks")
     emb_path = os.path.join(warehouse, "embeddings")
-    ann_lsh = os.path.join(warehouse, "ann", "lsh")
-    use_ann = (mode == "ann" or (mode == "auto" and os.path.isdir(ann_lsh)))
-    if use_ann:
-        if not os.path.isdir(ann_lsh):
-            raise FileNotFoundError(
-                f"mode='ann' but no index at {ann_lsh}; run "
-                "scripts/run_embed.py --ann-index first")
-        from docling_rag_spark.streaming.embed_index import (
-            ann_probe_candidates)
+    ann = os.path.join(warehouse, "ann")
+    delta = os.path.join(warehouse, "ann_delta")
+    if mode == "ann" or (mode == "auto" and AI.has_rows(ann, delta)):
         q_vec = [float(v) for v in embed_texts([query])[0]]
-        probes = AI.multiprobe_buckets(AI.py_bucket(q_vec))
-        # base index + streaming ann_delta batches (docs ingested via
-        # stream_embed_index must be searchable before compaction)
-        emb = (ann_probe_candidates(spark, warehouse, probes)
-               .select("url", "chunk_id", "embedding"))
-    elif os.path.isdir(emb_path):
-        emb = spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
+        top = AI.probe(spark, ann, q_vec, ("url", "chunk_id"), top_k,
+                       delta_dir=delta,
+                       where=(None if url_prefix is None
+                              else F.col("url").startswith(url_prefix)))
     else:
-        emb = embed_chunks(chunks)
-    if url_prefix is not None:
-        emb = emb.filter(F.col("url").startswith(url_prefix))
+        if os.path.isdir(emb_path):
+            emb = spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
+        else:
+            emb = embed_chunks(chunks)
+        if url_prefix is not None:
+            emb = emb.filter(F.col("url").startswith(url_prefix))
+        top = search_chunks(spark, emb, query, top_k=top_k,
+                            store_is_empty=False)
     with job_description(spark, "search:topk"):
-        hits = (search_chunks(spark, emb, query, top_k=top_k,
-                              store_is_empty=False)
-                .select("url", "chunk_id",
-                        F.round("score", 4).alias("score"))
+        hits = (top.select("url", "chunk_id",
+                           F.round("score", 4).alias("score"))
                 .collect())
         if not hits and chunks.isEmpty():
             raise FileNotFoundError("no chunks in storage (reference "

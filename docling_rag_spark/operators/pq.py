@@ -7,12 +7,18 @@ to K centroids, store each vector as M small codes, and score queries
 against codes via an M×K lookup table (ADC — asymmetric distance
 computation) instead of touching raw floats.
 
-Why it matters at 100 TB: the raw `embeddings` column is d×4 bytes per
-row (256 B at d=64); PQ codes are M bytes (8 B) plus one precomputed
-norm — a 16-32× working-set reduction, which is the difference between
-an index that fits in cluster memory and one that doesn't. The scan
-stays map-only (codes + broadcast LUT → score expression), so the plan
-shape is identical to the exact path: project → TakeOrdered, no shuffle.
+What it buys here: CPU per candidate row, not I/O. The served probe
+(plans/ann_index.probe) reads the codes and the raw vectors of its probe
+cells in one scan — the exact rerank needs the vectors, and a second scan
+for them measured slower — so parquet decodes the floats anyway. ADC
+ranks a row with M=8 table lookups where an exact cosine folds all d=64
+dimensions in a Spark higher-order function. Against exact cosine over
+the same probe cells (IVF-flat), 4 vCPU, local[4], p50 per query: 416 vs
+521 ms with 50,000 rows indexed, 654 vs 1,172 ms with 200,000; on the
+~5,700-row search benchmark fixture, where planning dominates, IVF-flat
+is faster (307 vs 373 ms). The scan stays map-only (codes + LUT constant
+→ score expression), so the plan shape is the exact path's: project →
+TakeOrdered, no shuffle.
 
 Reference analog: the reference's HNSW index (per-process graph walk,
 `/root/reference/src/docling_rag/storage/db_schema.py:36-37`) is not

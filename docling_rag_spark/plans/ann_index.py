@@ -1,100 +1,61 @@
-"""Materialized ANN index: embeddings physically partitioned by LSH bucket
-and IVF-PQ coarse cell.
+"""Materialized ANN index: IVF-PQ codes and raw vectors, physically
+partitioned by trained coarse cell (Jégou et al., TPAMI 2011).
 
 The reference's HNSW index (reference storage/db_schema.py:36-37) is a
-*persistent* structure; round-2's LSH queries recomputed the bucket
-from a full scan per query — correct and linear, but a full-table scan per
-search at 100 TB. This module is the missing piece: the embeddings table is
-written ONCE as
+*persistent* structure; this module is the only one that knows the layout
+of its Spark-native analog:
 
-    <index>/lsh/bucket=<0..255>/part-*.parquet   (sign-LSH, 8 hyperplanes)
-    <index>/pq/cell=<0..15>/part-*.parquet       (IVF-PQ codes)
-    <index>/pq_books.json                        (trained PQ codebooks)
+    <index>/pq/cell=<0..15>/part-*.parquet   (id cols, codes, embedding)
+    <index>/pq_books.json                    (coarse cells, PQ codebooks,
+                                              row schema)
 
-and a search computes its probe buckets/cells driver-side (the query vector
-is a parameter, not a table row), then reads ONLY the probe partitions —
-Catalyst partition pruning, visible as ``PartitionFilters`` in the scan and
-as a pruned ``inputFiles()`` set (plan-audited in tests/test_plan_audit.py).
-On Iceberg this is a ``bucket``/identity partition spec over the same
-columns; the layout maps 1:1.
+The stream (streaming/embed_index.py) appends the same rows as
+``<delta>/batch=<id>/cell=<c>/`` dirs, and compaction folds them into
+``pq/`` by ``cell``. Only ``build_ann_index`` trains codebooks, on an md5
+sample of its whole input: the first build (the stream's, once its
+embeddings reach ``MIN_TRAIN`` rows), and any rebuild whose input yields a
+larger sample than the books saw, which also re-encodes the deltas. Every
+other writer encodes with the published books, so compaction changes the
+layout, never the answer.
 
-Python-side bucket math mirrors the Spark/DuckDB expressions bit-for-bit:
-left-folded double sums over the same md5-derived plane literals (IEEE
-doubles, same association order), so the partition a query probes is
-exactly the partition its vector was written to.
+A search (``probe``) computes its probe cells driver-side (the query vector
+is a parameter, not a table row) and reads only those partitions of the
+base table and of every delta, in one job — Catalyst partition pruning,
+visible as ``PartitionFilters`` (plan-audited in tests/test_pq.py and
+tests/test_plan_audit.py). ADC over the codes ranks the candidates, and
+the exact cosine reranks the top ``_PQ_RERANK``. On Iceberg the layout is
+an identity partition spec over ``cell``.
+
+Every expression that carries trained or query constants is SQL over one
+folded array constant per table (``_doubles``): Spark evaluates it with
+the same left folds and first-argmin ties as operators/pq.py's numpy
+reference, bit for bit.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
+import math
 import os
+import shutil
 import tempfile
-import threading
 import uuid
-from contextlib import contextmanager
 
-_CODEGEN_TOGGLE_LOCK = threading.Lock()
+from docling_rag_spark.io import warehouse as wh
+from docling_rag_spark.operators import pq as PQ
 
-
-@contextmanager
-def interpreted_eval(spark):
-    """Run a job with whole-stage codegen off: the bucket/cell expressions
-    embed thousands of literal plane/centroid constants and at dim>=256
-    codegen spends tens of seconds COMPILING them per stage, while
-    interpreted evaluation is instant and bit-identical. The conf is
-    session-global: overlapping jobs on a shared session (HTTP server
-    threads, streaming micro-batches) could interleave save/restore and
-    leave codegen disabled forever — the toggle is serialized in-process."""
-    with _CODEGEN_TOGGLE_LOCK:
-        conf = spark.conf
-        prev = conf.get("spark.sql.codegen.wholeStage", "true")
-        conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
-            yield
-        finally:
-            conf.set("spark.sql.codegen.wholeStage", prev)
-
-N_PLANES = 8
+BOOKS = "pq_books.json"
+CELL = "cell"
 # The index tables and their partition columns — the one list the builder,
 # ensure_index's completeness check and the delete cascade all read.
-INDEX_TABLES = {"lsh": ["bucket"], "pq": ["cell"]}
-
-
-def plane_value(j: int, i: int) -> float:
-    """Hyperplane component v(j, i) = ((md5-hex60(\"j_i\") % 1001) - 500)
-    / 500.0 — deterministic and portable across engines."""
-    h = int(hashlib.md5(f"{j}_{i}".encode()).hexdigest()[:15], 16)
-    return ((h % 1001) - 500) / 500.0
-
-
-def plane_matrix(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
-    """Sign-LSH hyperplanes for any embedding dim (the index must match
-    the table it covers: a 64-wide matrix zip_with'd against a 256-dim
-    vector silently null-pads and degenerates every bucket to 0)."""
-    return [[plane_value(j, i) for i in range(dim)] for j in range(n_planes)]
-
-
-def py_dot(a, b) -> float:
-    """Left-folded dot product — the exact fold order of F.aggregate /
-    DuckDB list_reduce in queries/vectors.py."""
-    acc = 0.0
-    for x, y in zip(a, b):
-        acc = acc + float(x) * float(y)
-    return acc
-
-
-def py_bucket(emb) -> int:
-    b = 0
-    for j, plane in enumerate(plane_matrix(len(emb))):
-        if py_dot(plane, emb) > 0:
-            b += 1 << j
-    return b
-
-
-def multiprobe_buckets(bucket: int, n_planes: int = N_PLANES) -> list[int]:
-    """The query bucket plus every bucket at hamming distance 1 — the
-    standard multi-probe recall fix (9 of 256 partitions)."""
-    return [bucket] + [bucket ^ (1 << j) for j in range(n_planes)]
+INDEX_TABLES = {"pq": [CELL]}
+_PQ_PROBES = 4    # cells scanned per query (4× pruning of PQ_COARSE_CELLS)
+_PQ_RERANK = 128  # ADC candidates re-ranked with exact cosine
+# fewest rows the stream trains books on: one sample row per codeword of
+# every cell (k-means caps k at the sample size, so a one-chunk micro-batch
+# would publish one cell and one codeword per subspace)
+MIN_TRAIN = PQ.PQ_COARSE_CELLS * PQ.PQ_K
 
 
 def query_vector(sf_dir: str, vec_id: int):
@@ -112,105 +73,319 @@ def query_vector(sf_dir: str, vec_id: int):
     return [float(v.as_py()) for v in t["embedding"][0].values]
 
 
-def argmin_l2_col(vec_col, cents):
-    """0-based index of the nearest centroid: left-fold squared L2 per
-    centroid (term order = zip_with element order, fold = F.aggregate),
-    first-argmin via array_position(min) — the exact numerics of
-    operators/pq.py's _fold_sq_dists + np.argmin."""
+# --- SQL expressions over trained / query constants --------------------------
+
+def _doubles(vals) -> str:
+    """Nested lists of floats as one SQL ``array<…double>`` constant: a
+    JSON string literal that ``from_json`` parses and the optimizer folds.
+    JSON carries each double's ``repr``, which round-trips exactly, and one
+    string literal costs a fraction of the analysis a literal per element
+    does (hundreds of ms per query at these sizes)."""
+    typ, v = "double", vals
+    while isinstance(v, (list, tuple)):
+        typ, v = f"array<{typ}>", v[0]
+    return f"from_json('{json.dumps(vals)}', '{typ}')"
+
+
+def _fold(array_sql: str) -> str:
+    """Left-fold sum of a double array from 0.0 — numpy's accumulation
+    order in operators/pq.py."""
+    return f"aggregate({array_sql}, 0D, (a, t) -> a + t)"
+
+
+def _nearest(vec_sql: str, cents):
+    """0-based index of ``vec``'s nearest centroid: squared L2 folded
+    dimension by dimension, first argmin — operators/pq.py's
+    _fold_sq_dists + np.argmin."""
     from pyspark.sql import functions as F
 
-    dists = F.array(*[
-        F.aggregate(
-            F.zip_with(vec_col,
-                       F.array(*[F.lit(float(v)) for v in cent]),
-                       lambda x, c: (x.cast("double") - c)
-                       * (x.cast("double") - c)),
-            F.lit(0.0), lambda acc, t: acc + t)
-        for cent in cents])
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    d = F.expr(f"transform({_doubles(cents)}, c -> " + _fold(
+        f"zip_with({vec_sql}, c, (x, y) -> "
+        "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y))") + ")")
+    return F.array_position(d, F.array_min(d)) - 1
 
 
-def build_ann_index(spark, embeddings_df, out_dir: str,
-                    id_cols: tuple[str, ...] = ("vec_id", "label")) -> None:
-    """Write the physically-partitioned index tables, carrying
-    ``id_cols`` alongside the vectors (the serving tier indexes by natural
-    key (url, chunk_id); the oracle tables by (vec_id, label)). One
-    map-only job each (no shuffle: partitionBy on write splits files per
-    task); at 10^9+ vectors add .repartition(n, 'bucket') first so each
-    partition is written by one task."""
+def _encode(rows, side: dict, id_cols):
+    """Index rows ``(id cols, codes, embedding, cell)`` under ``side``'s
+    books: ``codes`` is one nearest-codeword byte per subspace."""
     from pyspark.sql import functions as F
 
-    first = embeddings_df.select(F.size("embedding").alias("d")).first()
-    dim = int(first["d"]) if first else 0
-    base = embeddings_df.select(*id_cols, "embedding")
-    # The bucket/cell/code assignment expressions embed (8+16+16)×dim
-    # literal plane/centroid constants (LSH planes, PQ coarse cells, PQ
-    # codebooks); at dim≥256 whole-stage codegen spends tens of seconds
-    # COMPILING them per stage while interpreted evaluation of the same
-    # Catalyst expressions is instant and bit-identical. The build is a
-    # one-time job, so trade JIT throughput for zero compile.
-    with interpreted_eval(spark):
-        _write_lsh_table(spark, base, dim, out_dir)
-        _write_pq_table(spark, base, dim, out_dir, id_cols)
+    sd = PQ.subdim(side["dim"])
+    codes = F.array(*[
+        _nearest(f"slice(embedding, {m * sd + 1}, {sd})",
+                 side["books"][m]).cast("tinyint")
+        for m in range(PQ.PQ_M)])
+    return rows.select(*id_cols, codes.alias("codes"), "embedding",
+                       _nearest("embedding", side["coarse"])
+                       .cast("int").alias(CELL))
 
 
-def _write_pq_table(spark, base, dim: int, out_dir: str,
-                    id_cols: tuple[str, ...]) -> None:
-    """The memory-bound tier of the index (IVF-PQ, Jégou TPAMI 2011):
-    trained coarse cells partition the table, PQ codes (array<tinyint>,
-    M bytes of payload per vector vs dim×4 raw — 16-32× smaller) are all
-    a query's candidate-ranking scan reads; raw vectors are fetched only
-    for the final rerank join. Codebooks train on a bounded deterministic
-    sample — the PQ_SAMPLE rows whose md5(id) sorts lowest (≈ 1 MiB
-    collected via TakeOrdered, no shuffle). Hash order makes the sample a
-    uniform pseudo-random subset of the WHOLE corpus: an id-ordered
-    prefix at 10^12 crawl scale would train the codebooks on the oldest
-    crawl slice only, and distribution drift between that slice and the
-    rest degrades every later cell assignment. Codebooks ship in a JSON
-    sidecar so query time never retrains. Dims not divisible by PQ_M get
-    a sidecar marked skipped (no pq/ dir)."""
-    import json
+def _adc_sql(q_vec, books) -> str:
+    """floor(approximate cosine · 1e6) from the codes alone: each LUT is
+    indexed by the subspace's code and folded over subspaces (operators/
+    pq.py's adc_scores); a zero-norm reconstruction ranks last (null)."""
+    dot_lut, norm2_lut = PQ.adc_tables(q_vec, books)
 
+    def lut_sum(lut):
+        return _fold(f"zip_with(codes, {_doubles(lut)}, "
+                     "(c, t) -> t[CAST(c AS INT)])")
+    return (f"floor(try_divide({lut_sum(dot_lut)}, "
+            f"sqrt({lut_sum(norm2_lut)})) * 1000000D)")
+
+
+def _cosine_sql(q_vec) -> str:
+    """Exact cosine of ``embedding`` with the query: one pass folds the
+    dot and the squared norm, left to right, then divides by the product
+    of the norms — the op order of queries/vectors.py's
+    ``_dot(e, q) / (_norm(e) * _norm(q))``; 0 for a zero vector. The
+    query's norm stays inside the fold's finish lambda: a top-level double
+    literal is inlined into the generated code, and a new value per query
+    would compile a new class per query."""
+    q = [float(v) for v in q_vec]
+    return (f"aggregate(zip_with(embedding, {_doubles(q)}, (x, y) -> "
+            "named_struct('dot', CAST(x AS DOUBLE) * y, "
+            "'sq', CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
+            "named_struct('dot', 0D, 'sq', 0D), "
+            "(a, t) -> named_struct('dot', a.dot + t.dot, 'sq', a.sq + t.sq), "
+            "a -> coalesce(try_divide(a.dot, sqrt(a.sq) * "
+            f"{math.sqrt(PQ._py_dot(q, q))!r}D), 0D))")
+
+
+# --- codebooks ---------------------------------------------------------------
+
+def read_books(index_dir: str) -> dict | None:
+    """The index's sidecar — ``dim``, ``coarse``, ``books``, the row
+    ``schema`` and ``trained_on`` (the training sample's size) — or None
+    when the index has none. JSON round-trips IEEE doubles exactly, so
+    readers see the floats the writers encoded with."""
+    try:
+        with open(os.path.join(index_dir, BOOKS)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def _books(rows, id_cols, side: dict | None) -> dict:
+    """The books to encode ``rows`` with: the published ``side``, unless
+    ``rows`` yield a larger training sample than it was trained on — then
+    new books trained on that sample.
+
+    The sample is bounded and deterministic: the PQ_SAMPLE rows whose
+    md5(id) sorts lowest (≈ 1 MiB collected via TakeOrdered, no shuffle).
+    Hash order makes it a uniform pseudo-random subset of the whole input,
+    where an id-ordered prefix would train on the oldest crawl slice only.
+    Books trained on a full sample are final: no job is run for them."""
     import numpy as np
     from pyspark.sql import functions as F
 
-    from docling_rag_spark.operators import pq as PQ
-
-    sidecar = os.path.join(out_dir, "pq_books.json")
-    os.makedirs(out_dir, exist_ok=True)
-    if dim == 0 or dim % PQ.PQ_M:
-        with open(sidecar, "w") as f:
-            json.dump({"skipped": f"dim {dim} % PQ_M {PQ.PQ_M} != 0"}, f)
-        return
-    sample_key = F.md5(F.concat_ws(
-        "|", *[F.col(c).cast("string") for c in id_cols]))
-    rows = (base.orderBy(sample_key, *id_cols).limit(PQ.PQ_SAMPLE)
-            .select("embedding").collect())
-    sample = np.array([r[0] for r in rows], dtype=np.float64)
-    coarse = PQ.train_coarse(sample, PQ.PQ_COARSE_CELLS)
-    books = PQ.train_codebooks(sample)
-    sd = dim // PQ.PQ_M
-    codes = F.array(*[
-        argmin_l2_col(F.slice(F.col("embedding"), m * sd + 1, sd),
-                      books[m]).cast("tinyint")
-        for m in range(PQ.PQ_M)])
-    (base.select(*id_cols,
-                 argmin_l2_col(F.col("embedding"), coarse).alias("cell"),
-                 codes.alias("codes"))
-     .write.partitionBy(*INDEX_TABLES["pq"]).mode("overwrite")
-     .parquet(os.path.join(out_dir, "pq")))
-    with open(sidecar, "w") as f:
-        json.dump({"dim": dim, "coarse": coarse, "books": books}, f)
+    if side is not None and side.get("trained_on", 0) >= PQ.PQ_SAMPLE:
+        return side
+    key = F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in id_cols]))
+    sample = np.array([r[0] for r in rows.orderBy(key, *id_cols)
+                       .limit(PQ.PQ_SAMPLE).select("embedding").collect()],
+                      dtype=np.float64)
+    if side is not None and len(sample) <= side.get("trained_on", 0):
+        return side
+    new = {"dim": int(sample.shape[1]), "trained_on": len(sample),
+           "coarse": PQ.train_coarse(sample, PQ.PQ_COARSE_CELLS),
+           "books": PQ.train_codebooks(sample)}
+    new["schema"] = _encode(rows, new, id_cols).drop(CELL).schema.jsonValue()
+    return new
 
 
-def _write_lsh_table(spark, base, dim: int, out_dir: str) -> None:
+# --- writers -----------------------------------------------------------------
+
+def index_lock(index_dir: str, timeout: float):
+    """The lock held by every writer that swaps ``index_dir`` or its
+    tables or writes a delta of it: ``_compaction`` beside it — for a
+    warehouse's ``ann`` index the warehouse's compaction lock, which the
+    stream's compactor and the delete cascade take too."""
+    parent = os.path.dirname(os.path.abspath(index_dir))
+    return wh.commit_lock(os.path.join(parent, "_compaction"),
+                          timeout=timeout, stale_sec=3600.0)
+
+
+def _write_rows(rows, side: dict, id_cols, dest: str) -> None:
+    (_encode(rows, side, id_cols).write.partitionBy(CELL)
+     .mode("overwrite").parquet(dest))
+
+
+def build_ann_index(spark, embeddings_df, out_dir: str,
+                    id_cols: tuple[str, ...] = ("vec_id", "label"),
+                    delta_dir: str | None = None) -> None:
+    """(Re)build the index at ``out_dir`` from ``embeddings_df``, carrying
+    ``id_cols`` alongside the vectors (the serving tier indexes by natural
+    key (url, chunk_id); the oracle tables by (vec_id, label)).
+
+    Encodes with the index's published books, or — when it has none, or
+    this input yields a larger training sample than they were trained on
+    (a corpus grown past a small first build) — with books retrained on
+    this input. Writes ``pq/`` and the sidecar into a sibling temp dir in
+    one map-only job (partitionBy splits files per task; at 10^9+ vectors
+    add ``.repartition(n, 'cell')`` first) and swaps that dir into place
+    under the index lock: a concurrent search sees the old index or the
+    new one, never a half-written ``pq/``, and whatever else the old dir
+    held is gone. When the books change, every delta under ``delta_dir``
+    is re-encoded with the new ones under the same lock (a delta's rows
+    need not be in ``embeddings_df``: the stream may have written it after
+    the input was listed)."""
     from pyspark.sql import functions as F
 
-    from docling_rag_spark.queries.vectors import _bucket
-    (base.withColumn("bucket",
-                     _bucket(F.col("embedding"), plane_matrix(dim)))
-     .write.partitionBy(*INDEX_TABLES["lsh"]).mode("overwrite")
-     .parquet(os.path.join(out_dir, "lsh")))
+    rows = embeddings_df.select(*id_cols, "embedding")
+    first = rows.select(F.size("embedding").alias("d")).first()
+    if first is None:
+        raise ValueError(f"no embeddings to index into {out_dir}")
+    _recover(out_dir)  # a half-done swap must not read as "no books"
+    side = read_books(out_dir)
+    if side is not None and side["dim"] != first["d"]:
+        raise ValueError(f"{out_dir} holds books for dim {side['dim']}, "
+                         f"rows have dim {first['d']}; remove it to retrain")
+    side = _books(rows, id_cols, side)
+    head, name = os.path.split(os.path.abspath(out_dir))
+    tmp = os.path.join(head, f".{name}.build-{uuid.uuid4().hex[:12]}")
+    try:
+        _write_rows(rows, side, id_cols, os.path.join(tmp, "pq"))
+        with open(os.path.join(tmp, BOOKS), "w") as f:
+            json.dump(side, f)
+        with index_lock(out_dir, timeout=60.0):
+            if read_books(tmp) != read_books(out_dir) and delta_dir:
+                for d in wh.batch_dirs(delta_dir):
+                    _reencode(spark, os.path.join(delta_dir, d), side,
+                              id_cols)
+            wh.swap_dir(tmp, out_dir)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _reencode(spark, batch: str, side: dict, id_cols) -> None:
+    """Rewrite one delta batch dir with ``side``'s books (dot-named temp
+    dir: readers of the delta root skip it)."""
+    head, name = os.path.split(batch)
+    tmp = os.path.join(head, f".{name}.reencode")
+    shutil.rmtree(tmp, ignore_errors=True)
+    _write_rows(spark.read.parquet(batch), side, id_cols, tmp)
+    wh.swap_dir(tmp, batch)
+
+
+def write_delta(rows, index_dir: str, dest: str,
+                id_cols: tuple[str, ...] = ("url", "chunk_id")) -> bool:
+    """Write ``rows`` as one delta of ``index_dir`` — ``dest/cell=<c>/``
+    in the index's row format, encoded with its books. Holds the index
+    lock, so a rebuild that retrains the books re-encodes every delta it
+    can see. False, writing nothing, when the index has no books yet: the
+    first build trains them (the stream's catch-up build,
+    streaming/embed_index.py)."""
+    with index_lock(index_dir, timeout=600.0):
+        side = read_books(index_dir)
+        if side is None:
+            return False
+        _write_rows(rows, side, id_cols, dest)
+    return True
+
+
+# --- search ------------------------------------------------------------------
+
+def probe_cells(q_vec, coarse, n: int = _PQ_PROBES) -> list[int]:
+    """The ``n`` cells nearest the query, ranked by (squared L2, cell) —
+    the metric and tie rule the cell assignment uses, so the first probe
+    is the query's own cell."""
+    import numpy as np
+
+    d = PQ._fold_sq_dists(np.asarray([q_vec], dtype=np.float64),
+                          np.asarray(coarse, dtype=np.float64))[0]
+    return sorted(range(len(coarse)), key=lambda c: (d[c], c))[:n]
+
+
+def _recover(index_dir: str) -> None:
+    """Restore a swap of the index dir or its table that a crashed writer
+    left half-done. Waits briefly for the index lock, so it never races a
+    live swap; a caller that cannot get it sees what is visible. An index
+    whose ``pq/`` is in place has nothing to restore and takes no lock."""
+    if os.path.isdir(os.path.join(index_dir, "pq")):
+        return
+    try:
+        with index_lock(index_dir, timeout=2.0):
+            wh.recover_swap(index_dir)
+            wh.recover_swap(os.path.join(index_dir, "pq"))
+    except TimeoutError:
+        pass
+
+
+def open_index(index_dir: str) -> dict:
+    """The index's sidecar, read after crash recovery."""
+    _recover(index_dir)
+    side = read_books(index_dir)
+    if side is None:
+        raise FileNotFoundError(
+            f"no ANN index at {index_dir}; run scripts/run_embed.py "
+            "--ann-index first")
+    return side
+
+
+def has_rows(index_dir: str, delta_dir: str | None = None) -> bool:
+    """Whether the base table or a delta batch exists. Books alone hold
+    nothing to search: a delete cascade removes a table none of whose rows
+    survive, and the books stay."""
+    return (os.path.isdir(os.path.join(index_dir, "pq"))
+            or (delta_dir is not None and bool(wh.batch_dirs(delta_dir))))
+
+
+def cell_rows(spark, index_dir: str, side: dict, cells,
+              delta_dir: str | None = None):
+    """The rows of ``cells`` in the base table and every delta batch, read
+    with the sidecar's declared schema (no footer job), each scan
+    partition-pruned to ``cells``. Base and deltas are two scans: Spark's
+    partition discovery needs one root per scan, and ``pq/`` and
+    ``<delta>/batch=<id>/`` are two."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    if not has_rows(index_dir, delta_dir):
+        raise FileNotFoundError(f"ANN index {index_dir} has no rows")
+    read = spark.read.schema(
+        T.StructType.fromJson(side["schema"]).add(CELL, T.IntegerType()))
+    parts = []
+    if os.path.isdir(os.path.join(index_dir, "pq")):
+        parts.append(read.parquet(os.path.join(index_dir, "pq")))
+    if delta_dir is not None and wh.batch_dirs(delta_dir):
+        parts.append(read.parquet(delta_dir).drop("batch"))
+    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    return rows.filter(F.col(CELL).isin([int(c) for c in cells]))
+
+
+def probe(spark, index_dir: str, q_vec, id_cols, k: int,
+          delta_dir: str | None = None, where=None):
+    """Approximate top-``k`` of the index (plus the deltas under
+    ``delta_dir``) for ``q_vec``: the probe cells' rows, filtered by
+    ``where`` before ranking, ranked by ADC; the top ``_PQ_RERANK`` by
+    (ADC desc, ids) are reranked by exact cosine. Returns ``(id cols,
+    score, pq_score_e6)`` ordered by (floor(score · 1e6) desc, ids) —
+    ``score`` is the exact cosine, ranked at the oracles' micro-unit
+    resolution so near-ties resolve by id. Map-only: scan → project →
+    TakeOrdered(R) → project → TakeOrdered(k).
+
+    A micro-batch replayed after compaction folded it exists twice, in
+    ``pq/`` and as a delta, and no row exists more often. So with deltas
+    present the top 2R rows, deduplicated by full row, hold the same top
+    R the compacted index ranks first."""
+    from pyspark.sql import functions as F
+
+    side = open_index(index_dir)
+    rows = cell_rows(spark, index_dir, side,
+                     probe_cells(q_vec, side["coarse"]), delta_dir)
+    if where is not None:
+        rows = rows.filter(where)
+    cand = rows.select(*id_cols, "embedding",
+                       F.expr(_adc_sql(q_vec, side["books"]))
+                       .alias("pq_score_e6"))
+    order = [F.desc("pq_score_e6"), *id_cols]
+    if delta_dir is not None and wh.batch_dirs(delta_dir):
+        cand = cand.orderBy(*order).limit(2 * _PQ_RERANK).dropDuplicates()
+    cand = cand.orderBy(*order).limit(_PQ_RERANK)
+    return (cand.select(*id_cols, F.expr(_cosine_sql(q_vec)).alias("score"),
+                        "pq_score_e6")
+            .orderBy(F.desc(F.floor(F.col("score") * 1000000.0)), *id_cols)
+            .limit(k))
 
 
 def ensure_index(spark, sf_dir: str) -> str:
@@ -226,19 +401,18 @@ def ensure_index(spark, sf_dir: str) -> str:
     # would otherwise leave another multi-hundred-MB dead index behind)
     path_key = hashlib.md5(os.path.abspath(src).encode()).hexdigest()[:12]
     state_key = hashlib.md5(
-        f"{st.st_mtime_ns}|{st.st_size}|v5".encode()).hexdigest()[:12]
+        f"{st.st_mtime_ns}|{st.st_size}|v6".encode()).hexdigest()[:12]
     key = f"{path_key}-{state_key}"
     root = os.environ.get("SPARK_GRAFT_ANN_DIR",
                           os.path.join(tempfile.gettempdir(),
                                        "spark_graft_ann"))
     final = os.path.join(root, key)
     if (all(os.path.isdir(os.path.join(final, t)) for t in INDEX_TABLES)
-            and os.path.isfile(os.path.join(final, "pq_books.json"))):
+            and os.path.isfile(os.path.join(final, BOOKS))):
         return final
     os.makedirs(root, exist_ok=True)
     tmp = os.path.join(root, f".build-{uuid.uuid4().hex[:12]}")
     build_ann_index(spark, spark.read.parquet(src), tmp)
-    import shutil
     try:
         os.rename(tmp, final)
     except OSError:  # lost the race: another builder finished first
@@ -251,7 +425,7 @@ def ensure_index(spark, sf_dir: str) -> str:
         stale = (d.startswith(f"{path_key}-") and d != os.path.basename(final))
         # crashed builders leave full .build-* trees behind; a LIVE build
         # is writing constantly, so an old mtime marks it abandoned
-        orphan = d.startswith(".build-")
+        orphan = ".build-" in d
         if stale or orphan:
             stale_path = os.path.join(root, d)
             try:

@@ -47,7 +47,7 @@ from docling_rag_spark.operators.pipeline import (
     extract_documents,
     extracted_table,
 )
-from docling_rag_spark.plans.ann_index import INDEX_TABLES
+from docling_rag_spark.plans.ann_index import CELL, INDEX_TABLES
 from docling_rag_spark.session import job_description
 
 
@@ -614,8 +614,8 @@ def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
                      staging: str) -> dict:
     """Cascade a url delete into the materialized ANN index (and streaming
     deltas): a stale index would keep ranking chunks of deleted documents
-    in mode=auto/ann searches. Base tables get a whole-table rewrite (a
-    url predicate does not align with the bucket/cell partitioning — the
+    in mode=auto/ann searches. The base table gets a whole-table rewrite
+    (a url predicate does not align with the cell partitioning — the
     same shape Iceberg's DELETE takes on a non-partition predicate);
     streaming deltas are rewritten per snapshotted ``batch=<id>`` dir so a
     concurrently running stream's NEW batches are never touched. The whole
@@ -632,7 +632,7 @@ def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
         targets = [(os.path.join(ann_root, sub), os.path.join(ann_root, sub),
                     part_cols, f"ann/{sub}")
                    for sub, part_cols in INDEX_TABLES.items()]
-        targets += [(os.path.join(delta_root, d), delta_root, ["bucket"],
+        targets += [(os.path.join(delta_root, d), delta_root, [CELL],
                      f"ann_delta/{d}") for d in wh.batch_dirs(delta_root)]
         for target, base_path, part_cols, label in targets:
             n = _drop_urls(spark, target, base_path, part_cols, urls_df,

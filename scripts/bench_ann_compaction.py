@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """ANN compaction cost/benefit evidence (VERDICT r3 task 7).
 
-Builds the incremental-index layout at sf1 scale — base LSH index (30k
-vectors) + 20 streaming-shaped delta batches (1k vectors each) — then
-measures the multiprobe query path BEFORE and AFTER ``compact_ann_index``:
-wall per query, files opened by the pruned scan, and recall@10 vs the
-exact brute force (which must be IDENTICAL pre/post — compaction is a
-layout change, not an answer change).
+Builds the incremental-index layout at sf1 scale — base IVF-PQ index (12k
+vectors) + 16 streaming-shaped cell-partitioned delta batches (500 vectors
+each, encoded with the base's codebooks) — then measures the served probe
+(``plans.ann_index.probe``) BEFORE and AFTER ``compact_ann_index``: wall
+per query, files opened by the pruned scans, and recall@10 vs the exact
+brute force (which must be IDENTICAL pre/post — compaction is a layout
+change, not an answer change).
 
 Prints ONE JSON line. Usage:
     python scripts/bench_ann_compaction.py [--sf-dir .benchdata/sf1]
@@ -41,12 +42,9 @@ def main() -> int:
     import numpy as np
     from pyspark.sql import functions as F
 
-    from docling_rag_spark.plans.ann_index import (
-        interpreted_eval, multiprobe_buckets, plane_matrix, py_bucket)
-    from docling_rag_spark.queries.vectors import _bucket
+    from docling_rag_spark.plans import ann_index as AI
     from docling_rag_spark.session import get_spark
-    from docling_rag_spark.streaming.embed_index import (
-        ann_probe_candidates, compact_ann_index)
+    from docling_rag_spark.streaming.embed_index import compact_ann_index
 
     from pyspark.sql import Window
 
@@ -64,52 +62,35 @@ def main() -> int:
     n_total = N_BASE + N_DELTAS * DELTA_ROWS
 
     out = tempfile.mkdtemp(prefix="ann-compact-bench-")
+    ann, delta = os.path.join(out, "ann"), os.path.join(out, "ann_delta")
+    id_cols = ("vec_id",)
     try:
-        def write_slice(pred, dest):
-            with interpreted_eval(spark):
-                (emb.filter(pred).drop("rid")
-                 .withColumn("bucket", _bucket(F.col("embedding"),
-                                               plane_matrix(dim)))
-                 .write.partitionBy("bucket").mode("overwrite")
-                 .parquet(dest))
-
-        write_slice(F.col("rid") < N_BASE,
-                    os.path.join(out, "ann", "lsh"))
+        AI.build_ann_index(spark, emb.filter(F.col("rid") < N_BASE), ann,
+                           id_cols=id_cols)
         for b in range(N_DELTAS):
             lo = N_BASE + b * DELTA_ROWS
-            write_slice((F.col("rid") >= lo)
-                        & (F.col("rid") < lo + DELTA_ROWS),
-                        os.path.join(out, "ann_delta", f"batch={b}"))
+            AI.write_delta(emb.filter((F.col("rid") >= lo)
+                                      & (F.col("rid") < lo + DELTA_ROWS)),
+                           ann, os.path.join(delta, f"batch={b}"),
+                           id_cols=id_cols)
 
         qvecs = {int(r["vec_id"]): [float(x) for x in r["embedding"]]
                  for r in emb.filter(F.col("rid") < N_QUERIES).collect()}
+        side = AI.read_books(ann)
 
         def run_queries():
             walls, files, hits, csets = [], [], {}, {}
             for qid in sorted(qvecs):
                 q = qvecs[qid]
                 t0 = time.time()
-                probes = multiprobe_buckets(py_bucket(q))
-                cand = ann_probe_candidates(spark, out, probes)
-                pdf = cand.toPandas()
-                vids = pdf["vec_id"].to_numpy()
-                M = np.vstack(pdf["embedding"].to_numpy())
-                # canonicalize: sort rows by vec_id and use a
-                # single-threaded per-row einsum — threaded BLAS gemv
-                # partitions the dot by matrix shape/row order, which
-                # perturbs ulps and flips exact-duplicate ties between
-                # layouts; scoring must depend only on the candidate SET
-                o = np.argsort(vids)
-                vids, M = vids[o], M[o].astype(np.float64)
-                qv = np.asarray(q)
-                cos = (np.einsum("ij,j->i", M, qv)
-                       / (np.sqrt(np.einsum("ij,ij->i", M, M))
-                          * np.linalg.norm(qv)))
-                top = vids[np.lexsort((vids, -cos))][:TOP_K]
+                top = AI.probe(spark, ann, q, id_cols, TOP_K, delta_dir=delta)
+                hits[qid] = [int(r["vec_id"]) for r in top.collect()]
                 walls.append(time.time() - t0)
+                cand = AI.cell_rows(spark, ann, side,
+                                    AI.probe_cells(q, side["coarse"]), delta)
                 files.append(len(cand.inputFiles()))
-                hits[qid] = [int(v) for v in top]
-                csets[qid] = set(int(v) for v in vids)
+                csets[qid] = {int(r["vec_id"])
+                              for r in cand.select("vec_id").collect()}
             return walls, files, hits, csets
 
         run_queries()  # warm-up (codegen, partition discovery)

@@ -25,9 +25,9 @@ def main() -> int:
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--ann-index", action="store_true",
-                    help="also materialize <warehouse>/ann/{lsh,pq} "
-                         "partitioned by LSH bucket / IVF-PQ cell so "
-                         "searches read only their probe partitions")
+                    help="also materialize the IVF-PQ index "
+                         "<warehouse>/ann/pq, partitioned by coarse cell "
+                         "so searches read only their probe cells")
     ap.add_argument("--cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
@@ -53,7 +53,8 @@ def main() -> int:
         from docling_rag_spark.plans.ann_index import build_ann_index
         emb = spark.read.parquet(os.path.join(args.warehouse, "embeddings"))
         build_ann_index(spark, emb, os.path.join(args.warehouse, "ann"),
-                        id_cols=("url", "chunk_id"))
+                        id_cols=("url", "chunk_id"),
+                        delta_dir=os.path.join(args.warehouse, "ann_delta"))
         out["ann_index"] = os.path.join(args.warehouse, "ann")
     dt = time.time() - t0
     out.update(elapsed_sec=round(dt, 2), chunks_per_sec=round(n / dt, 2))

@@ -14,9 +14,9 @@ Usage:
         [--mode auto|exact|ann]
 
 ``--mode ann`` requires the materialized index
-(``scripts/run_embed.py --ann-index``) and scans only the 9 multiprobe
-bucket partitions; ``exact`` is the full TakeOrderedAndProject scan;
-``auto`` (default) uses the index when present.
+(``scripts/run_embed.py --ann-index``) and scans only 4 of its 16 IVF-PQ
+cells; ``exact`` is the full TakeOrderedAndProject scan;
+``auto`` (default) uses the index when it holds rows, exact otherwise.
 """
 
 from __future__ import annotations

@@ -63,9 +63,9 @@ def test_delete_urls_cascade(spark, tmp_path):
 
 
 def test_delete_cascades_into_ann_index(spark, tmp_path):
-    """A deleted url must vanish from the materialized ANN index and the
-    streaming deltas — a stale index would keep ranking its chunks in
-    mode=ann searches (review r3 finding)."""
+    """A deleted url must vanish from the materialized ANN index — its one
+    IVF-PQ table — while the codebooks stay: a stale index would keep
+    ranking its chunks in mode=ann searches."""
     from pyspark.sql import functions as F
 
     from docling_rag_spark.operators.embed import embed_chunks
@@ -84,12 +84,12 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
     build_ann_index(spark, spark.read.parquet(os.path.join(out, "embeddings")),
                     os.path.join(out, "ann"), id_cols=("url", "chunk_id"))
     assert sorted(os.listdir(os.path.join(out, "ann"))) == \
-        sorted([*INDEX_TABLES, "pq_books.json"])
+        ["pq", "pq_books.json"]
 
     victims = sorted(_chunk_urls(spark, out))[:2]
     report = delete_urls(spark, out, victims, num_buckets=8)
-    # every index table cascades — a stale one would keep ranking deleted
-    # chunks (pq: ADC-ranking them) even after the others forget them
+    assert sorted(os.listdir(os.path.join(out, "ann"))) == \
+        ["pq", "pq_books.json"]
     for sub in INDEX_TABLES:
         assert os.path.isdir(os.path.join(out, "ann", sub)), sub
         assert report["ann_rows_deleted"].get(f"ann/{sub}", 0) > 0, sub
@@ -97,6 +97,38 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
                     spark.read.parquet(os.path.join(out, "ann", sub))
                     .select("url").distinct().collect()}
         assert not (idx_urls & set(victims)), sub
+
+
+def test_auto_search_runs_exact_when_the_index_has_no_rows(spark, tmp_path):
+    """Deleting every url the index holds leaves its books but no index
+    rows; a mode=auto search must then run exact over the chunks that
+    remain (here: one url the index never covered) instead of failing on
+    the empty index."""
+    from pyspark.sql import functions as F
+
+    from docling_rag_spark.api.service import search_warehouse
+    from docling_rag_spark.operators.embed import embed_chunks
+    from docling_rag_spark.plans.ann_index import BOOKS, build_ann_index
+    from docling_rag_spark.plans.job import bucket_of
+
+    pages = str(tmp_path / "pages.parquet")
+    out = str(tmp_path / "wh")
+    emb_dir = os.path.join(out, "embeddings")
+    write_pages_parquet(pages, 40)
+    run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
+    (embed_chunks(spark.read.parquet(os.path.join(out, "chunks")))
+     .withColumn("bucket", bucket_of(F.col("url"), 8))
+     .write.partitionBy("bucket").mode("overwrite").parquet(emb_dir))
+    *indexed, kept = sorted(_chunk_urls(spark, out))
+    build_ann_index(spark, spark.read.parquet(emb_dir)
+                    .filter(F.col("url") != kept),
+                    os.path.join(out, "ann"), id_cols=("url", "chunk_id"))
+
+    delete_urls(spark, out, indexed, num_buckets=8)
+    assert os.listdir(os.path.join(out, "ann")) == [BOOKS]
+    hits = search_warehouse(spark, out, "data table", top_k=3, log=False,
+                            mode="auto")
+    assert hits and {h["url"] for h in hits} == {kept}
 
 
 def test_delete_is_visible_to_extraction_conflict_check(spark, tmp_path):

@@ -175,11 +175,12 @@ def served_wh(spark, tmp_path_factory):
     return wh
 
 
-def test_ann_serving_path_matches_exact_on_probed_buckets(spark, served_wh):
+def test_ann_serving_path_matches_exact_on_probed_cells(spark, served_wh):
     """search_warehouse(mode='ann') over the materialized warehouse index:
-    pruned to the 9 multiprobe partitions, exact cosine within them; the
-    top hit must agree with exact search whenever the exact winner lives
-    in a probed bucket (on this tiny corpus it does)."""
+    pruned to the query's 4 probe cells, ADC-ranked, exact cosine on the
+    survivors; the top hit must agree with exact search whenever the
+    exact winner lives in a probed cell (on this tiny corpus it does), and
+    every hit's score is its exact cosine."""
     from docling_rag_spark.api import service
     from docling_rag_spark.plans import ann_index as AI
 
@@ -191,17 +192,23 @@ def test_ann_serving_path_matches_exact_on_probed_buckets(spark, served_wh):
                                    mode="ann")
     assert exact and ann
     q_vec = [float(v) for v in embed_texts([q])[0]]
-    probes = set(AI.multiprobe_buckets(AI.py_bucket(q_vec)))
-    idx = {(r["url"], r["chunk_id"]): r["bucket"]
-           for r in spark.read.parquet(os.path.join(wh, "ann", "lsh"))
-           .select("url", "chunk_id", "bucket").collect()}
+    side = AI.read_books(os.path.join(wh, "ann"))
+    probes = set(AI.probe_cells(q_vec, side["coarse"]))
+    idx = {(r["url"], r["chunk_id"]): (r["cell"], r["embedding"])
+           for r in spark.read.parquet(os.path.join(wh, "ann", "pq"))
+           .select("url", "chunk_id", "cell", "embedding").collect()}
     top = exact[0]
-    if idx[(top["url"], top["chunk_id"])] in probes:
+    if idx[(top["url"], top["chunk_id"])][0] in probes:
         assert (ann[0]["url"], ann[0]["chunk_id"]) == \
                (top["url"], top["chunk_id"])
-    # every ann hit must come from a probed bucket
+    # every ann hit comes from a probed cell and carries its exact cosine
+    qv = np.asarray(q_vec, np.float64)
     for r in ann:
-        assert idx[(r["url"], r["chunk_id"])] in probes
+        cell, emb = idx[(r["url"], r["chunk_id"])]
+        assert cell in probes
+        e = np.asarray(emb, np.float64)
+        assert abs(r["score"] - e @ qv / np.linalg.norm(e)
+                   / np.linalg.norm(qv)) <= 1e-4
     # mode='ann' on a warehouse WITHOUT an index is an explicit error
     import pytest as _pytest
     os.rename(os.path.join(wh, "ann"), os.path.join(wh, "ann_bak"))
@@ -230,10 +237,11 @@ def _spark_jobs(spark, fn):
 def test_search_launches_at_most_four_spark_jobs(spark, served_wh,
                                                 monkeypatch):
     """A search is one top-k collect plus one point lookup per decorate
-    table (and, on the ANN path, the index scan's footer read) — not a
-    multi-wave broadcast-join plan. Its collects run under the
-    search:topk / search:decorate job descriptions, and the caller's own
-    description is back in place afterwards."""
+    table — not a multi-wave broadcast-join plan. The ANN path reads its
+    index with the sidecar's declared schema, so it launches no footer
+    job either: at most 3. Its collects run under the search:topk /
+    search:decorate job descriptions, and the caller's own description is
+    back in place afterwards."""
     from docling_rag_spark.api import service
 
     sc = spark.sparkContext
@@ -242,6 +250,8 @@ def test_search_launches_at_most_four_spark_jobs(spark, served_wh,
             spark, served_wh, "star schema tables", log=False, mode=mode))
         assert hits, mode
         assert n <= 4, (mode, n)
+        if mode == "ann":
+            assert n <= 3, (mode, n)
 
     DataFrame = type(spark.range(1))
     real_collect = DataFrame.collect

@@ -137,16 +137,14 @@ def test_simhash_pairs_no_pair_volume_distinct(spark):
 
 def test_ann_index_partition_pruning(spark):
     """The materialized ANN index must be read partition-pruned: the
-    multiprobe scan touches <=9 of 256 LSH bucket dirs (IVF-PQ's cell
-    pruning is audited in tests/test_pq.py). Checked both physically
-    (inputFiles shrinks to probe dirs) and in the plan (PartitionFilters
-    on the partition key)."""
-    import os
+    IVF-PQ probe scan touches <=4 of 16 cell dirs. Checked both
+    physically (the executed scan's selected partitions) and in the plan
+    (PartitionFilters on the partition key)."""
     import re as _re
 
-    cases = (("vec_lsh_multiprobe", "bucket", 9, 256),)
+    cases = (("vec_ivf_pq_topk", "cell", 4, 16),)
     for name, key, max_parts, total_parts in cases:
-        df = all_queries()[name](spark, SF_DIR)
+        df = _builders()[name](spark, SF_DIR)
         qe = df._jdf.queryExecution()
         # physical: the executed scan's selected partition count
         plan = qe.executedPlan()

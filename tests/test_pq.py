@@ -7,6 +7,8 @@ first-argmin numerics of the Spark expressions and must reproduce the
 result rows bit-for-bit, twice (determinism).
 """
 
+import os
+
 import numpy as np
 import pyarrow.parquet as pq
 import pytest
@@ -32,9 +34,9 @@ def _py_floor_cos_e6(x, q):
     """floor(dot/(norm_x*norm_q)*1e6) with the exact op order of the
     Spark expression in queries/vectors.py."""
     import math
-    dot = AI.py_dot(x, q)
-    nx = math.sqrt(AI.py_dot(x, x))
-    nq = math.sqrt(AI.py_dot(q, q))
+    dot = PQ._py_dot(x, q)
+    nx = math.sqrt(PQ._py_dot(x, x))
+    nq = math.sqrt(PQ._py_dot(q, q))
     return int(math.floor(dot / (nx * nq) * 1000000.0))
 
 
@@ -43,12 +45,13 @@ def reference_topk(spark):
     import math
     vec_ids, labels, X = _table()
     q_emb = AI.query_vector(SF_DIR, QID)
-    coarse, books = V._pq_books(spark, SF_DIR)  # identical floats
+    side = AI.read_books(AI.ensure_index(spark, SF_DIR))  # identical floats
+    coarse, books = side["coarse"], side["books"]
     dot_lut, norm2_lut = PQ.adc_tables(q_emb, books)
     q_cell_d = PQ._fold_sq_dists(np.asarray([q_emb]),
                                  np.asarray(coarse))[0]
     probes = set(sorted(range(len(coarse)),
-                        key=lambda c: (q_cell_d[c], c))[:V._PQ_PROBES])
+                        key=lambda c: (q_cell_d[c], c))[:AI._PQ_PROBES])
     cells = PQ.coarse_assign(X, coarse)
     keep = np.array([c in probes and v != QID
                      for v, c in zip(vec_ids, cells)])
@@ -58,7 +61,7 @@ def reference_topk(spark):
     pq_e6 = np.array([int(math.floor(a * 1000000.0)) for a in approx])
     order = sorted(range(len(vec_ids)), key=lambda i: (-pq_e6[i],
                                                        vec_ids[i]))
-    cand = order[:V._PQ_RERANK]
+    cand = order[:AI._PQ_RERANK]
     scored = [(int(vec_ids[i]), int(labels[i]),
                _py_floor_cos_e6(X[i], q_emb), int(pq_e6[i])) for i in cand]
     scored.sort(key=lambda r: (-r[2], r[0]))
@@ -87,8 +90,8 @@ def test_pq_recall_floor_vs_exact(spark, spark_rows):
     """recall@10 vs the exact brute-force top-10 on the NEAR-UNIFORM
     testdata (max pairwise cosine ~0.5 — neighbors barely above random
     background, the worst case for any pruned ANN; same caveat as
-    tests/test_vectors_ops.py, where the multiprobe LSH path pins
-    recall 0-2 of 10 on this corpus). Measured 0.8 at 4-of-16-cell
+    tests/test_vectors_ops.py, where the served probe pins its
+    per-query recall on this corpus). Measured 0.8 at 4-of-16-cell
     pruning; floor 0.7. The clustered-corpus test below pins the
     structure-present case at ≥0.9."""
     exact = {r.vec_id for r in V.vec_topk_cosine(spark, SF_DIR).collect()}
@@ -133,25 +136,22 @@ def test_pq_adc_orders_before_exact_rerank(spark_rows):
 
 
 def test_pq_plan_is_maponly_takeordered(spark):
-    """No shuffle anywhere: pruned codes scan → project(ADC via LUTs) →
-    TakeOrdered(R) → BroadcastHashJoin (raw-vector fetch for rerank) →
-    TakeOrdered(k). A hash/range repartition here would mean the design
-    regressed to a shuffle; the only allowed Exchange is the broadcast
-    of the 128-row candidate set."""
+    """No shuffle anywhere: pruned cells scan → project(ADC via LUTs) →
+    TakeOrdered(R) → project(exact cosine) → TakeOrdered(k). A hash/range
+    repartition here would mean the design regressed to a shuffle."""
     plan = V.vec_ivf_pq_topk(spark, SF_DIR)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
     assert "hashpartitioning" not in plan, plan
     assert "rangepartitioning" not in plan, plan
 
 
 def test_pq_scan_is_partition_pruned_codes_only(spark):
     """The candidate-ranking scan must read only the probe cells'
-    partitions of the CODES table: the executed codes scan selects
-    exactly _PQ_PROBES of PQ_COARSE_CELLS partitions (Catalyst recorded
-    a PartitionFilter on cell), and its read schema carries no embedding
-    column — raw floats enter only via the rerank join's scan."""
+    partitions of the index: the executed scan selects exactly _PQ_PROBES
+    of PQ_COARSE_CELLS partitions (Catalyst recorded a PartitionFilter on
+    cell), and it is the plan's only parquet scan — codes and the rerank's
+    raw vectors come from the same pruned cells."""
     import re
 
     df = V.vec_ivf_pq_topk(spark, SF_DIR)
@@ -162,11 +162,10 @@ def test_pq_scan_is_partition_pruned_codes_only(spark):
     leaves = plan.collectLeaves()
     scans = [leaves.apply(i) for i in range(leaves.length())
              if "parquet" in leaves.apply(i).nodeName().lower()]
-    codes_scans = [s for s in scans if "/pq" in s.toString()]
-    assert codes_scans, "codes table not in the scan at all"
-    n_sel = codes_scans[0].selectedPartitions().partitionCount()
-    assert n_sel == V._PQ_PROBES, n_sel
-    assert "embedding" not in codes_scans[0].schema().simpleString()
+    assert len(scans) == 1, [s.toString() for s in scans]
+    assert "/pq" in scans[0].toString(), "index not in the scan at all"
+    n_sel = scans[0].selectedPartitions().partitionCount()
+    assert n_sel == AI._PQ_PROBES, n_sel
     fplan = qe.explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode
         .fromString("formatted"))
@@ -185,3 +184,34 @@ def test_encode_first_argmin_tie_rule():
     books = [[[0.0] * 8, [0.0] * 8] + [[9.0] * 8] * 14 for _ in range(8)]
     codes = PQ.encode(np.zeros((3, 64)), books)
     assert codes.max() == 0  # first of the two identical zero centroids
+
+
+def test_rebuild_swaps_in_exactly_the_pq_index(spark, tmp_path):
+    """A (re)build replaces the whole index dir: the retired ``lsh/`` and
+    pre-IVF-PQ ``ivf/`` tables an older build left there are gone, and no
+    temp dir survives beside it. A rebuild over a larger input retrains
+    the books on its larger sample; one over no more rows than they were
+    trained on keeps them."""
+    ann = tmp_path / "ann"
+    for stale in ("lsh/bucket=3", "ivf/cell=1"):
+        (ann / stale).mkdir(parents=True)
+        (ann / stale / "part-0.parquet").write_bytes(b"stale")
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
+    half = emb.filter("vec_id % 2 = 0")
+    AI.build_ann_index(spark, half, str(ann))
+    assert sorted(p.name for p in ann.iterdir()) == ["pq", AI.BOOKS]
+    assert AI.read_books(str(ann))["trained_on"] == half.count()
+
+    AI.build_ann_index(spark, emb, str(ann))
+    books = AI.read_books(str(ann))
+    assert books["trained_on"] == emb.count() > half.count()
+    fresh = AI.read_books(AI.ensure_index(spark, sf))
+    assert [books[k] for k in ("coarse", "books")] == \
+        [fresh[k] for k in ("coarse", "books")]
+
+    AI.build_ann_index(spark, half, str(ann))
+    assert AI.read_books(str(ann)) == books
+    assert sorted(p.name for p in ann.iterdir()) == ["pq", AI.BOOKS]
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["_compaction",
+                                                          "ann"]

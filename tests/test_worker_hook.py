@@ -3,9 +3,10 @@
 pyspark calls ``importlib.invalidate_caches()`` before every Python task,
 which makes every cached ``zipimporter`` re-read its archive directory. The
 hook freezes the importers of the archives under ``$SPARK_HOME/python/lib``
-only. These tests pin that imports keep working afterwards: a pyspark
-submodule nothing imported yet, and a ``--py-files`` archive shipped after
-the first task, both still import in a later task.
+and of the ``$SPARK_HOME/jars/spark-core_*.jar`` only. These tests pin that
+imports keep working afterwards: a pyspark submodule nothing imported yet,
+and a ``--py-files`` archive shipped after the first task, both still import
+in a later task.
 """
 
 from __future__ import annotations
@@ -22,6 +23,8 @@ import pytest
 import docling_rag_spark as pkg
 
 LIB = os.path.join(os.environ.get("SPARK_HOME", ""), "python", "lib")
+JARS = os.path.realpath(os.path.join(os.environ.get("SPARK_HOME", ""),
+                                     "jars"))
 
 
 def _zip(path: str, members: dict[str, str]) -> str:
@@ -42,8 +45,12 @@ def test_freezes_only_archives_under_spark_python_lib(tmp_path, monkeypatch):
                     {"user_mod.py": ""})
     near_zip = _zip(str(home / "python" / "lib" / "sub" / "other.zip"),
                     {"other_mod.py": ""})
+    core_jar = _zip(str(home / "jars" / "spark-core_2.13-9.9.9.jar"),
+                    {"core_mod.py": ""})
+    other_jar = _zip(str(home / "jars" / "spark-sql_2.13-9.9.9.jar"),
+                     {"sql_mod.py": ""})
     entries = [lib_zip, os.path.join(lib_zip, "fake_pkg"), user_zip,
-               near_zip]
+               near_zip, core_jar, other_jar]
     for p in entries:
         monkeypatch.setitem(sys.path_importer_cache, p,
                             zipimport.zipimporter(p))
@@ -61,7 +68,9 @@ def test_freezes_only_archives_under_spark_python_lib(tmp_path, monkeypatch):
                      os.path.join(lib_zip, "fake_pkg"):
                          pkg._FrozenZipImporter,
                      user_zip: zipimport.zipimporter,
-                     near_zip: zipimport.zipimporter}
+                     near_zip: zipimport.zipimporter,
+                     core_jar: pkg._FrozenZipImporter,
+                     other_jar: zipimport.zipimporter}
     # the per-task call is now a no-op, and the frozen importer still
     # finds what its archive holds
     frozen = sys.path_importer_cache[lib_zip]
@@ -112,14 +121,18 @@ def test_new_pyspark_submodule_imports_after_freeze(frozen_workers):
                          if isinstance(v, p._FrozenZipImporter)})
         yield pd.DataFrame({"module": [fresh], "file": [mod.__file__],
                             "lib_kind": [zips.get(LIB, "")],
+                            "jar_kind": [zips.get(JARS, "")],
                             "frozen": [frozen]})
 
     row = _run_task(frozen_workers, probe,
                     "module string, file string, lib_kind string, "
-                    "frozen array<string>")[0]
+                    "jar_kind string, frozen array<string>")[0]
     assert row["lib_kind"] == "_FrozenZipImporter"
+    # the spark-core jar, when Spark puts it on the worker's path
+    assert row["jar_kind"] in ("", "_FrozenZipImporter")
     assert row["file"].startswith(os.path.join(LIB, "pyspark.zip"))
-    assert row["frozen"] == [LIB]  # the shipped package zip is not frozen
+    # the shipped package zip is not frozen
+    assert LIB in row["frozen"] and set(row["frozen"]) <= {LIB, JARS}
 
 
 @pytest.mark.parametrize("kind", ["zip", "py"])
