@@ -300,13 +300,40 @@ def pin_empty_bucket(table_dir: str, bucket: int, schema: pa.Schema) -> None:
                    os.path.join(d, "part-00000-empty.parquet"))
 
 
+def route_buckets(df, buckets: list[int], partitions: int):
+    """``df`` (rows of ``buckets`` only, ``bucket`` and ``url`` columns
+    included) in ``partitions`` shuffle partitions: the routing every
+    bucket-aligned write shares.
+
+    With at least ``partitions`` buckets, each bucket lands whole in one
+    partition, ``buckets[i]`` in partition ``i mod partitions``, so no
+    task holds more than ceil(n/partitions) buckets and a
+    ``partitionBy("bucket")`` write emits one file per bucket.
+    ``repartitionById`` takes the partition id as a column: no sampling
+    job (range partitioning scans the input once more per call) and no
+    hash scatter (which leaves ~1/e of the slots empty and stacks 3-4
+    buckets on others: stragglers). With fewer buckets than partitions,
+    a salted secondary key splits buckets across tasks, a few files per
+    bucket, instead of capping parallelism at ``len(buckets)``."""
+    from pyspark.sql import functions as F
+
+    if len(buckets) < partitions:
+        return df.repartition(partitions, F.col("bucket"),
+                              F.xxhash64("url", F.lit(0x5A17)))
+    slots = [0] * (max(buckets) + 1)
+    for i, b in enumerate(buckets):
+        slots[b] = i % partitions
+    return df.repartitionById(
+        partitions, F.element_at(F.lit(slots), F.col("bucket") + 1))
+
+
 def stage_buckets(df, staging_table_dir: str, table: str,
                   buckets: list[int]) -> int:
     """Stage the new content of ``buckets`` for ``snapshots.commit_rewrite``
     and return its row count. ``df`` holds exactly those buckets' rows,
     ``bucket`` column included.
 
-    One task per bucket (``route_repartition``), sorted by the table's
+    One task per bucket (``route_buckets``), sorted by the table's
     natural key within it, so each bucket lands as one url-sorted file:
     parquet min/max stats on url stay tight and disjoint, and point
     lookups and later rewrites prune row groups (the sort satisfies the
@@ -316,10 +343,9 @@ def stage_buckets(df, staging_table_dir: str, table: str,
     file pins the schema."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from docling_rag_spark.functions.partitioning import route_repartition
-
     shutil.rmtree(staging_table_dir, ignore_errors=True)
-    (route_repartition(df, buckets)
+    # an empty upsert stages nothing: one task writes no file
+    (route_buckets(df, buckets, max(len(buckets), 1))
      .sortWithinPartitions("bucket", *TABLE_KEYS.get(table, ("url",)))
      .write.partitionBy("bucket").mode("overwrite")
      .parquet(staging_table_dir))

@@ -22,10 +22,11 @@ storage/db_storage.py:119-147) Spark-first:
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.operators.embed import embed_texts
@@ -58,15 +59,18 @@ def cosine_score(emb_col, q_col):
         F.lit(0.0), lambda acc, x: acc + x)
 
 
-def _vector_literal(vec) -> Column:
-    """``vec`` as one ``array<double>`` literal, built in a single call.
-
-    ``F.lit(list)`` and ``F.array(*lits)`` both cost one py4j round trip per
-    component (256 for a query vector). One comma-joined string literal,
-    split and cast, is folded by the optimizer into the same array literal:
-    ``repr`` of a float round-trips exactly through the cast."""
-    return F.split(F.lit(",".join(repr(float(x)) for x in vec)),
-                   ",").cast("array<double>")
+def vector_literal(vals) -> str:
+    """A float vector (or nested lists of them) as one SQL
+    ``array<…double>`` constant: a JSON string literal that ``from_json``
+    parses and the optimizer folds. JSON carries each double's ``repr``,
+    which round-trips exactly. ``F.lit(list)`` and ``F.array(*lits)`` cost
+    one py4j round trip per component (256 for a query vector), and a SQL
+    literal per element costs hundreds of ms of analysis per query at the
+    ANN index's sizes; one string literal costs neither."""
+    typ, v = "double", vals
+    while isinstance(v, (list, tuple)):
+        typ, v = f"array<{typ}>", v[0]
+    return f"from_json('{json.dumps(vals)}', '{typ}')"
 
 
 def search_chunks(spark: SparkSession,
@@ -101,7 +105,8 @@ def search_chunks(spark: SparkSession,
         scored = scored.join(F.broadcast(allowed_urls), "url", "left_semi")
     scored = scored.select(
         "url", "chunk_id",
-        cosine_score(F.col("embedding"), _vector_literal(q)).alias("score"))
+        cosine_score(F.col("embedding"),
+                     F.expr(vector_literal(q))).alias("score"))
     return scored.orderBy(F.desc("score"), F.asc("url"),
                           F.asc("chunk_id")).limit(top_k)
 

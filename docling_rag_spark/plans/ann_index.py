@@ -27,9 +27,9 @@ the exact cosine reranks the top ``_PQ_RERANK``. On Iceberg the layout is
 an identity partition spec over ``cell``.
 
 Every expression that carries trained or query constants is SQL over one
-folded array constant per table (``_doubles``): Spark evaluates it with
-the same left folds and first-argmin ties as operators/pq.py's numpy
-reference, bit for bit.
+folded array constant per table (``operators.search.vector_literal``):
+Spark evaluates it with the same left folds and first-argmin ties as
+operators/pq.py's numpy reference, bit for bit.
 """
 
 from __future__ import annotations
@@ -44,6 +44,7 @@ import uuid
 
 from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.operators import pq as PQ
+from docling_rag_spark.operators.search import vector_literal
 
 BOOKS = "pq_books.json"
 CELL = "cell"
@@ -75,18 +76,6 @@ def query_vector(sf_dir: str, vec_id: int):
 
 # --- SQL expressions over trained / query constants --------------------------
 
-def _doubles(vals) -> str:
-    """Nested lists of floats as one SQL ``array<…double>`` constant: a
-    JSON string literal that ``from_json`` parses and the optimizer folds.
-    JSON carries each double's ``repr``, which round-trips exactly, and one
-    string literal costs a fraction of the analysis a literal per element
-    does (hundreds of ms per query at these sizes)."""
-    typ, v = "double", vals
-    while isinstance(v, (list, tuple)):
-        typ, v = f"array<{typ}>", v[0]
-    return f"from_json('{json.dumps(vals)}', '{typ}')"
-
-
 def _fold(array_sql: str) -> str:
     """Left-fold sum of a double array from 0.0 — numpy's accumulation
     order in operators/pq.py."""
@@ -99,7 +88,7 @@ def _nearest(vec_sql: str, cents):
     _fold_sq_dists + np.argmin."""
     from pyspark.sql import functions as F
 
-    d = F.expr(f"transform({_doubles(cents)}, c -> " + _fold(
+    d = F.expr(f"transform({vector_literal(cents)}, c -> " + _fold(
         f"zip_with({vec_sql}, c, (x, y) -> "
         "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y))") + ")")
     return F.array_position(d, F.array_min(d)) - 1
@@ -127,7 +116,7 @@ def _adc_sql(q_vec, books) -> str:
     dot_lut, norm2_lut = PQ.adc_tables(q_vec, books)
 
     def lut_sum(lut):
-        return _fold(f"zip_with(codes, {_doubles(lut)}, "
+        return _fold(f"zip_with(codes, {vector_literal(lut)}, "
                      "(c, t) -> t[CAST(c AS INT)])")
     return (f"floor(try_divide({lut_sum(dot_lut)}, "
             f"sqrt({lut_sum(norm2_lut)})) * 1000000D)")
@@ -142,7 +131,7 @@ def _cosine_sql(q_vec) -> str:
     literal is inlined into the generated code, and a new value per query
     would compile a new class per query."""
     q = [float(v) for v in q_vec]
-    return (f"aggregate(zip_with(embedding, {_doubles(q)}, (x, y) -> "
+    return (f"aggregate(zip_with(embedding, {vector_literal(q)}, (x, y) -> "
             "named_struct('dot', CAST(x AS DOUBLE) * y, "
             "'sq', CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
             "named_struct('dot', 0D, 'sq', 0D), "

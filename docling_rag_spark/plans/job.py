@@ -5,8 +5,9 @@ Replaces the reference's sequential indexing loop + postgres job queue
 
   scan pages -> assign bucket = pmod(xxhash64(url), N)
              -> anti-join buckets against committed lineage (resume, J3)
-             -> per bucket-batch: bucket-routed repartition into
-                salt_partitions tasks -> fused parse+chunk mapInPandas
+             -> per bucket-batch: whole buckets routed into
+                salt_partitions tasks (warehouse.route_buckets)
+                -> fused parse+chunk mapInPandas
                 -> persist the doc rows (DISK_ONLY) -> derive chunks /
                 extracted / stats from them, staged as parquet
                 partitioned by bucket
@@ -63,8 +64,8 @@ class ExtractionReport:
     failure_count: int = 0
     docs_unchanged: int = 0
     batches: list[list[int]] = field(default_factory=list)
-    # per-phase wall seconds, populated when SPARK_GRAFT_DEBUG=1 (summed
-    # across batches): where a benchmark pair should look for Amdahl tails
+    # per-phase wall seconds (udf_stage / derive / commit, summed across
+    # batches): where a benchmark pair should look for Amdahl tails
     phase_sec: dict = field(default_factory=dict)
 
 
@@ -204,7 +205,6 @@ def _run_extraction_inner(
     staging_root = os.path.join(out_dir, "_staging")
 
     import time as _time
-    debug = os.environ.get("SPARK_GRAFT_DEBUG") == "1"
 
     # unique per-run suffix: two concurrent runs of the SAME snapshot are
     # supported (idempotent duplicates), so a deterministic staging path
@@ -243,27 +243,11 @@ def _run_extraction_inner(
             # one task per bucket pays it once per wave. Even with the
             # worker hook (package __init__), 16 buckets as 16 tasks ran a
             # 600-page job at local[4] in a median 1.85 s against 1.09 s as
-            # 4 tasks (0/16 pairs won). bucket_route puts whole buckets
+            # 4 tasks (0/16 pairs won). route_buckets puts whole buckets
             # round-robin into the salt_partitions tasks (at most
-            # ceil(n/salt_partitions) each) with ZERO extra jobs —
-            # repartitionByRange pays a per-batch sampling scan of the input
-            # (pure Amdahl tail in N-vs-4N scaling; measured 1.1-2.0 s/run via
-            # event logs), and hash partitioning on a low-cardinality key
-            # leaves ~1/e of slots empty while stacking 3-4 buckets on others
-            # (stragglers in the expensive parse stage). See
-            # functions/partitioning.py. A batch of fewer buckets than
-            # salt_partitions adds a salted secondary key instead: buckets
-            # split across tasks (a few files per bucket) rather than capping
-            # parallelism at len(batch).
-            if len(batch) >= salt_partitions:
-                from docling_rag_spark.functions.partitioning import bucket_route
-                sub = sub.repartition(
-                    salt_partitions,
-                    bucket_route(F.col("bucket"), batch, num_buckets,
-                                 partitions=salt_partitions))
-            else:
-                sub = sub.repartition(salt_partitions, F.col("bucket"),
-                                      F.xxhash64("url", F.lit(0x5A17)))
+            # ceil(n/salt_partitions) each) with no extra job, and salts
+            # a batch of fewer buckets than tasks across all of them.
+            sub = wh.route_buckets(sub, batch, salt_partitions)
 
             # One UDF pass, kept in Spark's block store for the chunks /
             # extracted / stats derivations. DISK_ONLY keeps the wide doc
@@ -391,14 +375,13 @@ def _run_extraction_inner(
                          for b, s in stats.items()},
                 started_at=started, force=retain_snapshots,
                 commit_id=f"{snapshot_id}-b{batch_idx}-{run_id}")
-            if debug:
-                _t5 = _time.time()
-                # one derive phase: the three derivations run concurrently,
-                # so per-derivation completion times would misattribute
-                for k, v in (("udf_stage", _t1 - _t0), ("derive", _t4 - _t1),
-                             ("commit", _t5 - _t4)):
-                    report.phase_sec[k] = round(
-                        report.phase_sec.get(k, 0.0) + v, 2)
+            _t5 = _time.time()
+            # one derive phase: the three derivations run concurrently,
+            # so per-derivation completion times would misattribute
+            for k, v in (("udf_stage", _t1 - _t0), ("derive", _t4 - _t1),
+                         ("commit", _t5 - _t4)):
+                report.phase_sec[k] = round(
+                    report.phase_sec.get(k, 0.0) + v, 2)
         finally:
             # a failed batch (incl. CommitConflict) must not leak staged
             # parquet or persisted blocks: the rerun recomputes; only
@@ -476,6 +459,26 @@ def read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return wh.read_table(spark, out_dir, "extracted")
+
+
+def embed_warehouse(spark: SparkSession, out_dir: str,
+                    num_buckets: int | None = None) -> str:
+    """Embed the warehouse's ``chunks`` into ``<out_dir>/embeddings`` and
+    return that dir. Map-only: scan → embedding UDF → write, no shuffle.
+
+    The table is bucketed at the warehouse's pinned spec, like every other
+    table: a delete's bucket-local rewrite looks for a url's embedding
+    rows only in the bucket its url hashes to at that modulus. An
+    explicit ``num_buckets`` is validated against the pin
+    (``BucketSpecMismatch``)."""
+    from docling_rag_spark.operators.embed import embed_chunks
+
+    num_buckets = wh.resolve_num_buckets(out_dir, num_buckets)
+    emb_dir = os.path.join(out_dir, "embeddings")
+    (embed_chunks(spark.read.parquet(os.path.join(out_dir, "chunks")))
+     .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
+     .write.partitionBy("bucket").mode("overwrite").parquet(emb_dir))
+    return emb_dir
 
 
 def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],

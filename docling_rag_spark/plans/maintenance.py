@@ -10,11 +10,12 @@ keep the old spec until rewritten). This module is the explicit rewrite:
 ``rebucket_warehouse`` re-hashes every bucketed table to a new modulus
 as one logged, retained, conflict-checked commit.
 
-Scale shape: one shuffle per table (the range-repartition that is also
-the write layout), no driver-side row handling, and the whole job holds
-the compaction + commit locks — it is a maintenance window operation,
-exactly like Iceberg's ``rewrite_data_files`` after ``ALTER TABLE ...
-SET PARTITION SPEC``.
+Scale shape: one shuffle per table, staged through the same
+``warehouse.stage_buckets`` every bucket writer uses (one url-sorted file
+per bucket, routed by id: no sampling job), no driver-side row handling,
+and the whole job holds the compaction + commit locks — it is a
+maintenance window operation, exactly like Iceberg's ``rewrite_data_files``
+after ``ALTER TABLE ... SET PARTITION SPEC``.
 """
 
 from __future__ import annotations
@@ -28,14 +29,7 @@ from pyspark.sql import functions as F
 
 from docling_rag_spark.io import snapshots as snap
 from docling_rag_spark.io import warehouse as wh
-
-# natural row keys per bucketed table (warehouse.TABLE_KEYS): rebucket
-# re-reads whatever bucket dirs exist, so a rerun after a mid-job crash
-# can see a url in BOTH its old-modulus and new-modulus bucket; keyed
-# dedup makes the rerun restore exactly-once semantics (full-row
-# duplicates are always rebucket artifacts — every table is unique on
-# its key by construction, and the keys are drop-protected)
-_TABLE_KEYS = {t: list(k) for t, k in wh.TABLE_KEYS.items()}
+from docling_rag_spark.plans.job import bucket_of
 
 
 def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
@@ -93,39 +87,28 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
                 if wh.batch_dirs(table_dir):
                     raise RuntimeError(
                         f"table {t!r} has unfolded streaming batch dirs; "
-                        "run fold_stream_chunks before rebucketing")
+                        "run `scripts/snapshots_cli.py fold` before "
+                        "rebucketing")
                 stale[t] = sorted(
                     int(e.split("=", 1)[1])
                     for e in os.listdir(table_dir)
                     if e.startswith("bucket=")
                     and int(e.split("=", 1)[1]) >= new_buckets)
-                df = wh.read_table(spark, out_dir, t)
-                key = _TABLE_KEYS.get(t, ["url"])
-                df = (df.drop("bucket")
+                # rebucket re-reads whatever bucket dirs exist, so a rerun
+                # after a mid-job crash can see a url in BOTH its old- and
+                # new-modulus bucket; dedup on the natural key (every table
+                # is unique on it, and keys are drop-protected) restores
+                # exactly-once. stage_buckets leaves a dir for every new
+                # bucket, so the commit replaces each old dir even when no
+                # row hashes to it.
+                key = list(wh.TABLE_KEYS.get(t, ("url",)))
+                df = (wh.read_table(spark, out_dir, t).drop("bucket")
                       .dropDuplicates(key)
-                      .withColumn("bucket",
-                                  F.pmod(F.xxhash64("url"),
-                                         F.lit(new_buckets)).cast("int")))
-                # one whole bucket per output task: range boundaries land
-                # between bucket ids (hash-repartition on the
-                # low-cardinality key leaves ~1/e of slots empty)
-                (df.repartitionByRange(new_buckets, F.col("bucket"))
-                 .sortWithinPartitions("bucket", *key)
-                 .write.partitionBy("bucket").mode("overwrite")
-                 .parquet(os.path.join(staging_root, t)))
-                # row count from the staged footers (metadata-only): a
-                # df.count() here would execute the whole read+dedup plan
-                # a second time — doubling a job sized for 10^12 docs
-                stats[t] = wh.parquet_rows(os.path.join(staging_root, t))
-                # a new-range bucket no row hashed into gets no staged dir
-                # and commit_buckets would SKIP it — its old-modulus dir
-                # would survive holding rows now duplicated elsewhere;
-                # retire it alongside the beyond-range dirs
-                stale[t] += [
-                    b for b in range(new_buckets)
-                    if not os.path.isdir(
-                        wh.bucket_dir(os.path.join(staging_root, t), b))
-                    and os.path.isdir(wh.bucket_dir(table_dir, b))]
+                      .withColumn("bucket", bucket_of(F.col("url"),
+                                                      new_buckets)))
+                stats[t] = wh.stage_buckets(
+                    df, os.path.join(staging_root, t), t,
+                    list(range(new_buckets)))
 
             touched = sorted({b for t in present
                               for b in range(new_buckets)} |

@@ -303,10 +303,9 @@ def main() -> int:
                 stat = {"trial": t, "executors": n_exec,
                         "docs_per_sec": r["docs_per_sec"],
                         "busy_cpus": r["lane_busy_cpus"],
-                        "steal_cpus": r["lane_steal_cpus"]}
-                if "phase_sec" in r:   # SPARK_GRAFT_DEBUG=1 passthrough
-                    stat["phase_sec"] = r["phase_sec"]
-                    stat["elapsed_sec"] = r.get("elapsed_sec")
+                        "steal_cpus": r["lane_steal_cpus"],
+                        "phase_sec": r["phase_sec"],
+                        "elapsed_sec": r["elapsed_sec"]}
                 lane_stats.append(stat)
                 shutil.rmtree(out, ignore_errors=True)
             effs.append(round((per[hi] / per[lo]) / (hi / lo), 3))

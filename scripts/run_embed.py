@@ -6,7 +6,10 @@ with the deterministic hashed-projection encoder, writes
 ``<out>/embeddings`` partitioned by the same url-hash buckets (so search
 joins are co-located). Map-only: scan → pandas UDF → write, zero shuffles.
 
-Usage: python scripts/run_embed.py --warehouse /tmp/wh [--buckets 64]
+Usage: python scripts/run_embed.py --warehouse /tmp/wh [--buckets N]
+
+``--buckets`` defaults to the warehouse's pinned modulus; a value that
+differs from it is refused.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument("--buckets", type=int, default=None)
     ap.add_argument("--ann-index", action="store_true",
                     help="also materialize the IVF-PQ index "
                          "<warehouse>/ann/pq, partitioned by coarse cell "
@@ -33,25 +36,19 @@ def main() -> int:
     args = ap.parse_args()
 
     import docling_rag_spark
-    from docling_rag_spark.operators.embed import embed_chunks
-    from docling_rag_spark.plans.job import bucket_of
+    from docling_rag_spark.plans.job import embed_warehouse
     from docling_rag_spark.session import get_spark
-    from pyspark.sql import functions as F
 
     spark = get_spark(app_name="embed", cores=args.cores)
     docling_rag_spark.ship(spark)
 
-    chunks = spark.read.parquet(os.path.join(args.warehouse, "chunks"))
     t0 = time.time()
-    (embed_chunks(chunks)
-     .withColumn("bucket", bucket_of(F.col("url"), args.buckets))
-     .write.partitionBy("bucket").mode("overwrite")
-     .parquet(os.path.join(args.warehouse, "embeddings")))
-    n = spark.read.parquet(os.path.join(args.warehouse, "embeddings")).count()
+    emb_dir = embed_warehouse(spark, args.warehouse, args.buckets)
+    n = spark.read.parquet(emb_dir).count()
     out = {"embedded_chunks": n}
     if args.ann_index:
         from docling_rag_spark.plans.ann_index import build_ann_index
-        emb = spark.read.parquet(os.path.join(args.warehouse, "embeddings"))
+        emb = spark.read.parquet(emb_dir)
         build_ann_index(spark, emb, os.path.join(args.warehouse, "ann"),
                         id_cols=("url", "chunk_id"),
                         delta_dir=os.path.join(args.warehouse, "ann_delta"))

@@ -89,9 +89,9 @@ def main() -> int:
                 max(2000, 4 * args.cores))
             warm_docs.write.mode("overwrite").parquet(
                 os.path.join(wtmp, "pages"))
-            # num_buckets matches the production bucket_route branch
-            # (len(batch) >= salt_partitions) so the warmed plan shape
-            # is the one the timed region runs.
+            # num_buckets >= salt_partitions takes route_buckets'
+            # whole-bucket branch, the one the timed region runs, so the
+            # warmed plan shape is the timed one.
             run_extraction(
                 spark, os.path.join(wtmp, "pages"),
                 os.path.join(wtmp, "wh"), snapshot_id="warm",
@@ -111,8 +111,6 @@ def main() -> int:
         retain_snapshots=args.retain_snapshots,
     )
     elapsed = time.time() - t0
-    extra = ({"phase_sec": report.phase_sec}
-             if os.environ.get("SPARK_GRAFT_DEBUG") == "1" else {})
     print(json.dumps({
         "snapshot_id": report.snapshot_id,
         "buckets_total": report.buckets_total,
@@ -124,7 +122,7 @@ def main() -> int:
         "docs_unchanged": report.docs_unchanged,
         "elapsed_sec": round(elapsed, 2),
         "docs_per_sec": round(report.doc_count / elapsed, 2) if elapsed else None,
-        **extra,
+        "phase_sec": report.phase_sec,
     }))
     spark.stop()
     return 0

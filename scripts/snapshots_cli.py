@@ -12,12 +12,15 @@ Usage:
     python scripts/snapshots_cli.py drop-column --out <wh> --table extracted \
         --column <name>
     python scripts/snapshots_cli.py rebucket --out <wh> --to <N>
+    python scripts/snapshots_cli.py fold     --out <wh>
 
 The Iceberg analogs: snapshot metadata listing, ``SELECT ... FOR
 TIMESTAMP AS OF``, ``rollback_to_timestamp``, ``expire_snapshots``,
 ``DESCRIBE TABLE``, ``ALTER TABLE ... DROP COLUMN`` (metadata-only;
-data files are cleaned up by later bucket rewrites), and partition-spec
-evolution + ``rewrite_data_files`` (rebucket).
+data files are cleaned up by later bucket rewrites), partition-spec
+evolution + ``rewrite_data_files`` (rebucket), and ``MERGE INTO`` of the
+streaming ``chunks/batch=<id>`` dirs into the bucketed table (fold; the
+newest batch dir stays, since a running stream may still replay it).
 Prints one JSON line per invocation.
 """
 
@@ -31,10 +34,20 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def _spark(app_name: str, cores: int):
+    import docling_rag_spark
+    from docling_rag_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name, cores=cores)
+    docling_rag_spark.ship(spark)
+    return spark
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=("log", "read", "rollback", "expire",
-                                    "schema", "drop-column", "rebucket"))
+                                    "schema", "drop-column", "rebucket",
+                                    "fold"))
     ap.add_argument("--out", required=True)
     ap.add_argument("--table", default="extracted")
     ap.add_argument("--column", default=None)
@@ -92,13 +105,17 @@ def main() -> int:
     if args.cmd == "rebucket":
         if args.to is None:
             ap.error("rebucket requires --to")
-        import docling_rag_spark
         from docling_rag_spark.plans.maintenance import rebucket_warehouse
-        from docling_rag_spark.session import get_spark
 
-        spark = get_spark(app_name="rebucket", cores=args.cores)
-        docling_rag_spark.ship(spark)
-        print(json.dumps(rebucket_warehouse(spark, args.out, args.to)))
+        print(json.dumps(rebucket_warehouse(_spark("rebucket", args.cores),
+                                            args.out, args.to)))
+        return 0
+
+    if args.cmd == "fold":
+        from docling_rag_spark.streaming.fold import fold_stream_chunks
+
+        print(json.dumps(fold_stream_chunks(_spark("fold", args.cores),
+                                            args.out)))
         return 0
 
     if args.cmd == "expire":
@@ -116,12 +133,8 @@ def main() -> int:
         return 0
 
     # read: needs a Spark session
-    import docling_rag_spark
-    from docling_rag_spark.session import get_spark
-
-    spark = get_spark(app_name="snapshots-read", cores=args.cores)
-    docling_rag_spark.ship(spark)
-    df = snap.read_table_as_of(spark, args.out, args.table, args.as_of,
+    df = snap.read_table_as_of(_spark("snapshots-read", args.cores),
+                               args.out, args.table, args.as_of,
                                num_buckets=args.buckets)
     sample_cols = [c for c in ("url", "format", "status") if c in df.columns]
     print(json.dumps({

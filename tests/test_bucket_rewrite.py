@@ -2,7 +2,8 @@
 ``snapshots.commit_rewrite`` — extraction (overwrite and merge), delete,
 registry upsert and stream fold all call it — so every warehouse policy
 (retention, spec and schema pinning, lineage validation) reaches every
-writer. Rebucket installs a whole new layout and commits on its own."""
+writer. Rebucket installs a whole new layout and commits on its own; it
+still stages through ``warehouse.stage_buckets``."""
 
 from __future__ import annotations
 
@@ -24,3 +25,11 @@ def test_only_the_shared_module_installs_buckets():
         "commit_buckets / commit_buckets_retained called outside "
         "io/snapshots.commit_rewrite (and rebucket)")
     assert "io/snapshots.py" in callers
+
+
+def test_only_the_warehouse_routes_buckets():
+    """Every bucket-aligned write routes through ``warehouse.route_buckets``:
+    no other module picks its own partitioner for the bucket layout."""
+    callers = {f.relative_to(PKG).as_posix() for f in PKG.rglob("*.py")
+               if re.search(r"\brepartitionBy(?:Id|Range)\(", f.read_text())}
+    assert callers == {"io/warehouse.py"}

@@ -62,26 +62,53 @@ def test_delete_urls_cascade(spark, tmp_path):
             pq.read_table(os.path.join(out, "chunks", b, f))
 
 
+def test_embeddings_follow_the_pinned_spec_through_delete(spark, tmp_path):
+    """``embed_warehouse`` buckets ``embeddings`` at the warehouse's pinned
+    modulus, so a delete's bucket-local rewrite finds every embedding row
+    of its urls and exact search stops returning them; a modulus that
+    differs from the pin is refused."""
+    import pytest
+
+    from docling_rag_spark.api.service import search_warehouse
+    from docling_rag_spark.io import warehouse as wh
+    from docling_rag_spark.plans.job import embed_warehouse
+
+    pages = str(tmp_path / "pages.parquet")
+    out = str(tmp_path / "wh")
+    write_pages_parquet(pages, 40)
+    run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
+    with pytest.raises(wh.BucketSpecMismatch):
+        embed_warehouse(spark, out, num_buckets=64)
+    emb = spark.read.parquet(embed_warehouse(spark, out))
+    victims = sorted(_chunk_urls(spark, out))[:5]
+    chunks = spark.read.parquet(os.path.join(out, "chunks"))
+    query = chunks.filter(chunks.url == victims[0]).first()["text"]
+    hits = search_warehouse(spark, out, query, top_k=3, log=False,
+                            mode="exact")
+    assert victims[0] in {h["url"] for h in hits}
+    assert emb.filter(emb.url.isin(victims)).count() > 0
+
+    delete_urls(spark, out, victims)
+    emb = spark.read.parquet(os.path.join(out, "embeddings"))
+    assert emb.filter(emb.url.isin(victims)).count() == 0
+    hits = search_warehouse(spark, out, query, top_k=3, log=False,
+                            mode="exact")
+    assert hits and not ({h["url"] for h in hits} & set(victims))
+
+
 def test_delete_cascades_into_ann_index(spark, tmp_path):
     """A deleted url must vanish from the materialized ANN index — its one
     IVF-PQ table — while the codebooks stay: a stale index would keep
     ranking its chunks in mode=ann searches."""
-    from pyspark.sql import functions as F
-
-    from docling_rag_spark.operators.embed import embed_chunks
     from docling_rag_spark.plans.ann_index import INDEX_TABLES, build_ann_index
-    from docling_rag_spark.plans.job import bucket_of
+    from docling_rag_spark.plans.job import embed_warehouse
 
     pages = str(tmp_path / "pages.parquet")
     out = str(tmp_path / "wh")
     write_pages_parquet(pages, 60)
     run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
-    chunks = spark.read.parquet(os.path.join(out, "chunks"))
-    (embed_chunks(chunks)
-     .withColumn("bucket", bucket_of(F.col("url"), 8))
-     .write.partitionBy("bucket").mode("overwrite")
-     .parquet(os.path.join(out, "embeddings")))
-    build_ann_index(spark, spark.read.parquet(os.path.join(out, "embeddings")),
+    emb_dir = embed_warehouse(spark, out, num_buckets=8)
+    build_ann_index(spark, spark.read.parquet(emb_dir),
                     os.path.join(out, "ann"), id_cols=("url", "chunk_id"))
     assert sorted(os.listdir(os.path.join(out, "ann"))) == \
         ["pq", "pq_books.json"]
@@ -107,18 +134,14 @@ def test_auto_search_runs_exact_when_the_index_has_no_rows(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from docling_rag_spark.api.service import search_warehouse
-    from docling_rag_spark.operators.embed import embed_chunks
     from docling_rag_spark.plans.ann_index import BOOKS, build_ann_index
-    from docling_rag_spark.plans.job import bucket_of
+    from docling_rag_spark.plans.job import embed_warehouse
 
     pages = str(tmp_path / "pages.parquet")
     out = str(tmp_path / "wh")
-    emb_dir = os.path.join(out, "embeddings")
     write_pages_parquet(pages, 40)
     run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
-    (embed_chunks(spark.read.parquet(os.path.join(out, "chunks")))
-     .withColumn("bucket", bucket_of(F.col("url"), 8))
-     .write.partitionBy("bucket").mode("overwrite").parquet(emb_dir))
+    emb_dir = embed_warehouse(spark, out, num_buckets=8)
     *indexed, kept = sorted(_chunk_urls(spark, out))
     build_ann_index(spark, spark.read.parquet(emb_dir)
                     .filter(F.col("url") != kept),

@@ -155,21 +155,15 @@ def served_wh(spark, tmp_path_factory):
     """A 60-page warehouse with a bucketed embeddings table and the ANN
     index, as scripts/run_embed.py --ann-index leaves it."""
     from docling_rag_spark.plans import ann_index as AI
-    from docling_rag_spark.plans.job import bucket_of, run_extraction
+    from docling_rag_spark.plans.job import embed_warehouse, run_extraction
     from docling_rag_spark.sources.pages import write_pages_parquet
-    from pyspark.sql import functions as F
 
     root = tmp_path_factory.mktemp("served")
     pages = str(root / "pages.parquet")
     wh = str(root / "wh")
     write_pages_parquet(pages, 60)
     run_extraction(spark, pages, wh, num_buckets=8)
-    chunks = spark.read.parquet(os.path.join(wh, "chunks"))
-    (embed_chunks(chunks)
-     .withColumn("bucket", bucket_of(F.col("url"), 8))
-     .write.partitionBy("bucket").mode("overwrite")
-     .parquet(os.path.join(wh, "embeddings")))
-    emb = spark.read.parquet(os.path.join(wh, "embeddings"))
+    emb = spark.read.parquet(embed_warehouse(spark, wh, num_buckets=8))
     AI.build_ann_index(spark, emb, os.path.join(wh, "ann"),
                        id_cols=("url", "chunk_id"))
     return wh

@@ -95,6 +95,36 @@ def test_fold_excludes_newest_by_default(spark, warehouse):
     assert left == ["batch=1"]
 
 
+def test_snapshots_cli_fold_verb(spark, warehouse, monkeypatch, capsys):
+    """``snapshots_cli.py fold`` runs ``fold_stream_chunks`` with its
+    defaults (the newest batch dir stays) and prints its report."""
+    import importlib.util
+    import json
+    import sys
+
+    import docling_rag_spark
+    from docling_rag_spark import session
+
+    out = warehouse
+    chunks = spark.read.parquet(os.path.join(out, "chunks"))
+    _write_batches(spark, out, chunks.select("url").orderBy("url")
+                   .first()["url"])
+    cli = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "snapshots_cli.py")
+    spec = importlib.util.spec_from_file_location("snapshots_cli", cli)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    monkeypatch.setattr(docling_rag_spark, "ship", lambda s: None)
+    monkeypatch.setattr(sys, "argv", ["snapshots_cli.py", "fold",
+                                      "--out", out])
+    assert mod.main() == 0
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["folded_batches"] == 1 and report["rows_folded"] == 3
+    assert [d for d in os.listdir(os.path.join(out, "chunks"))
+            if d.startswith("batch=")] == ["batch=1"]
+
+
 def test_fold_noop_without_batches(spark, warehouse):
     report = fold_stream_chunks(spark, warehouse, num_buckets=8)
     assert report == {"folded_batches": 0, "rows_folded": 0}

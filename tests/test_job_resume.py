@@ -27,6 +27,9 @@ def test_full_run_and_lineage(spark, pages_path, tmp_path):
     assert report.buckets_done == N_BUCKETS and report.buckets_skipped == 0
     assert report.doc_count == N_DOCS
     assert report.failure_count >= 1  # the corrupt fixture
+    # per-phase walls are always reported, no env switch needed
+    assert set(report.phase_sec) == {"udf_stage", "derive", "commit"}
+    assert all(v >= 0 for v in report.phase_sec.values())
     rows = wh.read_lineage(out)
     assert {r["bucket"] for r in rows} == set(range(N_BUCKETS))
     assert sum(r["doc_count"] for r in rows) == N_DOCS

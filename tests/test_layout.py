@@ -83,7 +83,7 @@ def _one_sorted_file_per_bucket(table_dir: str, key: tuple[str, ...]) -> int:
 
 
 @pytest.mark.parametrize("writer", ["extraction", "delete", "registry",
-                                    "fold"])
+                                    "fold", "rebucket"])
 def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
         spark, tmp_path, writer):
     """Every bucket writer stages through the one rewrite path, so each
@@ -92,6 +92,7 @@ def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
 
     from docling_rag_spark.io import warehouse as wh
     from docling_rag_spark.plans.job import delete_urls
+    from docling_rag_spark.plans.maintenance import rebucket_warehouse
     from docling_rag_spark.plans.registry import upsert_registry_table
     from docling_rag_spark.streaming.fold import fold_stream_chunks
 
@@ -121,4 +122,6 @@ def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
          .write.parquet(os.path.join(out, "chunks", "batch=0")))
         assert fold_stream_chunks(spark, out, include_newest=True)[
             "rows_folded"] > 0
+    elif writer == "rebucket":
+        assert rebucket_warehouse(spark, out, 8)["rebucketed"]
     assert _one_sorted_file_per_bucket(os.path.join(out, table), key) > 0

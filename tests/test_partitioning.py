@@ -1,98 +1,69 @@
-"""Murmur3-preimage bucket routing (functions/partitioning.py).
+"""Bucket -> shuffle-partition routing (``warehouse.route_buckets``).
 
 The routing is an optimization contract, not a correctness one (the staged
-write re-groups by the bucket COLUMN either way), but a silent drift between
-the Python murmur3 and Spark's HashPartitioning would quietly reintroduce
-the straggler packing the router exists to remove — so parity is pinned."""
+write re-groups by the bucket COLUMN either way): whole buckets per task
+give one file per bucket and no straggler stacking several buckets."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from docling_rag_spark.functions.partitioning import (
-    bucket_route,
-    murmur3_int32,
-    partition_preimages,
-)
+from docling_rag_spark.io import warehouse as wh
 
 
-def test_murmur3_matches_spark_hash(spark):
-    """Python murmur3_int32 == F.hash(int32) (seed 42), incl. negatives."""
-    xs = [0, 1, 2, 41, 42, 255, 256, 1 << 20, -1, -123456,
-          2**31 - 1, -(2**31)]
-    df = spark.createDataFrame([(x,) for x in xs], "x int")
-    got = {r["x"]: r["h"]
-           for r in df.select("x", F.hash("x").alias("h")).collect()}
-    for x in xs:
-        assert got[x] == murmur3_int32(x), f"mismatch at {x}"
-
-
-@pytest.mark.parametrize("n", [1, 7, 32, 256])
-def test_preimages_cover_all_partitions(n):
-    pre = partition_preimages(n)
-    assert len(pre) == n
-    assert sorted(murmur3_int32(x) % n for x in pre) == list(range(n))
-
-
-def test_bucket_route_one_bucket_per_partition(spark):
-    """repartition(n, bucket_route(...)) -> every partition holds exactly
-    one bucket, every bucket its own partition (the property that makes
-    the staged partitionBy write emit one file per bucket)."""
-    num_buckets = 32
-    batch = list(range(num_buckets))
-    df = (spark.range(4000)
+def _bucketed(spark, rows: int, num_buckets: int, batch=None):
+    df = (spark.range(rows)
+          .withColumn("url", F.col("id").cast("string"))
           .withColumn("bucket",
-                      F.pmod(F.xxhash64("id"), F.lit(num_buckets))
+                      F.pmod(F.xxhash64("url"), F.lit(num_buckets))
                       .cast("int")))
-    routed = df.repartition(len(batch),
-                            bucket_route(F.col("bucket"), batch, num_buckets))
-    per_part = (routed
-                .withColumn("pid", F.spark_partition_id())
-                .groupBy("pid")
-                .agg(F.countDistinct("bucket").alias("nb"))
-                .collect())
-    assert len(per_part) == num_buckets          # no empty/missing slots
+    return df if batch is None else df.filter(F.col("bucket").isin(batch))
+
+
+def _buckets_per_partition(df) -> list:
+    return (df.withColumn("pid", F.spark_partition_id())
+            .groupBy("pid")
+            .agg(F.countDistinct("bucket").alias("nb"))
+            .collect())
+
+
+def test_route_buckets_one_bucket_per_partition(spark):
+    """route_buckets(df, batch, len(batch)) -> every partition holds
+    exactly one bucket, every bucket its own partition (the property that
+    makes the staged partitionBy write emit one file per bucket)."""
+    batch = list(range(32))
+    per_part = _buckets_per_partition(
+        wh.route_buckets(_bucketed(spark, 4000, 32), batch, len(batch)))
+    assert len(per_part) == 32                   # no empty/missing slots
     assert all(r["nb"] == 1 for r in per_part)   # no stacking
 
 
-def test_bucket_route_subset_batch(spark):
+def test_route_buckets_subset_batch(spark):
     """A resume-style batch (subset of buckets) still gets one bucket per
     partition across len(batch) partitions."""
-    num_buckets = 64
     batch = [3, 17, 21, 40, 63]
-    df = (spark.range(2000)
-          .withColumn("bucket",
-                      F.pmod(F.xxhash64("id"), F.lit(num_buckets))
-                      .cast("int"))
-          .filter(F.col("bucket").isin(batch)))
-    routed = df.repartition(len(batch),
-                            bucket_route(F.col("bucket"), batch, num_buckets))
-    per_part = (routed
-                .withColumn("pid", F.spark_partition_id())
-                .groupBy("pid")
-                .agg(F.countDistinct("bucket").alias("nb"))
-                .collect())
+    per_part = _buckets_per_partition(wh.route_buckets(
+        _bucketed(spark, 2000, 64, batch), batch, len(batch)))
     assert len(per_part) == len(batch)
     assert all(r["nb"] == 1 for r in per_part)
 
 
-def test_route_repartition_one_bucket_per_partition(spark):
-    """The shared rewrite helper (delete/registry/fold sites) must place
-    each active bucket alone in its own shuffle partition — same property
-    as raw bucket_route, via the list-only signature those sites have."""
-    from docling_rag_spark.functions.partitioning import route_repartition
+def test_stage_buckets_routes_one_bucket_per_partition(spark, tmp_path):
+    """The shared rewrite staging (delete/registry/fold/rebucket) takes
+    only the bucket list and places each bucket alone in its own shuffle
+    partition: one file per bucket dir, each written by a different task
+    (the ``part-<partition>`` prefix of its name)."""
+    import glob
+    import os
 
     buckets = [1, 5, 9, 12]
-    df = (spark.range(1000)
-          .withColumn("bucket",
-                      F.pmod(F.xxhash64("id"), F.lit(16)).cast("int"))
-          .filter(F.col("bucket").isin(buckets)))
-    per_part = (route_repartition(df, buckets)
-                .withColumn("pid", F.spark_partition_id())
-                .groupBy("pid")
-                .agg(F.countDistinct("bucket").alias("nb"))
-                .collect())
-    assert len(per_part) == len(buckets)
-    assert all(r["nb"] == 1 for r in per_part)
+    df = _bucketed(spark, 1000, 16, buckets)
+    staged = str(tmp_path / "staged")
+    assert wh.stage_buckets(df, staged, "extracted", buckets) == df.count()
+    tasks = set()
+    for b in buckets:
+        (f,) = glob.glob(os.path.join(wh.bucket_dir(staged, b), "*.parquet"))
+        tasks.add(os.path.basename(f).split("-")[1])
+    assert len(tasks) == len(buckets)
 
 
 def _bucket_partitions(df) -> dict[int, set[int]]:
@@ -111,19 +82,13 @@ def _bucket_partitions(df) -> dict[int, set[int]]:
     (7, list(range(7))),                 # uneven: 2/2/2/1
     (64, [3, 17, 21, 40, 44, 58, 63]),   # resume-style subset batch
 ])
-def test_bucket_route_round_robin_over_fewer_partitions(spark, num_buckets,
-                                                        batch):
-    """repartition(P, bucket_route(..., partitions=P)) spreads whole
-    buckets over P partitions, at most ceil(n/P) on any of them."""
+def test_route_buckets_round_robin_over_fewer_partitions(spark, num_buckets,
+                                                         batch):
+    """route_buckets(df, batch, P) spreads whole buckets over P
+    partitions, at most ceil(n/P) on any of them."""
     partitions = 4
-    df = (spark.range(4000)
-          .withColumn("bucket",
-                      F.pmod(F.xxhash64("id"), F.lit(num_buckets))
-                      .cast("int"))
-          .filter(F.col("bucket").isin(batch)))
-    routed = df.repartition(
-        partitions, bucket_route(F.col("bucket"), batch, num_buckets,
-                                 partitions=partitions))
+    routed = wh.route_buckets(_bucketed(spark, 4000, num_buckets, batch),
+                              batch, partitions)
     assert routed.rdd.getNumPartitions() == partitions
     where = _bucket_partitions(routed)
     assert set(where) == set(batch)
@@ -133,6 +98,18 @@ def test_bucket_route_round_robin_over_fewer_partitions(spark, num_buckets,
         per_part[pid] = per_part.get(pid, 0) + 1
     assert len(per_part) == partitions           # none empty
     assert max(per_part.values()) - min(per_part.values()) <= 1
+
+
+def test_route_buckets_salts_fewer_buckets_than_partitions(spark):
+    """Fewer buckets than tasks: the salted key splits buckets across all
+    P partitions instead of leaving P - len(batch) of them idle."""
+    batch, partitions = [2, 5], 4
+    routed = wh.route_buckets(_bucketed(spark, 4000, 8, batch), batch,
+                              partitions)
+    assert routed.rdd.getNumPartitions() == partitions
+    where = _bucket_partitions(routed)
+    assert set(where) == set(batch)
+    assert set().union(*where.values()) == set(range(partitions))
 
 
 def test_extraction_parse_stage_runs_salt_partitions_tasks(

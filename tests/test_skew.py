@@ -27,17 +27,20 @@ def test_bucket_balances_hot_host(spark):
 
 
 def test_partitions_align_with_buckets(spark):
-    """The job's bucket-aligned repartition keeps whole buckets per
-    partition (one file per bucket at write time)."""
+    """The job's bucket-aligned repartition (``warehouse.route_buckets``)
+    puts every bucket whole in its own partition (one file per bucket at
+    write time), even on a host-skewed url set."""
+    from docling_rag_spark.io import warehouse as wh
+
     urls = [f"https://h{i % 11}.example/{i}" for i in range(500)]
-    df = (spark.createDataFrame(pd.DataFrame({"url": urls}))
-          .withColumn("bucket", bucket_of(F.col("url"), 16))
-          .repartition(16, F.col("bucket")))
+    df = wh.route_buckets(
+        spark.createDataFrame(pd.DataFrame({"url": urls}))
+        .withColumn("bucket", bucket_of(F.col("url"), 16)),
+        list(range(16)), 16)
     per_part = df.rdd.mapPartitions(
-        lambda rows: [len({r["bucket"] for r in rows})]).collect()
-    # a partition holds few whole buckets, never a fragment of many
-    assert all(n <= 3 for n in per_part)
-    assert sum(n > 0 for n in per_part) >= 8
+        lambda rows: [sorted({r["bucket"] for r in rows})]).collect()
+    assert sorted(b for part in per_part for b in part) == list(range(16))
+    assert all(len(part) == 1 for part in per_part)
 
 
 def test_aqe_skew_join_engages(spark):
