@@ -54,13 +54,12 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
        places.
 
     ``mode``: 'exact' scans the full embeddings table; 'ann' requires the
-    materialized <warehouse>/ann index (run_embed.py --ann-index, or a
-    stream_embed_index run) and scans only 4 of its 16 IVF-PQ cells, plus
-    the same cells of the streaming ``ann_delta`` batches; the ADC-ranked
-    candidates are reranked by exact cosine — the reference's HNSW
-    approximate-speed trade-off (storage/db_schema.py:36-37), here as
-    Iceberg-style partition pruning; 'auto' uses the index when it holds
-    rows (``ann/pq`` or a delta batch), exact search otherwise.
+    materialized <warehouse>/ann index (run_embed.py --ann-index) and
+    scans only 4 of its 16 IVF-PQ cells; the ADC-ranked candidates are
+    reranked by exact cosine — the reference's HNSW approximate-speed
+    trade-off (storage/db_schema.py:36-37), here as Iceberg-style
+    partition pruning; 'auto' uses the index when it holds rows
+    (``ann/pq``), exact search otherwise.
     A store with no chunks raises ``FileNotFoundError`` (P5); it is only
     probed when the top-k comes back empty."""
     from docling_rag_spark.operators.embed import embed_chunks, embed_texts
@@ -72,11 +71,9 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
     chunks = wh.read_table(spark, warehouse, "chunks")
     emb_path = os.path.join(warehouse, "embeddings")
     ann = os.path.join(warehouse, "ann")
-    delta = os.path.join(warehouse, "ann_delta")
-    if mode == "ann" or (mode == "auto" and AI.has_rows(ann, delta)):
+    if mode == "ann" or (mode == "auto" and AI.has_rows(ann)):
         q_vec = [float(v) for v in embed_texts([query])[0]]
         top = AI.probe(spark, ann, q_vec, ("url", "chunk_id"), top_k,
-                       delta_dir=delta,
                        where=(None if url_prefix is None
                               else F.col("url").startswith(url_prefix)))
     else:

@@ -32,9 +32,6 @@ HTML_DROP_HINTS = (
 # digit-run and punctuation mark is one token. Self-contained (no model files).
 TOKEN_PIECE_LEN = 8
 
-# --- Formats (reference: core/parser.py:9 SUPPORTED_EXTENSIONS) --------------
-SUPPORTED_FORMATS = ("html", "pdf", "markdown", "docx")
-
 # --- Metadata normalization (reference: core/metadata.py:65-83) --------------
 NULLISH_STRINGS = ("", "null", "none")
 MAX_TAGS = 5
@@ -51,4 +48,3 @@ DEFAULT_SALT_PARTITIONS = 32
 # db_schema.py:33 pins 1024 to deepvk/USER-bge-m3; the self-contained hashed
 # random-projection encoder uses 256 (no model files in this environment).
 EMBED_DIM = 256
-EMBED_BATCH = 128  # reference _EMBED_BATCH, core/indexer.py:29

@@ -2,16 +2,16 @@
 
 The reference counts tokens with the embedding model's HF tokenizer
 (reference: core/chunker.py:45-60) purely to enforce the 512-token chunk
-budget. We replace it with a BPE-ish regex counter that needs no model files
-and vectorizes over Arrow batches:
+budget. We replace it with a BPE-ish regex counter that needs no model
+files:
 
   token := a run of word characters, split into pieces of at most
            TOKEN_PIECE_LEN chars (approximating subword splits), or a single
            non-space/non-word character.
 
-One regex pattern implements both "count" (pandas .str.count — fully
-vectorized, no per-row Python) and "split points" (finditer, used only inside
-the per-document chunker when a section exceeds the budget).
+One regex pattern implements both "count" (findall) and "split points"
+(finditer, used only inside the per-document chunker when a section exceeds
+the budget).
 """
 
 from __future__ import annotations
@@ -30,11 +30,6 @@ def count_tokens(text: str) -> int:
     if not text:
         return 0
     return len(_TOKEN_RE.findall(text))
-
-
-def count_tokens_series(texts) -> "pandas.Series":  # noqa: F821
-    """Vectorized token count over a pandas Series of strings."""
-    return texts.fillna("").str.count(TOKEN_PATTERN)
 
 
 def token_spans(text: str) -> list[tuple[int, int]]:

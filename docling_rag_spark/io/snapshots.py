@@ -47,7 +47,7 @@ It is also the one commit path of every copy-on-write bucket rewrite:
 ``commit_rewrite`` validates, pins the bucket spec and table schema,
 installs the staged buckets through ``commit_buckets_retained`` and
 appends lineage, all under the commit lock. Extraction (overwrite and
-merge), deletes, registry upserts and stream folds call it (staged by
+merge), deletes and registry upserts call it (staged by
 ``warehouse.stage_buckets`` or, for extraction, the job's own derived
 writes), so every warehouse policy — retention, spec and schema pinning
 — applies to each of them by construction. Only rebucket (a new
@@ -55,11 +55,10 @@ layout for every bucket) and rollback (copies of retained versions)
 commit on their own.
 
 Every rewrite retains once the warehouse has a ``_snapshots`` dir. NOT
-retained: streaming ``batch=<id>`` dirs (a transient pre-fold layout)
-and the derived ANN index (rebuildable from the embeddings table). Known
-race, shared with plain current-table reads: an as-of DataFrame resolved
-before a concurrent ``expire`` may fail mid-scan when the retained files
-vanish — rerun after expiry.
+retained: the derived ANN index (rebuildable from the embeddings table).
+Known race, shared with plain current-table reads: an as-of DataFrame
+resolved before a concurrent ``expire`` may fail mid-scan when the
+retained files vanish — rerun after expiry.
 """
 
 from __future__ import annotations
@@ -229,9 +228,9 @@ def log_read(out_dir: str) -> list[dict]:
 
 def retention_enabled(out_dir: str) -> bool:
     """True once any retained commit has been made (``_snapshots`` dir
-    exists). Every bucket-rewriting writer — delete, registry upsert,
-    stream fold — must then retain what it displaces: a single
-    non-retaining rewrite silently corrupts every as-of read before it."""
+    exists). Every bucket-rewriting writer — delete, registry upsert —
+    must then retain what it displaces: a single non-retaining rewrite
+    silently corrupts every as-of read before it."""
     return os.path.isdir(snapshots_root(out_dir))
 
 
@@ -458,7 +457,7 @@ def expire_snapshots(out_dir: str, older_than: float) -> dict:
     """
     if not retention_enabled(out_dir):
         # a no-op expire must not CREATE _snapshots: that would silently
-        # flip retention on for every future delete/upsert/fold on a
+        # flip retention on for every future delete/upsert on a
         # warehouse that never opted in
         return {"expired_commits": 0, "dirs_removed": 0, "log_rows": 0}
     with commit_lock(out_dir):
@@ -524,7 +523,7 @@ def rollback_table(out_dir: str, table: str, ts: float) -> dict:
             return {"commit_id": commit_id, "buckets_installed": 0,
                     "buckets_removed": 0, "buckets_changed": 0}
         # Lineage FIRST: conflicting_buckets() — the optimistic-concurrency
-        # check every extraction/delete/fold commit runs — scans lineage
+        # check every extraction/delete commit runs — scans lineage
         # only, so without this row a job that read its base before the
         # rollback would silently re-commit the rolled-back-over state
         # (same written-before-data rule as delete_urls).

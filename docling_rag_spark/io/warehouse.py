@@ -171,10 +171,10 @@ class commit_lock:
 
 def _swap_old_dir(final_dir: str) -> str:
     """Parking name for the displaced dir during a swap: DOT-prefixed so a
-    crash never leaves a sibling that Spark partition discovery (or a
-    ``startswith('batch=')`` listing filter) would treat as live data —
-    ``ann_delta/batch=5.old`` parsed as partition value '5.old' both
-    resurrects rows and crashes compaction's int() parse."""
+    crash never leaves a sibling that Spark partition discovery would
+    treat as live data: Spark skips ``.``- and ``_``-prefixed names when
+    it lists a dir, so a scan of the parent never reads the displaced copy
+    (``ann/.pq.old``, not ``ann/pq.old``)."""
     head, tail = os.path.split(final_dir)
     return os.path.join(head, f".{tail}.old")
 
@@ -356,21 +356,6 @@ def stage_buckets(df, staging_table_dir: str, table: str,
         pin_empty_bucket(staging_table_dir, buckets[0],
                          to_arrow_schema(df.drop("bucket").schema))
     return n
-
-
-def batch_dirs(parent: str, include_newest: bool = True) -> list[str]:
-    """The streaming ``batch=<id>`` dir names under ``parent``, sorted.
-    ``include_newest=False`` leaves out the newest: a crashed stream
-    replays exactly its last uncommitted micro-batch, and reading that dir
-    while the replay overwrites it races (mode=overwrite deletes its files
-    mid-read). Everything strictly older is safe; the newest becomes safe
-    once a newer batch lands or the stream is stopped."""
-    if not os.path.isdir(parent):
-        return []
-    names = sorted(d for d in os.listdir(parent) if d.startswith("batch="))
-    if names and not include_newest:
-        names.remove(max(names, key=lambda d: int(d.split("=", 1)[1])))
-    return names
 
 
 def lineage_dir(out_dir: str) -> str:

@@ -110,9 +110,3 @@ def parse_document_ex(html: bytes | None, text: str | None
         return fmt, blocks, "ok", None, enc
     except Exception as exc:  # row-level fail-soft (reference indexer.py:114-116)
         return fmt, [], "error", f"{type(exc).__name__}: {exc}", enc
-
-
-def parse_document(html: bytes | None, text: str | None
-                   ) -> tuple[str, list[Block], str, str | None]:
-    """Returns (format, blocks, status, error) — see parse_document_ex."""
-    return parse_document_ex(html, text)[:4]

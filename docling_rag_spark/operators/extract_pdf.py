@@ -360,8 +360,3 @@ def blocks_from_pages(page_texts: list[str]) -> list[Block]:
     """One text block per non-empty page, 1-based page provenance."""
     return [Block("text", t.strip(), page=i + 1)
             for i, t in enumerate(page_texts) if t.strip()]
-
-
-def extract_pdf(data: bytes) -> list[Block]:
-    """Digital-text PDF -> one text block per non-empty page (reading order)."""
-    return blocks_from_pages(read_pdf_pages(data))

@@ -9,19 +9,17 @@ of its Spark-native analog:
     <index>/pq_books.json                    (coarse cells, PQ codebooks,
                                               row schema)
 
-The stream (streaming/embed_index.py) appends the same rows as
-``<delta>/batch=<id>/cell=<c>/`` dirs, and compaction folds them into
-``pq/`` by ``cell``. Only ``build_ann_index`` trains codebooks, on an md5
-sample of its whole input: the first build (the stream's, once its
-embeddings reach ``MIN_TRAIN`` rows), and any rebuild whose input yields a
-larger sample than the books saw, which also re-encodes the deltas. Every
-other writer encodes with the published books, so compaction changes the
-layout, never the answer.
+Only ``build_ann_index`` writes the books. It trains them on an md5
+sample of its whole input when the index has none, or when its input
+yields a larger sample than the published books saw; otherwise it encodes
+with the published books, so a rebuild over the same rows keeps every
+row's cell and codes. The delete cascade (plans/job.py) rewrites ``pq/``
+without re-encoding.
 
 A search (``probe``) computes its probe cells driver-side (the query vector
-is a parameter, not a table row) and reads only those partitions of the
-base table and of every delta, in one job — Catalyst partition pruning,
-visible as ``PartitionFilters`` (plan-audited in tests/test_pq.py and
+is a parameter, not a table row) and reads only those partitions of
+``pq/``, in one job — Catalyst partition pruning, visible as
+``PartitionFilters`` (plan-audited in tests/test_pq.py and
 tests/test_plan_audit.py). ADC over the codes ranks the candidates, and
 the exact cosine reranks the top ``_PQ_RERANK``. On Iceberg the layout is
 an identity partition spec over ``cell``.
@@ -53,10 +51,6 @@ CELL = "cell"
 INDEX_TABLES = {"pq": [CELL]}
 _PQ_PROBES = 4    # cells scanned per query (4× pruning of PQ_COARSE_CELLS)
 _PQ_RERANK = 128  # ADC candidates re-ranked with exact cosine
-# fewest rows the stream trains books on: one sample row per codeword of
-# every cell (k-means caps k at the sample size, so a one-chunk micro-batch
-# would publish one cell and one codeword per subspace)
-MIN_TRAIN = PQ.PQ_COARSE_CELLS * PQ.PQ_K
 
 
 def query_vector(sf_dir: str, vec_id: int):
@@ -157,7 +151,9 @@ def read_books(index_dir: str) -> dict | None:
 def _books(rows, id_cols, side: dict | None) -> dict:
     """The books to encode ``rows`` with: the published ``side``, unless
     ``rows`` yield a larger training sample than it was trained on — then
-    new books trained on that sample.
+    new books trained on that sample. Keeping the published books
+    otherwise is what makes a rebuild over the same rows reproduce every
+    row's cell and codes, and so the same answers.
 
     The sample is bounded and deterministic: the PQ_SAMPLE rows whose
     md5(id) sorts lowest (≈ 1 MiB collected via TakeOrdered, no shuffle).
@@ -186,22 +182,16 @@ def _books(rows, id_cols, side: dict | None) -> dict:
 
 def index_lock(index_dir: str, timeout: float):
     """The lock held by every writer that swaps ``index_dir`` or its
-    tables or writes a delta of it: ``_compaction`` beside it — for a
-    warehouse's ``ann`` index the warehouse's compaction lock, which the
-    stream's compactor and the delete cascade take too."""
+    table: ``_compaction`` beside it — for a warehouse's ``ann`` index the
+    warehouse's compaction lock. Its holders are the build's swap,
+    ``_recover`` and the delete cascade (plans/job.py)."""
     parent = os.path.dirname(os.path.abspath(index_dir))
     return wh.commit_lock(os.path.join(parent, "_compaction"),
                           timeout=timeout, stale_sec=3600.0)
 
 
-def _write_rows(rows, side: dict, id_cols, dest: str) -> None:
-    (_encode(rows, side, id_cols).write.partitionBy(CELL)
-     .mode("overwrite").parquet(dest))
-
-
 def build_ann_index(spark, embeddings_df, out_dir: str,
-                    id_cols: tuple[str, ...] = ("vec_id", "label"),
-                    delta_dir: str | None = None) -> None:
+                    id_cols: tuple[str, ...] = ("vec_id", "label")) -> None:
     """(Re)build the index at ``out_dir`` from ``embeddings_df``, carrying
     ``id_cols`` alongside the vectors (the serving tier indexes by natural
     key (url, chunk_id); the oracle tables by (vec_id, label)).
@@ -214,10 +204,7 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
     add ``.repartition(n, 'cell')`` first) and swaps that dir into place
     under the index lock: a concurrent search sees the old index or the
     new one, never a half-written ``pq/``, and whatever else the old dir
-    held is gone. When the books change, every delta under ``delta_dir``
-    is re-encoded with the new ones under the same lock (a delta's rows
-    need not be in ``embeddings_df``: the stream may have written it after
-    the input was listed)."""
+    held is gone."""
     from pyspark.sql import functions as F
 
     rows = embeddings_df.select(*id_cols, "embedding")
@@ -233,43 +220,14 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
     head, name = os.path.split(os.path.abspath(out_dir))
     tmp = os.path.join(head, f".{name}.build-{uuid.uuid4().hex[:12]}")
     try:
-        _write_rows(rows, side, id_cols, os.path.join(tmp, "pq"))
+        (_encode(rows, side, id_cols).write.partitionBy(CELL)
+         .mode("overwrite").parquet(os.path.join(tmp, "pq")))
         with open(os.path.join(tmp, BOOKS), "w") as f:
             json.dump(side, f)
         with index_lock(out_dir, timeout=60.0):
-            if read_books(tmp) != read_books(out_dir) and delta_dir:
-                for d in wh.batch_dirs(delta_dir):
-                    _reencode(spark, os.path.join(delta_dir, d), side,
-                              id_cols)
             wh.swap_dir(tmp, out_dir)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _reencode(spark, batch: str, side: dict, id_cols) -> None:
-    """Rewrite one delta batch dir with ``side``'s books (dot-named temp
-    dir: readers of the delta root skip it)."""
-    head, name = os.path.split(batch)
-    tmp = os.path.join(head, f".{name}.reencode")
-    shutil.rmtree(tmp, ignore_errors=True)
-    _write_rows(spark.read.parquet(batch), side, id_cols, tmp)
-    wh.swap_dir(tmp, batch)
-
-
-def write_delta(rows, index_dir: str, dest: str,
-                id_cols: tuple[str, ...] = ("url", "chunk_id")) -> bool:
-    """Write ``rows`` as one delta of ``index_dir`` — ``dest/cell=<c>/``
-    in the index's row format, encoded with its books. Holds the index
-    lock, so a rebuild that retrains the books re-encodes every delta it
-    can see. False, writing nothing, when the index has no books yet: the
-    first build trains them (the stream's catch-up build,
-    streaming/embed_index.py)."""
-    with index_lock(index_dir, timeout=600.0):
-        side = read_books(index_dir)
-        if side is None:
-            return False
-        _write_rows(rows, side, id_cols, dest)
-    return True
 
 
 # --- search ------------------------------------------------------------------
@@ -311,66 +269,39 @@ def open_index(index_dir: str) -> dict:
     return side
 
 
-def has_rows(index_dir: str, delta_dir: str | None = None) -> bool:
-    """Whether the base table or a delta batch exists. Books alone hold
-    nothing to search: a delete cascade removes a table none of whose rows
-    survive, and the books stay."""
-    return (os.path.isdir(os.path.join(index_dir, "pq"))
-            or (delta_dir is not None and bool(wh.batch_dirs(delta_dir))))
+def has_rows(index_dir: str) -> bool:
+    """Whether the index table exists. Books alone hold nothing to search:
+    a delete cascade removes a table none of whose rows survive, and the
+    books stay."""
+    return os.path.isdir(os.path.join(index_dir, "pq"))
 
 
-def cell_rows(spark, index_dir: str, side: dict, cells,
-              delta_dir: str | None = None):
-    """The rows of ``cells`` in the base table and every delta batch, read
-    with the sidecar's declared schema (no footer job), each scan
-    partition-pruned to ``cells``. Base and deltas are two scans: Spark's
-    partition discovery needs one root per scan, and ``pq/`` and
-    ``<delta>/batch=<id>/`` are two."""
+def probe(spark, index_dir: str, q_vec, id_cols, k: int, where=None):
+    """Approximate top-``k`` of the index for ``q_vec``: the probe cells'
+    rows, read with the sidecar's declared schema (no footer job) and
+    partition-pruned to those cells, filtered by ``where`` before ranking,
+    ranked by ADC; the top ``_PQ_RERANK`` by (ADC desc, ids) are reranked
+    by exact cosine. Returns ``(id cols, score, pq_score_e6)`` ordered by
+    (floor(score · 1e6) desc, ids) — ``score`` is the exact cosine, ranked
+    at the oracles' micro-unit resolution so near-ties resolve by id.
+    Map-only: scan → project → TakeOrdered(R) → project → TakeOrdered(k).
+    """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    if not has_rows(index_dir, delta_dir):
-        raise FileNotFoundError(f"ANN index {index_dir} has no rows")
-    read = spark.read.schema(
-        T.StructType.fromJson(side["schema"]).add(CELL, T.IntegerType()))
-    parts = []
-    if os.path.isdir(os.path.join(index_dir, "pq")):
-        parts.append(read.parquet(os.path.join(index_dir, "pq")))
-    if delta_dir is not None and wh.batch_dirs(delta_dir):
-        parts.append(read.parquet(delta_dir).drop("batch"))
-    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return rows.filter(F.col(CELL).isin([int(c) for c in cells]))
-
-
-def probe(spark, index_dir: str, q_vec, id_cols, k: int,
-          delta_dir: str | None = None, where=None):
-    """Approximate top-``k`` of the index (plus the deltas under
-    ``delta_dir``) for ``q_vec``: the probe cells' rows, filtered by
-    ``where`` before ranking, ranked by ADC; the top ``_PQ_RERANK`` by
-    (ADC desc, ids) are reranked by exact cosine. Returns ``(id cols,
-    score, pq_score_e6)`` ordered by (floor(score · 1e6) desc, ids) —
-    ``score`` is the exact cosine, ranked at the oracles' micro-unit
-    resolution so near-ties resolve by id. Map-only: scan → project →
-    TakeOrdered(R) → project → TakeOrdered(k).
-
-    A micro-batch replayed after compaction folded it exists twice, in
-    ``pq/`` and as a delta, and no row exists more often. So with deltas
-    present the top 2R rows, deduplicated by full row, hold the same top
-    R the compacted index ranks first."""
-    from pyspark.sql import functions as F
-
     side = open_index(index_dir)
-    rows = cell_rows(spark, index_dir, side,
-                     probe_cells(q_vec, side["coarse"]), delta_dir)
+    if not has_rows(index_dir):
+        raise FileNotFoundError(f"ANN index {index_dir} has no rows")
+    rows = (spark.read.schema(
+        T.StructType.fromJson(side["schema"]).add(CELL, T.IntegerType()))
+        .parquet(os.path.join(index_dir, "pq"))
+        .filter(F.col(CELL).isin(probe_cells(q_vec, side["coarse"]))))
     if where is not None:
         rows = rows.filter(where)
     cand = rows.select(*id_cols, "embedding",
                        F.expr(_adc_sql(q_vec, side["books"]))
                        .alias("pq_score_e6"))
-    order = [F.desc("pq_score_e6"), *id_cols]
-    if delta_dir is not None and wh.batch_dirs(delta_dir):
-        cand = cand.orderBy(*order).limit(2 * _PQ_RERANK).dropDuplicates()
-    cand = cand.orderBy(*order).limit(_PQ_RERANK)
+    cand = cand.orderBy(F.desc("pq_score_e6"), *id_cols).limit(_PQ_RERANK)
     return (cand.select(*id_cols, F.expr(_cosine_sql(q_vec)).alias("score"),
                         "pq_score_e6")
             .orderBy(F.desc(F.floor(F.col("score") * 1000000.0)), *id_cols)

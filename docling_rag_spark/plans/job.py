@@ -48,7 +48,7 @@ from docling_rag_spark.operators.pipeline import (
     extract_documents,
     extracted_table,
 )
-from docling_rag_spark.plans.ann_index import CELL, INDEX_TABLES
+from docling_rag_spark.plans import ann_index as AI
 from docling_rag_spark.session import job_description
 
 
@@ -453,14 +453,6 @@ def _changed_pages(spark, sub: DataFrame, out_dir: str,
     return sub, n_latest - n_changed
 
 
-def read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
-    return wh.read_table(spark, out_dir, "chunks")
-
-
-def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    return wh.read_table(spark, out_dir, "extracted")
-
-
 def embed_warehouse(spark: SparkSession, out_dir: str,
                     num_buckets: int | None = None) -> str:
     """Embed the warehouse's ``chunks`` into ``<out_dir>/embeddings`` and
@@ -487,8 +479,8 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
                                            "embeddings", "registry")) -> dict:
     """Delete documents by url across all warehouse tables (reference
     ``cli delete`` + the documents→chunks FK cascade, db_schema.py:27,
-    cli/commands.py:268-269) — including the registry card table and any
-    streaming-written ``batch=<id>`` layout of the same tables.
+    cli/commands.py:268-269) — including the registry card table and the
+    materialized ANN index.
 
     Iceberg-wise this is ``DELETE FROM t WHERE url IN (...)``; here it is a
     *bucket-local rewrite*: only the url-hash buckets that can contain the
@@ -527,18 +519,9 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
 
     try:
         for table in tables:
-            deleted = _delete_bucketed(spark, out_dir, table, urls_df,
-                                       buckets, num_buckets, staging,
-                                       del_snap)
-            table_dir = os.path.join(out_dir, table)
-            # cascade into a streaming-written batch=<id> layout of the
-            # same table: without it, exact-mode search over streaming
-            # embeddings keeps returning deleted documents forever
-            for d in wh.batch_dirs(table_dir):
-                deleted += _drop_urls(spark, os.path.join(table_dir, d),
-                                      table_dir, (), urls_df, staging,
-                                      f"{table}/{d}")
-            report["rows_deleted"][table] = deleted
+            report["rows_deleted"][table] = _delete_bucketed(
+                spark, out_dir, table, urls_df, buckets, num_buckets,
+                staging, del_snap)
         report["ann_rows_deleted"] = _delete_from_ann(spark, out_dir,
                                                       urls_df, staging)
     finally:
@@ -576,20 +559,20 @@ def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
     return before - kept_n
 
 
-def _drop_urls(spark, target: str, base_path: str, part_cols, urls_df,
-               staging: str, label: str) -> int:
-    """Remove ``urls_df``'s urls from one swap-managed dir (a streaming
-    ``batch=<id>`` dir or an ANN index table): read, anti-join, then swap
-    in the rewrite via the recoverable two-rename protocol — or remove the
-    dir outright when no row survives (a zero-row partitionBy write leaves
-    a file-less dir whose later reads fail schema inference; readers treat
-    a missing dir as empty). ``part_cols`` are the rewrite's partition
-    columns. Returns rows removed; 0 when the dir is absent or has no url
-    column (an index keyed by vec_id, e.g. an oracle-table build)."""
+def _drop_urls(spark, target: str, part_cols, urls_df, staging: str,
+               label: str) -> int:
+    """Remove ``urls_df``'s urls from one swap-managed dir (an ANN index
+    table): read, anti-join, then swap in the rewrite via the recoverable
+    two-rename protocol — or remove the dir outright when no row survives
+    (a zero-row partitionBy write leaves a file-less dir whose later reads
+    fail schema inference; readers treat a missing dir as empty).
+    ``part_cols`` are the rewrite's partition columns. Returns rows
+    removed; 0 when the dir is absent or has no url column (an index keyed
+    by vec_id, e.g. an oracle-table build)."""
     wh.recover_swap(target)
     if not os.path.isdir(target):
         return 0
-    df = spark.read.option("basePath", base_path).parquet(target)
+    df = spark.read.parquet(target)
     if "url" not in df.columns:
         return 0
     before = df.count()
@@ -605,7 +588,7 @@ def _drop_urls(spark, target: str, base_path: str, part_cols, urls_df,
         return before
     tmp = os.path.join(staging, name)
     shutil.rmtree(tmp, ignore_errors=True)
-    writer = kept.drop("batch").write.mode("overwrite")
+    writer = kept.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(tmp)
@@ -615,31 +598,22 @@ def _drop_urls(spark, target: str, base_path: str, part_cols, urls_df,
 
 def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
                      staging: str) -> dict:
-    """Cascade a url delete into the materialized ANN index (and streaming
-    deltas): a stale index would keep ranking chunks of deleted documents
-    in mode=auto/ann searches. The base table gets a whole-table rewrite
-    (a url predicate does not align with the cell partitioning — the
-    same shape Iceberg's DELETE takes on a non-partition predicate);
-    streaming deltas are rewritten per snapshotted ``batch=<id>`` dir so a
-    concurrently running stream's NEW batches are never touched. The whole
-    cascade holds the compaction lock — a compactor staging its merge from
-    the pre-delete base would otherwise resurrect the deleted vectors when
-    it swaps."""
+    """Cascade a url delete into the materialized ANN index: a stale index
+    would keep ranking chunks of deleted documents in mode=auto/ann
+    searches. Each index table gets a whole-table rewrite (a url predicate
+    does not align with the cell partitioning — the same shape Iceberg's
+    DELETE takes on a non-partition predicate). The whole cascade holds
+    the index lock, so its swap never interleaves with a build's swap or
+    a crash recovery of the same dirs."""
     removed: dict[str, int] = {}
     ann_root = os.path.join(out_dir, "ann")
-    delta_root = os.path.join(out_dir, "ann_delta")
-    if not (os.path.isdir(ann_root) or os.path.isdir(delta_root)):
+    if not os.path.isdir(ann_root):
         return removed
-    with wh.commit_lock(os.path.join(out_dir, "_compaction"),
-                        timeout=60.0, stale_sec=3600.0):
-        targets = [(os.path.join(ann_root, sub), os.path.join(ann_root, sub),
-                    part_cols, f"ann/{sub}")
-                   for sub, part_cols in INDEX_TABLES.items()]
-        targets += [(os.path.join(delta_root, d), delta_root, [CELL],
-                     f"ann_delta/{d}") for d in wh.batch_dirs(delta_root)]
-        for target, base_path, part_cols, label in targets:
-            n = _drop_urls(spark, target, base_path, part_cols, urls_df,
-                           staging, label)
+    with AI.index_lock(ann_root, timeout=60.0):
+        for sub, part_cols in AI.INDEX_TABLES.items():
+            label = f"ann/{sub}"
+            n = _drop_urls(spark, os.path.join(ann_root, sub), part_cols,
+                           urls_df, staging, label)
             if n:
                 removed[label] = n
     return removed

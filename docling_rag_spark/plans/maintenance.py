@@ -40,8 +40,8 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
     warehouse spec (Iceberg partition-spec evolution + data-file rewrite).
 
     Runs under the compaction lock for its whole duration (serialized
-    against fold/compact/delete) and commits under the commit lock with
-    optimistic-concurrency validation and lineage rows, so a concurrent
+    against delete and ANN index swaps) and commits under the commit lock
+    with optimistic-concurrency validation and lineage rows, so a concurrent
     extraction job sees it exactly like any newer snapshot commit and
     aborts instead of committing at the dead modulus. With retention on,
     every displaced and retired bucket dir parks under the rebucket
@@ -84,11 +84,6 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
         try:
             for t in present:
                 table_dir = os.path.join(out_dir, t)
-                if wh.batch_dirs(table_dir):
-                    raise RuntimeError(
-                        f"table {t!r} has unfolded streaming batch dirs; "
-                        "run `scripts/snapshots_cli.py fold` before "
-                        "rebucketing")
                 stale[t] = sorted(
                     int(e.split("=", 1)[1])
                     for e in os.listdir(table_dir)

@@ -91,8 +91,8 @@ _HEX60_SQL = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 
 def content_hash_col(col):
     """Canonical content hash: whitespace-collapsed lowercase md5 — ONE
-    definition shared by every exact-dedup variant AND the streaming
-    ingest bridge (a drifted copy would silently split their hash
+    definition shared by every exact-dedup variant AND curation's
+    exact-dedup gate (a drifted copy would silently split their hash
     spaces)."""
     return F.md5(F.regexp_replace(F.trim(F.lower(col)), r"\s+", " "))
 

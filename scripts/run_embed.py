@@ -50,8 +50,7 @@ def main() -> int:
         from docling_rag_spark.plans.ann_index import build_ann_index
         emb = spark.read.parquet(emb_dir)
         build_ann_index(spark, emb, os.path.join(args.warehouse, "ann"),
-                        id_cols=("url", "chunk_id"),
-                        delta_dir=os.path.join(args.warehouse, "ann_delta"))
+                        id_cols=("url", "chunk_id"))
         out["ann_index"] = os.path.join(args.warehouse, "ann")
     dt = time.time() - t0
     out.update(elapsed_sec=round(dt, 2), chunks_per_sec=round(n / dt, 2))

@@ -12,16 +12,13 @@ Usage:
     python scripts/snapshots_cli.py drop-column --out <wh> --table extracted \
         --column <name>
     python scripts/snapshots_cli.py rebucket --out <wh> --to <N>
-    python scripts/snapshots_cli.py fold     --out <wh>
 
 The Iceberg analogs: snapshot metadata listing, ``SELECT ... FOR
 TIMESTAMP AS OF``, ``rollback_to_timestamp``, ``expire_snapshots``,
 ``DESCRIBE TABLE``, ``ALTER TABLE ... DROP COLUMN`` (metadata-only;
-data files are cleaned up by later bucket rewrites), partition-spec
-evolution + ``rewrite_data_files`` (rebucket), and ``MERGE INTO`` of the
-streaming ``chunks/batch=<id>`` dirs into the bucketed table (fold; the
-newest batch dir stays, since a running stream may still replay it).
-Prints one JSON line per invocation.
+data files are cleaned up by later bucket rewrites), and partition-spec
+evolution + ``rewrite_data_files`` (rebucket). Prints one JSON line per
+invocation.
 """
 
 from __future__ import annotations
@@ -46,8 +43,7 @@ def _spark(app_name: str, cores: int):
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("cmd", choices=("log", "read", "rollback", "expire",
-                                    "schema", "drop-column", "rebucket",
-                                    "fold"))
+                                    "schema", "drop-column", "rebucket"))
     ap.add_argument("--out", required=True)
     ap.add_argument("--table", default="extracted")
     ap.add_argument("--column", default=None)
@@ -109,13 +105,6 @@ def main() -> int:
 
         print(json.dumps(rebucket_warehouse(_spark("rebucket", args.cores),
                                             args.out, args.to)))
-        return 0
-
-    if args.cmd == "fold":
-        from docling_rag_spark.streaming.fold import fold_stream_chunks
-
-        print(json.dumps(fold_stream_chunks(_spark("fold", args.cores),
-                                            args.out)))
         return 0
 
     if args.cmd == "expire":

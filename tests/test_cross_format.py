@@ -6,7 +6,7 @@ output for simple heading/paragraph/code content)."""
 from __future__ import annotations
 
 from docling_rag_spark.operators.blocks import chunk_blocks
-from docling_rag_spark.operators.dispatch import parse_document
+from docling_rag_spark.operators.dispatch import parse_document_ex
 from docling_rag_spark.operators.extract_docx import build_docx
 
 H1 = "Pipeline Overview"
@@ -25,7 +25,7 @@ DOCX = build_docx([
 
 
 def _extract(payload: bytes):
-    fmt, blocks, status, err = parse_document(payload, None)
+    fmt, blocks, status, err = parse_document_ex(payload, None)[:4]
     assert status == "ok", (fmt, err)
     return fmt, chunk_blocks(blocks)
 

@@ -181,9 +181,9 @@ def test_delete_is_visible_to_extraction_conflict_check(spark, tmp_path):
                        num_buckets=8)
 
 
-def test_delete_cascades_into_registry_and_stream_batches(spark, tmp_path):
-    """The cascade covers the registry card table AND streaming-written
-    batch=<id> layouts: deleted documents must vanish from both."""
+def test_delete_cascades_into_registry(spark, tmp_path):
+    """The cascade covers the registry card table: a deleted document's
+    card must vanish with its rows."""
     import pandas as pd
 
     from docling_rag_spark.plans.registry import upsert_registry_table
@@ -202,44 +202,22 @@ def test_delete_cascades_into_registry_and_stream_batches(spark, tmp_path):
                           "title": ["vic", "sur"]})),
         num_buckets=8)
 
-    # streaming-layout embeddings: batch dirs keyed by url
-    emb_batch = os.path.join(out, "embeddings", "batch=0")
-    os.makedirs(os.path.dirname(emb_batch), exist_ok=True)
-    spark.createDataFrame(
-        pd.DataFrame({"url": [victim, survivor], "chunk_id": [0, 0],
-                      "embedding": [[0.1, 0.2], [0.3, 0.4]]})) \
-        .write.mode("overwrite").parquet(emb_batch)
-
     report = delete_urls(spark, out, [victim], num_buckets=8)
     reg = spark.read.parquet(os.path.join(out, "registry"))
     assert {r["url"] for r in reg.select("url").collect()} == {survivor}
-    emb = spark.read.parquet(os.path.join(out, "embeddings"))
-    assert {r["url"] for r in emb.select("url").collect()} == {survivor}
     assert report["rows_deleted"]["registry"] == 1
-    assert report["rows_deleted"]["embeddings"] == 1
 
 
 def test_delete_full_wipe_leaves_readable_state(spark, tmp_path):
-    """Deleting every url must not leave file-less dirs that break later
-    schema inference (empty batch dirs / ANN dirs are removed)."""
-    import pandas as pd
-
+    """Deleting every url that has chunks leaves the chunks table readable
+    and empty, not file-less dirs that break later schema inference."""
     pages = str(tmp_path / "pages.parquet")
     out = str(tmp_path / "wh")
     write_pages_parquet(pages, 30)
     run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
     urls = sorted(_chunk_urls(spark, out))
 
-    emb_batch = os.path.join(out, "embeddings", "batch=0")
-    os.makedirs(os.path.dirname(emb_batch), exist_ok=True)
-    spark.createDataFrame(
-        pd.DataFrame({"url": urls[:2], "chunk_id": [0, 0],
-                      "embedding": [[0.1], [0.2]]})) \
-        .write.mode("overwrite").parquet(emb_batch)
-
     delete_urls(spark, out, urls, num_buckets=8)
-    # batch dir fully wiped -> removed, not left file-less
-    assert not os.path.isdir(emb_batch)
     chunks = spark.read.parquet(os.path.join(out, "chunks"))
     assert chunks.count() == 0
 

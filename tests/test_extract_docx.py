@@ -5,7 +5,7 @@ dispatch sniffing, and end-to-end chunking."""
 from __future__ import annotations
 
 from docling_rag_spark.operators.blocks import chunk_blocks
-from docling_rag_spark.operators.dispatch import parse_document, sniff_format
+from docling_rag_spark.operators.dispatch import parse_document_ex, sniff_format
 from docling_rag_spark.operators.extract_docx import build_docx, extract_docx
 
 DOC_ITEMS = [
@@ -35,7 +35,7 @@ def test_extract_docx_blocks():
 def test_docx_dispatch_and_chunking():
     payload = build_docx(DOC_ITEMS)
     assert sniff_format(payload, None) == "docx"
-    fmt, blocks, status, err = parse_document(payload, None)
+    fmt, blocks, status, err = parse_document_ex(payload, None)[:4]
     assert (fmt, status, err) == ("docx", "ok", None)
     extracted, chunks = chunk_blocks(blocks)
     # table and code are atomic chunks; heading path propagates
@@ -57,7 +57,7 @@ def test_docx_corrupt_fail_soft():
     if b"word/document.xml" not in truncated:
         truncated = truncated + b"word/document.xml"
     assert sniff_format(truncated, None) == "docx"
-    fmt, blocks, status, err = parse_document(truncated, None)
+    fmt, blocks, status, err = parse_document_ex(truncated, None)[:4]
     assert (fmt, status, blocks) == ("docx", "error", [])
     assert err
 
@@ -66,7 +66,7 @@ def test_docx_zip_bomb_capped(monkeypatch):
     import docling_rag_spark.operators.extract_docx as D
     monkeypatch.setattr(D, "MAX_DOCUMENT_XML_BYTES", 64)
     payload = build_docx(DOC_ITEMS)  # document.xml is well over 64 bytes
-    fmt, blocks, status, err = parse_document(payload, None)
+    fmt, blocks, status, err = parse_document_ex(payload, None)[:4]
     assert (fmt, status) == ("docx", "error")
     assert "refusing decompression" in err
 

@@ -1,8 +1,8 @@
 """Detector matrix mirrors reference tests/core/test_parser.py:49-92."""
 
 from docling_rag_spark.operators.extract_pdf import (
+    blocks_from_pages,
     detect_text_layer,
-    extract_pdf,
     read_pdf_pages,
 )
 from docling_rag_spark.sources.fixtures import build_scan_pdf, build_text_pdf
@@ -61,7 +61,7 @@ def test_flate_compressed_stream():
 
 def test_extract_blocks_pages_and_provenance():
     pdf = build_text_pdf(["first page body", "", "third page body"])
-    blocks = extract_pdf(pdf)
+    blocks = blocks_from_pages(read_pdf_pages(pdf))
     assert [(b.page, b.text) for b in blocks] == [
         (1, "first page body"),
         (3, "third page body"),

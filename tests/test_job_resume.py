@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
-from docling_rag_spark.plans.job import read_chunks, read_extracted, run_extraction
+from docling_rag_spark.plans.job import run_extraction
 from docling_rag_spark.sources.pages import write_pages_parquet
 
 N_DOCS = 60
@@ -34,8 +34,9 @@ def test_full_run_and_lineage(spark, pages_path, tmp_path):
     assert {r["bucket"] for r in rows} == set(range(N_BUCKETS))
     assert sum(r["doc_count"] for r in rows) == N_DOCS
     # tables readable, chunk totals agree with lineage
-    assert read_extracted(spark, out).count() == N_DOCS
-    assert read_chunks(spark, out).count() == sum(r["chunk_count"] for r in rows)
+    assert wh.read_table(spark, out, "extracted").count() == N_DOCS
+    assert (wh.read_table(spark, out, "chunks").count()
+            == sum(r["chunk_count"] for r in rows))
     # lineage as DataFrame (metrics surface)
     ldf = wh.lineage_df(spark, out)
     assert ldf.agg(F.sum("doc_count")).first()[0] == N_DOCS
@@ -44,11 +45,12 @@ def test_full_run_and_lineage(spark, pages_path, tmp_path):
 def test_rerun_is_noop_idempotent(spark, pages_path, tmp_path):
     out = str(tmp_path / "wh")
     run_extraction(spark, pages_path, out, num_buckets=N_BUCKETS, salt_partitions=4)
-    before = read_chunks(spark, out).count()
+    before = wh.read_table(spark, out, "chunks").count()
     report2 = run_extraction(spark, pages_path, out,
                              num_buckets=N_BUCKETS, salt_partitions=4)
     assert report2.buckets_skipped == N_BUCKETS and report2.buckets_done == 0
-    assert read_chunks(spark, out).count() == before  # no duplicates (D1)
+    # no duplicates (D1)
+    assert wh.read_table(spark, out, "chunks").count() == before
 
 
 def test_crash_then_resume_completes(spark, pages_path, tmp_path):
@@ -66,21 +68,22 @@ def test_crash_then_resume_completes(spark, pages_path, tmp_path):
     # resumed output identical to a clean full run
     out2 = str(tmp_path / "wh2")
     run_extraction(spark, pages_path, out2, num_buckets=N_BUCKETS, salt_partitions=4)
-    a = {(r.url, r.chunk_id, r.text) for r in
-         read_chunks(spark, out).select("url", "chunk_id", "text").collect()}
-    b = {(r.url, r.chunk_id, r.text) for r in
-         read_chunks(spark, out2).select("url", "chunk_id", "text").collect()}
+    a, b = ({(r.url, r.chunk_id, r.text) for r in
+             wh.read_table(spark, d, "chunks")
+             .select("url", "chunk_id", "text").collect()}
+            for d in (out, out2))
     assert a == b and len(a) > 0
 
 
 def test_new_snapshot_overwrites_buckets(spark, pages_path, tmp_path):
     out = str(tmp_path / "wh")
     run_extraction(spark, pages_path, out, num_buckets=N_BUCKETS, salt_partitions=4)
-    n1 = read_chunks(spark, out).count()
+    n1 = wh.read_table(spark, out, "chunks").count()
     report = run_extraction(spark, pages_path, out, snapshot_id="snap-1",
                             num_buckets=N_BUCKETS, salt_partitions=4)
     assert report.buckets_done == N_BUCKETS  # new snapshot redoes all buckets
-    assert read_chunks(spark, out).count() == n1  # overwrite, not append
+    # overwrite, not append
+    assert wh.read_table(spark, out, "chunks").count() == n1
 
 
 def test_staging_cleaned(spark, pages_path, tmp_path):

@@ -83,18 +83,15 @@ def _one_sorted_file_per_bucket(table_dir: str, key: tuple[str, ...]) -> int:
 
 
 @pytest.mark.parametrize("writer", ["extraction", "delete", "registry",
-                                    "fold", "rebucket"])
+                                    "rebucket"])
 def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
         spark, tmp_path, writer):
     """Every bucket writer stages through the one rewrite path, so each
     leaves exactly one (bucket, natural key)-sorted file per bucket."""
-    from pyspark.sql import functions as F
-
     from docling_rag_spark.io import warehouse as wh
     from docling_rag_spark.plans.job import delete_urls
     from docling_rag_spark.plans.maintenance import rebucket_warehouse
     from docling_rag_spark.plans.registry import upsert_registry_table
-    from docling_rag_spark.streaming.fold import fold_stream_chunks
 
     p = str(tmp_path / "p.parquet")
     pq.write_table(pa.Table.from_pandas(generate_pages(60, seed=78),
@@ -115,13 +112,6 @@ def test_every_bucket_writer_leaves_one_sorted_file_per_bucket(
             "url string, title string, author string, topic string, "
             "tags array<string>, lang string, n_chunks bigint, "
             "added_at timestamp"))
-    elif writer == "fold":
-        chunks = wh.read_table(spark, out, "chunks").drop("bucket")
-        (chunks.filter(F.col("url").isin(urls[::3]))
-         .withColumn("text", F.concat(F.col("text"), F.lit(" (restreamed)")))
-         .write.parquet(os.path.join(out, "chunks", "batch=0")))
-        assert fold_stream_chunks(spark, out, include_newest=True)[
-            "rows_folded"] > 0
     elif writer == "rebucket":
         assert rebucket_warehouse(spark, out, 8)["rebucketed"]
     assert _one_sorted_file_per_bucket(os.path.join(out, table), key) > 0

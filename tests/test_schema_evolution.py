@@ -30,7 +30,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from docling_rag_spark.io import warehouse as wh
-from docling_rag_spark.plans.job import read_extracted, run_extraction
+from docling_rag_spark.plans.job import run_extraction
 from docling_rag_spark.sources.pages import PAGES_ARROW_SCHEMA, generate_pages
 
 N_BUCKETS = 8
@@ -100,7 +100,7 @@ def upgraded(spark, tmp_path_factory):
 
 def test_upgrade_merge_adds_column_as_null(spark, upgraded):
     out, base, changed_urls = upgraded
-    df = read_extracted(spark, out)
+    df = wh.read_table(spark, out, "extracted")
     assert "encoding" in df.columns
     rows = {r["url"]: r["encoding"]
             for r in df.select("url", "encoding").collect()}
@@ -165,7 +165,7 @@ def test_delete_rewrite_keeps_added_column(spark, upgraded):
     victim = next(u for u in base["url"] if "/page/" in u
                   and u not in set(changed_urls))
     delete_urls(spark, out, [victim], num_buckets=N_BUCKETS)
-    df = read_extracted(spark, out)
+    df = wh.read_table(spark, out, "extracted")
     assert df.filter(df.url == victim).count() == 0
     assert "encoding" in df.columns
     # the rewritten bucket's files now physically carry the column
@@ -247,9 +247,9 @@ def test_unpinned_warehouse_falls_back(spark, tmp_path):
     out = str(tmp_path / "wh")
     run_extraction(spark, p, out, num_buckets=4, salt_partitions=2)
     import shutil
-    pinned_count = read_extracted(spark, out).count()
+    pinned_count = wh.read_table(spark, out, "extracted").count()
     shutil.rmtree(os.path.join(out, "_schema"))
-    df = read_extracted(spark, out)
+    df = wh.read_table(spark, out, "extracted")
     assert df.count() == pinned_count
     assert "extracted_text" in df.columns
 
@@ -288,6 +288,7 @@ def test_pinned_schemas_are_all_nullable(spark, tmp_path):
         assert pinned is not None and _non_nullable(pinned) == [], table
     assert "span" in wh.pinned_table_schema(out, "chunks").names
 
-    victim = read_extracted(spark, out).select("url").first()["url"]
+    victim = (wh.read_table(spark, out, "extracted")
+              .select("url").first()["url"])
     report = delete_urls(spark, out, [victim])
     assert report["rows_deleted"]["extracted"] == 1

@@ -1,6 +1,4 @@
-import pandas as pd
-
-from docling_rag_spark.functions.tokens import count_tokens, count_tokens_series, token_spans
+from docling_rag_spark.functions.tokens import count_tokens, token_spans
 
 
 def test_empty():
@@ -21,12 +19,6 @@ def test_long_word_splits_bpe_ish():
 
 def test_unicode():
     assert count_tokens("схема звезда") == 2
-
-
-def test_series_matches_scalar():
-    texts = ["the quick fox.", "", "a" * 17, "схема звезда", None]
-    s = count_tokens_series(pd.Series(texts))
-    assert list(s) == [count_tokens(t or "") for t in texts]
 
 
 def test_spans_cover_tokens():
