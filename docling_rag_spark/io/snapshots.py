@@ -48,9 +48,9 @@ It is also the one commit path of every copy-on-write bucket rewrite:
 installs the staged buckets through ``commit_buckets_retained`` and
 appends lineage, all under the commit lock. Extraction (overwrite and
 merge), deletes and registry upserts call it (staged by
-``warehouse.stage_buckets`` or, for extraction, the job's own derived
-writes), so every warehouse policy — retention, spec and schema pinning
-— applies to each of them by construction. Only rebucket (a new
+``warehouse.write_bucket_files``, for extraction inside the parse task),
+so every warehouse policy — retention, spec and schema pinning —
+applies to each of them by construction. Only rebucket (a new
 layout for every bucket) and rollback (copies of retained versions)
 commit on their own.
 
@@ -236,11 +236,13 @@ def retention_enabled(out_dir: str) -> bool:
 
 def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
                             buckets: list[int], commit_tag: str,
-                            committed_at: float, *, force: bool = False,
+                            committed_at: float, *,
+                            files: dict[int, set[str]], force: bool = False,
                             commit_id: str | None = None) -> str | None:
     """``warehouse.commit_buckets`` honoring warehouse-level retention —
     the one entry point that installs staged buckets (``commit_rewrite``
-    and rebucket call it inside the commit lock). When retention is off
+    and rebucket call it inside the commit lock), ``files`` being the
+    writer's manifest of them. When retention is off
     (and ``force`` is False) this is exactly ``commit_buckets``;
     when on, the displaced dirs are parked and logged under the commit id
     (returned). ``force`` turns retention on for a warehouse that has
@@ -255,7 +257,7 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
     table_dir = os.path.join(out_dir, table)
     enabled = force or retention_enabled(out_dir)
     if not enabled:
-        commit_buckets(staging_table_dir, table_dir, buckets)
+        commit_buckets(staging_table_dir, table_dir, buckets, files)
         return None
     commit_id = commit_id or f"{commit_tag}-{uuid.uuid4().hex[:12]}"
     planned = [
@@ -267,7 +269,7 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
     if not planned:
         return None  # nothing staged for these buckets
     intent = _write_intent(out_dir, commit_id, planned)
-    commit_buckets(staging_table_dir, table_dir, buckets,
+    commit_buckets(staging_table_dir, table_dir, buckets, files,
                    retain_to=retained_dir(out_dir, table, commit_id))
     _finalize_intent(out_dir, intent, commit_id)
     return commit_id
@@ -275,7 +277,7 @@ def commit_buckets_retained(out_dir: str, staging_table_dir: str, table: str,
 
 def commit_rewrite(out_dir: str, staged: dict, buckets: list[int],
                    num_buckets: int, snapshot_id: str, *, conflicts,
-                   lineage: dict | None = None,
+                   manifest: list[dict], lineage: dict | None = None,
                    started_at: float | None = None, force: bool = False,
                    commit_id: str | None = None) -> list[dict]:
     """Commit a copy-on-write rewrite of ``buckets`` — the one commit
@@ -283,7 +285,9 @@ def commit_rewrite(out_dir: str, staged: dict, buckets: list[int],
     MERGE and DELETE all end in).
 
     ``staged`` maps each table to ``(staging table dir, staged Spark
-    schema)``. Under the commit lock, in order:
+    schema)``; only the staged files ``manifest`` lists
+    (``warehouse.write_bucket_files`` rows) are installed. Under the
+    commit lock, in order:
 
       1. ``conflicts()`` — the writer's optimistic-concurrency validation,
          returning the buckets whose committed state moved since it read
@@ -307,9 +311,10 @@ def commit_rewrite(out_dir: str, staged: dict, buckets: list[int],
         wh.pin_num_buckets(out_dir, num_buckets)
         for table, (staging_table_dir, schema) in staged.items():
             wh.pin_table_schema(out_dir, table, schema)
-            commit_buckets_retained(out_dir, staging_table_dir, table,
-                                    buckets, snapshot_id, ts, force=force,
-                                    commit_id=commit_id)
+            commit_buckets_retained(
+                out_dir, staging_table_dir, table, buckets, snapshot_id, ts,
+                files=wh.manifest_files(manifest, table), force=force,
+                commit_id=commit_id)
         if lineage is None:
             return []
         rows = [{"input_snapshot_id": snapshot_id, "bucket": b,

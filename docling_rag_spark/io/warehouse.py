@@ -7,10 +7,13 @@ layer over partitioned parquet:
   * **bucket partitioning**: every output table is laid out as
     ``<table>/bucket=<k>/part-*.parquet`` with ``k = pmod(xxhash64(url), N)``
     — the moral equivalent of Iceberg ``bucket(N, url)``;
-  * **atomic bucket commit**: a batch is written to a staging directory and
-    moved bucket-directory-at-a-time with ``os.replace``-style renames —
-    write-temp-then-atomic-commit (the reference's upload pattern,
-    api/app.py:232-252, and an Iceberg snapshot commit in miniature);
+  * **atomic bucket commit**: a batch is written to a staging directory by
+    the Spark tasks themselves (``write_bucket_files``, one file per
+    bucket per task and a manifest row per file) and moved
+    bucket-directory-at-a-time with ``os.replace``-style renames, only the
+    manifest's files installed — write-temp-then-atomic-commit (the
+    reference's upload pattern, api/app.py:232-252, and an Iceberg
+    snapshot commit in miniature);
   * **dynamic partition overwrite**: re-committing a bucket replaces its
     directory wholesale — the delete-then-insert idempotent-reindex contract
     (reference core/indexer.py:100-101, D1/S6);
@@ -169,6 +172,15 @@ class commit_lock:
             pass
 
 
+def compaction_lock(out_dir: str, timeout: float) -> commit_lock:
+    """The warehouse's compaction lock (``<out>/_compaction``): held for
+    a whole rebucket and around every swap of the ANN index dir (see
+    ``plans/ann_index.index_lock``). Its holders run long Spark work, so
+    an abandoned lock is only stolen after an hour."""
+    return commit_lock(os.path.join(out_dir, "_compaction"),
+                       timeout=timeout, stale_sec=3600.0)
+
+
 def _swap_old_dir(final_dir: str) -> str:
     """Parking name for the displaced dir during a swap: DOT-prefixed so a
     crash never leaves a sibling that Spark partition discovery would
@@ -223,9 +235,12 @@ def conflicting_buckets(out_dir: str, snapshot_id: str, buckets: list[int],
 
 
 def commit_buckets(staging_table_dir: str, final_table_dir: str,
-                   buckets: list[int],
+                   buckets: list[int], files: dict[int, set[str]],
                    retain_to: str | None = None) -> list[tuple[int, bool]]:
     """Move staged bucket directories into the table, replacing old ones.
+    Only the staged files ``files`` lists for a bucket (its writer's
+    manifest, see ``manifest_files``) are installed: any other file in
+    the staged dir, e.g. a failed task attempt's, is removed first.
 
     Replaced dirs are parked under a DOT-prefixed name before deletion:
     Spark/Hadoop file listing ignores hidden paths, so a crash between the
@@ -249,6 +264,9 @@ def commit_buckets(staging_table_dir: str, final_table_dir: str,
         dst = bucket_dir(final_table_dir, b)
         if not os.path.isdir(src):
             continue  # bucket had no rows in this batch
+        for f in os.listdir(src):
+            if f not in files.get(b, ()):
+                os.unlink(os.path.join(src, f))
         had_prev = os.path.isdir(dst)
         if had_prev:
             if retain_to is not None:
@@ -282,24 +300,6 @@ def read_buckets(spark, out_dir: str, table: str, buckets: list[int]):
     return reader.parquet(*dirs)
 
 
-def parquet_rows(d: str) -> int:
-    """Rows of every parquet file under ``d``, from footers alone (no
-    Spark job re-executing the plan that wrote them)."""
-    return sum(pq.ParquetFile(os.path.join(root, fn)).metadata.num_rows
-               for root, _dirs, files in os.walk(d)
-               for fn in files if fn.endswith(".parquet"))
-
-
-def pin_empty_bucket(table_dir: str, bucket: int, schema: pa.Schema) -> None:
-    """Pin a table's schema with one zero-row parquet file (what an
-    Iceberg table keeps in metadata): a table of only file-less bucket
-    dirs fails schema inference on every later read."""
-    d = bucket_dir(table_dir, bucket)
-    os.makedirs(d, exist_ok=True)
-    pq.write_table(schema.empty_table(),
-                   os.path.join(d, "part-00000-empty.parquet"))
-
-
 def route_buckets(df, buckets: list[int], partitions: int):
     """``df`` (rows of ``buckets`` only, ``bucket`` and ``url`` columns
     included) in ``partitions`` shuffle partitions: the routing every
@@ -307,8 +307,8 @@ def route_buckets(df, buckets: list[int], partitions: int):
 
     With at least ``partitions`` buckets, each bucket lands whole in one
     partition, ``buckets[i]`` in partition ``i mod partitions``, so no
-    task holds more than ceil(n/partitions) buckets and a
-    ``partitionBy("bucket")`` write emits one file per bucket.
+    task holds more than ceil(n/partitions) buckets and the staged write
+    (``write_bucket_files``) emits one file per bucket.
     ``repartitionById`` takes the partition id as a column: no sampling
     job (range partitioning scans the input once more per call) and no
     hash scatter (which leaves ~1/e of the slots empty and stacks 3-4
@@ -327,35 +327,182 @@ def route_buckets(df, buckets: list[int], partitions: int):
         partitions, F.element_at(F.lit(slots), F.col("bucket") + 1))
 
 
-def stage_buckets(df, staging_table_dir: str, table: str,
-                  buckets: list[int]) -> int:
-    """Stage the new content of ``buckets`` for ``snapshots.commit_rewrite``
-    and return its row count. ``df`` holds exactly those buckets' rows,
-    ``bucket`` column included.
+# --- the task-side bucket writer ---------------------------------------------
+#
+# Staged bucket files are written by pyarrow inside the Spark task that
+# computed their rows, not by Spark's Hadoop writer: no separate write job,
+# no ``.crc`` sidecars, and no ``chmod`` fork per file, sidecar and dir
+# (Hadoop's local file system without libhadoop). The files read like
+# Spark's: INT96 timestamps, zstd level 3, no Arrow schema in the footer,
+# every column optional, min/max statistics on every column. The task
+# returns a manifest row per file and the commit installs only listed
+# files; names carry the partition and task attempt ids, so a failed or
+# speculative attempt's file never reaches a table.
 
-    One task per bucket (``route_buckets``), sorted by the table's
-    natural key within it, so each bucket lands as one url-sorted file:
+_PARQUET_OPTS = {"compression": "zstd", "compression_level": 3,
+                 "use_deprecated_int96_timestamps": True,
+                 "store_schema": False}
+# rows are buffered per file and written as one row group once they reach
+# parquet-mr's default block size: a bucket file holds one row group, as
+# Spark's does
+ROW_GROUP_BYTES = 128 << 20
+
+MANIFEST_ARROW_SCHEMA = pa.schema([
+    ("table", pa.string()), ("bucket", pa.int32()), ("file", pa.string()),
+    ("rows", pa.int64()), ("failures", pa.int64())])
+MANIFEST_DDL = "table string, bucket int, file string, rows long, failures long"
+
+
+def _optional(t: pa.DataType) -> pa.DataType:
+    """``t`` with every nested field nullable (Spark writes all optional)."""
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _optional(f.type)) for f in t])
+    if pa.types.is_list(t):
+        return pa.list_(_optional(t.value_type))
+    return t
+
+
+class _BucketFile:
+    """One staged parquet file: rows buffered, sorted by the table's key
+    (stable: duplicate keys keep their arrival order) and written as a
+    row group once they reach ``ROW_GROUP_BYTES``."""
+
+    def __init__(self, path: str, schema: pa.Schema, keys):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        self.schema = pa.schema([pa.field(f.name, _optional(f.type))
+                                 for f in schema])
+        self.writer = pq.ParquetWriter(path, self.schema, **_PARQUET_OPTS)
+        self.sort = [(k, "ascending") for k in keys]
+        self.pending, self.rows, self.failures = [], 0, 0
+
+    def add(self, rows: pa.Table, failures: int) -> None:
+        self.pending.append(rows)
+        self.rows += rows.num_rows
+        self.failures += failures
+        if sum(t.nbytes for t in self.pending) >= ROW_GROUP_BYTES:
+            self.flush()
+
+    def flush(self) -> None:
+        if self.pending:
+            self.writer.write_table(pa.concat_tables(self.pending)
+                                    .cast(self.schema).sort_by(self.sort))
+            self.pending = []
+
+    def close(self) -> None:
+        self.flush()
+        self.writer.close()
+
+
+def bucket_slices(batches):
+    """``(bucket, rows)`` runs of a stream of Arrow batches sorted by
+    ``bucket``, the column dropped: a file's bucket is its dir."""
+    import numpy as np
+
+    for rb in batches:
+        if not rb.num_rows:
+            continue
+        b = rb.column("bucket").to_numpy()
+        rows = pa.Table.from_batches([rb.drop_columns(["bucket"])])
+        cuts = [0, *(np.flatnonzero(b[1:] != b[:-1]) + 1), len(b)]
+        for s, e in zip(cuts, cuts[1:]):
+            yield int(b[s]), rows.slice(s, e - s)
+
+
+def write_bucket_files(slices, dirs: dict[str, str]):
+    """Write one task's staged tables. ``slices`` yields ``(bucket, table,
+    rows, failures)`` in bucket order; ``dirs`` maps each table to its
+    staging dir. One file per (table, bucket) of the task, closed when the
+    next bucket starts. Yields the manifest as an Arrow batch of
+    ``(table, bucket, file, rows, failures)`` rows (``mapInArrow`` output;
+    runs on the executor)."""
+    from pyspark import TaskContext
+
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.zstd.parquet"
+    manifest, files, cur = [], {}, None
+
+    def close_bucket():
+        for table, f in files.items():
+            f.close()
+            manifest.append({"table": table, "bucket": cur, "file": name,
+                             "rows": f.rows, "failures": f.failures})
+        files.clear()
+
+    try:
+        for b, table, rows, failures in slices:
+            if not rows.num_rows:
+                continue  # a table without rows in a bucket has no file
+            if b != cur:
+                close_bucket()
+                cur = b
+            if table not in files:
+                files[table] = _BucketFile(
+                    os.path.join(bucket_dir(dirs[table], b), name),
+                    rows.schema, TABLE_KEYS.get(table, ("url",)))
+            files[table].add(rows, failures)
+    finally:
+        close_bucket()  # a failed task's files are closed but unlisted
+    if manifest:
+        yield pa.RecordBatch.from_pylist(manifest,
+                                         schema=MANIFEST_ARROW_SCHEMA)
+
+
+def manifest_files(manifest: list[dict], table: str) -> dict[int, set[str]]:
+    """bucket -> the staged file names of ``table`` the manifest lists."""
+    files: dict[int, set[str]] = {}
+    for r in manifest:
+        if r["table"] == table:
+            files.setdefault(r["bucket"], set()).add(r["file"])
+    return files
+
+
+def pin_empty_bucket(table_dir: str, bucket: int, schema: pa.Schema) -> str:
+    """Pin a table's schema with one zero-row parquet file (what an
+    Iceberg table keeps in metadata): a table of only file-less bucket
+    dirs fails schema inference on every later read. Returns its name."""
+    name = "part-00000-empty.parquet"
+    _BucketFile(os.path.join(bucket_dir(table_dir, bucket), name), schema,
+                ()).close()
+    return name
+
+
+def stage_buckets(df, staging_table_dir: str, table: str,
+                  buckets: list[int]) -> list[dict]:
+    """Stage the new content of ``buckets`` for ``snapshots.commit_rewrite``
+    and return its manifest (``write_bucket_files`` rows). ``df`` holds
+    exactly those buckets' rows, ``bucket`` column included.
+
+    One task per bucket (``route_buckets``), each file sorted by the
+    table's natural key, so each bucket lands as one url-sorted file:
     parquet min/max stats on url stay tight and disjoint, and point
-    lookups and later rewrites prune row groups (the sort satisfies the
-    partitionBy write's required ordering instead of adding a second
-    one). A bucket that lost every row gets an empty dir, so the commit
-    still replaces its old one; when no row survives at all, a zero-row
-    file pins the schema."""
+    lookups and later rewrites prune row groups. A bucket that lost every
+    row gets an empty dir, so the commit still replaces its old one; when
+    no row survives at all, a zero-row file pins the schema."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     shutil.rmtree(staging_table_dir, ignore_errors=True)
-    # an empty upsert stages nothing: one task writes no file
-    (route_buckets(df, buckets, max(len(buckets), 1))
-     .sortWithinPartitions("bucket", *TABLE_KEYS.get(table, ("url",)))
-     .write.partitionBy("bucket").mode("overwrite")
-     .parquet(staging_table_dir))
+    dirs = {table: staging_table_dir}
+
+    def write(batches):
+        return write_bucket_files(
+            ((b, table, rows, 0) for b, rows in bucket_slices(batches)),
+            dirs)
+
+    # an empty upsert stages nothing: one task writes no file. The writer
+    # sorts each file by the table's key; Spark only groups the buckets.
+    manifest = [r.asDict() for r in
+                route_buckets(df, buckets, max(len(buckets), 1))
+                .sortWithinPartitions("bucket")
+                .mapInArrow(write, MANIFEST_DDL).collect()]
     for b in buckets:
         os.makedirs(bucket_dir(staging_table_dir, b), exist_ok=True)
-    n = parquet_rows(staging_table_dir)
-    if n == 0 and buckets:
-        pin_empty_bucket(staging_table_dir, buckets[0],
-                         to_arrow_schema(df.drop("bucket").schema))
-    return n
+    if not manifest and buckets:
+        manifest.append({
+            "table": table, "bucket": buckets[0], "rows": 0, "failures": 0,
+            "file": pin_empty_bucket(
+                staging_table_dir, buckets[0],
+                to_arrow_schema(df.drop("bucket").schema))})
+    return manifest
 
 
 def lineage_dir(out_dir: str) -> str:

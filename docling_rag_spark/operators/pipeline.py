@@ -1,22 +1,27 @@
 """The fused parse+chunk Spark stage (the reference's indexing loop, §3.1).
 
-One ``mapInPandas`` stage performs format sniff -> extract -> chunk per Arrow
-batch — the Spark analog of the reference's fused per-file loop iteration
+One Python stage performs format sniff -> extract -> chunk per Arrow batch
+— the Spark analog of the reference's fused per-file loop iteration
 (core/indexer.py:71-74: parse then chunk in the same pass, no materialized
 intermediate). Fusing avoids a shuffle between parse and chunk; the only
-shuffle in the whole extraction job is the salted repartition *before* the
+shuffle in the whole extraction job is the bucket routing *before* the
 UDF, which balances host-skewed url distributions across executors.
 
-Doc-level output rows carry the chunk array; ``chunks_table`` explodes it
-with the built-in (JVM-side) ``posexplode``-family operator, so the Python
-boundary is crossed exactly once per document batch.
+The extraction job runs it as ``stage_documents``, whose task also
+projects ``extracted`` and explodes ``chunks`` in Arrow and writes both
+tables' staged files (core/indexer.py:66-116: parse, chunk, store in one
+pass). ``extract_documents`` returns the doc rows to queries, and
+``chunks_table``/``extracted_table`` are the same projections in Spark.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -122,6 +127,50 @@ def extract_documents(pages: DataFrame,
     return cols.mapInPandas(fn, schema=DOC_SCHEMA)
 
 
+def _doc_tables(slices, max_tokens: int):
+    """``(bucket, pages)`` slices -> ``write_bucket_files`` slices: each
+    slice parsed and chunked, its ``extracted`` rows projected and its
+    ``chunks`` rows exploded in Arrow (``extracted_table``/
+    ``chunks_table`` minus ``bucket``)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    doc_schema = to_arrow_schema(DOC_SCHEMA)
+    for b, pages in slices:
+        (pdf,) = _parse_chunk_batches([pages.to_pandas()], max_tokens)
+        docs = pa.Table.from_pandas(pdf, schema=doc_schema,
+                                    preserve_index=False)
+        chunks = docs.column("chunks").combine_chunks()
+        extracted = (docs.select(["url", "format", "status", "encoding",
+                                  "error", "title", "lang", "extracted_text",
+                                  "n_blocks"])
+                     .append_column("n_chunks", pc.list_value_length(chunks))
+                     .append_column("warc_ts", docs.column("warc_ts")))
+        flat = pa.Table.from_struct_array(pc.list_flatten(chunks))
+        url = docs.column("url").take(pc.list_parent_indices(chunks))
+        failures = pc.sum(pc.equal(docs.column("status"), "error")).as_py()
+        yield b, "extracted", extracted, failures or 0
+        yield b, "chunks", flat.add_column(0, "url", url), 0
+
+
+def stage_documents(pages: DataFrame, staging: str,
+                    max_tokens: int = CHUNK_MAX_TOKENS) -> DataFrame:
+    """Parse, chunk and stage in one task: ``pages`` (``bucket`` plus the
+    page columns, each partition sorted by bucket) -> the manifest rows of
+    the ``extracted`` and ``chunks`` files written under
+    ``<staging>/<table>/bucket=<b>/`` (io/warehouse.write_bucket_files),
+    one url-sorted file per table per bucket of each task."""
+    from docling_rag_spark.io import warehouse as wh
+
+    cols = pages.select("bucket", "url", "warc_ts", "html", "text", "lang")
+    dirs = {t: os.path.join(staging, t) for t in ("extracted", "chunks")}
+
+    def fn(batches):
+        return wh.write_bucket_files(
+            _doc_tables(wh.bucket_slices(batches), max_tokens), dirs)
+
+    return cols.mapInArrow(fn, wh.MANIFEST_DDL)
+
+
 def chunks_table(docs: DataFrame,
                  extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Explode doc rows into the chunk-row contract (FIXTURES.md §2).
@@ -146,16 +195,11 @@ def chunks_table(docs: DataFrame,
 
 def extracted_table(docs: DataFrame,
                     extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Doc-level output: byte-identity comparison target + registry fields.
-
-    Uses a precomputed ``n_chunks`` column when present (the extraction
-    job's persisted doc rows carry it, so this derivation never reads the
-    wide chunks column)."""
-    n_chunks = (F.col("n_chunks") if "n_chunks" in docs.columns
-                else F.size("chunks"))
+    """Doc-level output: byte-identity comparison target + registry fields."""
     return docs.select("url", "format", "status", "encoding", "error",
                        "title", "lang", "extracted_text", "n_blocks",
-                       n_chunks.alias("n_chunks"), "warc_ts", *extra_cols)
+                       F.size("chunks").alias("n_chunks"), "warc_ts",
+                       *extra_cols)
 
 
 def documents_table(extracted: DataFrame) -> DataFrame:

@@ -182,12 +182,13 @@ def _books(rows, id_cols, side: dict | None) -> dict:
 
 def index_lock(index_dir: str, timeout: float):
     """The lock held by every writer that swaps ``index_dir`` or its
-    table: ``_compaction`` beside it — for a warehouse's ``ann`` index the
-    warehouse's compaction lock. Its holders are the build's swap,
-    ``_recover`` and the delete cascade (plans/job.py)."""
-    parent = os.path.dirname(os.path.abspath(index_dir))
-    return wh.commit_lock(os.path.join(parent, "_compaction"),
-                          timeout=timeout, stale_sec=3600.0)
+    table: the compaction lock of the dir beside it
+    (``warehouse.compaction_lock``) — for a warehouse's ``ann`` index the
+    warehouse's own. Its holders are the build's delete check and swap,
+    ``_recover``, the delete cascade (plans/job.py) and, through
+    ``compaction_lock``, a whole rebucket (plans/maintenance.py)."""
+    return wh.compaction_lock(os.path.dirname(os.path.abspath(index_dir)),
+                              timeout)
 
 
 def build_ann_index(spark, embeddings_df, out_dir: str,
@@ -204,9 +205,15 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
     add ``.repartition(n, 'cell')`` first) and swaps that dir into place
     under the index lock: a concurrent search sees the old index or the
     new one, never a half-written ``pq/``, and whatever else the old dir
-    held is gone."""
+    held is gone.
+
+    A ``delete_urls`` of the warehouse beside ``out_dir`` that started
+    after this build's first read cascades into the old index only; the
+    new one may still hold its rows. The swap then raises
+    ``CommitConflict`` and keeps the old index: rerun the build."""
     from pyspark.sql import functions as F
 
+    read_ts = wh.now()
     rows = embeddings_df.select(*id_cols, "embedding")
     first = rows.select(F.size("embedding").alias("d")).first()
     if first is None:
@@ -225,6 +232,12 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
         with open(os.path.join(tmp, BOOKS), "w") as f:
             json.dump(side, f)
         with index_lock(out_dir, timeout=60.0):
+            deleted = sorted({
+                r["bucket"] for r in wh.read_lineage(head)
+                if r["input_snapshot_id"].startswith("delete-")
+                and r["started_at"] >= read_ts})
+            if deleted:
+                raise wh.CommitConflict(deleted, f"ann-build {out_dir}")
             wh.swap_dir(tmp, out_dir)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

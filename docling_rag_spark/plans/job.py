@@ -6,12 +6,14 @@ Replaces the reference's sequential indexing loop + postgres job queue
   scan pages -> assign bucket = pmod(xxhash64(url), N)
              -> anti-join buckets against committed lineage (resume, J3)
              -> per bucket-batch: whole buckets routed into
-                salt_partitions tasks (warehouse.route_buckets)
-                -> fused parse+chunk mapInPandas
-                -> persist the doc rows (DISK_ONLY) -> derive chunks /
-                extracted / stats from them, staged as parquet
-                partitioned by bucket
-             -> atomic bucket-directory commit + lineage append
+                salt_partitions tasks (warehouse.route_buckets), each
+                task's pages sorted by (bucket, url)
+                -> one mapInArrow task parses and chunks each bucket's
+                pages and writes its extracted / chunks files straight
+                into the batch's staging dir, returning a manifest row
+                per file (operators/pipeline.stage_documents)
+             -> atomic bucket-directory commit of the listed files +
+                lineage append, counts from the manifest
 
 Unit of checkpointing = url-hash bucket (not file): a rerun after a crash
 reprocesses only buckets without a committed lineage row for the input
@@ -32,7 +34,6 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,9 +45,10 @@ from docling_rag_spark.config import (
 from docling_rag_spark.io import snapshots as snap
 from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.operators.pipeline import (
+    DOC_SCHEMA,
     chunks_table,
-    extract_documents,
     extracted_table,
+    stage_documents,
 )
 from docling_rag_spark.plans import ann_index as AI
 from docling_rag_spark.session import job_description
@@ -64,8 +66,8 @@ class ExtractionReport:
     failure_count: int = 0
     docs_unchanged: int = 0
     batches: list[list[int]] = field(default_factory=list)
-    # per-phase wall seconds (udf_stage / derive / commit, summed across
-    # batches): where a benchmark pair should look for Amdahl tails
+    # per-phase wall seconds (udf_stage: parse, chunk and stage; commit),
+    # summed across batches: where to look for Amdahl tails
     phase_sec: dict = field(default_factory=dict)
 
 
@@ -213,149 +215,65 @@ def _run_extraction_inner(
     import uuid
     run_id = uuid.uuid4().hex[:12]
 
+    # the staged tables' schemas, pinned at commit: the Spark projections
+    # of the doc rows (planned, never run) — what the task-side Arrow
+    # projections write, plus the bucket partition column
+    docs = spark.createDataFrame([], DOC_SCHEMA).withColumn(
+        "bucket", bucket_of(F.col("url"), num_buckets))
+    schemas = {"chunks": chunks_table(docs, extra_cols=("bucket",)).schema,
+               "extracted": extracted_table(docs,
+                                            extra_cols=("bucket",)).schema}
+
     for batch_idx, batch in enumerate(batches):
         started = wh.now()
         _t0 = _time.time()
         staging = os.path.join(staging_root,
                                f"{snapshot_id}-{batch_idx}-{run_id}")
         shutil.rmtree(staging, ignore_errors=True)
-        docs = None
 
         try:
             sub = pages.withColumn("bucket", bucket_of(F.col("url"), num_buckets))
             if len(batch) < num_buckets:
                 sub = sub.filter(F.col("bucket").isin(batch))
 
+            n_changed = None
             if mode == "merge":
                 with job_description(spark, "extract:changes"):
-                    sub, n_unchanged = _changed_pages(spark, sub, out_dir,
-                                                      batch)
+                    sub, n_unchanged, n_changed = _changed_pages(
+                        spark, sub, out_dir, batch)
                 report.docs_unchanged += n_unchanged
 
-            # Bucket-aligned repartition: the url-hash bucket IS the salt (urls
-            # hash uniformly, so host-heavy crawls still spread). Keeping whole
-            # buckets per task means the dynamic-partition write below emits one
-            # file per bucket with a trivial sort, instead of num_tasks ×
-            # num_buckets fragments — the difference between a write that scales
-            # with cores and one that collapses under small-file overhead.
-            # The parse stage always runs salt_partitions tasks: every task
-            # (the parse's and each derivation's) pays a fixed set-up, so
-            # one task per bucket pays it once per wave. Even with the
-            # worker hook (package __init__), 16 buckets as 16 tasks ran a
-            # 600-page job at local[4] in a median 1.85 s against 1.09 s as
-            # 4 tasks (0/16 pairs won). route_buckets puts whole buckets
-            # round-robin into the salt_partitions tasks (at most
-            # ceil(n/salt_partitions) each) with no extra job, and salts
-            # a batch of fewer buckets than tasks across all of them.
-            sub = wh.route_buckets(sub, batch, salt_partitions)
-
-            # One UDF pass, kept in Spark's block store for the chunks /
-            # extracted / stats derivations. DISK_ONLY keeps the wide doc
-            # rows (text + chunk structs) off the executor heap, where they
-            # thrash GC as parallelism grows. Staging them as parquet costs
-            # a zstd write plus three read-backs (0.6-1.0 s of a 600-page
-            # job at local[4]) and never survived a failed batch either: a
-            # rerun reparses. The derivations run in the parse stage's
-            # partitions, whole buckets each: one file per bucket.
-            with job_description(spark, "extract:parse"):
-                docs = (extract_documents(sub, max_tokens=max_tokens,
-                                          salt_partitions=None)
-                        .withColumn("bucket", bucket_of(F.col("url"),
-                                                        num_buckets))
-                        .withColumn("n_chunks", F.size("chunks"))
-                        .withColumn("is_error",
-                                    (F.col("status") == "error").cast("int"))
-                        .persist(StorageLevel.DISK_ONLY))
-                docs.count()
+            # Bucket-aligned repartition: the url-hash bucket IS the salt
+            # (urls hash uniformly, so host-heavy crawls still spread).
+            # The parse stage always runs salt_partitions tasks, each
+            # paying a fixed set-up once (16 buckets as 16 tasks ran a
+            # 600-page job at local[4] in a median 1.85 s against 1.09 s
+            # as 4 tasks): whole buckets round-robin, or a batch of fewer
+            # buckets salted across all of them (route_buckets). Sorted
+            # by (bucket, url) with no shuffle, each task parses, chunks
+            # and writes one file per bucket per table (stage_documents).
+            manifest = []
+            if n_changed != 0:  # a merge batch of unchanged pages stages nothing
+                sub = (wh.route_buckets(sub, batch, salt_partitions)
+                       .sortWithinPartitions("bucket", "url"))
+                with job_description(spark, "extract:parse"):
+                    manifest = [r.asDict() for r in stage_documents(
+                        sub, staging, max_tokens=max_tokens).collect()]
+            stats: dict[int, dict] = {}
+            for r in manifest:
+                s = stats.setdefault(r["bucket"], {
+                    "doc_count": 0, "chunk_count": 0, "failure_count": 0})
+                s["doc_count" if r["table"] == "extracted"
+                  else "chunk_count"] += r["rows"]
+                s["failure_count"] += r["failures"]
+            staged = {t: (os.path.join(staging, t), schemas[t])
+                      for t in schemas}
+            if mode == "merge" and manifest:
+                with job_description(spark, "extract:merge"):
+                    staged, manifest = _merge_staged(
+                        spark, out_dir, staging, manifest, schemas)
 
             _t1 = _time.time()
-            # The three derivations are independent reads of the persisted
-            # docs; run them as CONCURRENT Spark jobs (threads share the
-            # session; the scheduler interleaves their stages). Sequential
-            # execution leaves cores idle during each job's fixed
-            # scheduling/commit overhead — measurably worse scaling at high
-            # parallelism for a fixed fraction of the batch wall-clock.
-            from concurrent.futures import ThreadPoolExecutor
-
-            # Each derivation tags its own jobs: it may run on a pool
-            # thread, which does not inherit this thread's description.
-            def _stats():
-                # narrow-column scan over (bucket, n_chunks, is_error)
-                with job_description(spark, "extract:stats"):
-                    return {
-                        row["bucket"]: row
-                        for row in docs.groupBy("bucket").agg(
-                            F.count("*").alias("docs"),
-                            F.sum("n_chunks").alias("chunks"),
-                            F.sum("is_error").alias("failures"),
-                        ).collect()
-                    }
-
-            # merge mode: stats go FIRST (a cheap 3-column scan) so the
-            # merged writes below open ONLY buckets that received new
-            # docs — a bucket of this batch with zero changed pages keeps
-            # its committed dir untouched (no staged dir -> commit skips)
-            old_chunks = old_extracted = new_urls = None
-            if mode == "merge":
-                stats = _stats()
-                active = sorted(stats)
-                new_urls = docs.select("url")
-                with job_description(spark, "extract:chunks"):
-                    old_chunks = wh.read_buckets(spark, out_dir, "chunks",
-                                                 active)
-                with job_description(spark, "extract:extracted"):
-                    old_extracted = wh.read_buckets(spark, out_dir,
-                                                    "extracted", active)
-
-            # pass the bucket column through instead of re-hashing every
-            # output row (an xxhash64+pmod per chunk after explode)
-            staged_schema = {}
-
-            def _write_chunks():
-                new = chunks_table(docs, extra_cols=("bucket",))
-                if old_chunks is not None:
-                    # copy-on-write MERGE: existing rows of re-extracted
-                    # urls are replaced; everything else carries over.
-                    # allowMissingColumns: carried-over rows written by an
-                    # older code version read null for any column this
-                    # version added (Iceberg add-column semantics) instead
-                    # of failing the whole run on the first upgraded crawl
-                    new = (old_chunks.join(new_urls, "url", "left_anti")
-                           .unionByName(new, allowMissingColumns=True))
-                staged_schema["chunks"] = new.schema
-                # url-sorted within each bucket: parquet row-group min/max
-                # stats on url become tight and disjoint, so point lookups
-                # and delete rewrites prune row groups instead of scanning
-                # the whole bucket (the sort SATISFIES the partitionBy
-                # write's required child ordering — it replaces the
-                # bucket-only sort Spark would insert, not adds to it)
-                with job_description(spark, "extract:chunks"):
-                    (new.sortWithinPartitions("bucket", "url", "chunk_id")
-                     .write.partitionBy("bucket").mode("overwrite")
-                     .parquet(os.path.join(staging, "chunks")))
-
-            def _write_extracted():
-                new = extracted_table(docs, extra_cols=("bucket",))
-                if old_extracted is not None:
-                    new = (old_extracted.join(new_urls, "url", "left_anti")
-                           .unionByName(new, allowMissingColumns=True))
-                staged_schema["extracted"] = new.schema
-                with job_description(spark, "extract:extracted"):
-                    (new.sortWithinPartitions("bucket", "url")
-                     .write.partitionBy("bucket").mode("overwrite")
-                     .parquet(os.path.join(staging, "extracted")))
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                f_chunks = pool.submit(_write_chunks)
-                f_extracted = pool.submit(_write_extracted)
-                f_stats = (pool.submit(_stats)
-                           if mode != "merge" else None)
-                f_chunks.result()
-                f_extracted.result()
-                if f_stats is not None:
-                    stats = f_stats.result()
-
-            _t4 = _time.time()
             # The shared bucket-rewrite commit. Validation: a NEWER
             # snapshot that committed any of these buckets since base_ts
             # would be silently rolled back — fail instead; a rerun
@@ -363,31 +281,19 @@ def _run_extraction_inner(
             # are idempotent duplicates and pass through). A bucket of the
             # batch with no staged dir (no docs) keeps its committed dir.
             lineage_rows = snap.commit_rewrite(
-                out_dir,
-                {t: (os.path.join(staging, t), staged_schema[t])
-                 for t in ("chunks", "extracted")},
-                batch, num_buckets, snapshot_id,
+                out_dir, staged, batch, num_buckets, snapshot_id,
                 conflicts=lambda: wh.conflicting_buckets(
                     out_dir, snapshot_id, batch, base_ts),
-                lineage={b: {"doc_count": int(s["docs"]),
-                             "chunk_count": int(s["chunks"] or 0),
-                             "failure_count": int(s["failures"])}
-                         for b, s in stats.items()},
+                manifest=manifest, lineage=stats,
                 started_at=started, force=retain_snapshots,
                 commit_id=f"{snapshot_id}-b{batch_idx}-{run_id}")
-            _t5 = _time.time()
-            # one derive phase: the three derivations run concurrently,
-            # so per-derivation completion times would misattribute
-            for k, v in (("udf_stage", _t1 - _t0), ("derive", _t4 - _t1),
-                         ("commit", _t5 - _t4)):
+            _t2 = _time.time()
+            for k, v in (("udf_stage", _t1 - _t0), ("commit", _t2 - _t1)):
                 report.phase_sec[k] = round(
                     report.phase_sec.get(k, 0.0) + v, 2)
         finally:
             # a failed batch (incl. CommitConflict) must not leak staged
-            # parquet or persisted blocks: the rerun recomputes; only
-            # committed tables survive
-            if docs is not None:
-                docs.unpersist()
+            # parquet: the rerun recomputes; only committed tables survive
             shutil.rmtree(staging, ignore_errors=True)
 
         report.buckets_done += len(batch)
@@ -411,8 +317,9 @@ def _run_extraction_inner(
 
 
 def _changed_pages(spark, sub: DataFrame, out_dir: str,
-                   batch: list[int]) -> tuple[DataFrame, int]:
-    """Merge-mode change detection for one bucket batch.
+                   batch: list[int]) -> tuple[DataFrame, int, int]:
+    """Merge-mode change detection for one bucket batch: the changed
+    pages and the counts of unchanged and changed urls.
 
     Keeps only pages that are NEW (url absent from the committed
     ``extracted`` table) or NEWER (``warc_ts`` strictly greater than the
@@ -426,21 +333,19 @@ def _changed_pages(spark, sub: DataFrame, out_dir: str,
     latest = (sub.select("url", "warc_ts")
               .groupBy("url").agg(F.max("warc_ts").alias("warc_ts")))
 
-    table_dir = os.path.join(out_dir, "extracted")
-    dirs = [wh.bucket_dir(table_dir, b) for b in batch]
-    dirs = [d for d in dirs if os.path.isdir(d)]
-    if dirs:
-        done = (spark.read.option("basePath", table_dir).parquet(*dirs)
-                .select("url", F.col("warc_ts").alias("_done_ts")))
-        changed_keys = (latest.join(done, "url", "left")
-                        .filter(F.col("_done_ts").isNull()
-                                | (F.col("warc_ts") > F.col("_done_ts")))
-                        .select("url", "warc_ts"))
+    # schema-pinned: no footer-inference job
+    done = wh.read_buckets(spark, out_dir, "extracted", batch)
+    if done is not None:
+        done = done.select("url", F.col("warc_ts").alias("_done_ts"))
+        keys = latest.join(done, "url", "left").withColumn(
+            "_changed", F.col("_done_ts").isNull()
+            | (F.col("warc_ts") > F.col("_done_ts")))
     else:
-        changed_keys = latest
-
-    n_latest = latest.count()
-    n_changed = changed_keys.count()
+        keys = latest.withColumn("_changed", F.lit(True))
+    # both counts from one aggregate: one job, not two
+    n_latest, n_changed = keys.agg(
+        F.count("*"), F.count(F.when(F.col("_changed"), 1))).first()
+    changed_keys = keys.filter("_changed").select("url", "warc_ts")
 
     sub = sub.join(changed_keys, ["url", "warc_ts"], "left_semi")
     # collapse exact (url, warc_ts) duplicates deterministically (shuffles
@@ -450,7 +355,40 @@ def _changed_pages(spark, sub: DataFrame, out_dir: str,
         F.coalesce(F.col("text"), F.lit("")).asc())
     sub = (sub.withColumn("_rn", F.row_number().over(w))
            .filter(F.col("_rn") == 1).drop("_rn"))
-    return sub, n_latest - n_changed
+    return sub, n_latest - n_changed, n_changed
+
+
+def _merge_staged(spark, out_dir: str, staging: str, manifest: list[dict],
+                  schemas: dict) -> tuple[dict, list[dict]]:
+    """Copy-on-write MERGE of a batch's staged new rows into the buckets
+    they touch: each touched bucket is restaged as (committed rows minus
+    re-extracted urls) ∪ (new rows). A bucket of the batch with zero
+    changed pages is not touched: its committed dir stays. Returns the
+    ``staged`` tables and manifest to commit."""
+    active = sorted({r["bucket"] for r in manifest})
+    staged, merged_manifest = {}, []
+    # extracted first: its urls are those of every new doc, chunks or not
+    for t in ("extracted", "chunks"):
+        d = os.path.join(staging, t)
+        # only the files the manifest lists: a failed attempt's are not rows
+        files = [os.path.join(wh.bucket_dir(d, r["bucket"]), r["file"])
+                 for r in manifest if r["table"] == t]
+        merged = (spark.read.schema(schemas[t]).option("basePath", d)
+                  .parquet(*files) if files
+                  else spark.createDataFrame([], schemas[t]))
+        if t == "extracted":
+            new_urls = merged.select("url")
+        old = wh.read_buckets(spark, out_dir, t, active)
+        if old is not None:
+            # allowMissingColumns: carried-over rows written by an older
+            # code version read null for any column this version added
+            # (Iceberg add-column semantics) instead of failing the run
+            merged = (old.join(new_urls, "url", "left_anti")
+                      .unionByName(merged, allowMissingColumns=True))
+        d = os.path.join(staging, "merged", t)
+        merged_manifest += wh.stage_buckets(merged, d, t, active)
+        staged[t] = (d, merged.schema)
+    return staged, merged_manifest
 
 
 def embed_warehouse(spark: SparkSession, out_dir: str,
@@ -546,7 +484,7 @@ def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
     before = sub.count()
     kept = sub.join(F.broadcast(urls_df), "url", "left_anti")
     stage_tbl = os.path.join(staging, table)
-    kept_n = wh.stage_buckets(kept, stage_tbl, table, buckets)
+    manifest = wh.stage_buckets(kept, stage_tbl, table, buckets)
     # validation: an extraction batch that committed these buckets AFTER
     # our read must not be overwritten by the pre-extraction rewrite (its
     # lineage would still claim the bucket done -> permanent loss). On a
@@ -555,8 +493,8 @@ def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
     snap.commit_rewrite(
         out_dir, {table: (stage_tbl, kept.schema)}, buckets, num_buckets,
         del_snap, conflicts=lambda: wh.conflicting_buckets(
-            out_dir, del_snap, buckets, read_ts))
-    return before - kept_n
+            out_dir, del_snap, buckets, read_ts), manifest=manifest)
+    return before - sum(r["rows"] for r in manifest)
 
 
 def _drop_urls(spark, target: str, part_cols, urls_df, staging: str,

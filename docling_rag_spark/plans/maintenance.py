@@ -64,9 +64,9 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
     commit_id = f"rebucket-{new_buckets}-{run_id}"
     staging_root = os.path.join(out_dir, "_staging", commit_id)
     stats: dict[str, int] = {}
+    manifests: dict[str, list[dict]] = {}
 
-    with wh.commit_lock(os.path.join(out_dir, "_compaction"),
-                        timeout=30.0, stale_sec=3600.0):
+    with wh.compaction_lock(out_dir, timeout=30.0):
         # In-progress marker FIRST (the crash story's linchpin): until the
         # final spec pin clears it, every writing job's
         # resolve_num_buckets refuses to run — a crash mid-rebucket can
@@ -101,9 +101,10 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
                       .dropDuplicates(key)
                       .withColumn("bucket", bucket_of(F.col("url"),
                                                       new_buckets)))
-                stats[t] = wh.stage_buckets(
+                manifests[t] = wh.stage_buckets(
                     df, os.path.join(staging_root, t), t,
                     list(range(new_buckets)))
+                stats[t] = sum(r["rows"] for r in manifests[t])
 
             touched = sorted({b for t in present
                               for b in range(new_buckets)} |
@@ -118,6 +119,7 @@ def rebucket_warehouse(spark: SparkSession, out_dir: str, new_buckets: int,
                     snap.commit_buckets_retained(
                         out_dir, os.path.join(staging_root, t), t,
                         list(range(new_buckets)), "rebucket", ts,
+                        files=wh.manifest_files(manifests[t], t),
                         commit_id=f"{commit_id}-{t}")
                     if stale[t]:
                         snap.retire_buckets(

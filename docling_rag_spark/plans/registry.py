@@ -179,12 +179,12 @@ def upsert_registry_table(spark, out_dir: str, updates: DataFrame,
         staging = os.path.join(out_dir, "_staging",
                                f"registry-{uuid.uuid4().hex[:12]}")
         try:
-            wh.stage_buckets(merged, staging, "registry", buckets)
+            manifest = wh.stage_buckets(merged, staging, "registry", buckets)
             snap.commit_rewrite(
                 out_dir, {"registry": (staging, merged.schema)}, buckets,
                 num_buckets, "registry-upsert",
                 conflicts=lambda: buckets if bucket_sig() != base_sig
-                else [])
+                else [], manifest=manifest)
             return {"buckets_rewritten": buckets}
         except wh.CommitConflict:
             continue  # concurrent commit: re-merge on the fresh base

@@ -304,6 +304,7 @@ def main() -> int:
                         "docs_per_sec": r["docs_per_sec"],
                         "busy_cpus": r["lane_busy_cpus"],
                         "steal_cpus": r["lane_steal_cpus"],
+                        # run_extract's udf_stage / commit walls
                         "phase_sec": r["phase_sec"],
                         "elapsed_sec": r["elapsed_sec"]}
                 lane_stats.append(stat)

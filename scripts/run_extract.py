@@ -69,18 +69,17 @@ def main() -> int:
         warm = spark.read.parquet(args.pages).limit(4 * args.cores)
         extract_documents(warm, salt_partitions=4 * args.cores).count()
         # JIT-warm the JVM-side paths too, by running the full job once on
-        # a small isolated warehouse: the first executions of the
-        # derivation stages in a fresh executor JVM (nested-column parquet
-        # read, explode codegen, sorter, zstd writers, dynamic-partition
-        # commit) measured ~2x steady-state task CPU until HotSpot's
-        # tiered compiler kicks in — a fixed per-JVM warmup cost that
-        # repeats in EVERY executor, so it never parallelizes away (pure
-        # Amdahl tail in N-vs-4N scaling: the event-logged chunks write
-        # ran 45.7 task-sec at 1 executor vs 71.7 at 4 — more fresh JVMs,
-        # more cold tasks). The warm slice must carry real volume — C2
-        # compiles on invocation/loop-iteration counts, so a code-path
-        # touch with a handful of rows warms nothing (measured: no
-        # effect); ~2k docs (~60k chunk rows) does.
+        # a small isolated warehouse: the first executions of the job's
+        # JVM stages in a fresh executor JVM (routing shuffle, sorter,
+        # Arrow transport) run well above steady-state task CPU until
+        # HotSpot's tiered compiler kicks in — a fixed per-JVM warmup cost
+        # that repeats in EVERY executor, so it never parallelizes away
+        # (pure Amdahl tail in N-vs-4N scaling: a since-retired chunks
+        # write stage ran 45.7 task-sec at 1 executor vs 71.7 at 4 — more
+        # fresh JVMs, more cold tasks). The warm slice must carry real
+        # volume — C2 compiles on invocation/loop-iteration counts, so a
+        # code-path touch with a handful of rows warms nothing (measured:
+        # no effect); ~2k docs (~60k chunk rows) does.
         import shutil as _sh
         import tempfile as _tf
         wtmp = _tf.mkdtemp(prefix="warm_extract_")
@@ -122,6 +121,8 @@ def main() -> int:
         "docs_unchanged": report.docs_unchanged,
         "elapsed_sec": round(elapsed, 2),
         "docs_per_sec": round(report.doc_count / elapsed, 2) if elapsed else None,
+        # per-phase walls: udf_stage (parse, chunk and stage in one
+        # task set) and commit
         "phase_sec": report.phase_sec,
     }))
     spark.stop()

@@ -126,6 +126,42 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
         assert not (idx_urls & set(victims)), sub
 
 
+def test_ann_rebuild_does_not_undo_a_concurrent_delete(spark, tmp_path,
+                                                       monkeypatch):
+    """A delete that lands while a rebuild is encoding rows it read before
+    the delete cascades into the live index only. The rebuild's swap must
+    then refuse (CommitConflict) and keep that index: installing its own
+    rows would bring the deleted url back into mode=ann search."""
+    import pytest
+
+    from docling_rag_spark.io import warehouse as wh
+    from docling_rag_spark.plans import ann_index as AI
+    from docling_rag_spark.plans.job import embed_warehouse
+
+    pages = str(tmp_path / "pages.parquet")
+    out = str(tmp_path / "wh")
+    write_pages_parquet(pages, 40)
+    run_extraction(spark, pages, out, num_buckets=8, salt_partitions=4)
+    emb = spark.read.parquet(embed_warehouse(spark, out, num_buckets=8))
+    ann = os.path.join(out, "ann")
+    AI.build_ann_index(spark, emb, ann, id_cols=("url", "chunk_id"))
+    # the rebuild's input, read before the delete
+    before = spark.createDataFrame(emb.collect(), emb.schema)
+    victim = sorted(_chunk_urls(spark, out))[0]
+    encode = AI._encode
+
+    def encode_after_delete(*args, **kwargs):
+        delete_urls(spark, out, [victim], num_buckets=8)
+        return encode(*args, **kwargs)
+
+    monkeypatch.setattr(AI, "_encode", encode_after_delete)
+    with pytest.raises(wh.CommitConflict):
+        AI.build_ann_index(spark, before, ann, id_cols=("url", "chunk_id"))
+    urls = {r["url"] for r in spark.read.parquet(os.path.join(ann, "pq"))
+            .select("url").distinct().collect()}
+    assert urls and victim not in urls
+
+
 def test_auto_search_runs_exact_when_the_index_has_no_rows(spark, tmp_path):
     """Deleting every url the index holds leaves its books but no index
     rows; a mode=auto search must then run exact over the chunks that

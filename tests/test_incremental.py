@@ -183,3 +183,47 @@ def test_merge_rejects_unknown_mode(spark, tmp_path):
     write_pages_parquet(pages, 5)
     with pytest.raises(ValueError):
         run_extraction(spark, pages, str(tmp_path / "wh"), mode="append")
+
+
+def test_unchanged_merge_rerun_skips_parse_and_stage(spark, tmp_path):
+    """A merge run over pages that are all unchanged runs the footer read
+    and one change-count aggregate — no parse, no stage — and still
+    commits zero-count lineage rows for its buckets, so a rerun skips
+    them."""
+    import uuid
+
+    from docling_rag_spark.io import warehouse as wh
+
+    p, out = str(tmp_path / "p.parquet"), str(tmp_path / "wh")
+    write_pages_parquet(p, 30)
+    run_extraction(spark, p, out, num_buckets=4, salt_partitions=2)
+    sc = spark.sparkContext
+    group = f"merge-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        rep = run_extraction(spark, p, out, snapshot_id="snap-1",
+                             mode="merge", num_buckets=4, salt_partitions=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rep.docs_unchanged == 30 and rep.doc_count == 0
+    # the aggregate's three shuffle stages and its result, plus at most
+    # the pages footer read
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    rows = [r for r in wh.read_lineage(out)
+            if r["input_snapshot_id"] == "snap-1"]
+    assert sorted(r["bucket"] for r in rows) == [0, 1, 2, 3]
+    assert all(r["doc_count"] == r["chunk_count"] == 0 for r in rows)
+    again = run_extraction(spark, p, out, snapshot_id="snap-1", mode="merge",
+                           num_buckets=4, salt_partitions=2)
+    assert again.buckets_skipped == 4
+
+    # a merge whose only new doc has no chunks stages no chunks file
+    empty = generate_pages(1, seed=3).iloc[:1].copy()
+    empty["url"], empty["html"], empty["text"] = \
+        ["https://new.example/empty.md"], [b""], [""]
+    _write(empty, p)
+    rep = run_extraction(spark, p, out, snapshot_id="snap-2", mode="merge",
+                         num_buckets=4, salt_partitions=2)
+    assert (rep.doc_count, rep.chunk_count) == (1, 0)
+    assert len(_rows(spark, out, "extracted")) == 31

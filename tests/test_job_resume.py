@@ -1,12 +1,15 @@
 """Lineage, checkpoint resume, idempotent overwrite (SURVEY.md M4)."""
 
+import glob
 import os
+import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
-from docling_rag_spark.plans.job import run_extraction
+from docling_rag_spark.plans.job import bucket_of, run_extraction
 from docling_rag_spark.sources.pages import write_pages_parquet
 
 N_DOCS = 60
@@ -28,7 +31,7 @@ def test_full_run_and_lineage(spark, pages_path, tmp_path):
     assert report.doc_count == N_DOCS
     assert report.failure_count >= 1  # the corrupt fixture
     # per-phase walls are always reported, no env switch needed
-    assert set(report.phase_sec) == {"udf_stage", "derive", "commit"}
+    assert set(report.phase_sec) == {"udf_stage", "commit"}
     assert all(v >= 0 for v in report.phase_sec.values())
     rows = wh.read_lineage(out)
     assert {r["bucket"] for r in rows} == set(range(N_BUCKETS))
@@ -124,3 +127,73 @@ def test_no_persisted_blocks_leak(spark, pages_path, tmp_path):
         run_extraction(spark, pages_path, out, snapshot_id="snap-old",
                        num_buckets=N_BUCKETS, salt_partitions=4)
     assert _persisted_ids(spark) == before
+
+
+def test_overwrite_batch_runs_three_tagged_jobs(spark, pages_path, tmp_path):
+    """A one-batch overwrite run is the pages footer read, the routing
+    exchange and the parse-and-stage task set: no persist count, no stats
+    job, no separate chunks/extracted writes. Every job is tagged
+    ``extract:*`` so an event log attributes it."""
+    sc = spark.sparkContext
+    group = f"extract-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count guard")
+    try:
+        run_extraction(spark, pages_path, str(tmp_path / "wh"),
+                       num_buckets=N_BUCKETS, salt_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, len(jobs)
+    store = sc._jsc.sc().statusStore()
+    descs = [store.job(j).description() for j in jobs]
+    assert all(d.isDefined() and d.get().startswith("extract:")
+               for d in descs), [d.getOrElse(None) for d in descs]
+
+
+def test_staged_files_read_like_spark_written_files(spark, pages_path,
+                                                    tmp_path):
+    """The task-side writer's files carry what a Spark-written bucket
+    file carries: the pinned schema is the Spark projection's, Spark's
+    own inference over the files reproduces it, no file holds the
+    ``bucket`` partition column or an Arrow schema blob, every column is
+    optional, ``warc_ts`` is INT96, the key columns have min/max stats,
+    and each bucket is one url-sorted file (no ``.crc`` sidecar)."""
+    from docling_rag_spark.operators.pipeline import (
+        DOC_SCHEMA,
+        chunks_table,
+        extracted_table,
+    )
+
+    out = str(tmp_path / "wh")
+    run_extraction(spark, pages_path, out, num_buckets=N_BUCKETS,
+                   salt_partitions=4)
+    docs = spark.createDataFrame([], DOC_SCHEMA).withColumn(
+        "bucket", bucket_of(F.col("url"), N_BUCKETS))
+    for table, project in (("chunks", chunks_table),
+                           ("extracted", extracted_table)):
+        pinned = wh.pinned_table_schema(out, table)
+        assert pinned == project(docs, extra_cols=("bucket",)).schema
+        assert spark.read.parquet(os.path.join(out, table)).schema == pinned
+        dirs = glob.glob(os.path.join(out, table, "bucket=*"))
+        assert dirs
+        for d in dirs:
+            (name,) = os.listdir(d)
+            pf = pq.ParquetFile(os.path.join(d, name))
+            assert "bucket" not in pf.schema_arrow.names
+            assert b"ARROW:schema" not in (pf.metadata.metadata or {})
+            assert all(f.nullable for f in pf.schema_arrow)
+            assert all(pf.schema.column(i).max_definition_level > 0
+                       for i in range(len(pf.schema)))
+            assert pf.metadata.num_row_groups == 1
+            cols = {pf.schema.column(i).path: i
+                    for i in range(len(pf.schema))}
+            for key in wh.TABLE_KEYS[table]:
+                stats = pf.metadata.row_group(0).column(cols[key]).statistics
+                assert stats is not None and stats.has_min_max, key
+            if table == "extracted":
+                assert pf.schema.column(cols["warc_ts"]).physical_type \
+                    == "INT96"
+            keys = pf.read(columns=list(wh.TABLE_KEYS[table])).to_pylist()
+            ordered = [tuple(r.values()) for r in keys]
+            assert ordered == sorted(ordered)

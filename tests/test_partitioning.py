@@ -58,7 +58,8 @@ def test_stage_buckets_routes_one_bucket_per_partition(spark, tmp_path):
     buckets = [1, 5, 9, 12]
     df = _bucketed(spark, 1000, 16, buckets)
     staged = str(tmp_path / "staged")
-    assert wh.stage_buckets(df, staged, "extracted", buckets) == df.count()
+    manifest = wh.stage_buckets(df, staged, "extracted", buckets)
+    assert sum(r["rows"] for r in manifest) == df.count()
     tasks = set()
     for b in buckets:
         (f,) = glob.glob(os.path.join(wh.bucket_dir(staged, b), "*.parquet"))
@@ -114,11 +115,11 @@ def test_route_buckets_salts_fewer_buckets_than_partitions(spark):
 
 def test_extraction_parse_stage_runs_salt_partitions_tasks(
         spark, tmp_path, monkeypatch):
-    """run_extraction feeds the parse UDF exactly salt_partitions
-    partitions (one Python task per partition, not one per bucket),
-    each bucket whole in one of them — so chunks/ and extracted/ still
-    hold one file per bucket. The parse write runs under the
-    extract:parse job description, and the caller's is restored."""
+    """run_extraction feeds the parse-and-stage UDF exactly
+    salt_partitions partitions (one Python task per partition, not one
+    per bucket), each bucket whole in one of them — so chunks/ and
+    extracted/ still hold one file per bucket. The parse stage runs under
+    the extract:parse job description, and the caller's is restored."""
     import glob
     import os
 
@@ -137,14 +138,14 @@ def test_extraction_parse_stage_runs_salt_partitions_tasks(
         preserve_index=False), pages)
     sc = spark.sparkContext
     seen, tags = [], []
-    real = job.extract_documents
+    real = job.stage_documents
 
     def recording(df, *args, **kwargs):
         seen.append(df)
         tags.append(sc.getLocalProperty("spark.job.description"))
         return real(df, *args, **kwargs)
 
-    monkeypatch.setattr(job, "extract_documents", recording)
+    monkeypatch.setattr(job, "stage_documents", recording)
     out = str(tmp_path / "wh")
     sc.setLocalProperty("spark.job.description", "caller")
     try:
