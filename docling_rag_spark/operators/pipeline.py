@@ -12,6 +12,10 @@ projects ``extracted`` and explodes ``chunks`` in Arrow and writes both
 tables' staged files (core/indexer.py:66-116: parse, chunk, store in one
 pass). ``extract_documents`` returns the doc rows to queries, and
 ``chunks_table``/``extracted_table`` are the same projections in Spark.
+
+The row contracts are module constants: ``PAGES_SCHEMA`` for the input,
+``DOC_SCHEMA`` for the UDF's output and ``STAGED_SCHEMAS`` for the two
+staged tables, so a job plans no Spark projection to learn them.
 """
 
 from __future__ import annotations
@@ -27,6 +31,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from docling_rag_spark.config import CHUNK_MAX_TOKENS, DEFAULT_SALT_PARTITIONS
+
+# The pages contract (BASELINE.json input_hint): the columns the parse
+# reads, in this order. sources/pages writes it, the extraction job reads
+# the pages table with it and queries/extraction synthesizes it.
+PAGES_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("warc_ts", T.TimestampType()),
+    T.StructField("html", T.BinaryType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("lang", T.StringType()),
+])
 
 # Every field is nullable, nested ones included: the warehouse's pinned
 # table schemas (io/warehouse.py) are, as any parquet read makes them, and
@@ -58,6 +73,21 @@ DOC_SCHEMA = T.StructType([
     T.StructField("n_blocks", T.IntegerType()),
     T.StructField("chunks", T.ArrayType(CHUNK_STRUCT)),
 ])
+
+# The staged tables' rows (FIXTURES.md §2), as ``extracted_table`` and
+# ``chunks_table`` project them from DOC_SCHEMA rows, plus the ``bucket``
+# partition column: the schemas the extraction job pins at commit.
+_EXTRACTED_DOC_COLS = ("url", "format", "status", "encoding", "error",
+                       "title", "lang", "extracted_text", "n_blocks")
+_BUCKET = T.StructField("bucket", T.IntegerType())
+STAGED_SCHEMAS = {
+    "chunks": T.StructType([DOC_SCHEMA["url"], *CHUNK_STRUCT.fields,
+                            _BUCKET]),
+    "extracted": T.StructType([
+        *(DOC_SCHEMA[c] for c in _EXTRACTED_DOC_COLS),
+        T.StructField("n_chunks", T.IntegerType()), DOC_SCHEMA["warc_ts"],
+        _BUCKET]),
+}
 
 
 def _parse_chunk_batches(batches: Iterator[pd.DataFrame],
@@ -117,7 +147,7 @@ def extract_documents(pages: DataFrame,
     lacks (SURVEY.md §4 "Skew handling"). Column pruning: only the four
     needed columns cross the Arrow boundary.
     """
-    cols = pages.select("url", "warc_ts", "html", "text", "lang")
+    cols = pages.select(*PAGES_SCHEMA.names)
     if salt_partitions:
         cols = cols.repartition(salt_partitions, F.xxhash64("url", F.lit(0x5A17)))
 
@@ -140,9 +170,7 @@ def _doc_tables(slices, max_tokens: int):
         docs = pa.Table.from_pandas(pdf, schema=doc_schema,
                                     preserve_index=False)
         chunks = docs.column("chunks").combine_chunks()
-        extracted = (docs.select(["url", "format", "status", "encoding",
-                                  "error", "title", "lang", "extracted_text",
-                                  "n_blocks"])
+        extracted = (docs.select(list(_EXTRACTED_DOC_COLS))
                      .append_column("n_chunks", pc.list_value_length(chunks))
                      .append_column("warc_ts", docs.column("warc_ts")))
         flat = pa.Table.from_struct_array(pc.list_flatten(chunks))
@@ -161,7 +189,7 @@ def stage_documents(pages: DataFrame, staging: str,
     one url-sorted file per table per bucket of each task."""
     from docling_rag_spark.io import warehouse as wh
 
-    cols = pages.select("bucket", "url", "warc_ts", "html", "text", "lang")
+    cols = pages.select("bucket", *PAGES_SCHEMA.names)
     dirs = {t: os.path.join(staging, t) for t in ("extracted", "chunks")}
 
     def fn(batches):
@@ -196,8 +224,7 @@ def chunks_table(docs: DataFrame,
 def extracted_table(docs: DataFrame,
                     extra_cols: tuple[str, ...] = ()) -> DataFrame:
     """Doc-level output: byte-identity comparison target + registry fields."""
-    return docs.select("url", "format", "status", "encoding", "error",
-                       "title", "lang", "extracted_text", "n_blocks",
+    return docs.select(*_EXTRACTED_DOC_COLS,
                        F.size("chunks").alias("n_chunks"), "warc_ts",
                        *extra_cols)
 

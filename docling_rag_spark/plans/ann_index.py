@@ -43,6 +43,7 @@ import uuid
 from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.operators import pq as PQ
 from docling_rag_spark.operators.search import vector_literal
+from docling_rag_spark.session import job_description
 
 BOOKS = "pq_books.json"
 CELL = "cell"
@@ -210,25 +211,31 @@ def build_ann_index(spark, embeddings_df, out_dir: str,
     A ``delete_urls`` of the warehouse beside ``out_dir`` that started
     after this build's first read cascades into the old index only; the
     new one may still hold its rows. The swap then raises
-    ``CommitConflict`` and keeps the old index: rerun the build."""
+    ``CommitConflict`` and keeps the old index: rerun the build.
+
+    Its Spark jobs are tagged ``ann:train`` (the dimension probe and the
+    training sample) and ``ann:write`` (the encode-and-write job)."""
     from pyspark.sql import functions as F
 
     read_ts = wh.now()
     rows = embeddings_df.select(*id_cols, "embedding")
-    first = rows.select(F.size("embedding").alias("d")).first()
-    if first is None:
-        raise ValueError(f"no embeddings to index into {out_dir}")
-    _recover(out_dir)  # a half-done swap must not read as "no books"
-    side = read_books(out_dir)
-    if side is not None and side["dim"] != first["d"]:
-        raise ValueError(f"{out_dir} holds books for dim {side['dim']}, "
-                         f"rows have dim {first['d']}; remove it to retrain")
-    side = _books(rows, id_cols, side)
+    with job_description(spark, "ann:train"):
+        first = rows.select(F.size("embedding").alias("d")).first()
+        if first is None:
+            raise ValueError(f"no embeddings to index into {out_dir}")
+        _recover(out_dir)  # a half-done swap must not read as "no books"
+        side = read_books(out_dir)
+        if side is not None and side["dim"] != first["d"]:
+            raise ValueError(
+                f"{out_dir} holds books for dim {side['dim']}, rows have "
+                f"dim {first['d']}; remove it to retrain")
+        side = _books(rows, id_cols, side)
     head, name = os.path.split(os.path.abspath(out_dir))
     tmp = os.path.join(head, f".{name}.build-{uuid.uuid4().hex[:12]}")
     try:
-        (_encode(rows, side, id_cols).write.partitionBy(CELL)
-         .mode("overwrite").parquet(os.path.join(tmp, "pq")))
+        with job_description(spark, "ann:write"):
+            (_encode(rows, side, id_cols).write.partitionBy(CELL)
+             .mode("overwrite").parquet(os.path.join(tmp, "pq")))
         with open(os.path.join(tmp, BOOKS), "w") as f:
             json.dump(side, f)
         with index_lock(out_dir, timeout=60.0):

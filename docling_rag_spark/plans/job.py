@@ -3,7 +3,8 @@
 Replaces the reference's sequential indexing loop + postgres job queue
 (core/indexer.py:41-117, worker/runner.py:97-119) with:
 
-  scan pages -> assign bucket = pmod(xxhash64(url), N)
+  scan pages (declared contract schema, no footer-inference job)
+             -> assign bucket = pmod(xxhash64(url), N)
              -> anti-join buckets against committed lineage (resume, J3)
              -> per bucket-batch: whole buckets routed into
                 salt_partitions tasks (warehouse.route_buckets), each
@@ -14,6 +15,11 @@ Replaces the reference's sequential indexing loop + postgres job queue
                 per file (operators/pipeline.stage_documents)
              -> atomic bucket-directory commit of the listed files +
                 lineage append, counts from the manifest
+
+The driver plans only what depends on the run: the pages schema and the
+staged tables' schemas are constants (operators/pipeline.PAGES_SCHEMA,
+STAGED_SCHEMAS), so a one-batch overwrite runs two Spark jobs, the
+routing exchange and the parse-and-stage task set.
 
 Unit of checkpointing = url-hash bucket (not file): a rerun after a crash
 reprocesses only buckets without a committed lineage row for the input
@@ -45,9 +51,8 @@ from docling_rag_spark.config import (
 from docling_rag_spark.io import snapshots as snap
 from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.operators.pipeline import (
-    DOC_SCHEMA,
-    chunks_table,
-    extracted_table,
+    PAGES_SCHEMA,
+    STAGED_SCHEMAS,
     stage_documents,
 )
 from docling_rag_spark.plans import ann_index as AI
@@ -86,6 +91,45 @@ def _input_bytes(path: str) -> int:
             except OSError:
                 pass
     return total
+
+
+def _first_input_file(path: str) -> str | None:
+    """One data file of a local parquet input, skipping the hidden
+    (``_``/``.``-prefixed) files and dirs Spark skips; None when there is
+    none or the path is not local."""
+    if os.path.isfile(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if d[0] not in "_.")
+        for f in sorted(files):
+            if f[0] not in "_.":
+                return os.path.join(root, f)
+    return None
+
+
+def _read_pages(spark, pages_path: str) -> DataFrame:
+    """The pages table, read with the declared contract ``PAGES_SCHEMA``:
+    no footer-inference job, and an ``html`` column stored as string reads
+    as the bytes the parse expects. A declared schema reads a column the
+    files lack as null, so the footer of one local file is checked first,
+    on the driver (pyarrow, no Spark job): an input without a contract
+    column fails here, before any task runs. An input with no local file
+    (a remote store) is checked by Spark's footer inference."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+
+    first = _first_input_file(pages_path)
+    if first is None:
+        with job_description(spark, "extract:parse"):
+            have = set(spark.read.parquet(pages_path).columns)
+    else:
+        have = set(pq.read_schema(first).names)
+    missing = [c for c in PAGES_SCHEMA.names if c not in have]
+    if missing:
+        raise AnalysisException(
+            message=f"pages input {pages_path} lacks column(s) {missing} "
+                    f"of the contract {PAGES_SCHEMA.simpleString()}")
+    return spark.read.schema(PAGES_SCHEMA).parquet(pages_path)
 
 
 def _scan_split_bytes(spark, pages_path: str) -> str | None:
@@ -183,9 +227,8 @@ def _run_extraction_inner(
     retain_snapshots: bool,
     _fail_after_batches: int | None,
 ) -> ExtractionReport:
-    # the footer read that infers the pages schema is a Spark job too
-    with job_description(spark, "extract:parse"):
-        pages = spark.read.parquet(pages_path)
+    # declared schema: the only Spark jobs are the batches' own
+    pages = _read_pages(spark, pages_path)
 
     # conflict base: the instant this job read its base state. Using the
     # per-batch start instead would miss a newer snapshot that committed
@@ -214,15 +257,6 @@ def _run_extraction_inner(
     # then commit partial buckets with lineage claiming them done
     import uuid
     run_id = uuid.uuid4().hex[:12]
-
-    # the staged tables' schemas, pinned at commit: the Spark projections
-    # of the doc rows (planned, never run) — what the task-side Arrow
-    # projections write, plus the bucket partition column
-    docs = spark.createDataFrame([], DOC_SCHEMA).withColumn(
-        "bucket", bucket_of(F.col("url"), num_buckets))
-    schemas = {"chunks": chunks_table(docs, extra_cols=("bucket",)).schema,
-               "extracted": extracted_table(docs,
-                                            extra_cols=("bucket",)).schema}
 
     for batch_idx, batch in enumerate(batches):
         started = wh.now()
@@ -266,12 +300,12 @@ def _run_extraction_inner(
                 s["doc_count" if r["table"] == "extracted"
                   else "chunk_count"] += r["rows"]
                 s["failure_count"] += r["failures"]
-            staged = {t: (os.path.join(staging, t), schemas[t])
-                      for t in schemas}
+            staged = {t: (os.path.join(staging, t), STAGED_SCHEMAS[t])
+                      for t in STAGED_SCHEMAS}
             if mode == "merge" and manifest:
                 with job_description(spark, "extract:merge"):
                     staged, manifest = _merge_staged(
-                        spark, out_dir, staging, manifest, schemas)
+                        spark, out_dir, staging, manifest)
 
             _t1 = _time.time()
             # The shared bucket-rewrite commit. Validation: a NEWER
@@ -358,8 +392,8 @@ def _changed_pages(spark, sub: DataFrame, out_dir: str,
     return sub, n_latest - n_changed, n_changed
 
 
-def _merge_staged(spark, out_dir: str, staging: str, manifest: list[dict],
-                  schemas: dict) -> tuple[dict, list[dict]]:
+def _merge_staged(spark, out_dir: str, staging: str,
+                  manifest: list[dict]) -> tuple[dict, list[dict]]:
     """Copy-on-write MERGE of a batch's staged new rows into the buckets
     they touch: each touched bucket is restaged as (committed rows minus
     re-extracted urls) ∪ (new rows). A bucket of the batch with zero
@@ -373,9 +407,9 @@ def _merge_staged(spark, out_dir: str, staging: str, manifest: list[dict],
         # only the files the manifest lists: a failed attempt's are not rows
         files = [os.path.join(wh.bucket_dir(d, r["bucket"]), r["file"])
                  for r in manifest if r["table"] == t]
-        merged = (spark.read.schema(schemas[t]).option("basePath", d)
+        merged = (spark.read.schema(STAGED_SCHEMAS[t]).option("basePath", d)
                   .parquet(*files) if files
-                  else spark.createDataFrame([], schemas[t]))
+                  else spark.createDataFrame([], STAGED_SCHEMAS[t]))
         if t == "extracted":
             new_urls = merged.select("url")
         old = wh.read_buckets(spark, out_dir, t, active)
@@ -394,7 +428,10 @@ def _merge_staged(spark, out_dir: str, staging: str, manifest: list[dict],
 def embed_warehouse(spark: SparkSession, out_dir: str,
                     num_buckets: int | None = None) -> str:
     """Embed the warehouse's ``chunks`` into ``<out_dir>/embeddings`` and
-    return that dir. Map-only: scan → embedding UDF → write, no shuffle.
+    return that dir. Map-only: scan → embedding UDF → write, no shuffle:
+    one Spark job, tagged ``embed:write`` (``chunks`` is read with its
+    pinned schema, so no footer-inference job, and no column of a
+    mixed-era table goes missing).
 
     The table is bucketed at the warehouse's pinned spec, like every other
     table: a delete's bucket-local rewrite looks for a url's embedding
@@ -405,9 +442,10 @@ def embed_warehouse(spark: SparkSession, out_dir: str,
 
     num_buckets = wh.resolve_num_buckets(out_dir, num_buckets)
     emb_dir = os.path.join(out_dir, "embeddings")
-    (embed_chunks(spark.read.parquet(os.path.join(out_dir, "chunks")))
-     .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
-     .write.partitionBy("bucket").mode("overwrite").parquet(emb_dir))
+    with job_description(spark, "embed:write"):
+        (embed_chunks(wh.read_table(spark, out_dir, "chunks"))
+         .withColumn("bucket", bucket_of(F.col("url"), num_buckets))
+         .write.partitionBy("bucket").mode("overwrite").parquet(emb_dir))
     return emb_dir
 
 
@@ -425,14 +463,18 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
     targeted urls are read, filtered, and atomically re-committed — every
     other bucket's files are untouched (the same partition-pruned shape a
     real DELETE takes on a bucket-partitioned Iceberg table).
+
+    Its Spark jobs are tagged ``delete:<step>``: ``delete:plan`` (the
+    urls' buckets), ``delete:<table>`` per table and ``delete:ann``.
     """
     num_buckets = wh.resolve_num_buckets(out_dir, num_buckets)
     urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    buckets = sorted({
-        r["bucket"]
-        for r in urls_df.select(
-            bucket_of(F.col("url"), num_buckets).alias("bucket"))
-        .distinct().collect()})
+    with job_description(spark, "delete:plan"):
+        buckets = sorted({
+            r["bucket"]
+            for r in urls_df.select(
+                bucket_of(F.col("url"), num_buckets).alias("bucket"))
+            .distinct().collect()})
     report = {"buckets_rewritten": buckets, "rows_deleted": {}}
     # unique per-invocation staging dir: concurrent deletes (or a delete
     # racing an extraction job's cleanup) must never share a staging path
@@ -457,11 +499,13 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
 
     try:
         for table in tables:
-            report["rows_deleted"][table] = _delete_bucketed(
-                spark, out_dir, table, urls_df, buckets, num_buckets,
-                staging, del_snap)
-        report["ann_rows_deleted"] = _delete_from_ann(spark, out_dir,
-                                                      urls_df, staging)
+            with job_description(spark, f"delete:{table}"):
+                report["rows_deleted"][table] = _delete_bucketed(
+                    spark, out_dir, table, urls_df, buckets, num_buckets,
+                    staging, del_snap)
+        with job_description(spark, "delete:ann"):
+            report["ann_rows_deleted"] = _delete_from_ann(
+                spark, out_dir, urls_df, staging)
     finally:
         # a CommitConflict / failed write must not leak staged parquet
         # (it would also keep the _staging root non-removable forever)

@@ -103,6 +103,8 @@ def _as_pages(docs):
     format / charset / status tier (see ``_synth_payload``)."""
     import pandas as pd
 
+    from docling_rag_spark.operators.pipeline import PAGES_SCHEMA
+
     def synth(batches):
         for pdf in batches:
             htmls, wets, urls = [], [], []
@@ -118,9 +120,7 @@ def _as_pages(docs):
                                 "lang": pdf["lang"]})
 
     return docs.select("doc_id", "source", "text", "lang").mapInPandas(
-        synth,
-        schema="url string, warc_ts timestamp, html binary, "
-               "text string, lang string")
+        synth, schema=PAGES_SCHEMA)
 
 
 def extract_chunks(spark, sf_dir):

@@ -1,6 +1,6 @@
 """Deterministic synthetic `pages` table (Common-Crawl shape, no external data).
 
-Schema per BASELINE.json::input_hint:
+Schema per BASELINE.json::input_hint, ``operators/pipeline.PAGES_SCHEMA``:
     pages(url string, warc_ts timestamp, html binary, text string, lang string)
 
 Every row is a pure function of (doc_id, seed): content class, host, words and
@@ -21,7 +21,9 @@ import random
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from docling_rag_spark.operators.pipeline import PAGES_SCHEMA
 from docling_rag_spark.sources import fixtures as FX
 
 _VOCAB = (
@@ -227,13 +229,7 @@ def generate_pages(n_docs: int, seed: int = 42,
     })
 
 
-PAGES_ARROW_SCHEMA = pa.schema([
-    ("url", pa.string()),
-    ("warc_ts", pa.timestamp("us", tz="UTC")),
-    ("html", pa.binary()),
-    ("text", pa.string()),
-    ("lang", pa.string()),
-])
+PAGES_ARROW_SCHEMA = to_arrow_schema(PAGES_SCHEMA)
 
 
 def write_pages_parquet(path: str, n_docs: int, seed: int = 42,

@@ -5,13 +5,14 @@ behavior contract (CLAUDE.md:127-132): split > budget, merge small peers,
 tables/code atomic.
 """
 
+from fixture_builders import small_peers_markdown
+
 from docling_rag_spark.functions.tokens import count_tokens
 from docling_rag_spark.operators.blocks import Block, chunk_blocks
 from docling_rag_spark.operators.extract_markdown import extract_markdown
 from docling_rag_spark.sources.fixtures import (
     E2E_MARKDOWN,
     long_section_markdown,
-    small_peers_markdown,
 )
 
 

@@ -96,10 +96,11 @@ def test_embeddings_follow_the_pinned_spec_through_delete(spark, tmp_path):
     assert hits and not ({h["url"] for h in hits} & set(victims))
 
 
-def test_delete_cascades_into_ann_index(spark, tmp_path):
+def test_delete_cascades_into_ann_index(spark, spark_jobs, tmp_path):
     """A deleted url must vanish from the materialized ANN index — its one
     IVF-PQ table — while the codebooks stay: a stale index would keep
-    ranking its chunks in mode=ann searches."""
+    ranking its chunks in mode=ann searches. Every Spark job of the
+    delete is tagged ``delete:<step>``."""
     from docling_rag_spark.plans.ann_index import INDEX_TABLES, build_ann_index
     from docling_rag_spark.plans.job import embed_warehouse
 
@@ -114,7 +115,11 @@ def test_delete_cascades_into_ann_index(spark, tmp_path):
         ["pq", "pq_books.json"]
 
     victims = sorted(_chunk_urls(spark, out))[:2]
-    report = delete_urls(spark, out, victims, num_buckets=8)
+    report, descs = spark_jobs(lambda: delete_urls(spark, out, victims,
+                                                   num_buckets=8))
+    assert all(d and d.startswith("delete:") for d in descs), descs
+    assert {"delete:plan", "delete:chunks", "delete:extracted",
+            "delete:embeddings", "delete:ann"} <= set(descs), descs
     assert sorted(os.listdir(os.path.join(out, "ann"))) == \
         ["pq", "pq_books.json"]
     for sub in INDEX_TABLES:

@@ -213,23 +213,35 @@ def test_ann_serving_path_matches_exact_on_probed_cells(spark, served_wh):
         os.rename(os.path.join(wh, "ann_bak"), os.path.join(wh, "ann"))
 
 
-def _spark_jobs(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it launched."""
-    import uuid
+def test_embed_warehouse_runs_one_tagged_job(spark, spark_jobs, served_wh,
+                                             tmp_path):
+    """Embedding a warehouse is one Spark job, ``embed:write``: ``chunks``
+    is read with its pinned schema, so no footer-inference job runs (and
+    a mixed-era table keeps every column)."""
+    import shutil
 
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count guard")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    from docling_rag_spark.plans.job import embed_warehouse
+
+    wh = str(tmp_path / "wh")
+    shutil.copytree(served_wh, wh)
+    _, descs = spark_jobs(lambda: embed_warehouse(spark, wh))
+    assert descs == ["embed:write"]
 
 
-def test_search_launches_at_most_four_spark_jobs(spark, served_wh,
-                                                monkeypatch):
+def test_ann_build_jobs_are_tagged(spark, spark_jobs, served_wh, tmp_path):
+    """Every Spark job of an ANN index build (a first build: dimension
+    probe, training sample, encode-and-write) is tagged ``ann:*``."""
+    from docling_rag_spark.plans import ann_index as AI
+
+    emb = spark.read.parquet(os.path.join(served_wh, "embeddings"))
+    _, descs = spark_jobs(lambda: AI.build_ann_index(
+        spark, emb, str(tmp_path / "ann"), id_cols=("url", "chunk_id")))
+    assert descs and all(d and d.startswith("ann:") for d in descs), descs
+    assert {"ann:train", "ann:write"} <= set(descs)
+
+
+def test_search_launches_at_most_four_spark_jobs(spark, spark_jobs,
+                                                served_wh, monkeypatch):
     """A search is one top-k collect plus one point lookup per decorate
     table — not a multi-wave broadcast-join plan. The ANN path reads its
     index with the sidecar's declared schema, so it launches no footer
@@ -240,8 +252,9 @@ def test_search_launches_at_most_four_spark_jobs(spark, served_wh,
 
     sc = spark.sparkContext
     for mode in ("exact", "ann"):
-        hits, n = _spark_jobs(spark, lambda: service.search_warehouse(
+        hits, descs = spark_jobs(lambda: service.search_warehouse(
             spark, served_wh, "star schema tables", log=False, mode=mode))
+        n = len(descs)
         assert hits, mode
         assert n <= 4, (mode, n)
         if mode == "ann":

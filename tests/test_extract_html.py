@@ -1,9 +1,7 @@
+from fixture_builders import HTML_ARTICLE_MAIN_TEXTS
+
 from docling_rag_spark.operators.extract_html import extract_html
-from docling_rag_spark.sources.fixtures import (
-    HTML_ARTICLE,
-    HTML_ARTICLE_MAIN_TEXTS,
-    HTML_TABLE_PAGE,
-)
+from docling_rag_spark.sources.fixtures import HTML_ARTICLE, HTML_TABLE_PAGE
 
 
 def test_boilerplate_stripped_main_kept():

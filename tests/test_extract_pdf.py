@@ -70,7 +70,7 @@ def test_extract_blocks_pages_and_provenance():
 
 # --- real-crawl depth: object streams, predictors, unicode, bombs -----------
 
-from docling_rag_spark.sources.fixtures import (  # noqa: E402
+from fixture_builders import (  # noqa: E402
     build_bomb_pdf,
     build_objstm_pdf,
     build_unicode_pdf,

@@ -2,15 +2,20 @@
 
 import glob
 import os
-import uuid
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
 from docling_rag_spark.plans.job import bucket_of, run_extraction
-from docling_rag_spark.sources.pages import write_pages_parquet
+from docling_rag_spark.sources.pages import (
+    PAGES_ARROW_SCHEMA,
+    generate_pages,
+    write_pages_parquet,
+)
 
 N_DOCS = 60
 N_BUCKETS = 8
@@ -129,26 +134,86 @@ def test_no_persisted_blocks_leak(spark, pages_path, tmp_path):
     assert _persisted_ids(spark) == before
 
 
-def test_overwrite_batch_runs_three_tagged_jobs(spark, pages_path, tmp_path):
-    """A one-batch overwrite run is the pages footer read, the routing
-    exchange and the parse-and-stage task set: no persist count, no stats
-    job, no separate chunks/extracted writes. Every job is tagged
-    ``extract:*`` so an event log attributes it."""
-    sc = spark.sparkContext
-    group = f"extract-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count guard")
-    try:
-        run_extraction(spark, pages_path, str(tmp_path / "wh"),
-                       num_buckets=N_BUCKETS, salt_partitions=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 1 <= len(jobs) <= 3, len(jobs)
-    store = sc._jsc.sc().statusStore()
-    descs = [store.job(j).description() for j in jobs]
-    assert all(d.isDefined() and d.get().startswith("extract:")
-               for d in descs), [d.getOrElse(None) for d in descs]
+def test_overwrite_batch_runs_two_tagged_jobs(spark, spark_jobs, pages_path,
+                                              tmp_path):
+    """A one-batch overwrite run is the routing exchange and the
+    parse-and-stage task set: no pages footer read (the pages schema is
+    declared), no persist count, no stats job, no separate
+    chunks/extracted writes. Every job is tagged ``extract:*`` so an
+    event log attributes it."""
+    _, descs = spark_jobs(lambda: run_extraction(
+        spark, pages_path, str(tmp_path / "wh"), num_buckets=N_BUCKETS,
+        salt_partitions=4))
+    assert 1 <= len(descs) <= 2, descs
+    assert all(d and d.startswith("extract:") for d in descs), descs
+
+
+def _write_pages(path, **columns):
+    """A pages file of the generated rows with each of ``columns``
+    replaced (by ``fn(column)``) or dropped (None)."""
+    t = pa.Table.from_pandas(generate_pages(N_DOCS),
+                             schema=PAGES_ARROW_SCHEMA, preserve_index=False)
+    for name, col in columns.items():
+        i = t.schema.get_field_index(name)
+        t = t.remove_column(i) if col is None else t.set_column(
+            i, name, col(t.column(name)))
+    pq.write_table(t, path)
+
+
+def _utf8_or_null(col):
+    """``col``'s bytes as UTF-8 ``string`` values; null where they are
+    not UTF-8 (PDFs, legacy charsets)."""
+    def text(v):
+        try:
+            return v.decode()
+        except (AttributeError, UnicodeDecodeError):
+            return None
+    return pa.array([text(v) for v in col.to_pylist()], pa.string())
+
+
+def _extract(spark, pages, out) -> str:
+    run_extraction(spark, pages, str(out), num_buckets=N_BUCKETS,
+                   salt_partitions=4)
+    return str(out)
+
+
+def test_html_stored_as_string_is_parsed(spark, pages_path, tmp_path):
+    """A pages file whose ``html`` column is UTF-8 ``string``, not
+    ``binary``: the declared pages schema reads it as bytes, so each of
+    its rows extracts as the binary file's row does. (With footer
+    inference the parse saw ``str`` and every such row came out
+    ``format='empty'``.)"""
+    p = str(tmp_path / "pages.parquet")
+    _write_pages(p, html=_utf8_or_null)
+    assert pq.read_schema(p).field("html").type == pa.string()
+    got, want = (
+        {r.url: (r.format, r.status, r.extracted_text) for r in
+         wh.read_table(spark, out, "extracted").collect()}
+        for out in (_extract(spark, p, tmp_path / "s"),
+                    _extract(spark, pages_path, tmp_path / "b")))
+    t = pq.read_table(p, columns=["url", "html"]).to_pydict()
+    kept = [u for u, h in zip(t["url"], t["html"]) if h is not None]
+    assert kept
+    assert {u: got[u] for u in kept} == {u: want[u] for u in kept}
+    assert {got[u][0] for u in kept} - {"empty"}
+
+
+@pytest.mark.parametrize("column", ["url", "text"])
+def test_pages_without_a_contract_column_fail_before_any_task(
+        spark, spark_jobs, tmp_path, column):
+    """A declared schema would read a missing column as null (null urls,
+    lost WET text): a pages file without a contract column fails on the
+    driver instead, before any Spark job, and stages nothing."""
+    p, out = str(tmp_path / "pages.parquet"), str(tmp_path / "wh")
+    _write_pages(p, **{column: None})
+
+    def run():
+        with pytest.raises(AnalysisException, match=column):
+            _extract(spark, p, out)
+
+    _, descs = spark_jobs(run)
+    assert descs == []
+    assert not os.path.exists(os.path.join(out, "extracted"))
 
 
 def test_staged_files_read_like_spark_written_files(spark, pages_path,

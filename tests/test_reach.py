@@ -20,7 +20,6 @@ PKG = "docling_rag_spark"
 # package. The list only shrinks: an entry that gains a caller, or whose
 # code is deleted, must leave it.
 _REGISTRY = "registry chain; wiring it or deleting it is still open"
-_FIXTURE = "test fixture builder; to move into tests/"
 _MEDIA = "media op that no oracle calls; keep-or-delete still open"
 ALLOWED = {
     "plans.registry": _REGISTRY,
@@ -37,10 +36,6 @@ ALLOWED = {
         "fail-soft form of classify_pdf that the S3 detector matrix pins",
     "plans.dedup_index.append_band_delta":
         "append half of the incremental dedup index; no ingest calls it yet",
-    "sources.fixtures.build_objstm_pdf": _FIXTURE,
-    "sources.fixtures.build_unicode_pdf": _FIXTURE,
-    "sources.fixtures.build_bomb_pdf": _FIXTURE,
-    "sources.fixtures.small_peers_markdown": _FIXTURE,
     "operators.multimodal.resize_images": _MEDIA,
     "operators.multimodal.sample_frames": _MEDIA,
 }

@@ -159,24 +159,16 @@ def test_rebucket_is_time_travelable(spark, tmp_path):
     assert got == pre
 
 
-def test_rebucket_runs_at_most_three_jobs_per_table(spark, tmp_path):
+def test_rebucket_runs_at_most_three_jobs_per_table(spark, spark_jobs,
+                                                    tmp_path):
     """Each table is one staged write through ``warehouse.stage_buckets``,
     routed by bucket id: no range-partitioning sampling job and no second
     pass to count rows (footers give the count)."""
-    import uuid
-
     base = generate_pages(20, seed=107)
     p = str(tmp_path / "p.parquet")
     _write(base, p)
     out = str(tmp_path / "wh")
     run_extraction(spark, p, out, num_buckets=4, salt_partitions=2)
-    sc = spark.sparkContext
-    group = f"rebucket-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job-count guard")
-    try:
-        res = rebucket_warehouse(spark, out, 8)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    res, descs = spark_jobs(lambda: rebucket_warehouse(spark, out, 8))
     assert set(res["tables"]) == {"chunks", "extracted"}
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    assert len(descs) <= 6, descs
