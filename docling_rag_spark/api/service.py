@@ -9,10 +9,11 @@ thin JSON shim. No web framework ships in this environment; the HTTP tier
 is deliberately dependency-free.
 
 Driver-side role: these run interactive, seconds-scale queries. A search
-is two small Spark steps: a TakeOrderedAndProject over the embeddings
-table or the ANN index collects the top-k keys, then a point lookup of those
-keys in ``extracted`` and ``chunks`` decorates them on the driver. Status
-is a lineage-table scan. The heavy batch work stays in plans/job.
+is one small Spark job: a TakeOrderedAndProject over the embeddings table
+or the ANN index collects the top-k keys. The driver then decorates them
+by reading only their urls' bucket files of ``extracted`` and ``chunks``
+with pyarrow. Status is a lineage-table scan. The heavy batch work stays
+in plans/job.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import os
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
@@ -41,15 +42,15 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
     """§3.2 search lifecycle: embed query -> top-k -> decorate (J1) ->
     heading path (F3) + 300-char preview (F4) -> search log (S8).
 
-    Two Spark steps, three small jobs:
+    One Spark job, ``search:topk``:
 
     1. top-k: one TakeOrderedAndProject over the candidate rows collects
        the <= k ``(url, chunk_id, score)`` hits to the driver. A
        ``url_prefix`` is a ``startswith`` filter on the candidates, pushed
        into their scan.
-    2. decorate: ``extracted`` and ``chunks`` are read with
-       ``url IN (<hit urls>)``, which prunes their url-sorted row groups,
-       and the looked-up rows are merged onto the hits on the driver,
+    2. decorate, on the driver (``_decorate``): the bucket files of the
+       hit urls in ``extracted`` and ``chunks`` are read with pyarrow,
+       filtered to the hit keys, and the rows are merged onto the hits,
        ordered by (score desc, url, chunk_id) with the score rounded to 4
        places.
 
@@ -68,7 +69,6 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
 
     if mode not in ("auto", "exact", "ann"):
         raise ValueError(f"invalid mode {mode!r}; use auto|exact|ann")
-    chunks = wh.read_table(spark, warehouse, "chunks")
     emb_path = os.path.join(warehouse, "embeddings")
     ann = os.path.join(warehouse, "ann")
     if mode == "ann" or (mode == "auto" and AI.has_rows(ann)):
@@ -80,7 +80,7 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         if os.path.isdir(emb_path):
             emb = spark.read.schema(EMBEDDINGS_SCHEMA).parquet(emb_path)
         else:
-            emb = embed_chunks(chunks)
+            emb = embed_chunks(wh.read_table(spark, warehouse, "chunks"))
         if url_prefix is not None:
             emb = emb.filter(F.col("url").startswith(url_prefix))
         top = search_chunks(spark, emb, query, top_k=top_k,
@@ -89,44 +89,55 @@ def search_warehouse(spark: SparkSession, warehouse: str, query: str,
         hits = (top.select("url", "chunk_id",
                            F.round("score", 4).alias("score"))
                 .collect())
-        if not hits and chunks.isEmpty():
+        if not hits and wh.read_table(spark, warehouse, "chunks").isEmpty():
             raise FileNotFoundError("no chunks in storage (reference "
                                     "db_storage.py:131-133 contract)")
-    with job_description(spark, "search:decorate"):
-        rows = _decorate(spark, warehouse, chunks, hits, include_text)
+    rows = _decorate(warehouse, hits, include_text)
     if log:
         log_search(warehouse, query, rows[0]["score"] if rows else None)
     return rows
 
 
-def _decorate(spark: SparkSession, warehouse: str, chunks: DataFrame,
-              hits: list, include_text: bool) -> list[dict]:
-    """Left-join the hits to their document title and chunk metadata by
-    point lookup: one small collect per table, filtered to the hit keys,
-    merged on the driver. Both tables hold one row per key (extraction
-    keeps the latest page per url); a hit with no row keeps null fields."""
+def _decorate(warehouse: str, hits: list, include_text: bool
+              ) -> list[dict]:
+    """Left-join the hits to their document title and chunk metadata by a
+    driver-side point lookup in the hit urls' buckets (every bucket while
+    the spec is unpinned or a rebucket is in flight). Both tables hold one
+    row per key (extraction keeps the latest page per url); a hit with no
+    row keeps null fields. ``heading_path`` and ``preview`` are Spark's
+    ``array_join(headings, ' > ')`` (nulls skipped) and
+    ``translate(substring(text, 1, 300), '\\n', ' ')``."""
+    from docling_rag_spark.plans.job import url_buckets
+
     if not hits:
         return []
     urls = sorted({h["url"] for h in hits})
-    titles = {r["url"]: r["title"]
-              for r in (wh.read_table(spark, warehouse, "extracted")
-                        .filter(F.col("url").isin(urls))
-                        .select("url", "title").collect())}
+    n = wh.warehouse_num_buckets(warehouse)
+    if n is None or wh.rebucket_in_progress(warehouse) is not None:
+        buckets = None
+    else:
+        buckets = url_buckets(urls, n)
+    titles = {r["url"]: r["title"] for r in wh.lookup_rows(
+        warehouse, "extracted", buckets, ["url", "title"], {"url": urls})}
+    meta = {}
+    for r in wh.lookup_rows(
+            warehouse, "chunks", buckets,
+            ["url", "chunk_id", "headings", "text", "page_number",
+             "element_type"],
+            {"url": urls,
+             "chunk_id": sorted({h["chunk_id"] for h in hits})}):
+        heads, text = r["headings"], r["text"]
+        meta[(r["url"], r["chunk_id"])] = {
+            "heading_path": None if heads is None else " > ".join(
+                x for x in heads if x is not None),
+            "preview": None if text is None
+            else text[:300].replace("\n", " "),
+            "page_number": r["page_number"],
+            "element_type": r["element_type"],
+            "text": text, "headings": heads}
     extra = ["text", "headings"] if include_text else []
     fields = ["heading_path", "preview", "page_number", "element_type",
               *extra]
-    meta = {(r["url"], r["chunk_id"]): r.asDict()
-            for r in (chunks
-                      .filter(F.col("url").isin(urls)
-                              & F.col("chunk_id").isin(
-                                  sorted({h["chunk_id"] for h in hits})))
-                      .select("url", "chunk_id",
-                              F.array_join("headings", " > ")
-                               .alias("heading_path"),
-                              F.translate(F.substring("text", 1, 300),
-                                          "\n", " ").alias("preview"),
-                              "page_number", "element_type", *extra)
-                      .collect())}
     rows = []
     for h in hits:
         m = meta.get((h["url"], h["chunk_id"]), {})

@@ -300,6 +300,55 @@ def read_buckets(spark, out_dir: str, table: str, buckets: list[int]):
     return reader.parquet(*dirs)
 
 
+def _data_files(d: str) -> list[str]:
+    """Files under ``d`` as a Spark scan lists them: ``.``- and
+    ``_``-prefixed names (hidden files, parked dirs) are skipped."""
+    out = []
+    for e in sorted(os.listdir(d)):
+        if e.startswith((".", "_")):
+            continue
+        p = os.path.join(d, e)
+        out.extend(_data_files(p) if os.path.isdir(p) else [p])
+    return out
+
+
+def bucket_files(out_dir: str, table: str,
+                 buckets: list[int] | None) -> list[str]:
+    """The committed data files of ``table``'s ``buckets`` (the whole
+    table when None); missing dirs hold none."""
+    table_dir = os.path.join(out_dir, table)
+    dirs = [table_dir] if buckets is None else \
+        [bucket_dir(table_dir, b) for b in buckets]
+    return [f for d in dirs if os.path.isdir(d) for f in _data_files(d)]
+
+
+def lookup_rows(out_dir: str, table: str, buckets: list[int] | None,
+                columns: list[str], keys: dict[str, list]) -> list[dict]:
+    """Driver-side point lookup, no Spark job: the rows of ``buckets``
+    (the whole table when None) whose every ``keys`` column holds one of
+    its listed values, read with pyarrow. Bucket files are sorted by the
+    table's key and carry min/max statistics, so the filter skips row
+    groups. Schema-pinned like ``read_table``: a file that lacks a pinned
+    column reads it as null."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    files = bucket_files(out_dir, table, buckets)
+    if not files:
+        return []
+    pinned = pinned_table_schema(out_dir, table)
+    schema = None
+    if pinned is not None:
+        full = to_arrow_schema(pinned)
+        schema = pa.schema([full.field(c) for c in columns])
+    where = None
+    for col, values in keys.items():
+        e = ds.field(col).isin(values)
+        where = e if where is None else where & e
+    return (ds.dataset(files, schema=schema, format="parquet")
+            .to_table(columns=columns, filter=where).to_pylist())
+
+
 def route_buckets(df, buckets: list[int], partitions: int):
     """``df`` (rows of ``buckets`` only, ``bucket`` and ``url`` columns
     included) in ``partitions`` shuffle partitions: the routing every

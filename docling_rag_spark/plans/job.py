@@ -38,8 +38,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import struct
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,6 +82,63 @@ def bucket_of(url_col, num_buckets: int):
     return F.pmod(F.xxhash64(url_col), F.lit(num_buckets)).cast("int")
 
 
+# XXH64 primes; ``url_buckets`` is ``bucket_of`` on the driver
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(s: str, seed: int = 42) -> int:
+    """Spark's ``xxhash64(s)`` in Python: XXH64 over the UTF-8 bytes, read
+    in little-endian 8-, then 4-, then 1-byte steps (Spark's
+    ``XXH64.hashUnsafeBytes``), as a signed 64-bit int."""
+    b = s.encode("utf-8")
+    n, i = len(b), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_round(a, x)
+                 for a, x in zip(v, struct.unpack_from("<4Q", b, i))]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", b, i)
+        h = (_rotl(h ^ _round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", b, i)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for c in b[i:]:
+        h = _rotl(h ^ (c * _P5 & _M64), 11) * _P1 & _M64
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def url_buckets(urls, num_buckets: int) -> list[int]:
+    """The sorted distinct ``bucket_of`` values of ``urls``, hashed on the
+    driver: a handful of keys needs no Spark job. Python's ``%`` of a
+    signed int by a positive modulus is Spark's ``pmod``."""
+    return sorted({xxhash64(u) % num_buckets for u in urls})
+
+
 def _input_bytes(path: str) -> int:
     if os.path.isfile(path):
         return os.path.getsize(path)
@@ -115,7 +174,6 @@ def _read_pages(spark, pages_path: str) -> DataFrame:
     on the driver (pyarrow, no Spark job): an input without a contract
     column fails here, before any task runs. An input with no local file
     (a remote store) is checked by Spark's footer inference."""
-    import pyarrow.parquet as pq
     from pyspark.errors import AnalysisException
 
     first = _first_input_file(pages_path)
@@ -464,17 +522,13 @@ def delete_urls(spark: SparkSession, out_dir: str, urls: list[str],
     other bucket's files are untouched (the same partition-pruned shape a
     real DELETE takes on a bucket-partitioned Iceberg table).
 
-    Its Spark jobs are tagged ``delete:<step>``: ``delete:plan`` (the
-    urls' buckets), ``delete:<table>`` per table and ``delete:ann``.
+    Its Spark jobs are tagged ``delete:<table>`` per table and
+    ``delete:ann``; the urls' buckets are hashed on the driver
+    (``url_buckets``), without a job.
     """
     num_buckets = wh.resolve_num_buckets(out_dir, num_buckets)
     urls_df = spark.createDataFrame([(u,) for u in urls], "url string")
-    with job_description(spark, "delete:plan"):
-        buckets = sorted({
-            r["bucket"]
-            for r in urls_df.select(
-                bucket_of(F.col("url"), num_buckets).alias("bucket"))
-            .distinct().collect()})
+    buckets = url_buckets(urls, num_buckets)
     report = {"buckets_rewritten": buckets, "rows_deleted": {}}
     # unique per-invocation staging dir: concurrent deletes (or a delete
     # racing an extraction job's cleanup) must never share a staging path
@@ -517,15 +571,17 @@ def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
                      buckets: list[int], num_buckets: int, staging: str,
                      del_snap: str) -> int:
     """Bucket-local anti-join rewrite of one bucketed table; returns rows
-    deleted (counted from the staged output — no post-commit rescan, which
-    a concurrent extraction commit could skew negative)."""
+    deleted: the listed files' footer row counts less the staged output
+    (no count job, and no post-commit rescan, which a concurrent
+    extraction commit could skew negative)."""
     read_ts = wh.now()
     # schema-pinned read: a delete over mixed-era buckets must not strip
     # an added column from the carried-over rows it rewrites
     sub = wh.read_buckets(spark, out_dir, table, buckets)
     if sub is None:
         return 0
-    before = sub.count()
+    before = sum(pq.read_metadata(f).num_rows
+                 for f in wh.bucket_files(out_dir, table, buckets))
     kept = sub.join(F.broadcast(urls_df), "url", "left_anti")
     stage_tbl = os.path.join(staging, table)
     manifest = wh.stage_buckets(kept, stage_tbl, table, buckets)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from docling_rag_spark.plans.job import delete_urls, run_extraction
 from docling_rag_spark.sources.pages import write_pages_parquet
@@ -25,6 +26,8 @@ def test_delete_urls_cascade(spark, tmp_path):
     before = _chunk_urls(spark, out)
     victims = sorted(before)[:3]
     survivors = before - set(victims)
+    victim_chunks = (spark.read.parquet(os.path.join(out, "chunks"))
+                     .filter(F.col("url").isin(victims)).count())
 
     # snapshot file lists of every bucket dir to prove locality afterwards
     def file_map(table):
@@ -39,7 +42,7 @@ def test_delete_urls_cascade(spark, tmp_path):
 
     report = delete_urls(spark, out, victims, num_buckets=8,
                          tables=("chunks", "extracted"))
-    assert report["rows_deleted"]["chunks"] > 0
+    assert report["rows_deleted"]["chunks"] == victim_chunks > 0
     assert report["rows_deleted"]["extracted"] == len(victims)
 
     after = _chunk_urls(spark, out)
@@ -118,8 +121,13 @@ def test_delete_cascades_into_ann_index(spark, spark_jobs, tmp_path):
     report, descs = spark_jobs(lambda: delete_urls(spark, out, victims,
                                                    num_buckets=8))
     assert all(d and d.startswith("delete:") for d in descs), descs
-    assert {"delete:plan", "delete:chunks", "delete:extracted",
-            "delete:embeddings", "delete:ann"} <= set(descs), descs
+    assert {"delete:chunks", "delete:extracted", "delete:embeddings",
+            "delete:ann"} <= set(descs), descs
+    # the urls' buckets are hashed on the driver and each table's rows
+    # before the rewrite come from its files' footers: no plan or count job
+    assert "delete:plan" not in descs, descs
+    # 26 with the plan job and a count per table
+    assert len(descs) == 18, descs
     assert sorted(os.listdir(os.path.join(out, "ann"))) == \
         ["pq", "pq_books.json"]
     for sub in INDEX_TABLES:

@@ -240,13 +240,12 @@ def test_ann_build_jobs_are_tagged(spark, spark_jobs, served_wh, tmp_path):
     assert {"ann:train", "ann:write"} <= set(descs)
 
 
-def test_search_launches_at_most_four_spark_jobs(spark, spark_jobs,
-                                                served_wh, monkeypatch):
-    """A search is one top-k collect plus one point lookup per decorate
-    table — not a multi-wave broadcast-join plan. The ANN path reads its
-    index with the sidecar's declared schema, so it launches no footer
-    job either: at most 3. Its collects run under the search:topk /
-    search:decorate job descriptions, and the caller's own description is
+def test_search_launches_one_spark_job(spark, spark_jobs, served_wh,
+                                       monkeypatch):
+    """A search is one Spark job in either mode: the top-k collect, tagged
+    ``search:topk``. The decorate reads the hit urls' bucket files on the
+    driver, and the ANN path reads its index with the sidecar's declared
+    schema, so neither launches a job. The caller's own description is
     back in place afterwards."""
     from docling_rag_spark.api import service
 
@@ -254,11 +253,8 @@ def test_search_launches_at_most_four_spark_jobs(spark, spark_jobs,
     for mode in ("exact", "ann"):
         hits, descs = spark_jobs(lambda: service.search_warehouse(
             spark, served_wh, "star schema tables", log=False, mode=mode))
-        n = len(descs)
         assert hits, mode
-        assert n <= 4, (mode, n)
-        if mode == "ann":
-            assert n <= 3, (mode, n)
+        assert descs == ["search:topk"], (mode, descs)
 
     DataFrame = type(spark.range(1))
     real_collect = DataFrame.collect
@@ -276,7 +272,7 @@ def test_search_launches_at_most_four_spark_jobs(spark, spark_jobs,
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.job.description", None)
-    assert tags == ["search:topk", "search:decorate", "search:decorate"]
+    assert tags == ["search:topk"]
 
 
 def test_search_url_prefix_matches_numpy_oracle(spark, served_wh):
@@ -346,9 +342,11 @@ def test_search_empty_chunks_table_raises(spark, tmp_path):
 
 def test_search_unpersists_hits_when_decorate_raises(spark, tmp_path,
                                                     monkeypatch):
-    """search_warehouse pins its top-k hits for the decorate joins; a
-    failure there must still release them, or every failed request leaks
-    a cached RDD for the life of the serving session."""
+    """A search whose driver-side decorate fails (here its pyarrow read)
+    must leave no cached RDD behind, or every failed request would leak
+    one for the life of the serving session."""
+    import pyarrow.dataset as ds
+
     from docling_rag_spark.api import service
     from docling_rag_spark.plans.job import run_extraction
     from docling_rag_spark.sources.pages import write_pages_parquet
@@ -358,20 +356,14 @@ def test_search_unpersists_hits_when_decorate_raises(spark, tmp_path,
     write_pages_parquet(pages, 20)
     run_extraction(spark, pages, wh, num_buckets=4)
 
-    DataFrame = type(spark.range(1))  # the concrete (classic) class
-    real_collect = DataFrame.collect
-
-    def failing_collect(self):
-        if "preview" not in self.columns:
-            return real_collect(self)
-        self.count()  # materialize the pinned hits, then fail
+    def failing_dataset(*args, **kwargs):
         raise RuntimeError("decorate failed")
 
     def persistent_rdds():
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
     before = persistent_rdds()
-    monkeypatch.setattr(DataFrame, "collect", failing_collect)
+    monkeypatch.setattr(ds, "dataset", failing_dataset)
     with pytest.raises(RuntimeError, match="decorate failed"):
         service.search_warehouse(spark, wh, "star schema fact tables",
                                  log=False, mode="exact")
