@@ -47,9 +47,6 @@ from docling_rag_spark.session import job_description
 
 BOOKS = "pq_books.json"
 CELL = "cell"
-# The index tables and their partition columns — the one list the builder,
-# ensure_index's completeness check and the delete cascade all read.
-INDEX_TABLES = {"pq": [CELL]}
 _PQ_PROBES = 4    # cells scanned per query (4× pruning of PQ_COARSE_CELLS)
 _PQ_RERANK = 128  # ADC candidates re-ranked with exact cosine
 
@@ -347,8 +344,7 @@ def ensure_index(spark, sf_dir: str) -> str:
                           os.path.join(tempfile.gettempdir(),
                                        "spark_graft_ann"))
     final = os.path.join(root, key)
-    if (all(os.path.isdir(os.path.join(final, t)) for t in INDEX_TABLES)
-            and os.path.isfile(os.path.join(final, BOOKS))):
+    if has_rows(final) and os.path.isfile(os.path.join(final, BOOKS)):
         return final
     os.makedirs(root, exist_ok=True)
     tmp = os.path.join(root, f".build-{uuid.uuid4().hex[:12]}")

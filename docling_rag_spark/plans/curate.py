@@ -4,17 +4,24 @@ into a training-ready corpus.
 Chains the curation tier over the ``extracted`` table in one DataFrame
 DAG — quality gates (same C4/Gopher-shape rules and constants as
 ``queries/textstats.corpus_filter``), PII scrubbing, exact dedup with
-keep-first survivors, token-budget shard packing — and writes
-shard-partitioned parquet plus a JSON report of what was dropped and why.
-The reference has no analog (its pipeline stops at chunks in postgres);
-this is the step a 10^12-doc crawl needs between extraction and training.
+keep-first survivors, MinHash near-dup removal, token-budget shard
+packing — and writes shard-partitioned parquet plus a JSON report of what
+was dropped and why. The reference has no analog (its pipeline stops at
+chunks in postgres); this is the step a 10^12-doc crawl needs between
+extraction and training.
 
 Scale design: one text scan computes tokens/gates; the repetition gate
 adds the one (url, token) shuffle ``text_repetition`` documents; dedup is
-a single window over content hash; shard packing reuses the TWO-PHASE
-prefix sum of ``queries/curation.shard_pack`` keyed by the existing
-bucket column (per-bucket partials -> tiny offsets window -> broadcast
-join), so no global-sort window ever sees the corpus.
+a single window over content hash. Dense ids and shard ids come from
+``queries/curation.prefix_sum`` keyed by the existing bucket column
+(per-bucket partials -> tiny offsets window -> broadcast join), so no
+global-sort window ever sees the corpus.
+
+Every number of the report is computed once: the input, per-reason and
+distinct-hash counts by one grouped aggregate over the gated rows, the
+survivor, token and shard counts from the written corpus. Its Spark jobs
+are tagged ``curate:gate``, ``curate:near_dup``, ``curate:write`` and
+``curate:stats``.
 """
 
 from __future__ import annotations
@@ -26,34 +33,16 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from docling_rag_spark.io import warehouse as wh
+from docling_rag_spark.queries.curation import prefix_sum
 from docling_rag_spark.queries.dedup import (
     _cc_labels,
     content_hash_col,
     minhash_pairs_for,
 )
 from docling_rag_spark.queries import textstats as ts
+from docling_rag_spark.session import job_description
 
 _DEFAULT_SHARD_TOKENS = 200_000
-
-
-def _with_dense_ids(df):
-    """Deterministic dense bigint ``doc_id`` per row via the two-phase
-    prefix pattern (per-bucket row_number + broadcast bucket offsets) —
-    the scale-safe zipWithIndex: no global-sort window, stable across
-    reruns because (bucket, url) is a total order."""
-    w = Window.partitionBy("bucket").orderBy("url")
-    numbered = df.withColumn("rn", F.row_number().over(w))
-    counts = numbered.groupBy("bucket").agg(F.count("*").alias("n"))
-    off_w = (Window.orderBy("bucket")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = (counts.withColumn(
-        "id_offset", F.coalesce(F.sum("n").over(off_w), F.lit(0)))
-        .select("bucket", "id_offset"))
-    return (numbered.join(F.broadcast(offsets), "bucket")
-            .withColumn("doc_id",
-                        (F.col("id_offset") + F.col("rn") - 1)
-                        .cast("bigint"))
-            .drop("rn", "id_offset"))
 
 
 def _near_dup_survivors(deduped):
@@ -62,7 +51,9 @@ def _near_dup_survivors(deduped):
     canonical (minimum dense-id == lowest (bucket, url)) member. Same
     banded-join machinery the oracle-checked ``dedup_minhash_pairs`` /
     ``dedup_components`` queries pin, applied to warehouse rows."""
-    ids = _with_dense_ids(deduped)
+    # dense bigint doc_id: the scale-safe zipWithIndex, stable across
+    # reruns because (bucket, url) is a total order
+    ids = prefix_sum(deduped, "bucket", "url", F.lit(1), "doc_id")
     pairs = minhash_pairs_for(ids.select("doc_id", "text")) \
         .select("doc_a", "doc_b")
     labels = _cc_labels(pairs)
@@ -91,7 +82,6 @@ def run_curation(spark, out_dir: str, dest_dir: str,
     ext = (wh.read_table(spark, out_dir, "extracted")
            .filter(F.col("status").isin(*statuses))
            .select("url", "bucket", "lang", "status", "extracted_text"))
-    n_input = ext.count()
 
     toks = F.regexp_extract_all(F.lower(F.col("extracted_text")),
                                 F.lit(ts._WORD_RE), F.lit(0))
@@ -116,70 +106,65 @@ def run_curation(spark, out_dir: str, dest_dir: str,
               .when(F.coalesce(F.col("top_token_bp"), F.lit(0))
                     > max_top_bp, "repetitive")
               .otherwise("ok"))
+    # exact dedup hashes the SCRUBBED text (what ships is what is hashed).
+    # ``rep`` has one row per url, so the reason counts sum to the input
+    # count; the ok group's distinct hashes, plus one for any null (the
+    # dedup window's nulls are one group), are the exact-dedup survivors
     gated = (base.join(rep, "url", "left")
-             .withColumn("reason", reason))
-    drop_counts = {r["reason"]: r["n"] for r in
-                   gated.groupBy("reason")
-                   .agg(F.count("*").alias("n")).collect()}
-    kept = gated.filter(F.col("reason") == "ok")
+             .withColumn("reason", reason)
+             .withColumn("content_hash", content_hash_col(F.col("text"))))
+    with job_description(spark, "curate:gate"):
+        groups = {r["reason"]: r for r in gated.groupBy("reason").agg(
+            F.count("*").alias("n"),
+            F.countDistinct("content_hash").alias("hashes"),
+            F.max(F.col("content_hash").isNull()).alias("null_hash"))
+            .collect()}
+    ok = groups.get("ok") or {"n": 0, "hashes": 0, "null_hash": False}
+    n_unique = ok["hashes"] + int(ok["null_hash"])
 
-    # exact dedup on the SCRUBBED text (what ships is what is hashed);
     # lowest url wins so the survivor set is replay-stable
     dw = Window.partitionBy("content_hash").orderBy("url")
-    deduped = (kept.withColumn("content_hash",
-                               content_hash_col(F.col("text")))
+    deduped = (gated.filter(F.col("reason") == "ok")
                .withColumn("rn", F.row_number().over(dw))
                .filter(F.col("rn") == 1)
                .drop("rn", "stop_hits", "top_token_bp", "reason"))
-    n_unique = deduped.count()
 
     # near-dup cluster removal (MinHash-LSH pairs -> connected
     # components -> keep canonical) on top of exact dedup
     if near_dup:
-        deduped = _near_dup_survivors(deduped)
-        n_survivors = deduped.count()
-    else:
-        n_survivors = n_unique
+        with job_description(spark, "curate:near_dup"):
+            deduped = _near_dup_survivors(deduped)
 
-    # two-phase prefix sum -> shard_id (per-bucket partials, tiny offsets
-    # window, broadcast join; within-bucket order is url — total order
-    # because (bucket, url) is unique)
-    within_w = (Window.partitionBy("bucket").orderBy("url")
-                .rowsBetween(Window.unboundedPreceding, -1))
-    within = deduped.withColumn(
-        "pre_in_bucket",
-        F.coalesce(F.sum("n_tokens").over(within_w), F.lit(0)))
-    totals = within.groupBy("bucket").agg(
-        F.sum("n_tokens").alias("bucket_total"))
-    off_w = (Window.orderBy("bucket")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.withColumn(
-        "bucket_offset",
-        F.coalesce(F.sum("bucket_total").over(off_w), F.lit(0))
-    ).select("bucket", "bucket_offset")
-    packed = (within.join(F.broadcast(offsets), "bucket")
+    # shard_id = exclusive token prefix sum div budget, in (bucket, url)
+    # order — a total order because (bucket, url) is unique
+    packed = (prefix_sum(deduped, "bucket", "url", F.col("n_tokens"), "pre")
               .withColumn("shard_id",
-                          F.expr(f"div(bucket_offset + pre_in_bucket, "
-                                 f"{int(shard_tokens)})").cast("bigint"))
+                          F.expr(f"div(pre, {int(shard_tokens)})")
+                          .cast("bigint"))
               .select("url", "lang", "status", "text", "n_tokens",
                       "content_hash", "shard_id"))
 
-    (packed.repartition("shard_id")
-     .sortWithinPartitions("shard_id", "url")
-     .write.mode("overwrite").partitionBy("shard_id")
-     .parquet(os.path.join(dest_dir, "corpus")))
+    corpus = os.path.join(dest_dir, "corpus")
+    with job_description(spark, "curate:write"):
+        (packed.repartition("shard_id")
+         .sortWithinPartitions("shard_id", "url")
+         .write.mode("overwrite").partitionBy("shard_id").parquet(corpus))
 
-    stats = (spark.read.parquet(os.path.join(dest_dir, "corpus"))
-             .agg(F.count("*").alias("docs"),
-                  F.sum("n_tokens").alias("tokens"),
-                  F.countDistinct("shard_id").alias("shards")).first())
+    # read with the written schema: no footer-inference job, and a
+    # corpus of no rows (a shard-less dir) reads as empty
+    with job_description(spark, "curate:stats"):
+        stats = (spark.read.schema(packed.schema).parquet(corpus)
+                 .agg(F.count("*").alias("docs"),
+                      F.sum("n_tokens").alias("tokens"),
+                      F.countDistinct("shard_id").alias("shards")).first())
     report = {
-        "n_input": n_input,
-        "dropped_by_reason": {k: v for k, v in sorted(drop_counts.items())
+        "n_input": sum(g["n"] for g in groups.values()),
+        "dropped_by_reason": {k: g["n"] for k, g in sorted(groups.items())
                               if k != "ok"},
-        "n_passed_gates": drop_counts.get("ok", 0),
-        "n_exact_dups_removed": drop_counts.get("ok", 0) - n_unique,
-        "n_near_dups_removed": n_unique - n_survivors,
+        "n_passed_gates": ok["n"],
+        "n_exact_dups_removed": ok["n"] - n_unique,
+        # packing drops no row: the corpus holds every near-dup survivor
+        "n_near_dups_removed": n_unique - stats["docs"],
         "n_corpus_docs": stats["docs"],
         "total_tokens": int(stats["tokens"] or 0),
         "n_shards": stats["shards"],

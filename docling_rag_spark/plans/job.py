@@ -44,6 +44,7 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from docling_rag_spark.config import (
     CHUNK_MAX_TOKENS,
@@ -597,61 +598,49 @@ def _delete_bucketed(spark, out_dir: str, table: str, urls_df,
     return before - sum(r["rows"] for r in manifest)
 
 
-def _drop_urls(spark, target: str, part_cols, urls_df, staging: str,
-               label: str) -> int:
-    """Remove ``urls_df``'s urls from one swap-managed dir (an ANN index
-    table): read, anti-join, then swap in the rewrite via the recoverable
-    two-rename protocol — or remove the dir outright when no row survives
-    (a zero-row partitionBy write leaves a file-less dir whose later reads
-    fail schema inference; readers treat a missing dir as empty).
-    ``part_cols`` are the rewrite's partition columns. Returns rows
-    removed; 0 when the dir is absent or has no url column (an index keyed
-    by vec_id, e.g. an oracle-table build)."""
-    wh.recover_swap(target)
-    if not os.path.isdir(target):
-        return 0
-    df = spark.read.parquet(target)
-    if "url" not in df.columns:
-        return 0
-    before = df.count()
-    kept = df.join(F.broadcast(urls_df), "url", "left_anti")
-    n_kept = kept.count()
-    if n_kept == before:
-        return 0
-    name = label.replace("/", "_")
-    if n_kept == 0:
-        trash = os.path.join(staging, f".gone-{name}")
-        os.rename(target, trash)
-        shutil.rmtree(trash, ignore_errors=True)
-        return before
-    tmp = os.path.join(staging, name)
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer = kept.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(tmp)
-    wh.swap_dir(tmp, target)
-    return before - n_kept
-
-
 def _delete_from_ann(spark: SparkSession, out_dir: str, urls_df,
                      staging: str) -> dict:
     """Cascade a url delete into the materialized ANN index: a stale index
     would keep ranking chunks of deleted documents in mode=auto/ann
-    searches. Each index table gets a whole-table rewrite (a url predicate
-    does not align with the cell partitioning — the same shape Iceberg's
-    DELETE takes on a non-partition predicate). The whole cascade holds
-    the index lock, so its swap never interleaves with a build's swap or
-    a crash recovery of the same dirs."""
-    removed: dict[str, int] = {}
+    searches. ``ann/pq`` gets a whole-table rewrite (a url predicate does
+    not align with the cell partitioning — the same shape Iceberg's
+    DELETE takes on a non-partition predicate): read with the sidecar's
+    declared schema (no footer-inference job), anti-joined, and swapped
+    in via the recoverable two-rename protocol — or removed outright when
+    no row survives (a zero-row partitionBy write leaves a file-less dir;
+    readers treat a missing table as empty). The rows before come from
+    the files' footers. The cascade holds the index lock, so its swap
+    never interleaves with a build's swap or a crash recovery of the same
+    dirs. Returns ``{"ann/pq": rows removed}``; empty when none are, there
+    is no index, or it has no url column (an oracle-table build keyed by
+    vec_id)."""
     ann_root = os.path.join(out_dir, "ann")
+    target = os.path.join(ann_root, "pq")
     if not os.path.isdir(ann_root):
-        return removed
+        return {}
     with AI.index_lock(ann_root, timeout=60.0):
-        for sub, part_cols in AI.INDEX_TABLES.items():
-            label = f"ann/{sub}"
-            n = _drop_urls(spark, os.path.join(ann_root, sub), part_cols,
-                           urls_df, staging, label)
-            if n:
-                removed[label] = n
-    return removed
+        wh.recover_swap(target)
+        side = AI.read_books(ann_root)
+        if side is None or not os.path.isdir(target):
+            return {}
+        schema = T.StructType.fromJson(side["schema"])
+        if "url" not in schema.fieldNames():
+            return {}
+        before = sum(pq.read_metadata(f).num_rows
+                     for f in wh.bucket_files(ann_root, "pq", None))
+        kept = (spark.read.schema(schema.add(AI.CELL, T.IntegerType()))
+                .parquet(target)
+                .join(F.broadcast(urls_df), "url", "left_anti"))
+        n_kept = kept.count()
+        if n_kept == before:
+            return {}
+        if n_kept == 0:
+            trash = os.path.join(staging, ".gone-ann_pq")
+            os.rename(target, trash)
+            shutil.rmtree(trash, ignore_errors=True)
+        else:
+            tmp = os.path.join(staging, "ann_pq")
+            (kept.write.partitionBy(AI.CELL).mode("overwrite")
+             .parquet(tmp))
+            wh.swap_dir(tmp, target)
+    return {"ann/pq": before - n_kept}

@@ -176,42 +176,66 @@ FROM (
 
 # --- token-budget shard packing ----------------------------------------------
 
+def prefix_sum(df, part: str, order: str, weight, out: str):
+    """``df`` plus ``out``: the exclusive prefix sum of the ``weight``
+    column in (``part``, ``order``) order, as bigint. ``order`` must be a
+    total order within a part.
+
+    TWO-PHASE, not a single-partition window over the corpus: per-part
+    partials (a window inside each part), the part totals prefix-summed
+    on a parts-sized table, broadcast-joined back. Each part must fit one
+    task and the parts table must fit the driver; the result does not
+    depend on how rows are split into parts (a prefix sum is
+    partitioning-free). ``part`` is an existing column, so the output
+    stays partitioned by it for a later window or aggregate on it."""
+    pre_w = (Window.partitionBy(part).orderBy(order)
+             .rowsBetween(Window.unboundedPreceding, -1))
+    within = (df.withColumn("_w", weight)
+              .withColumn(out, F.coalesce(F.sum("_w").over(pre_w),
+                                          F.lit(0))))
+    off_w = (Window.orderBy(part)
+             .rowsBetween(Window.unboundedPreceding, -1))
+    offsets = (within.groupBy(part).agg(F.sum("_w").alias("_total"))
+               .select(part, F.coalesce(F.sum("_total").over(off_w),
+                                        F.lit(0)).alias("_off")))
+    return (within.join(F.broadcast(offsets), part)
+            .withColumn(out, (F.col("_off") + F.col(out)).cast("bigint"))
+            .drop("_w", "_off"))
+
+
+def _max_doc_id(sf_dir) -> int:
+    """Largest ``doc_id`` of ``documents``, from the row-group statistics
+    in its parquet footers, read on the driver (no Spark job); 0 when
+    they carry none."""
+    import pyarrow.dataset as ds
+
+    return max([rg.statistics.get("doc_id", {}).get("max") or 0
+                for f in ds.dataset(f"{sf_dir}/documents.parquet",
+                                    format="parquet").get_fragments()
+                for rg in f.row_groups], default=0)
+
+
 def shard_pack(spark, sf_dir, range_size: int | None = None):
     """Assign docs (in doc_id order) to training shards of ~SHARD_TOKENS
     tokens: shard_id = exclusive-prefix-sum(tokens) div budget — the
     streaming greedy pack every shard writer uses.
 
-    The prefix sum is TWO-PHASE, not a single-partition window over the
-    corpus: per-range within-partials (window inside doc_id div range),
-    per-range totals prefix-summed on a ranges-sized table, broadcast-
-    joined back. The range width is ~sqrt(max doc_id) so BOTH phases are
-    bounded (~10^6 × ~10^6 at 10^12 docs); a fixed width would push the
-    offsets table itself past single-partition size at corpus scale.
-    Shard assignment is width-invariant, so the single-window oracle SQL
-    is unchanged and ``range_size`` stays testable."""
+    The prefix sum is ``prefix_sum`` over doc_id ranges. The range width
+    is ~sqrt(max doc_id) so BOTH phases are bounded (~10^6 × ~10^6 at
+    10^12 docs); a fixed width would push the offsets table itself past
+    single-partition size at corpus scale. The max comes from the
+    footers, so choosing the width runs no job. Shard assignment is
+    width-invariant, so the single-window oracle SQL is unchanged and
+    ``range_size`` stays testable."""
     import math
 
+    if range_size is None:
+        range_size = max(_RANGE_MIN, math.isqrt(_max_doc_id(sf_dir)) + 1)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("bigint").alias("doc_id"),
-        _token_count(F.col("text")).alias("tokens"))
-    if range_size is None:
-        hi = docs.agg(F.max("doc_id")).first()[0] or 0
-        range_size = max(_RANGE_MIN, math.isqrt(int(hi)) + 1)
-    rng = F.expr(f"div(doc_id, {range_size})")
-    within_w = (Window.partitionBy("rng").orderBy("doc_id")
-                .rowsBetween(Window.unboundedPreceding, -1))
-    within = (docs.withColumn("rng", rng)
-              .withColumn("pre_in_range",
-                          F.coalesce(F.sum("tokens").over(within_w),
-                                     F.lit(0))))
-    totals = within.groupBy("rng").agg(F.sum("tokens").alias("range_total"))
-    offsets_w = (Window.orderBy("rng")
-                 .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.withColumn(
-        "range_offset", F.coalesce(F.sum("range_total").over(offsets_w),
-                                   F.lit(0))).select("rng", "range_offset")
-    return (within.join(F.broadcast(offsets), "rng")
-            .withColumn("pre", F.col("range_offset") + F.col("pre_in_range"))
+        _token_count(F.col("text")).alias("tokens"),
+        F.expr(f"div(doc_id, {range_size})").alias("rng"))
+    return (prefix_sum(docs, "rng", "doc_id", F.col("tokens"), "pre")
             .select("doc_id", "tokens",
                     F.expr(f"div(pre, {_SHARD_TOKENS})").cast("bigint")
                     .alias("shard_id")))

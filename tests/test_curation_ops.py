@@ -11,6 +11,7 @@ from docling_rag_spark.queries.curation import (
     _SAMPLE_PCT,
     _SHARD_TOKENS,
     _STRATA_QUOTA,
+    _max_doc_id,
     events_kmv_users,
     sample_stratified,
     sample_uniform,
@@ -45,6 +46,19 @@ def test_shard_pack_width_invariant(spark):
         alt = (shard_pack(spark, SF_DIR, range_size=width)
                .toPandas().sort_values("doc_id"))
         assert alt.values.tolist() == default.values.tolist(), width
+
+
+def test_shard_pack_width_comes_from_footers(spark, spark_jobs):
+    """The range width is sized from the doc_id statistics in the parquet
+    footers, read on the driver: building the plan runs only the read's
+    footer-inference job (3 with an eager max(doc_id) aggregate)."""
+    con = duckdb.connect()
+    hi = con.sql(f"SELECT max(doc_id) FROM "
+                 f"read_parquet('{SF_DIR}/documents.parquet')").fetchone()[0]
+    con.close()
+    assert _max_doc_id(SF_DIR) == hi
+    _, descs = spark_jobs(lambda: shard_pack(spark, SF_DIR))
+    assert len(descs) == 1, descs
 
 
 def test_kmv_exact_when_under_k(spark):

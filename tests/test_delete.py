@@ -104,7 +104,7 @@ def test_delete_cascades_into_ann_index(spark, spark_jobs, tmp_path):
     IVF-PQ table — while the codebooks stay: a stale index would keep
     ranking its chunks in mode=ann searches. Every Spark job of the
     delete is tagged ``delete:<step>``."""
-    from docling_rag_spark.plans.ann_index import INDEX_TABLES, build_ann_index
+    from docling_rag_spark.plans.ann_index import build_ann_index
     from docling_rag_spark.plans.job import embed_warehouse
 
     pages = str(tmp_path / "pages.parquet")
@@ -124,19 +124,19 @@ def test_delete_cascades_into_ann_index(spark, spark_jobs, tmp_path):
     assert {"delete:chunks", "delete:extracted", "delete:embeddings",
             "delete:ann"} <= set(descs), descs
     # the urls' buckets are hashed on the driver and each table's rows
-    # before the rewrite come from its files' footers: no plan or count job
+    # before the rewrite, the index's too, come from its files' footers:
+    # no plan or count job, and the index is read with its declared schema
     assert "delete:plan" not in descs, descs
-    # 26 with the plan job and a count per table
-    assert len(descs) == 18, descs
+    # 26 with the plan job and a count per table; 18 with the index's
+    # footer-inference read and whole-index count
+    assert len(descs) == 15, descs
     assert sorted(os.listdir(os.path.join(out, "ann"))) == \
         ["pq", "pq_books.json"]
-    for sub in INDEX_TABLES:
-        assert os.path.isdir(os.path.join(out, "ann", sub)), sub
-        assert report["ann_rows_deleted"].get(f"ann/{sub}", 0) > 0, sub
-        idx_urls = {r["url"] for r in
-                    spark.read.parquet(os.path.join(out, "ann", sub))
-                    .select("url").distinct().collect()}
-        assert not (idx_urls & set(victims)), sub
+    assert report["ann_rows_deleted"].get("ann/pq", 0) > 0, report
+    idx_urls = {r["url"] for r in
+                spark.read.parquet(os.path.join(out, "ann", "pq"))
+                .select("url").distinct().collect()}
+    assert not (idx_urls & set(victims))
 
 
 def test_ann_rebuild_does_not_undo_a_concurrent_delete(spark, tmp_path,
